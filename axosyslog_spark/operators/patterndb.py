@@ -114,6 +114,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.literals import literal_array
+
 # In-band framing bytes for the single-execution classify+extract
 # (see module docstring); message text containing any of them would
 # garble extraction (syslog payloads never carry control bytes — the
@@ -648,10 +650,9 @@ class PatternDB:
         """Decode (leaf, local ordinal) from a local-framed result and
         look the pair up in a ragged 2D compile-time table. In range
         by construction whenever the result carries the \\x03 hit
-        prefix (the caller guards)."""
-        arr2d = F.array(
-            *[F.lit(row).cast("array<int>") for row in table]
-        )
+        prefix (the caller guards). The table is one SQL literal (one
+        JVM call, see _lut)."""
+        arr2d = literal_array(table, "array<int>")
         leaf1 = F.ascii(F.substring(res, 2, 1)) - (_LEAF_ID_BASE - 1)
         local1 = F.instr(res, _MARK) - 2
         return F.element_at(F.element_at(arr2d, leaf1), local1)
@@ -686,7 +687,15 @@ class PatternDB:
         """TREE path: ONE regex execution per row — the routed leaf's
         merged two-tier alternation rendered into the framed result
         string (or the marked input unchanged — which starts with
-        \\x02, not \\x03 — when no alternative matched)."""
+        \\x02, not \\x03 — when no alternative matched). Flat rulesets
+        (<2 literal prefixes) have no tree: they go through
+        _flat_complete/_flat_result."""
+        if not self._leaves:
+            raise ValueError(
+                "_merged_result needs the dispatch tree; this ruleset has "
+                "fewer than 2 literal prefixes (flat path: use "
+                "_flat_complete + _flat_result)"
+            )
         marked = F.concat(F.lit(_MARK), text)
         return self._tree_result(text, marked)
 
@@ -717,6 +726,8 @@ class PatternDB:
         the _leaf_idx_map table, both tiers in one frame). NULL when
         the regex didn't match (result still starts with \\x02)."""
         if not self._leaves:
+            if was_complete is None:
+                raise ValueError("flat path requires was_complete")
             n = len(self.patterns)
             ord0 = F.when(res.startswith(_HIT), F.instr(res, _MARK) - 2)
             return F.when(
@@ -763,18 +774,21 @@ class PatternDB:
         index -1) instead of NULL — unmatched rows would read rule N-1's
         metadata.
 
-        Note on construction: F.lit(values) in PySpark 4.1.2 expands
-        to array(*[lit(x)...]) — the same CreateArray expression as
-        F.array(*lits); either way the all-literal CreateArray (plus
-        the single array-level cast) is foldable, and Catalyst's
-        ConstantFolding collapses it to one plan-time Literal during
-        optimization, so the table is NOT rebuilt per row. The real
-        changes behind the measured ~12s win on the 50-rule 5M-row
-        apply() were the all-None short-circuit below and casting
-        once at array level instead of per element."""
+        Note on construction: the table is rendered as ONE Spark SQL
+        literal (literal_array: one F.expr, one JVM call). F.lit(values)
+        in PySpark 4.1.2 expands to array(*[lit(x)...]), one py4j round
+        trip per element: a 50-rule apply() made ~11k py4j calls and
+        took 1.3-2.1 s to build; with the SQL literals (and the
+        session's call-site capture off) ~1.5-2.9k calls and
+        0.4-0.9 s. Either way the all-literal CreateArray under one
+        array-level cast is foldable, and Catalyst's ConstantFolding
+        collapses it to one plan-time Literal, so the table is NOT
+        rebuilt per row. The all-None short-circuit below and the
+        single array-level cast were the measured ~12s win on the
+        50-rule 5M-row apply()."""
         if all(v is None for v in values):
             return F.lit(None).cast(typ)
-        arr = F.lit(values).cast(f"array<{typ}>")
+        arr = literal_array(values, typ)
         return F.when(idx_mod.isNotNull(), F.element_at(arr, idx_mod + 1))
 
     def _rule_id_for(self, idx: Column) -> Column:
@@ -921,7 +935,7 @@ class PatternDB:
                 for n in value_names
             ]
             tags = (
-                F.array(*[F.lit(t) for t in action.tags])
+                literal_array(action.tags, "string")
                 if action.tags
                 else inherit_tags
             )
@@ -963,10 +977,10 @@ class PatternDB:
         from axosyslog_spark.operators.grouping import _CONTEXT_SCOPE_COLS
 
         ordn = F.col("__pdb_ord")
-        rates = F.lit([a.rate for _, a in match_actions]).cast("array<int>")
-        quanta = F.lit(
-            [max(a.rate_quantum, 1) for _, a in match_actions]
-        ).cast("array<int>")
+        rates = literal_array([a.rate for _, a in match_actions], "int")
+        quanta = literal_array(
+            [max(a.rate_quantum, 1) for _, a in match_actions], "int"
+        )
         rate_v = F.element_at(rates, ordn + 1)
         # correlation key per the firing action's rule scope: only the
         # scope columns present in the frame widen the key (a missing
@@ -1093,14 +1107,10 @@ class PatternDB:
                 [c.rule.rule_class or None for c in self.patterns], mod, "string"
             )
         if with_tags:
-            tag_arrays = [
-                F.array(*[F.lit(t) for t in c.rule.tags])
-                if c.rule.tags
-                else F.lit(None).cast("array<string>")
-                for c in self.patterns
-            ]
-            proj2[f"{prefix}pdb_tags"] = F.when(
-                mod.isNotNull(), F.element_at(F.array(*tag_arrays), mod + 1)
+            proj2[f"{prefix}pdb_tags"] = self._lut(
+                [list(c.rule.tags) or None for c in self.patterns],
+                mod,
+                "array<string>",
             )
         df = df.withColumns(proj2)
         groups = F.col(groups_col)

@@ -10,10 +10,14 @@ This is the end-to-end job the north_star describes. Physical shape
     → per-sink writes    (filter + write, no extra shuffle)
     → aggregates         (groupBy with map-side partials, one exchange)
 
-The routed frame is computed once and persisted before fan-out — the
-Spark analog of the reference's copy-on-write clone at the multiplexer
-(lib/logmpx.c:86-96): every sink derives from the same materialized
-routing pass instead of re-running parse per sink.
+Nothing here is persisted: the routed frame is a lazy plan, and every
+action on it (sink write, counts, histogram) re-runs scan → parse →
+enrich → route. The fan-out itself costs no extra pass: the reference
+clones a message per matching path at the multiplexer
+(lib/logmpx.c:86-96); here ``route_explode`` emits one row per
+matching sink and ``write_sinks`` splits them by sink inside ONE
+write job, with per-sink counters riding that same job through
+``observe()`` (run_pipeline_observed).
 """
 
 from __future__ import annotations

@@ -75,6 +75,16 @@ def get_spark(
             "spark.executor.extraJavaOptions",
             "-XX:-DontCompileHugeMethods -XX:+AlwaysPreTouch",
         )
+        # PySpark's call-site capture (_with_origin) wraps every F.* /
+        # Column call with ~5 py4j calls and a Python stack walk; one
+        # plan build makes hundreds to thousands of such calls. Off,
+        # measured in one process with passes interleaved (150k turns,
+        # local[4]): route_fanout pass 1.68 s -> 1.48 s, patterndb_50
+        # pass 1.95 s -> 1.39 s (medians of 8). The cost: analysis
+        # errors lose the Python file:line "DataFrame" context. PySpark
+        # reads this once per process, from the first active session,
+        # so it has to be set here, at build time.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -379,3 +379,20 @@ def test_control_bytes_sanitized(spark):
     pdb = PatternDB(F4_RULES)
     got = [r[0] for r in df.select(pdb.classify(F.col("text"))).collect()]
     assert got == ["kv_status", "kv_status", "login", "kv_status", "kv_status", None]
+
+
+def test_merged_result_rejects_flat_ruleset():
+    """_merged_result is the dispatch-tree path only; a flat ruleset
+    (<2 literal prefixes) fails fast with a clear message instead of
+    len(None) deep inside the tree builder. The guard fires before
+    any Column is built, so no session is needed."""
+    pdb = PatternDB(F4_RULES[:1])
+    assert pdb._leaves is None
+    with pytest.raises(ValueError, match="fewer than 2 literal prefixes"):
+        pdb._merged_result(object())
+
+
+def test_flat_idx_requires_was_complete():
+    pdb = PatternDB(F4_RULES[:1])
+    with pytest.raises(ValueError, match="flat path requires was_complete"):
+        pdb._idx_from_result(object())

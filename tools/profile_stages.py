@@ -81,7 +81,11 @@ def main():
     def pdb_regex():
         t = _strip_framing_bytes(txt)
         d = ph.withColumn("__t", t)
-        d = d.withColumn("__r", pdb._merged_result(F.col("__t")))
+        if pdb._leaves:
+            r = pdb._merged_result(F.col("__t"))
+        else:  # flat ruleset: the two-pass tiers, as apply() runs them
+            r = pdb._flat_result(F.col("__t"), pdb._flat_complete(F.col("__t")))
+        d = d.withColumn("__r", r)
         noop(d.select("conv_id", F.col("__r").startswith(_HIT).alias("hit")))
     timed("pdb_merged_regex", pdb_regex)
 
