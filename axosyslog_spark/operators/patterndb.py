@@ -35,59 +35,65 @@ the longest literal prefix wins (the radix longest-match preference),
 declaration order breaking ties.
 
 Spark-first execution (the asymptotic analog of the reference's
-radix trie walk, radix.c:666-860): patterns compile into ordered
-alternation regexes executed by regexp_replace into a framed result
-string. The input is prepended with a \\x02 marker and each
-alternative carries a sentinel capture group around that marker (Java
-resets captures when it backtracks out of a failed alternative, so
-exactly the winner's sentinel participates). The regexp_replace
-renders the framed result
+radix trie walk, radix.c:666-860): patterns group into the leaves of a
+literal-prefix dispatch tree (see _build_dispatch; a ruleset with
+fewer than two distinct literal prefixes is a tree with ONE root
+leaf), and each leaf compiles into ordered alternation regexes
+executed by regexp_replace into a framed result string. The input is
+prepended with a \\x02 marker and each alternative carries a sentinel
+capture group around that marker (Java resets captures when it
+backtracks out of a failed alternative, so exactly the winner's
+sentinel participates). Every leaf regex renders the same frame
+layout over its own m alternatives
 
-    \\x03 <header> <block_0> ... <block_{k-1}> [remainder]
+    \\x03 <leaf-id> <header> <block_0> ... <block_{m-1}> [remainder]
     header  = $s_0 \\x01 $s_1 \\x01 ...   (winner's sentinel = \\x02)
     block_i = $f(i,1) \\x04 $f(i,2) \\x04 ... \\x01
 
 from which everything decodes WITHOUT further regex work or O(rules)
 per-row scanning:
 
-- the header's rendered size is fixed (k separators + the one marker
-  byte), so the winning ordinal is a single ``instr(result, \\x02)``
-  byte scan;
+- the leaf id is one character, and the header's rendered size is
+  fixed (m separators + the one marker byte), so the winner's local
+  ordinal is a single ``instr(result, \\x02)`` byte scan;
 - a LOSING block renders only its unconditional separator literals,
   len(fields_i)+1 bytes, a compile-time constant — so the winner's
-  block starts at a byte offset that is a pure function of its
-  ordinal, looked up from a constant array, and its fields come out
-  with substr + substring_index + one small split.
+  block starts at a byte offset that is a pure function of
+  (leaf id, local ordinal), and two constant tables
+  (_leaf_idx_map / _leaf_off_map) turn that pair into the global
+  index and the block offset; the fields come out with substr +
+  substring_index + one small split.
 
 The two radix tiers (complete-preferred, then partial — radix.c
-_find_node_with_state) execute differently on the two dispatch paths,
-each the measured winner for its shape (round 6,
-tools/profile_pdb_variants.py):
+_find_node_with_state) run in one of two ways per leaf, fixed at
+compile time by the leaf's member count (_MERGE_MAX_MEMBERS):
 
-- DISPATCH-TREE leaves (≥2 distinct literal prefixes) merge both
-  tiers into ONE alternation per leaf — the leaf's complete-match
-  alternatives (each anchored \\z) first, then the same bodies
-  unanchored — so Java's left-to-right alternation try IS the
-  complete-preferred two-pass collapsed into a single execution, and
-  the winner ordinal decodes directly to the i / N+i index encoding.
-  A leaf's member count is small, so its 2k-block replacement
-  template stays cheap.
-- The FLAT path (fewer than 2 distinct prefixes — no tree to bound
-  the frame) keeps the literal two-pass: the complete-tier regex runs
-  on every row and the partial-tier regex lazily on the rows that
-  missed (~20% on the bench mix). Merging the tiers here DOUBLES the
-  replacement template to O(2N) bytes that Java re-parses per
-  MATCHING row, which measured 1.6x SLOWER at 50 rules (18.8 s vs
-  11.7 s per 5M rows) than the second gated execution it avoids.
+- MERGED (small leaves): ONE alternation carrying both tiers — the
+  leaf's complete-match alternatives (each anchored \\z) first, then
+  the same bodies unanchored — so Java's left-to-right alternation
+  try IS the complete-preferred two-pass collapsed into a single
+  execution. One leaf id, 2k blocks.
+- TWO-PASS (wide leaves): the merged template doubles to 2k blocks
+  that Java re-parses per MATCHING row, which measured slower than a
+  second regex execution at 50 rules (18.8 s vs 11.7 s per 5M rows).
+  A wide leaf gets two leaf ids, one k-block frame per tier. The
+  complete tier runs on every routed row and is staged; the partial
+  tier runs only where it missed (the staged result still starts
+  with the \\x02 marker, not \\x03). The decode is the same table
+  lookup, whose partial-id rows carry the +N partial-tier offset.
+  Chaining the tiers instead — regexp_replace(regexp_replace(marked,
+  complete), partial), no gate — measured 17-19% slower at 50 and
+  200 rules: Spark's regexp_replace decodes, copies and re-encodes
+  the whole framed result even when the regex fails at its first
+  byte, and Java tries every partial alternative's first byte.
 
-Alternation order IS precedence order (complete tier first where
-merged, then longest-literal-prefix, declaration tiebreak), and
-failed alternatives abort on their first literal byte — the engine's
-left-to-right try is the prefix dispatch. The only residual
-ruleset-size-proportional cost is the replacement template (a few
-bytes per rule+field) that Java re-parses per matching row.
-Everything stays inside whole-stage codegen with O(1) plan
-expressions; no Python runs per row.
+Alternation order IS precedence order (complete tier first, then
+longest-literal-prefix, declaration tiebreak), and failed
+alternatives abort on their first literal byte. The only residual
+leaf-size-proportional cost is the replacement template (a few bytes
+per member+field) that Java re-parses per matching row. Everything
+stays inside whole-stage codegen with O(1) plan expressions; no
+Python runs per row.
 
 The complete-tier alternatives anchor with \\z (end of input, like
 RE2's `$` and radix.c's full-consumption requirement) so a trailing
@@ -125,10 +131,19 @@ _BLOCK_SEP = "\x01"   # separates sentinels in the classify header
 _MARK = "\x02"        # prepended to the text; each alt's sentinel captures it
 _HIT = "\x03"         # result prefix proving the tier regex matched
 _FIELD_SEP = "\x04"   # separates field values in the extract result
-# first leaf-id character for the dispatch tree's LOCAL frames (see
-# _leaf_res): clear of the framing bytes; leaf counts stay far below
-# the surrogate range the id charset must avoid
+# first leaf-id character (see _leaf_frame): clear of the framing bytes
 _LEAF_ID_BASE = 0x10
+# leaf ids are single characters below the surrogate block; a ruleset
+# needing more (~26k-52k distinct literal prefixes) is rejected
+_MAX_LEAF_IDS = 0xD000 - _LEAF_ID_BASE
+# widest dispatch leaf (member count) whose two tiers run as ONE merged
+# alternation; wider leaves run them as two regexes, the partial tier
+# only where the complete tier missed (module docstring). Read when a
+# PatternDB is built. Set from tools/profile_pdb_variants.py (one root
+# leaf of k prefix-less rules, 4 vCPUs; merged/two-pass ratio of median
+# apply times, 1.2M rows, 7 interleaved pairs): k=2 0.998, k=4 1.136,
+# k=8 1.105; 400k rows, 5 pairs: k=16 1.196, k=32 1.313, k=50 1.372.
+_MERGE_MAX_MEMBERS = 2
 
 
 def _strip_framing_bytes(text: Column) -> Column:
@@ -428,6 +443,64 @@ def compile_rule(rule: PdbRule) -> CompiledPattern:
     return compile_pattern(rule, rule.patterns[0])
 
 
+@dataclass(frozen=True)
+class PdbLeaf:
+    """One dispatch-tree leaf: its literal prefix, its members in
+    precedence order and its (regex, replacement) pairs — one pair
+    carrying both tiers when merged, the complete then the partial
+    tier when two-pass (see _build_dispatch)."""
+
+    prefix: str
+    members: tuple[CompiledPattern, ...]
+    tiers: tuple[tuple[str, str], ...]
+
+    @property
+    def strategy(self) -> str:
+        return "merged" if len(self.tiers) == 1 else "two-pass"
+
+
+def _leaf_frame(
+    alts: list[tuple[CompiledPattern, bool]], leaf_id: int
+) -> tuple[str, str, list[int]]:
+    """(regex, repl, block_offsets) for one leaf id: the alternation
+    over ``alts`` — (pattern, anchored) pairs in try order, anchored
+    ones \\z-terminated (complete tier) — and its LOCAL frame
+
+        \\x03 <leaf-id char> <header> <block_0> ... <block_{m-1}>
+
+    with local capture-group and ordinal numbering. The rendered
+    header is m separators plus the one winner-marker byte, so the
+    winner's LOCAL ordinal is ``instr(res, \\x02) - 3`` and block j
+    starts at the returned compile-time offset."""
+    lid = chr(_LEAF_ID_BASE + leaf_id)
+    # the id lands in a Java replacement string: '$' (leaf 20) and
+    # '\' (leaf 76) are metacharacters there and must be escaped
+    lid_repl = lid.replace("\\", "\\\\").replace("$", "\\$")
+    body = "|".join(
+        f"(?:({_MARK}){c.body}\\z)" if anchored else f"(?:({_MARK}){c.body})"
+        for c, anchored in alts
+    )
+    header: list[str] = []
+    blocks: list[str] = []
+    offs: list[int] = []
+    # 1-based position of block 0: the 2 prefix chars (\x03 + id)
+    # + m separators + 1 marker byte, then +1 for 1-based substr
+    off = len(alts) + 4
+    g = 0
+    for c, _anchored in alts:
+        g += 1  # sentinel group
+        header.append(f"${g}{_BLOCK_SEP}")
+        blocks.append(
+            "".join(f"${g + j + 1}{_FIELD_SEP}" for j in range(len(c.fields)))
+            + _BLOCK_SEP
+        )
+        g += len(c.fields)
+        offs.append(off)
+        off += len(c.fields) + 1
+    repl = _HIT + lid_repl + "".join(header) + "".join(blocks)
+    return (f"^(?:{body})", repl, offs)
+
+
 class PatternDB:
     """A compiled rule set applicable to a DataFrame text column.
 
@@ -464,64 +537,6 @@ class PatternDB:
             {name for r in rules for name, _ in r.values}
         )
         self.src_rules = list(rules)
-        self._build_combined()
-
-    def _build_combined(self):
-        """FLAT-path artifacts: one alternation regex PER TIER over a
-        shared single-tier replacement frame (see module docstring):
-
-            \\x03 <header> <block_0> ... <block_{N-1}> [remainder]
-            header  = $s_0 \\x01 $s_1 \\x01 ... $s_{N-1} \\x01
-            block_i = $f(i,1) \\x04 $f(i,2) \\x04 ... \\x01
-
-        Tier structure on the flat path is DELIBERATELY two-pass
-        (complete tier on every row, partial tier lazily where the
-        complete tier missed) rather than the merged 2N-alternative
-        single execution the dispatch-tree leaves use. Round-6
-        measurement (tools/profile_pdb_variants.py, 5M rows, one
-        process, output diff 0): the merged frame's replacement
-        template doubles to O(2N) bytes and Java re-parses it per
-        MATCHING row, which loses to the ~20%-of-rows second regex
-        execution it saves — flat idx+groups 4.49→4.35 s at 4 rules
-        and 18.8→11.7 s at 50 rules in two-pass form. Inside a
-        dispatch-tree leaf the members count is small (template cost
-        bounded), so there the merged single execution measured
-        FASTER (apply 7.18→6.88 s / 10.48→9.66 s) and stays.
-
-        Alternative i contributes its sentinel group first, then its
-        field groups, so all group numbers are known at compile time.
-        Only the winner's groups render; a LOSING block is just its
-        unconditional separator literals — len(fields_i)+1 bytes, a
-        compile-time constant — so the winner's block starts at a
-        byte offset computable from its ordinal alone
-        (``_block_offs``): extraction needs no splitting of the other
-        blocks and no O(N) scan, just substr + substring_index."""
-        alts: list[str] = []
-        header: list[str] = []
-        blocks: list[str] = []
-        self._block_offs: list[int] = []
-        n = len(self.patterns)
-        # 1-based substr position of block 0: after "\x03" (1) and the
-        # header, whose rendered size is fixed at N separators + the
-        # single winning marker byte = n + 1
-        off = n + 3
-        g = 0  # running capture-group counter
-        for c in self.patterns:
-            g += 1  # sentinel group
-            header.append(f"${g}{_BLOCK_SEP}")
-            blocks.append(
-                "".join(f"${g + j + 1}{_FIELD_SEP}" for j in range(len(c.fields)))
-                + _BLOCK_SEP
-            )
-            g += len(c.fields)
-            alts.append(f"(?:({_MARK}){c.body})")
-            self._block_offs.append(off)
-            # a losing block renders only its literal separators
-            off += len(c.fields) + 1
-        body = "|".join(alts)
-        self._complete_re = f"^(?:{body})\\z" if alts else None
-        self._partial_re = f"^(?:{body})" if alts else None
-        self._repl = _HIT + "".join(header) + "".join(blocks)
         self._build_dispatch()
 
     def _build_dispatch(self):
@@ -532,7 +547,9 @@ class PatternDB:
         literal prefix; a binary when() tree over the SORTED prefixes
         routes each row to one small per-prefix alternation in
         O(log groups) string compares, so per-row regex cost stays
-        ~flat as the ruleset grows.
+        ~flat as the ruleset grows. A ruleset with no literal prefix,
+        or only one, is a single root leaf holding every pattern (no
+        when() at all).
 
         Correctness of the range dispatch: if a text T starts with any
         group prefix Q, then Q <= T lexicographically, and for the
@@ -544,47 +561,49 @@ class PatternDB:
         leaf they don't actually prefix-match just fail those
         alternatives and fall through to the ancestors/catch-alls.
 
-        Each leaf renders a LOCAL frame (round 4): \\x03, one leaf-id
-        character, then a header/blocks frame over the leaf's OWN
-        members only. The global frame costs O(total rules) bytes of
-        losing-block separators per row per regex execution — at 200
-        rules that per-row string build dominated the whole apply().
-        A local frame is O(leaf members); the leaf id plus two literal
-        lookup tables (_leaf_idx_map: leaf×local -> global ordinal,
-        _leaf_off_map: leaf×local -> block byte offset) recover the
-        global decode in O(1). The flat (<2-prefix) path keeps the
-        global frame."""
-        by_prefix: dict[str, list] = {}
-        for c in self.patterns:
-            if c.literal_prefix:
-                by_prefix.setdefault(c.literal_prefix, [])
-        self._leaves = None
+        Each leaf renders LOCAL frames (module docstring) over its own
+        members only, O(leaf members) bytes per row: a global frame
+        over all rules cost O(total rules) bytes of losing-block
+        separators per row, which at 200 rules dominated apply().
+
+        Tier strategy per leaf, from its member count k: k <=
+        _MERGE_MAX_MEMBERS merges both tiers into one 2k-alternative
+        regex (one leaf id); wider leaves get one k-alternative regex
+        per tier (two leaf ids, the partial tier gated on a complete
+        miss). Measured: merged wins on 2-member leaves (apply 10.48
+        -> 9.66 s at 50 rules), two-pass on wide ones (18.8 -> 11.7 s
+        for one 50-member leaf, 5M rows). tools/profile_pdb_variants.py
+        A/Bs the two on one root leaf of k prefix-less rules: even at
+        k=2, merged 10-37% slower from k=4 on — hence the threshold of
+        2, which also keeps every leaf of the fixture and 50-rule
+        benchmark rulesets merged (table at _MERGE_MAX_MEMBERS)."""
+        prefixes = {c.literal_prefix for c in self.patterns if c.literal_prefix}
+        n = len(self.patterns)
+        self.leaves: list[PdbLeaf] = []
         self._leaf_idx_map: list[list[int]] = []
         self._leaf_off_map: list[list[int]] = []
-        if len(by_prefix) < 2:
-            return
-        # leaf ids are single characters; stay clear of the surrogate
-        # block (a ruleset would need ~55k distinct literal prefixes
-        # to get near it — fall back to the flat path if ever hit)
-        if len(by_prefix) > 0xD000 - _LEAF_ID_BASE:
-            return
-        leaves = []
-        for li, k in enumerate(sorted(by_prefix)):
-            members = [
-                c
-                for c in self.patterns
-                if c.literal_prefix == k
-                or (c.literal_prefix != k and k.startswith(c.literal_prefix))
-            ]
-            members.sort(key=lambda c: c.ordinal)
-            merged, repl, offs = self._leaf_res(members, li)
-            leaves.append((k, merged, repl))
-            n = len(self.patterns)
-            self._leaf_idx_map.append(
-                [c.ordinal for c in members] + [c.ordinal + n for c in members]
-            )
-            self._leaf_off_map.append(offs)
-        self._leaves = leaves
+        for k in sorted(prefixes) or [""]:
+            members = [c for c in self.patterns if k.startswith(c.literal_prefix)]
+            if not members:  # an empty ruleset has no leaf
+                continue
+            complete = [(c, True) for c in members]
+            partial = [(c, False) for c in members]
+            merged = len(members) <= _MERGE_MAX_MEMBERS
+            tiers = []
+            for alts in [complete + partial] if merged else [complete, partial]:
+                leaf_id = len(self._leaf_idx_map)
+                if leaf_id >= _MAX_LEAF_IDS:
+                    raise ValueError(
+                        f"ruleset needs more than {_MAX_LEAF_IDS} dispatch "
+                        f"leaf ids ({len(prefixes)} distinct literal prefixes)"
+                    )
+                regex, repl, offs = _leaf_frame(alts, leaf_id)
+                tiers.append((regex, repl))
+                self._leaf_idx_map.append(
+                    [c.ordinal + (0 if anchored else n) for c, anchored in alts]
+                )
+                self._leaf_off_map.append(offs)
+            self.leaves.append(PdbLeaf(k, tuple(members), tuple(tiers)))
         # JIT note (round-4): one monolithic when()-tree over many
         # leaves generates a single codegen method whose bytecode
         # grows ~linearly with the leaf count (~1 KB/leaf; 48,889 at
@@ -602,52 +621,8 @@ class PatternDB:
         # per-leaf guard columns, row-mode islands, and
         # methodSplitThreshold (no-ops on a monolithic CaseWhen).
 
-    def _leaf_res(
-        self, members, leaf_id: int
-    ) -> tuple[str, str, list[int]]:
-        """(merged_re, repl, block_offsets) for one dispatch leaf —
-        LOCAL frame:
-
-            \\x03 <leaf-id char> <header> <block_0> ... <block_{2k-1}>
-
-        over the leaf's k members only (local capture-group and
-        ordinal numbering), complete-anchored alternatives first then
-        the partial tier, like the global frame. The rendered header
-        is 2k separators plus the one winner-marker byte, so the
-        winner's LOCAL ordinal is ``instr(res, \\x02) - 3`` and block
-        j starts at the returned compile-time offset — O(members)
-        bytes per row instead of O(total rules)."""
-        lid = chr(_LEAF_ID_BASE + leaf_id)
-        # the id lands in a Java replacement string: '$' (leaf 20) and
-        # '\' (leaf 76) are metacharacters there and must be escaped
-        lid_repl = lid.replace("\\", "\\\\").replace("$", "\\$")
-        tiers = [(c, True) for c in members] + [(c, False) for c in members]
-        body = "|".join(
-            f"(?:({_MARK}){c.body}\\z)" if anchored else f"(?:({_MARK}){c.body})"
-            for c, anchored in tiers
-        )
-        header: list[str] = []
-        blocks: list[str] = []
-        offs: list[int] = []
-        # 1-based position of block 0: the 2 prefix chars (\x03 + id)
-        # + 2k separators + 1 marker byte, then +1 for 1-based substr
-        off = 2 * len(members) + 4
-        g = 0
-        for c, _anchored in tiers:
-            g += 1  # sentinel group
-            header.append(f"${g}{_BLOCK_SEP}")
-            blocks.append(
-                "".join(f"${g + j + 1}{_FIELD_SEP}" for j in range(len(c.fields)))
-                + _BLOCK_SEP
-            )
-            g += len(c.fields)
-            offs.append(off)
-            off += len(c.fields) + 1
-        repl = _HIT + lid_repl + "".join(header) + "".join(blocks)
-        return (f"^(?:{body})", repl, offs)
-
     def _leaf_lookup(self, res: Column, table: list[list[int]]) -> Column:
-        """Decode (leaf, local ordinal) from a local-framed result and
+        """Decode (leaf id, local ordinal) from a framed result and
         look the pair up in a ragged 2D compile-time table. In range
         by construction whenever the result carries the \\x03 hit
         prefix (the caller guards). The table is one SQL literal (one
@@ -657,24 +632,53 @@ class PatternDB:
         local1 = F.instr(res, _MARK) - 2
         return F.element_at(F.element_at(arr2d, leaf1), local1)
 
-    def _tree_result(self, text: Column, marked: Column) -> Column:
-        """Binary-search when() tree over the sorted leaf prefixes.
+    def _route(self, text: Column, leaf_expr) -> Column:
+        """Binary-search when() tree over the sorted leaf prefixes with
+        ``leaf_expr(leaf)`` at the leaves (no when() for one leaf).
         Rows lexicographically below every prefix land in leaf 0,
         above every prefix in the last leaf — both only ever match
         their catch-all alternatives there. NULL text propagates NULL
         through every branch."""
-        leaves = self._leaves
+        leaves = self.leaves
 
         def build(lo: int, hi: int) -> Column:
             if hi - lo == 1:
-                _, merged, repl = leaves[lo]
-                return F.regexp_replace(marked, merged, repl)
+                return leaf_expr(leaves[lo])
             mid = (lo + hi) // 2
-            return F.when(text < leaves[mid][0], build(lo, mid)).otherwise(
+            return F.when(text < leaves[mid].prefix, build(lo, mid)).otherwise(
                 build(mid, hi)
             )
 
         return build(0, len(leaves))
+
+    def _first_tier(self, text: Column) -> Column:
+        """The routed leaf's first regex — both tiers on a merged leaf,
+        the complete tier on a two-pass one — rendered into the framed
+        result, or the marked input unchanged (it starts with \\x02,
+        not \\x03) when no alternative matched."""
+        marked = F.concat(F.lit(_MARK), text)
+        return self._route(
+            text, lambda leaf: F.regexp_replace(marked, *leaf.tiers[0])
+        )
+
+    def _partial_tier(self, text: Column, first: Column) -> Column:
+        """Two-pass leaves' partial-tier regex, on the rows their
+        complete tier missed (``first`` still starts with \\x02);
+        every other row keeps ``first``. ``first`` should be a staged
+        column: it is referenced at each leaf."""
+        return F.when(
+            first.startswith(_MARK),
+            self._route(
+                text,
+                lambda leaf: F.regexp_replace(first, *leaf.tiers[1])
+                if leaf.strategy == "two-pass"
+                else first,
+            ),
+        ).otherwise(first)
+
+    @property
+    def _two_pass(self) -> bool:
+        return any(leaf.strategy == "two-pass" for leaf in self.leaves)
 
     # round-1 API: `rules` was the compiled list
     @property
@@ -683,79 +687,35 @@ class PatternDB:
 
     # --- single-execution classify + extract machinery ---
 
-    def _merged_result(self, text: Column) -> Column:
-        """TREE path: ONE regex execution per row — the routed leaf's
-        merged two-tier alternation rendered into the framed result
-        string (or the marked input unchanged — which starts with
-        \\x02, not \\x03 — when no alternative matched). Flat rulesets
-        (<2 literal prefixes) have no tree: they go through
-        _flat_complete/_flat_result."""
-        if not self._leaves:
-            raise ValueError(
-                "_merged_result needs the dispatch tree; this ruleset has "
-                "fewer than 2 literal prefixes (flat path: use "
-                "_flat_complete + _flat_result)"
-            )
-        marked = F.concat(F.lit(_MARK), text)
-        return self._tree_result(text, marked)
-
-    def _flat_complete(self, text: Column) -> Column:
-        """FLAT path pass 1: the complete-tier alternation on every
-        row (framed result, or the marked input unchanged on miss)."""
-        marked = F.concat(F.lit(_MARK), text)
-        return F.regexp_replace(marked, self._complete_re, self._repl)
-
-    def _flat_result(self, text: Column, complete: Column) -> Column:
-        """FLAT path pass 2: rows that complete-matched reuse pass 1's
-        frame; only the misses execute the partial-tier regex (the
-        when() branches evaluate lazily in codegen). Two-pass is the
-        measured winner on the flat path — see _build_combined."""
-        marked = F.concat(F.lit(_MARK), text)
-        partial = F.regexp_replace(marked, self._partial_re, self._repl)
-        return F.when(complete.startswith(_HIT), complete).otherwise(partial)
-
-    def _idx_from_result(
-        self, res: Column, was_complete: Column | None = None
-    ) -> Column:
-        """Winning global index from the framed result of either path:
-        flat (global frame, header byte-scan — every losing sentinel
-        before the winner contributes exactly one separator byte, so
-        the marker's byte position IS the winning ordinal; the caller
-        passes ``was_complete`` to add the +N partial-tier offset) or
-        dispatch tree (local frame, leaf-id + local ordinal through
-        the _leaf_idx_map table, both tiers in one frame). NULL when
-        the regex didn't match (result still starts with \\x02)."""
-        if not self._leaves:
-            if was_complete is None:
-                raise ValueError("flat path requires was_complete")
-            n = len(self.patterns)
-            ord0 = F.when(res.startswith(_HIT), F.instr(res, _MARK) - 2)
-            return F.when(
-                ord0.isNotNull(),
-                ord0 + F.when(was_complete, F.lit(0)).otherwise(F.lit(n)),
-            ).cast("int")
-        return F.when(
-            res.startswith(_HIT), self._leaf_lookup(res, self._leaf_idx_map)
-        ).cast("int")
+    def _decode(self, res: Column) -> tuple[Column, Column]:
+        """(winning global index, winner's block offset) from a framed
+        result: leaf id + local ordinal through the _leaf_idx_map and
+        _leaf_off_map tables (partial-tier entries already carry the +N
+        offset). Both NULL when no regex matched (the result still
+        starts with \\x02), so unmatched rows never index the tables."""
+        hit = res.startswith(_HIT)
+        return (
+            F.when(hit, self._leaf_lookup(res, self._leaf_idx_map)).cast("int"),
+            F.when(hit, self._leaf_lookup(res, self._leaf_off_map)),
+        )
 
     def match_idx(self, text: Column) -> Column:
         """Winning compiled-pattern ordinal; ordinal+N encodes a
         partial (pattern-consumed, message-remainder) match; NULL if
-        unmatched. Mirrors radix.c's complete-then-partial two-pass
-        (merged into one alternation per dispatch-tree leaf; literal
-        two-pass on the flat path).
+        unmatched. Mirrors radix.c's complete-then-partial two-pass.
 
-        Standalone expression form (no projection staging) — fine for
-        one-off classification; apply() stages the shared subtrees as
-        materialized columns so each regex runs once per row."""
+        Standalone expression form (no projection staging): fine for
+        one-off classification, but a result referenced more than once
+        may be evaluated more than once; apply() stages the shared
+        subtrees as materialized columns so each regex runs once per
+        row."""
         if not self.patterns:
             return F.lit(None).cast("int")
         text = _strip_framing_bytes(text)
-        if self._leaves:
-            return self._idx_from_result(self._merged_result(text))
-        complete = self._flat_complete(text)
-        res = self._flat_result(text, complete)
-        return self._idx_from_result(res, complete.startswith(_HIT))
+        res = self._first_tier(text)
+        if self._two_pass:
+            res = self._partial_tier(text, res)
+        return self._decode(res)[0]
 
     def classify(self, text: Column) -> Column:
         """rule_id of the winning rule, NULL if unclassified."""
@@ -799,16 +759,14 @@ class PatternDB:
             [c.rule.rule_id for c in self.patterns], idx % n, "string"
         )
 
-    def _groups_from_result(self, res: Column, idx: Column) -> Column:
+    def _groups_from_result(self, res: Column, off: Column) -> Column:
         """Field values of the winning alternative, sliced out of the
-        framed result by the index-keyed compile-time byte offset
-        (``_block_offs``, N entries — both flat tiers share the same
-        single-tier frame, so the block ordinal is idx mod N) — the
-        winner's block runs from there to its \\x01 terminator (field
-        j at split element j, 1-based; the partial-tier message
-        remainder sits after the LAST block and never reaches the
-        slice). Zero additional regex work, zero O(rules)
-        splitting/scanning per row.
+        framed result at its compile-time byte offset ``off`` (see
+        _decode) — the winner's block runs from there to its \\x01
+        terminator (field j at split element j, 1-based; the
+        partial-tier message remainder sits after the LAST block and
+        never reaches the slice). Zero additional regex work, zero
+        O(rules) splitting/scanning per row.
 
         The identity ``transform`` is a DELIBERATE whole-stage-codegen
         stage break, not a no-op to clean up: higher-order functions
@@ -820,18 +778,6 @@ class PatternDB:
         silently runs in the bytecode interpreter — measured 3-4x
         slower end-to-end. The split keeps both halves JIT-compiled;
         its cost is one small-array copy per row."""
-        if self._leaves:
-            # local frame: the offset comes from (leaf, local ordinal)
-            # decoded off the result itself; guarded so unmatched rows
-            # (result still starts \x02) never index the tables
-            off = F.when(
-                res.startswith(_HIT),
-                self._leaf_lookup(res, self._leaf_off_map),
-            )
-        else:
-            off = self._lut(
-                self._block_offs, idx % max(len(self.patterns), 1), "int"
-            )
         block = F.substring_index(
             res.substr(off, F.length(res)), _BLOCK_SEP, 1
         )
@@ -1033,8 +979,8 @@ class PatternDB:
         elsewhere), so rules sharing a field name compose like the
         reference's unified NV namespace.
 
-        Deliberate projection staging: each heavy subtree (the merged
-        tier regexp_replace, the winning index, the groups array) is
+        Deliberate projection staging: each heavy subtree (the leaf
+        tier regexes, the winning index, the groups array) is
         materialized once as a plain attribute reference before
         anything fans out over it — folding them into one select would
         re-evaluate the regex per referencing column (Catalyst's
@@ -1064,39 +1010,25 @@ class PatternDB:
             txt_col = f"__pdb_txt{prefix}"
             df = df.withColumn(txt_col, gated)
             gated = F.col(txt_col)
-            if self._leaves:
-                # TREE: stage 1 — merged two-tier alternation (ONE
-                # regex execution per row, complete alternatives
-                # first); stage 2 — framed result -> global ordinal
-                # (leaf-table lookup); stage 3 — winner's block sliced
-                # out by compile-time offset
-                df = df.withColumn(r_col, self._merged_result(gated))
+            # stage 1 — the routed leaf's tier regexes (one execution
+            # per row on merged leaves; on two-pass leaves the partial
+            # tier only where the staged complete tier missed); stage
+            # 2 — framed result -> global ordinal and block offset
+            # (leaf-table lookups), kept in whole-stage codegen below
+            # stage 3's stage break; stage 3 — winner's block sliced
+            # out at that offset
+            df = df.withColumn(r_col, self._first_tier(gated))
+            if self._two_pass:
                 df = df.withColumn(
-                    idx_col, self._idx_from_result(F.col(r_col))
+                    r_col, self._partial_tier(gated, F.col(r_col))
                 )
-                df = df.withColumn(
-                    groups_col,
-                    self._groups_from_result(F.col(r_col), F.col(idx_col)),
-                ).drop(r_col, txt_col)
-            else:
-                # FLAT: two-pass tiers (complete every row, partial
-                # lazily on the misses — the measured winner here, see
-                # _build_combined), then the same ordinal/groups decode
-                c_col = f"__pdb_c{prefix}"
-                df = df.withColumn(c_col, self._flat_complete(gated))
-                df = df.withColumn(
-                    r_col, self._flat_result(gated, F.col(c_col))
-                )
-                df = df.withColumn(
-                    idx_col,
-                    self._idx_from_result(
-                        F.col(r_col), F.col(c_col).startswith(_HIT)
-                    ),
-                )
-                df = df.withColumn(
-                    groups_col,
-                    self._groups_from_result(F.col(r_col), F.col(idx_col)),
-                ).drop(c_col, r_col, txt_col)
+            off_col = f"__pdb_off{prefix}"
+            idx, off = self._decode(F.col(r_col))
+            df = df.withColumns({idx_col: idx, off_col: off})
+            df = df.withColumn(
+                groups_col,
+                self._groups_from_result(F.col(r_col), F.col(off_col)),
+            ).drop(r_col, txt_col, off_col)
         idx = F.col(idx_col)
         mod = idx % max(n, 1)
         proj2 = {

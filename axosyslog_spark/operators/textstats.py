@@ -261,6 +261,26 @@ def tfidf_top_terms(
     )
 
 
+def ntile_bucket(pos: Column, n_rows: int, n_buckets: int) -> Column:
+    """ntile(n_buckets) bucket (1-based int) of the row at 1-based
+    bigint position ``pos`` among ``n_rows`` ordered rows: the first
+    n_rows % n_buckets buckets hold n_rows // n_buckets + 1 rows, the
+    rest n_rows // n_buckets. Integral division (SQL ``div``) only, so
+    the bucket is exact at any row count a bigint holds — double
+    division rounds positions past 2^53."""
+    big, small = n_rows % n_buckets, n_rows // n_buckets
+    if small == 0:  # fewer rows than buckets: one row per bucket
+        return pos.cast("int")
+    head_rows = big * (small + 1)
+
+    def div(a: Column, b: int) -> Column:
+        return F.call_function("div", a, F.lit(b))
+
+    return F.when(pos <= head_rows, div(pos - 1, small + 1) + 1).otherwise(
+        div(pos - head_rows - 1, small) + (big + 1)
+    ).cast("int")
+
+
 def unigram_rarity_buckets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -343,16 +363,7 @@ def unigram_rarity_buckets(
         F.element_at(F.lit(offsets).cast("array<bigint>"), F.col("__pid") + 1)
         + F.row_number().over(w)
     )
-    # ntile(n) over N rows: the first N%n buckets hold N//n+1 rows,
-    # the rest N//n — bucket from position by pure arithmetic
-    big, small = n_rows % n_buckets, n_rows // n_buckets
-    head_rows = big * (small + 1)
-    bucket = F.when(
-        F.lit(small) == 0, pos
-    ).when(
-        pos <= head_rows, (pos - 1) / (small + 1) + 1
-    ).otherwise(F.lit(big) + (pos - head_rows - 1) / small + 1)
-    bucket = F.floor(bucket).cast("int")
+    bucket = ntile_bucket(pos, n_rows, n_buckets)
     names = F.when(F.col("__b") == 1, F.lit("head")).when(
         F.col("__b") == n_buckets, F.lit("tail")
     ).otherwise(F.lit("middle"))

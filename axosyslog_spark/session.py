@@ -17,6 +17,46 @@ import os
 
 from pyspark.sql import SparkSession
 
+_GIB = 1 << 30
+
+
+def available_memory() -> int | None:
+    """Bytes this process can use: the smaller of the cgroup memory
+    limit (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``) and the
+    kernel's ``MemAvailable``; None where neither is readable."""
+    known = []
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():  # v2 writes "max" when unlimited
+            known.append(int(text))
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    known.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    return min(known, default=None)
+
+
+def default_driver_mem(available: int | None = None) -> str:
+    """Driver heap when $SPARK_DRIVER_MEM is unset: a third of the
+    available memory in whole GiB, between 2g and 16g. The heap is
+    pre-touched (see get_spark), so it must fit next to the Python
+    workers and the JVM's off-heap memory; a 16g heap cannot start on
+    a 15 GiB host. Unknown memory gets the 2g floor."""
+    if available is None:
+        available = available_memory()
+    gib = min(16, max(2, (available or 0) // 3 // _GIB))
+    return f"{gib}g"
+
 
 def get_spark(
     app_name: str = "axosyslog_spark",
@@ -26,13 +66,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores.
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores; the
+    driver heap to $SPARK_DRIVER_MEM or default_driver_mem().
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

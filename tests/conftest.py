@@ -12,6 +12,6 @@ from axosyslog_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     s.conf.set("spark.sql.session.timeZone", "UTC")
     yield s

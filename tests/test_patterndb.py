@@ -4,11 +4,15 @@ pattern_rules fixture."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
+from axosyslog_spark.operators import patterndb
 from axosyslog_spark.operators.patterndb import (
     PatternDB,
     PdbRule,
+    compile_pattern,
     compile_rule,
 )
 
@@ -309,11 +313,60 @@ def test_large_ruleset_classification(spark):
         assert r["op"] == "put" and r["code"] == i * 7 and r["msg"] == f"tail {i}"
 
 
-def test_dispatch_tree_equals_flat_alternation(spark):
-    """The literal-prefix dispatch tree (radix analog) must classify
-    and extract byte-identically to the flat combined alternation —
-    mixed exact/nested/empty prefixes, both tiers, unmatched rows."""
-    rules = [
+def _reference(rules, lines):
+    """Independent Python-`re` model of the engine: the compiled
+    patterns in precedence order (longest literal prefix first,
+    declaration order on ties); the first complete match (fullmatch)
+    wins, else the first partial match (match); the winner's fields
+    are its groups, typed as declared and NULL elsewhere."""
+    pats = sorted(
+        (compile_pattern(r, p) for r in rules for p in r.patterns),
+        key=lambda c: -len(c.literal_prefix),
+    )
+    names = {f.name for c in pats for f in c.fields}
+    out = []
+    for t in lines:
+        row = dict.fromkeys(names)
+        hit = None
+        if t is not None:
+            hit = next(
+                ((c, m) for c in pats if (m := re.fullmatch(c.body, t))), None
+            ) or next(((c, m) for c in pats if (m := re.match(c.body, t))), None)
+        row["rule_id"] = hit[0].rule_id if hit else None
+        if hit:
+            c, m = hit
+            for i, f in enumerate(c.fields):
+                v = m.group(i + 1)
+                if f.cast and v == "":
+                    v = None
+                elif f.cast == "bigint":
+                    v = int(v)
+                elif f.cast == "double":
+                    v = float(v)
+                row[f.name] = v
+        out.append(row)
+    return out
+
+
+def _fixture_rules():
+    from axosyslog_spark.operators.pdb_load import load_fixture
+
+    [rs] = load_fixture()
+    return list(rs.rules)
+
+
+def _synthetic(k):
+    return [
+        PdbRule(
+            f"syn{i:03d}",
+            f"svc-{i:03d} op=@ESTRING:op: @code=@NUMBER:code@ detail=@ANYSTRING:detail@",
+        )
+        for i in range(k)
+    ]
+
+
+def _mixed22():
+    return [
         PdbRule(f"svc{i:02d}", f"svc-{i:02d} op=@ESTRING:op: @n=@NUMBER:n@")
         for i in range(20)
     ] + [
@@ -322,30 +375,95 @@ def test_dispatch_tree_equals_flat_alternation(spark):
         # empty literal prefix: catch-all candidate for every leaf
         PdbRule("num_first", "@NUMBER:lead@ tail=@ESTRING:tail:@"),
     ]
+
+
+def _unprefixed(rules, lead=""):
+    """The same rules behind a zero-width leading class, so their
+    literal prefix is ``lead`` (empty: no prefix at all)."""
+    return [
+        PdbRule(r.rule_id, tuple(f"{lead}@OPTIONALSET:: @{p}" for p in r.patterns))
+        for r in rules
+    ]
+
+
+REFERENCE_LINES = (
+    [f"svc-{i:02d} op=get n={i}" for i in range(20)]
+    + ["svc-99 odd shape", "7 tail=x", "svc-05 op=partial n=5 extra words",
+       "zzz beyond every prefix", "aaa below every prefix", "", None]
+    + [f"svc-{i:03d} op=put code={i * 7} detail=d {i}" for i in (0, 3, 45, 46, 120, 195)]
+    + ["svc-007 op=put code=x detail=y", "svc-007 op=put code=9 detail=",
+       "status=ok latency_ms=117 path=/v1/run retry=2",
+       "status=ok latency_ms=117 path=/v1/run retry=2 and more",
+       "status=error latency_ms=9 path=/v1/view",
+       "status=error latency_ms=9 path=/v1/view retry=x",
+       "BADHDR 2026-01-01 hostA status=ok latency_ms=5",
+       "BADHDR 2026-01-01 hostA status=ok latency_ms=5 tail",
+       "turn about cats with no structure",
+       "turn about cats with no structure!",
+       "turn about nothing"]
+)
+REFERENCE_SETS = {
+    "mixed22": _mixed22,
+    "fixture4": _fixture_rules,
+    "rules50": lambda: _fixture_rules() + _synthetic(46),
+    "rules200": lambda: _fixture_rules() + _synthetic(196),
+    "prefixless": lambda: _unprefixed(_fixture_rules() + _synthetic(12)),
+    "one_prefix": lambda: _unprefixed(_fixture_rules(), "app: ")
+    + [PdbRule("num_first", "@NUMBER:lead@ tail=@ESTRING:tail:@")],
+}
+
+
+@pytest.mark.parametrize("strategy", ["merged", "two-pass"])
+@pytest.mark.parametrize("ruleset", sorted(REFERENCE_SETS))
+def test_engine_matches_python_re_reference(spark, monkeypatch, ruleset, strategy):
+    """Every ruleset shape — nested/empty/many/no/one literal prefix —
+    classifies and extracts exactly like the Python-`re` model, under
+    either tier strategy: the complete tier wins across rules, the
+    partial tier only when nothing matches completely."""
+    monkeypatch.setattr(
+        patterndb, "_MERGE_MAX_MEMBERS", 10**9 if strategy == "merged" else 0
+    )
+    rules = REFERENCE_SETS[ruleset]()
     pdb = PatternDB(rules)
-    assert pdb._leaves is not None and len(pdb._leaves) >= 20
-    lines = (
-        [f"svc-{i:02d} op=get n={i}" for i in range(20)]
-        + ["svc-99 odd shape", "7 tail=x", "svc-05 op=partial n=5 extra words",
-           "zzz beyond every prefix", "aaa below every prefix", ""]
-    )
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(lines)], "id int, text string"
-    )
-    with_tree = {r["id"]: r.asDict() for r in pdb.apply(df).collect()}
-    pdb._leaves = None  # force the flat combined path
-    flat = {r["id"]: r.asDict() for r in pdb.apply(df).collect()}
-    assert with_tree == flat
-    # spot-check semantics, not just self-consistency
-    assert with_tree[3]["rule_id"] == "svc03" and with_tree[3]["n"] == 3
-    assert with_tree[20]["rule_id"] == "svc_any"
-    assert with_tree[21]["rule_id"] == "num_first"
-    # svc05 only partial-matches here, and svc_any's ANYSTRING is a
-    # COMPLETE match — the complete tier wins across rules (radix.c
-    # two-pass), through the tree exactly as through the flat path
-    assert with_tree[22]["rule_id"] == "svc_any"
-    assert with_tree[23]["rule_id"] is None
-    assert with_tree[24]["rule_id"] is None
+    assert {leaf.strategy for leaf in pdb.leaves} == {strategy}
+    if ruleset in ("prefixless", "one_prefix"):
+        assert len(pdb.leaves) == 1
+    lines = list(REFERENCE_LINES)
+    if ruleset == "one_prefix":
+        lines += ["app: " + t for t in lines if t]
+    df = spark.createDataFrame(list(enumerate(lines)), "id int, text string")
+    got = {r["id"]: r for r in pdb.apply(df).collect()}
+    want = _reference(rules, lines)
+    for i, w in enumerate(want):
+        assert {k: got[i][k] for k in w} == w, lines[i]
+    assert any(w["rule_id"] for w in want)
+
+
+def test_tier_preference_through_the_tree(spark):
+    """svc05 only partial-matches, and svc_any's ANYSTRING is a
+    COMPLETE match — the complete tier wins across rules and leaves
+    (radix.c two-pass)."""
+    lines = ["svc-03 op=get n=3", "svc-99 odd shape", "7 tail=x",
+             "svc-05 op=partial n=5 extra words", "zzz", "aaa"]
+    rows = _apply(spark, _mixed22(), lines)
+    assert len(PatternDB(_mixed22()).leaves) >= 20
+    assert rows[0]["rule_id"] == "svc03" and rows[0]["n"] == 3
+    assert [r["rule_id"] for r in rows[1:]] == [
+        "svc_any", "num_first", "svc_any", None, None
+    ]
+
+
+def test_oversized_ruleset_rejected(monkeypatch):
+    """More dispatch leaf ids than the id charset holds is an error,
+    not a silent fallback: two-pass leaves take two ids each."""
+    monkeypatch.setattr(patterndb, "_MAX_LEAF_IDS", 3)
+    PatternDB(_synthetic(3))
+    with pytest.raises(ValueError, match="more than 3 dispatch leaf ids"):
+        PatternDB(_synthetic(4))
+    monkeypatch.setattr(patterndb, "_MERGE_MAX_MEMBERS", 0)
+    PatternDB(_synthetic(1))
+    with pytest.raises(ValueError, match="more than 3 dispatch leaf ids"):
+        PatternDB(_synthetic(2))
 
 
 def test_control_bytes_sanitized(spark):
@@ -379,20 +497,3 @@ def test_control_bytes_sanitized(spark):
     pdb = PatternDB(F4_RULES)
     got = [r[0] for r in df.select(pdb.classify(F.col("text"))).collect()]
     assert got == ["kv_status", "kv_status", "login", "kv_status", "kv_status", None]
-
-
-def test_merged_result_rejects_flat_ruleset():
-    """_merged_result is the dispatch-tree path only; a flat ruleset
-    (<2 literal prefixes) fails fast with a clear message instead of
-    len(None) deep inside the tree builder. The guard fires before
-    any Column is built, so no session is needed."""
-    pdb = PatternDB(F4_RULES[:1])
-    assert pdb._leaves is None
-    with pytest.raises(ValueError, match="fewer than 2 literal prefixes"):
-        pdb._merged_result(object())
-
-
-def test_flat_idx_requires_was_complete():
-    pdb = PatternDB(F4_RULES[:1])
-    with pytest.raises(ValueError, match="flat path requires was_complete"):
-        pdb._idx_from_result(object())

@@ -3,6 +3,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -404,6 +406,27 @@ def test_rarity_buckets_match_ntile_exactly(spark):
     }
     got_names = {r.doc_id: r.bucket for r in got.collect()}
     assert got_names == ref_names
+
+
+@pytest.mark.parametrize(
+    "n_rows,n_buckets",
+    [(3 * 2**31 + 2, 3), (2**31 + 5, 7), (3 * 2**53 + 2, 3), (2**53 + 5, 7)],
+)
+def test_ntile_bucket_exact_near_2_31_and_2_53(spark, n_rows, n_buckets):
+    """Bucket boundaries (the last row of a bucket and its neighbours)
+    land exactly as ntile puts them at row counts where double
+    division would round the position."""
+    sizes = [n_rows // n_buckets + (b < n_rows % n_buckets) for b in range(n_buckets)]
+    ends = list(itertools.accumulate(sizes))
+    positions = sorted(
+        {p for e in ends for p in (e - 1, e, e + 1) if 1 <= p <= n_rows} | {1}
+    )
+    want = [next(b + 1 for b, e in enumerate(ends) if p <= e) for p in positions]
+    row = spark.range(1).select(*[
+        textstats.ntile_bucket(F.lit(p).cast("bigint"), n_rows, n_buckets)
+        for p in positions
+    ]).first()
+    assert list(row) == want
 
 
 def test_rarity_buckets_plan_has_no_global_window(spark):

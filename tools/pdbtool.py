@@ -265,8 +265,9 @@ def cmd_dump(args) -> int:
     prints the radix trie; this engine's equivalent structures are the
     precedence-ordered compiled pattern list and the literal-prefix
     dispatch tree, so that's what dump shows — per leaf: the dispatch
-    prefix, then each member pattern's ordinal, rule_id, field set and
-    compiled regex body (no Spark session needed, plan-time only)."""
+    prefix and tier strategy, then each member pattern's ordinal,
+    rule_id, field set and compiled regex body (no Spark session
+    needed, plan-time only)."""
     from axosyslog_spark.operators.pdb_load import load_pdb_xml
 
     for rs in load_pdb_xml(args.ruleset):
@@ -275,28 +276,9 @@ def cmd_dump(args) -> int:
         if args.program_tree:
             print(f"  program selectors: {list(pdb.programs) or '(all)'}")
             continue
-        leaves = pdb._leaves
-        if leaves is None:
-            groups = [("(flat alternation)", pdb.patterns)]
-        else:
-            by = {}
-            for c in pdb.patterns:
-                if c.literal_prefix:
-                    by.setdefault(c.literal_prefix, [])
-            groups = [
-                (
-                    f"prefix '{k}'",
-                    [
-                        c for c in pdb.patterns
-                        if c.literal_prefix == k
-                        or (c.literal_prefix != k and k.startswith(c.literal_prefix))
-                    ],
-                )
-                for k in sorted(by)
-            ]
-        for label, members in groups:
-            print(f"  [{label}]")
-            for c in sorted(members, key=lambda c: c.ordinal):
+        for leaf in pdb.leaves:
+            print(f"  [prefix '{leaf.prefix}', {leaf.strategy}]")
+            for c in leaf.members:
                 fields = " ".join(
                     f"@{f.cast or 'string'}:{f.name}@" for f in c.fields
                 )

@@ -1,37 +1,30 @@
-"""Same-process A/B for the PatternDB tier merge (round 6).
+"""Same-process A/B of PatternDB's two tier strategies.
 
-Variants, each timed min-of-N with the noop sink over the same
-persisted 5M-row generated input (one process — cross-process numbers
-on this box are steal-noise):
+A dispatch leaf of k members runs the complete and partial radix
+tiers either MERGED (one 2k-alternative regex, one execution per row,
+a 2k-block replacement template Java re-parses per matching row) or
+TWO-PASS (a k-alternative regex per tier, chained). The engine picks
+per leaf from ``patterndb._MERGE_MAX_MEMBERS``; this tool times its
+own ``PatternDB.apply`` with that constant at 0 (every leaf two-pass)
+and at infinity (every leaf merged) on ONE root leaf of k prefix-less
+rules: the 4 fixture rules behind a zero-width leading class, then
+never-matching synthetic rules (k = 2 keeps the first two fixture
+rules only).
 
-  merged   ONE alternation regex carrying both tiers (complete
-           \\z-anchored alternatives first, then the same bodies
-           unanchored) — one regexp_replace per row, but a 2N-block
-           replacement template Java re-parses per matching row.
-  twopass  a complete-tier regexp_replace on every row, then a
-           partial-tier regexp_replace for rows the complete tier
-           missed (~20% of the bench distribution) — up to two regex
-           executions per row, single-tier N-block frame.
+Per k, both variants must produce the same output (an order-free
+hash over rule_id and every field), then each runs once to warm up
+and ``pairs`` times interleaved, the first of each pair alternating,
+with the noop sink over the same persisted parse_header bodies.
 
-Both run on the FLAT global frame (no dispatch tree) so the A/B
-isolates the tier structure itself. Measured outcome this round:
-twopass wins on the flat path (the doubled template loses to the
-gated second execution — 1.6x at 50 rules), merged wins inside
-dispatch-tree leaves where the member count bounds the template — so
-the shipped engine is two-pass flat + merged-per-leaf, and
-``apply_full(tree)`` below times the shipped hybrid.
-
-Both variants are also checked for agreement on the winning ordinal
-(the two-pass partial index is offset by N to the merged encoding)
-before timing, and the harness runs at 4 rules (the bench fixture)
-and 50 rules (fixture + 46 distinct-prefix synthetics, the bench's
-gen5m_patterndb50 set).
-
-Usage: python tools/profile_pdb_variants.py [rows]
+Usage: python tools/profile_pdb_variants.py [rows] [pairs] [k,k,...]
+       (defaults: 400000 rows, 5 pairs, k = 2,4,8,16,32,50)
+Prints one line per k: median [q1-q3] seconds per variant and the
+merged/two-pass ratio of medians.
 """
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -39,145 +32,90 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from axosyslog_spark.operators import patterndb  # noqa: E402
 from axosyslog_spark.operators.parse import parse_header  # noqa: E402
-from axosyslog_spark.operators.patterndb import (  # noqa: E402
-    _BLOCK_SEP,
-    _HIT,
-    _MARK,
-    PatternDB,
-    PdbRule,
-    _strip_framing_bytes,
-)
+from axosyslog_spark.operators.patterndb import PatternDB, PdbRule  # noqa: E402
 from axosyslog_spark.operators.pdb_load import load_fixture  # noqa: E402
 from axosyslog_spark.session import get_spark  # noqa: E402
 from axosyslog_spark.sources.transcripts import generate_transcripts  # noqa: E402
 
+STRATEGIES = {"two-pass": 0, "merged": float("inf")}
 
-def noop(df):
+
+def prefixless_rules(k: int) -> list[PdbRule]:
+    """k rules without a literal prefix (one root leaf): the fixture's
+    rules first, then synthetic ones that never match the bodies."""
+    [rs] = load_fixture()
+    patterns = [(r.rule_id, r.patterns[0]) for r in rs.rules] + [
+        (f"syn{i:03d}",
+         f"svc-{i:03d} op=@ESTRING:op: @code=@NUMBER:code@ detail=@ANYSTRING:detail@")
+        for i in range(max(k - len(rs.rules), 0))
+    ]
+    return [PdbRule(rid, f"@OPTIONALSET:: @{p}") for rid, p in patterns[:k]]
+
+
+def build(rules: list[PdbRule], strategy: str) -> PatternDB:
+    saved = patterndb._MERGE_MAX_MEMBERS
+    patterndb._MERGE_MAX_MEMBERS = STRATEGIES[strategy]
+    try:
+        pdb = PatternDB(rules)
+    finally:
+        patterndb._MERGE_MAX_MEMBERS = saved
+    assert [leaf.strategy for leaf in pdb.leaves] == [strategy]
+    return pdb
+
+
+def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _tier_re(patterns, anchored: bool) -> tuple[str, str]:
-    """(regex, replacement) for ONE tier over the flat global frame —
-    the round-5 per-tier structure rebuilt from the current compiled
-    patterns (sentinel-framed alternation, header + per-alt blocks)."""
-    alts, header, blocks = [], [], []
-    g = 0
-    for c in patterns:
-        g += 1
-        header.append(f"${g}{_BLOCK_SEP}")
-        blocks.append(
-            "".join(f"${g + j + 1}\x04" for j in range(len(c.fields)))
-            + _BLOCK_SEP
-        )
-        g += len(c.fields)
-        body = f"(?:({_MARK}){c.body}\\z)" if anchored else f"(?:({_MARK}){c.body})"
-        alts.append(body)
-    return f"^(?:{'|'.join(alts)})", _HIT + "".join(header) + "".join(blocks)
+def output_hash(pdb: PatternDB, base) -> int:
+    cols = ["rule_id", *pdb.field_names]
+    out = pdb.apply(base, text_col="body").select(
+        F.xxhash64(*[F.col(c).cast("string") for c in cols]).alias("h")
+    )
+    return out.agg(F.sum(F.pmod("h", F.lit(1 << 32)))).first()[0]
 
 
-def two_pass_idx(pdb: PatternDB, text):
-    """Winning global ordinal via the round-5 two-pass shape: complete
-    tier on every row, partial tier only where the complete tier
-    missed (encoded +N, like the merged engine)."""
-    n = len(pdb.patterns)
-    c_re, c_repl = _tier_re(pdb.patterns, True)
-    p_re, p_repl = _tier_re(pdb.patterns, False)
-    t = _strip_framing_bytes(text)
-    marked = F.concat(F.lit(_MARK), t)
-    rc = F.regexp_replace(marked, c_re, c_repl)
-    idx_c = F.when(rc.startswith(_HIT), F.instr(rc, _MARK) - 2)
-    rp = F.regexp_replace(marked, p_re, p_repl)
-    idx_p = F.when(rp.startswith(_HIT), F.instr(rp, _MARK) - 2 + n)
-    return F.coalesce(idx_c, idx_p).cast("int")
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
 
 
-def _merged_frame(patterns) -> tuple[str, str]:
-    """The 2N-alternative single-execution frame (the round-6
-    experiment that the tree path kept and the flat path reverted):
-    complete \\z-anchored alternatives first, then the same bodies
-    unanchored, one shared 2N-block replacement."""
-    alts, header, blocks = [], [], []
-    g = 0
-    for c, anchored in [(c, True) for c in patterns] + [
-        (c, False) for c in patterns
-    ]:
-        g += 1
-        header.append(f"${g}{_BLOCK_SEP}")
-        blocks.append(
-            "".join(f"${g + j + 1}\x04" for j in range(len(c.fields)))
-            + _BLOCK_SEP
-        )
-        g += len(c.fields)
-        alts.append(
-            f"(?:({_MARK}){c.body}\\z)" if anchored else f"(?:({_MARK}){c.body})"
-        )
-    return f"^(?:{'|'.join(alts)})", _HIT + "".join(header) + "".join(blocks)
-
-
-def merged_flat_idx(pdb: PatternDB, text):
-    """Merged-alternation ordinal on the FLAT path (no dispatch tree),
-    so the A/B isolates the tier merge itself."""
-    m_re, m_repl = _merged_frame(pdb.patterns)
-    t = _strip_framing_bytes(text)
-    marked = F.concat(F.lit(_MARK), t)
-    r = F.regexp_replace(marked, m_re, m_repl)
-    return F.when(r.startswith(_HIT), F.instr(r, _MARK) - 2).cast("int")
-
-
-def main():
-    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
-    spark = get_spark("profile_pdb_variants", cores=32)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-    gen = generate_transcripts(spark, rows, max(rows // 200, 1),
-                               skew_hot_convs=5, partitions=128)
-    gen.persist().count()
-    ph = parse_header(gen)
-    ph_cached = ph  # lazy; parse cost is identical across variants
-
-    [rs] = load_fixture()
-    rules4 = list(rs.rules)
-    extra = [
-        PdbRule(
-            f"syn{i:02d}",
-            f"svc-{i:02d} op=@ESTRING:op: @code=@NUMBER:code@ "
-            f"detail=@ANYSTRING:detail@",
-        )
-        for i in range(46)
+def main() -> None:
+    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
+    pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    ks = [int(k) for k in sys.argv[3].split(",")] if len(sys.argv) > 3 else [
+        2, 4, 8, 16, 32, 50
     ]
-    for label, rules in [("4-rule", rules4), ("50-rule", rules4 + extra)]:
-        pdb = PatternDB(rules)
+    spark = get_spark("profile_pdb_variants")
+    base = parse_header(
+        generate_transcripts(spark, rows, max(rows // 200, 1), skew_hot_convs=5)
+    ).select("body").persist()
+    base.count()
 
-        # agreement check: merged == two-pass on the winning ordinal
-        chk = ph_cached.select(
-            merged_flat_idx(pdb, F.col("body")).alias("m"),
-            two_pass_idx(pdb, F.col("body")).alias("t"),
-        ).filter(~F.col("m").eqNullSafe(F.col("t")))
-        bad = chk.count()
-        print(f"{label}: ordinal disagreement rows = {bad}")
-        assert bad == 0
-
-        def t_merged():
-            noop(ph_cached.select(merged_flat_idx(pdb, F.col("body")).alias("i")))
-
-        def t_twopass():
-            noop(ph_cached.select(two_pass_idx(pdb, F.col("body")).alias("i")))
-
-        def t_apply():
-            noop(pdb.apply(ph_cached, text_col="body", with_class=True))
-
-        for name, fn in [("merged_flat", t_merged),
-                         ("twopass_flat", t_twopass),
-                         ("apply_full(tree)", t_apply)]:
-            best = float("inf")
-            for _ in range(3):
+    print(f"# rows={rows} pairs={pairs} cores={spark.sparkContext.defaultParallelism}")
+    print("# k  merged median [q1-q3] s  two-pass median [q1-q3] s  merged/two-pass")
+    for k in ks:
+        rules = prefixless_rules(k)
+        pdbs = {s: build(rules, s) for s in STRATEGIES}
+        hashes = {s: output_hash(p, base) for s, p in pdbs.items()}
+        assert len(set(hashes.values())) == 1, (k, hashes)
+        times: dict[str, list[float]] = {s: [] for s in pdbs}
+        order = list(pdbs)
+        for rep in range(pairs + 1):
+            for s in order if rep % 2 else order[::-1]:
                 t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            print(f"{label} {name}: {best:.2f}s")
-
-    gen.unpersist()
+                noop(pdbs[s].apply(base, text_col="body", with_class=True))
+                if rep:  # rep 0 warms both variants up
+                    times[s].append(time.perf_counter() - t0)
+        m, t = quartiles(times["merged"]), quartiles(times["two-pass"])
+        print(
+            f"{k:3d}  {m[1]:.3f} [{m[0]:.3f}-{m[2]:.3f}]  "
+            f"{t[1]:.3f} [{t[0]:.3f}-{t[2]:.3f}]  {m[1] / t[1]:.3f}",
+            flush=True,
+        )
+    base.unpersist()
 
 
 if __name__ == "__main__":
