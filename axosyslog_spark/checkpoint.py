@@ -42,8 +42,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators.route import RouteSpec, flagship_route_spec
-from axosyslog_spark.plans.pipeline import run_pipeline
+from axosyslog_spark.operators.metrics import sink_counters
+from axosyslog_spark.operators.route import RouteSpec
+from axosyslog_spark.plans.spec import PipelineSpec, flagship_spec
 
 
 class InjectedFailure(RuntimeError):
@@ -128,25 +129,20 @@ def run_checkpointed(
     transcripts: DataFrame,
     out_dir: str,
     n_buckets: int = 8,
-    spec: RouteSpec | None = None,
+    spec: PipelineSpec | RouteSpec | None = None,
     run_id: str = "run",
     fail_after_buckets: int | None = None,
-    pipeline_fn=None,
-    sinks: list[str] | None = None,
 ) -> RunReport:
     """Execute a pipeline bucket-by-bucket with checkpoints.
 
-    Default pipeline = the flagship parse→enrich→route; pass
-    ``pipeline_fn(spark, bucket_df) -> routed DataFrame`` (must carry a
-    ``sink`` column) plus ``sinks`` to run a custom/config-compiled
-    pipeline under the same resume contract.
+    ``spec`` is the pipeline to run (e.g. a config's ``build_spec``);
+    a RouteSpec, or None, means the flagship with those routes. Its
+    sinks name the per-sink lineage counters.
     ``fail_after_buckets`` injects a crash after K commits (tests).
     """
-    spec = spec or flagship_route_spec()
-    if pipeline_fn is None:
-        def pipeline_fn(s, df):  # noqa: ANN001
-            return run_pipeline(s, df, spec).routed
-    sink_names = sinks if sinks is not None else spec.sinks()
+    if not isinstance(spec, PipelineSpec):
+        spec = flagship_spec(spec)
+    sinks = spec.routes.sinks()
     os.makedirs(out_dir, exist_ok=True)
     staged = stage_input(transcripts, out_dir, n_buckets)
 
@@ -161,21 +157,14 @@ def run_checkpointed(
         t0 = time.perf_counter()
         # partition-pruned read: only bucket=b files are touched
         part = spark.read.parquet(staged).filter(F.col("bucket") == b).drop("bucket")
-        routed = pipeline_fn(spark, part)
+        routed = spec.compile(spark, part).routed
         obs = Observation()
-        aggs = [
-            F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(s)
-            for s in sink_names
-        ] + [
-            F.count(F.lit(1)).alias("total"),
-            # order-insensitive content hash of the routed rows: the
-            # per-bucket lineage fingerprint (resume equality evidence);
-            # XOR never overflows, and the row count alongside catches
-            # the even-duplicate blind spot
-            F.expr(
-                "bit_xor(xxhash64(sink, conv_id, turn_idx, text))"
-            ).alias("rows_hash"),
-        ]
+        # order-insensitive content hash of the routed rows: the
+        # per-bucket lineage fingerprint (resume equality evidence);
+        # XOR never overflows, and the row count alongside catches
+        # the even-duplicate blind spot
+        rows_hash = F.expr("bit_xor(xxhash64(sink, conv_id, turn_idx, text))")
+        aggs = sink_counters(sinks) + [rows_hash.alias("rows_hash")]
         routed.observe(obs, *aggs).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"bucket={b}")
         )
@@ -184,9 +173,9 @@ def run_checkpointed(
             "run_id": run_id,
             "bucket": b,
             "status": "committed",
-            "total": int(m["total"]),
+            "total": int(m["__total"]),
             "rows_hash": int(m["rows_hash"]) if m["rows_hash"] is not None else 0,
-            "sink_counts": {s: int(m[s]) for s in sink_names},
+            "sink_counts": {s: int(m[s]) for s in sinks},
             "wall_secs": round(time.perf_counter() - t0, 3),
         }
         _append_checkpoint(out_dir, rec)

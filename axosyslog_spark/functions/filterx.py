@@ -162,11 +162,6 @@ def keys(m: Column) -> Column:
     return F.map_keys(m)
 
 
-def vars_flatten(m: Column, prefix: str) -> Column:
-    """flatten(prefix=...) — rekey map entries with a dotted prefix."""
-    return F.transform_keys(m, lambda k, _v: F.concat(F.lit(prefix), k))
-
-
 def cache_json_file(spark, path: str):
     """cache_json_file(): load a small JSON dict once and use it as a
     broadcast lookup (the FilterX enrichment primitive). Returns a

@@ -212,9 +212,6 @@ def tf_grep(ctx: Column, cond, value_fns=None, max_count: int = 0) -> Column:
     return tf_context_values(hits, value_fns)
 
 
-tf_context_lookup = tf_grep
-
-
 # ---------------------------------------------------------------------------
 # path funcs (fname-funcs.c)
 # ---------------------------------------------------------------------------

@@ -167,12 +167,6 @@ def minhash_components(sh: Column, k: int) -> list[Column]:
     return [F.array_min(F.transform(sh, hasher(j))) for j in range(k)]
 
 
-def minhash_signature(text: Column, k: int = 8, n: int = 3) -> Column:
-    """Inline-signature variant (small inputs/tests); for real tables
-    use minhash_bands which materializes the shingle column first."""
-    return F.array(*minhash_components(shingles(text, n), k))
-
-
 def minhash_bands(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -15,6 +15,7 @@ registry), never the fact table.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,13 +24,15 @@ from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class LookupSpec:
-    """A contextual-data database: key column + enrichment columns."""
+    """A contextual-data database: key column + enrichment columns,
+    plus the loader that builds the database against a session."""
 
     key: str                       # join key on the fact side
     db_key: str                    # key column in the database
     columns: tuple[str, ...]       # enrichment columns to inject
     default: dict[str, str] = field(default_factory=dict)  # default record
     prefix: str = ""               # namespace prefix for injected cols
+    db: Callable[[SparkSession], DataFrame] | None = None  # the database
 
 
 # The tool registry fixture (FIXTURES.md F2). One canonical Python
@@ -224,15 +227,18 @@ def enrich_with_context_db_glob(
     return out.drop("__glob_sel")
 
 
+TOOL_LOOKUP = LookupSpec(
+    key="tool",
+    db_key="tool",
+    columns=("tool_category", "risk_level", "owner"),
+    default=TOOL_DEFAULT,
+    db=tool_lookup_df,
+)
+
+
 def enrich_tools(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Flagship enrichment: tool registry join with default record."""
-    spec = LookupSpec(
-        key="tool",
-        db_key="tool",
-        columns=("tool_category", "risk_level", "owner"),
-        default=TOOL_DEFAULT,
-    )
-    return enrich(df, tool_lookup_df(spark), spec)
+    return enrich(df, tool_lookup_df(spark), TOOL_LOOKUP)
 
 
 def geoip2(

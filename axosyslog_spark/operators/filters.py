@@ -26,7 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 STRING_LIKE = {"string", "json", "list", "bytes"}
-NUMERICISH = {"string", "int", "double", "bool", "datetime", "null"}
 
 _OPS = ("==", "!=", "<", "<=", ">", ">=", "===", "!==")
 

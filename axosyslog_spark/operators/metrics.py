@@ -24,6 +24,17 @@ def metrics_probe(
     return df.groupBy(*labels).agg(F.sum(inc).alias(counter_name))
 
 
+def sink_counters(sinks: list[str]) -> list[Column]:
+    """Per-sink delivered-row counters plus the routed-row total
+    (``__total``), as aggregates for ``DataFrame.observe``: the
+    per-path ingress/egress counters the reference keeps on every log
+    path (lib/cfg-tree.c:1087-1101), riding whatever action consumes
+    the routed frame instead of a second scan."""
+    return [
+        F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(s) for s in sinks
+    ] + [F.count(F.lit(1)).alias("__total")]
+
+
 def _sorted_small(agg: DataFrame, *keys: str) -> DataFrame:
     """Sort a bounded aggregate (at most #sinks x 8 severities x
     #categories rows) inside ONE partition. orderBy would plan a range

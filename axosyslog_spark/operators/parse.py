@@ -158,22 +158,6 @@ def parse_kv(df: DataFrame, src_col: str = "body") -> DataFrame:
     )
 
 
-def kv_to_map(df: DataFrame, src_col: str, out_col: str = "kv") -> DataFrame:
-    """Generic kv scan into a MapType column (open-schema analog of the
-    reference's NV pairs). Routed through the full kv-scanner
-    (operators/kvscan.py) so quoted values, separator spacing and
-    value absorption follow lib/scanner/kv-scanner semantics; any
-    'prog: ' prefix is stripped first like the kv-parser examples."""
-    from axosyslog_spark.operators.kvscan import kv_parse
-
-    stripped = df.withColumn(
-        f"__kvsrc_{out_col}", F.regexp_replace(F.col(src_col), r"^[^ ]*: ", "")
-    )
-    return kv_parse(stripped, f"__kvsrc_{out_col}", out_col).drop(
-        f"__kvsrc_{out_col}"
-    )
-
-
 def parse_json_fields(df: DataFrame, src_col: str = "text") -> DataFrame:
     """json-parser() analog for the embedded JSON shape: promote known
     fields ($.k, $.event, $.latency_ms) to typed columns."""

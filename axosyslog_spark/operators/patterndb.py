@@ -167,9 +167,6 @@ def _strip_framing_bytes(text: Column) -> Column:
     return F.translate(text, _BLOCK_SEP + _MARK + _HIT + _FIELD_SEP, "")
 
 
-# back-compat name (round-1/2 API used \x01 as the group joiner)
-_GROUP_SEP = _BLOCK_SEP
-
 # IPv4 with per-octet 0..255 validation (r_parser_ip: each octet is
 # value-checked; the parsers_e2e truth table rejects 256.256.256.256)
 _IPV4_OCTET = r"(?:25[0-5]|2[0-4][0-9]|[01]?[0-9]{1,2})"
@@ -337,10 +334,6 @@ class CompiledPattern:
     @property
     def rule_id(self) -> str:
         return self.rule.rule_id
-
-
-# back-compat alias (round-1 API)
-CompiledRule = CompiledPattern
 
 
 def _split_pattern(pattern: str) -> list[tuple[str, str]]:

@@ -119,14 +119,6 @@ def route_explode(df: DataFrame, spec: RouteSpec) -> DataFrame:
     )
 
 
-def sink_frame(df: DataFrame, spec: RouteSpec, sink: str) -> DataFrame:
-    """The routed frame for one sink (per-sink write path)."""
-    flagged = route_flags(df, spec)
-    return flagged.filter(F.col(f"__route_{sink}")).drop(
-        "routes", *[f"__route_{b.sink}" for b in spec.branches]
-    )
-
-
 def flagship_route_spec() -> RouteSpec:
     """The F3 route fixture (FIXTURES.md):
 

@@ -13,8 +13,6 @@ serializer.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (callers compose)
@@ -159,13 +157,6 @@ def windows_eventlog_xml_parser(
     """windows-eventlog-xml-parser(): EventData Data-name promotion on
     top of the generic dotted flatten; map<string,string> out column."""
     return df.withColumn(out_col, winlog_flatten_col(df[src_col], prefix))
-
-
-def xml_parser_stream(
-    df: DataFrame, src_col: str = "text", out_col: str = "xml", prefix: str = "xml"
-) -> Iterator:  # pragma: no cover - thin alias
-    """mapInPandas variant kept for API symmetry with multimodal."""
-    return xml_parser(df, src_col, out_col, prefix)
 
 
 def format_xml_fx(m):

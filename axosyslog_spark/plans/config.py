@@ -86,44 +86,44 @@ def _patterns(section: dict) -> list:
     return [r for rs in rulesets for r in rs.rules]
 
 
-def build_spec(source) -> tuple[PipelineSpec, dict]:
-    """Config document -> (PipelineSpec, lookup sources).
+def _lookup_db(lk: dict):
+    """The lookup's database loader: a headered csv file or inline rows."""
+    if "csv" in lk:
+        path = lk["csv"]
+        return lambda spark: spark.read.csv(path, header=True, inferSchema=False)
+    if "rows" in lk:
+        rows = lk["rows"]
+        return lambda spark: spark.createDataFrame(rows)
+    raise ConfigError(f"lookup {lk['key']!r} needs csv or rows")
 
-    The second element maps lookup key -> ('csv', path) | ('rows',
-    list) for load_lookups to materialize against a SparkSession.
-    """
+
+def build_spec(source) -> PipelineSpec:
+    """Config document -> PipelineSpec (lookup loaders included)."""
     doc = _load_doc(source)
     if "routes" not in doc or not doc["routes"]:
         raise ConfigError("config needs a non-empty routes section")
-    branches = []
-    for r in doc["routes"]:
-        branches.append(
-            RouteBranch(
-                sink=r["sink"],
-                predicate=r.get("condition"),
-                final=bool(r.get("final", False)),
-                fallback=bool(r.get("fallback", False)),
-            )
+    branches = tuple(
+        RouteBranch(
+            sink=r["sink"],
+            predicate=r.get("condition"),
+            final=bool(r.get("final", False)),
+            fallback=bool(r.get("fallback", False)),
         )
-    lookups, lookup_srcs = [], {}
-    for lk in doc.get("lookups", []):
-        lookups.append(
-            LookupSpec(
-                key=lk["key"],
-                db_key=lk["db_key"],
-                columns=tuple(lk["columns"]),
-                default=dict(lk.get("default", {})),
-                prefix=lk.get("prefix", ""),
-            )
+        for r in doc["routes"]
+    )
+    lookups = [
+        LookupSpec(
+            key=lk["key"],
+            db_key=lk["db_key"],
+            columns=tuple(lk["columns"]),
+            default=dict(lk.get("default", {})),
+            prefix=lk.get("prefix", ""),
+            db=_lookup_db(lk),
         )
-        if "csv" in lk:
-            lookup_srcs[lk["key"]] = ("csv", lk["csv"])
-        elif "rows" in lk:
-            lookup_srcs[lk["key"]] = ("rows", lk["rows"])
-        else:
-            raise ConfigError(f"lookup {lk['key']!r} needs csv or rows")
-    spec = PipelineSpec(
-        routes=RouteSpec(branches=tuple(branches)),
+        for lk in doc.get("lookups", [])
+    ]
+    return PipelineSpec(
+        routes=RouteSpec(branches=branches),
         patterns=_patterns(doc["patterns"]) if "patterns" in doc else [],
         pattern_source_col=doc.get("pattern_source", "body"),
         lookups=lookups,
@@ -135,22 +135,10 @@ def build_spec(source) -> tuple[PipelineSpec, dict]:
         templates=dict(doc.get("templates", {})),
         filterx_block=doc.get("filterx"),
     )
-    return spec, lookup_srcs
-
-
-def load_lookups(spark: SparkSession, lookup_srcs: dict) -> dict[str, DataFrame]:
-    dfs: dict[str, DataFrame] = {}
-    for key, (kind, src) in lookup_srcs.items():
-        if kind == "csv":
-            dfs[key] = spark.read.csv(src, header=True, inferSchema=False)
-        else:
-            dfs[key] = spark.createDataFrame(src)
-    return dfs
 
 
 def compile_config(
     spark: SparkSession, transcripts: DataFrame, source
 ) -> CompiledPipeline:
     """One-shot: config document + input frame -> compiled pipeline."""
-    spec, lookup_srcs = build_spec(source)
-    return spec.compile(spark, transcripts, lookup_dfs=load_lookups(spark, lookup_srcs))
+    return build_spec(source).compile(spark, transcripts)

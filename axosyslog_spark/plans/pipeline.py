@@ -1,6 +1,9 @@
 """The flagship pipeline: parse → enrich → route → aggregate.
 
-This is the end-to-end job the north_star describes. Physical shape
+This is the end-to-end job the north_star describes, described once
+as data (plans/spec.flagship_spec) and compiled by
+PipelineSpec.compile; this module adds its aggregates, the observed
+variant and the sink writers. Physical shape
 (one Spark job, SURVEY.md §4):
 
     scan transcripts (parquet/Iceberg; partition prune on ts/conv)
@@ -27,14 +30,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators.enrich import enrich_tools
-from axosyslog_spark.operators.metrics import sink_counts, sink_histogram
-from axosyslog_spark.operators.parse import parse_stage
-from axosyslog_spark.operators.route import (
-    RouteSpec,
-    flagship_route_spec,
-    route_explode,
-)
+from axosyslog_spark.operators.metrics import sink_counters, sink_counts, sink_histogram
+from axosyslog_spark.operators.route import RouteSpec
+from axosyslog_spark.plans.spec import flagship_spec
 
 
 @dataclass
@@ -51,14 +49,12 @@ def run_pipeline(
     spec: RouteSpec | None = None,
 ) -> PipelineResult:
     """Compose the full flagship pipeline lazily (no action triggered)."""
-    spec = spec or flagship_route_spec()
-    parsed = enrich_tools(parse_stage(transcripts), spark)
-    routed = route_explode(parsed, spec)
+    c = flagship_spec(spec).compile(spark, transcripts)
     return PipelineResult(
-        parsed=parsed,
-        routed=routed,
-        counts=sink_counts(routed),
-        histogram=sink_histogram(routed),
+        parsed=c.parsed,
+        routed=c.routed,
+        counts=sink_counts(c.routed),
+        histogram=sink_histogram(c.routed),
     )
 
 
@@ -76,14 +72,10 @@ def run_pipeline_observed(
     whatever action consumes the routed frame (e.g. the sink write),
     so per-sink counts never trigger a second scan of the input.
     """
-    spec = spec or flagship_route_spec()
-    routed = run_pipeline(spark, transcripts, spec).routed
+    pipe = flagship_spec(spec)
     obs = Observation("sink_counts")
-    aggs = [
-        F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(s)
-        for s in spec.sinks()
-    ] + [F.count(F.lit(1)).alias("__total")]
-    return routed.observe(obs, *aggs), obs
+    routed = pipe.compile(spark, transcripts).routed
+    return routed.observe(obs, *sink_counters(pipe.routes.sinks())), obs
 
 
 def partition_and_sort(

@@ -1,9 +1,13 @@
 """Declarative pipeline spec — the config-compile analog.
 
 The reference compiles a syslog-ng.conf into a pipe graph
-(lib/cfg-tree.c:982-1170). Our equivalent: a PipelineSpec dataclass a
-user assembles in Python; compile() turns it into DataFrame
-transformations. No engine state — the spec is the whole "config".
+(lib/cfg-tree.c:982-1170). Our equivalent: a PipelineSpec dataclass,
+assembled in Python or built from a JSON document (plans/config.py);
+compile() is the one place that chains parse → PatternDB → enrich →
+route into DataFrame transformations. No engine state — the spec,
+lookup loaders included, is the whole "config". The flagship job is
+itself a spec (flagship_spec), compiled by the batch, streaming and
+checkpointed runners alike.
 
 Example ("switch from the reference" shape):
 
@@ -11,14 +15,15 @@ Example ("switch from the reference" shape):
         patterns=[PdbRule("login", "Accepted @ESTRING:method: @...")],
         lookups=[LookupSpec(key="tool", db_key="tool",
                             columns=("tool_category", "risk_level"),
-                            default={"tool_category": "unknown"})],
+                            default={"tool_category": "unknown"},
+                            db=lambda spark: spark.read.parquet(dim_path))],
         routes=RouteSpec(branches=(
             RouteBranch("errors", F.col("severity") <= 3),
             RouteBranch("rest", None, fallback=True),
         )),
         aggregates=[AggSpec(labels=["sink", "severity"])],
     )
-    result = spec.compile(spark, transcripts, lookup_dfs={"tool": dim})
+    result = spec.compile(spark, transcripts)
 """
 
 from __future__ import annotations
@@ -27,11 +32,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from axosyslog_spark.operators.enrich import LookupSpec, enrich
+from axosyslog_spark.operators.enrich import TOOL_LOOKUP, LookupSpec, enrich
 from axosyslog_spark.operators.metrics import metrics_probe
 from axosyslog_spark.operators.parse import parse_stage
 from axosyslog_spark.operators.patterndb import PatternDB, PdbRule
-from axosyslog_spark.operators.route import RouteSpec, route_explode
+from axosyslog_spark.operators.route import (
+    RouteSpec,
+    flagship_route_spec,
+    route_explode,
+)
 
 
 @dataclass(frozen=True)
@@ -56,12 +65,7 @@ class PipelineSpec:
     # a filterx {} block applied after enrich/templates, before routing
     filterx_block: str | None = None
 
-    def compile(
-        self,
-        spark: SparkSession,
-        transcripts: DataFrame,
-        lookup_dfs: dict[str, DataFrame] | None = None,
-    ) -> "CompiledPipeline":
+    def compile(self, spark: SparkSession, transcripts: DataFrame) -> "CompiledPipeline":
         df = parse_stage(transcripts) if self.header_parse else transcripts
         if self.patterns:
             df = PatternDB(self.patterns).apply(
@@ -70,9 +74,10 @@ class PipelineSpec:
                 with_class=any(r.rule_class for r in self.patterns),
                 with_tags=any(r.tags for r in self.patterns),
             )
-        for spec in self.lookups:
-            db = (lookup_dfs or {})[spec.key]
-            df = enrich(df, db, spec)
+        for lookup in self.lookups:
+            if lookup.db is None:
+                raise ValueError(f"lookup {lookup.key!r} has no db loader")
+            df = enrich(df, lookup.db(spark), lookup)
         if self.templates:
             from axosyslog_spark.functions.template_compiler import (
                 TemplateContext,
@@ -98,6 +103,12 @@ class PipelineSpec:
             for a in self.aggregates
         }
         return CompiledPipeline(parsed=df, routed=routed, aggregates=aggs)
+
+
+def flagship_spec(routes: RouteSpec | None = None) -> PipelineSpec:
+    """The flagship job (FIXTURES.md F2/F3): header parse, the tool
+    registry lookup, then ``routes`` (default: the F3 route fixture)."""
+    return PipelineSpec(routes=routes or flagship_route_spec(), lookups=[TOOL_LOOKUP])
 
 
 @dataclass

@@ -2,7 +2,7 @@
 
 Cluster usage (north_rule packaging):
 
-    python tools/make_pyfiles.py               # builds dist/axosyslog_spark.zip
+    python tools/make_pyfiles.py    # builds dist/axosyslog_spark.zip (not committed)
     spark-submit --py-files dist/axosyslog_spark.zip \\
         axosyslog_spark/runner.py \\
         --input  s3://bucket/transcripts/      \\
@@ -62,6 +62,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session(args.local_cores)
     from axosyslog_spark import checkpoint as ck
+    from axosyslog_spark.plans.config import build_spec
     from axosyslog_spark.sources.transcripts import synthesize_transcripts
 
     if args.sf_dir:
@@ -69,21 +70,10 @@ def main(argv: list[str] | None = None) -> int:
     else:
         transcripts = spark.read.parquet(args.input)
 
-    pipeline_fn, sinks = None, None
-    if args.config:
-        from axosyslog_spark.plans.config import build_spec, load_lookups
-
-        spec, lookup_srcs = build_spec(args.config)
-        lookup_dfs = load_lookups(spark, lookup_srcs)
-        sinks = spec.routes.sinks()
-
-        def pipeline_fn(s, df):  # noqa: ANN001
-            return spec.compile(s, df, lookup_dfs=lookup_dfs).routed
-
     rep = ck.run_checkpointed(
         spark, transcripts, args.output,
         n_buckets=args.n_buckets, run_id=args.run_id,
-        pipeline_fn=pipeline_fn, sinks=sinks,
+        spec=build_spec(args.config) if args.config else None,  # None: the flagship
     )
     print(
         f"run_id={rep.run_id} processed={len(rep.processed_buckets)} "

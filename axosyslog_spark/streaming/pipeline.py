@@ -1,4 +1,4 @@
-"""Streaming pipeline: the same parse→enrich→route stages over
+"""Streaming pipeline: the flagship PipelineSpec compiled over
 readStream, plus watermark/window/session/stateful operators.
 
 Mappings (SURVEY.md §2.9):
@@ -26,11 +26,11 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
 )
 
-from axosyslog_spark.operators.enrich import enrich_tools
-from axosyslog_spark.operators.parse import parse_stage
-from axosyslog_spark.operators.route import RouteSpec, flagship_route_spec, route_explode
+from axosyslog_spark.operators.route import RouteSpec
+from axosyslog_spark.plans.spec import flagship_spec
 
 
 def stream_transcripts(
@@ -48,9 +48,18 @@ def stream_transcripts(
 def stream_pipeline(
     spark: SparkSession, stream: DataFrame, spec: RouteSpec | None = None
 ) -> DataFrame:
-    """parse → enrich → route on an unbounded stream (stateless)."""
-    spec = spec or flagship_route_spec()
-    return route_explode(enrich_tools(parse_stage(stream), spark), spec)
+    """The flagship parse → enrich → route on an unbounded stream
+    (stateless; the same compiled spec as the batch run_pipeline)."""
+    return flagship_spec(spec).compile(spark, stream).routed
+
+
+def _watermarked(df: DataFrame, delay: str) -> DataFrame:
+    """``withWatermark`` on ``ts``. Event time must be a TIMESTAMP; the
+    transcripts carry TIMESTAMP_NTZ, which is cast (its wall clock read
+    in the session time zone, UTC in this engine)."""
+    if isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.withWatermark("ts", delay)
 
 
 def windowed_sink_counts(
@@ -61,7 +70,7 @@ def windowed_sink_counts(
     """Per-sink tumbling-window counts with late-data handling — the
     metrics-probe analog under event time."""
     return (
-        routed.withWatermark("ts", watermark)
+        _watermarked(routed, watermark)
         .groupBy(F.window("ts", window).alias("w"), "sink")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "sink", "n")
@@ -76,7 +85,7 @@ def session_aggregate(
     """grouping-by(timeout) as a native session window: a context
     closes when no event arrives within the gap."""
     return (
-        stream.withWatermark("ts", watermark)
+        _watermarked(stream, watermark)
         .groupBy(F.session_window("ts", gap).alias("sw"), "conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -95,7 +104,7 @@ def session_aggregate(
 def suppress_stream(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """suppress() on a stream: duplicate (conv_id, text) rows within
     the watermark horizon are dropped."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return _watermarked(stream, watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "text"]
     )
 

@@ -119,7 +119,7 @@ def test_runner_with_config(spark, tmp_path):
     import json as _json
 
     from axosyslog_spark import checkpoint as ck
-    from axosyslog_spark.plans.config import build_spec, load_lookups
+    from axosyslog_spark.plans.config import build_spec
 
     cfg = {
         "routes": [
@@ -127,26 +127,15 @@ def test_runner_with_config(spark, tmp_path):
             {"sink": "s_rest", "fallback": True},
         ],
     }
-    spec, srcs = build_spec(_json.dumps(cfg))
-    lookup_dfs = load_lookups(spark, srcs)
-
-    def pipeline_fn(s, df):
-        return spec.compile(s, df, lookup_dfs=lookup_dfs).routed
-
+    spec = build_spec(_json.dumps(cfg))
     out = str(tmp_path / "cfg_out")
     t = synthesize_transcripts(spark, SF)
-    rep = ck.run_checkpointed(
-        spark, t, out, n_buckets=3,
-        pipeline_fn=pipeline_fn, sinks=spec.routes.sinks(),
-    )
+    rep = ck.run_checkpointed(spark, t, out, n_buckets=3, spec=spec)
     assert len(rep.processed_buckets) == 3
     lineage = {r["bucket"]: r for r in ck.lineage_df(spark, out).collect()}
     assert all("n_s_tool" in r.asDict() for r in lineage.values())
     total = sum(r["total"] for r in lineage.values())
     assert total == ck.read_output(spark, out).count()
     # resume: nothing to do
-    rep2 = ck.run_checkpointed(
-        spark, t, out, n_buckets=3,
-        pipeline_fn=pipeline_fn, sinks=spec.routes.sinks(),
-    )
+    rep2 = ck.run_checkpointed(spark, t, out, n_buckets=3, spec=spec)
     assert rep2.processed_buckets == [] and len(rep2.skipped_buckets) == 3

@@ -26,6 +26,7 @@ def test_pipeline_spec_compiles_and_runs(spark):
                 key="tool", db_key="tool",
                 columns=("tool_category", "risk_level", "owner"),
                 default={"tool_category": "unknown", "risk_level": "medium"},
+                db=tool_lookup_df,
             )
         ],
         routes=RouteSpec(
@@ -38,7 +39,7 @@ def test_pipeline_spec_compiles_and_runs(spark):
         aggregates=[AggSpec(labels=["sink"]), AggSpec(labels=["sink", "severity"])],
     )
     t = synthesize_transcripts(spark, SF)
-    res = spec.compile(spark, t, lookup_dfs={"tool": tool_lookup_df(spark)})
+    res = spec.compile(spark, t)
     counts = {r.sink: r.n for r in res.aggregates["sink"].collect()}
     assert set(counts) == {"sev_err", "classified", "other"}
     assert sum(counts.values()) == res.routed.count()

@@ -429,3 +429,11 @@ def test_format_flat_json_reverse_key_order(spark):
         ).alias("j")
     ).first()["j"]
     assert out == '{"z.key":"v2","m.key":"v3","a.key":"v1"}'
+
+
+def test_map_value_pairs_equals_column_copies(spark):
+    df = spark.createDataFrame([("x", 1), ("y", None)], "a string, b int")
+    out = rw.map_value_pairs(df, {"a": "a2", "b": "b2"})
+    want = df.select("*", F.col("a").alias("a2"), F.col("b").alias("b2"))
+    assert out.columns == want.columns
+    assert out.collect() == want.collect()

@@ -1,7 +1,8 @@
 """The north-rule packaging contract, exercised for real: spark-submit
---py-files dist/axosyslog_spark.zip runner.py must process every bucket
-with per-bucket lineage, and a re-submit with the same --output must
-skip all committed buckets (idempotent resume)."""
+--py-files axosyslog_spark.zip runner.py, with the archive built from
+the tree by tools/make_pyfiles.build, must process every bucket with
+per-bucket lineage, and a re-submit with the same --output must skip
+all committed buckets (idempotent resume)."""
 
 from __future__ import annotations
 
@@ -11,16 +12,18 @@ from pathlib import Path
 
 import pytest
 
+from tools.make_pyfiles import build
+
 REPO = Path(__file__).resolve().parent.parent
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 
-def _submit(out_dir: Path) -> str:
+def _submit(pyfiles: str, out_dir: Path) -> str:
     res = subprocess.run(
         [
             SPARK_SUBMIT,
             "--master", "local[4]",
-            "--py-files", str(REPO / "dist" / "axosyslog_spark.zip"),
+            "--py-files", pyfiles,
             str(REPO / "axosyslog_spark" / "runner.py"),
             "--sf-dir", "/root/testdata/sf0.001",
             "--output", str(out_dir),
@@ -36,8 +39,9 @@ def _submit(out_dir: Path) -> str:
     not Path(SPARK_SUBMIT).exists(), reason="spark-submit not installed"
 )
 def test_spark_submit_pyfiles_runs_and_resumes(tmp_path):
+    pyfiles = build(str(tmp_path / "axosyslog_spark.zip"))
     out = tmp_path / "routed"
-    first = _submit(out)
+    first = _submit(pyfiles, out)
     assert "processed=4 skipped=0" in first
     assert "committed" in first
     # per-bucket sink dirs + the lineage checkpoint landed
@@ -46,5 +50,5 @@ def test_spark_submit_pyfiles_runs_and_resumes(tmp_path):
         p.name for p in out.iterdir() if p.name.startswith("bucket=")
     ) == ["bucket=0", "bucket=1", "bucket=2", "bucket=3"]
     # idempotent resume: same output dir -> every bucket skips
-    second = _submit(out)
+    second = _submit(pyfiles, out)
     assert "processed=0 skipped=4" in second

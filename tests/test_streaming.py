@@ -197,3 +197,31 @@ def test_stream_resume_is_exactly_once(spark, tmp_path):
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
     batch_counts = {r.sink: r.n for r in batch.counts.collect()}
     assert got_counts == batch_counts
+
+
+def test_windowed_sink_counts_equal_batch_window_groupby(spark, staged):
+    routed = sp.stream_pipeline(spark, sp.stream_transcripts(spark, staged))
+    got = _run_to_memory(spark, sp.windowed_sink_counts(routed), "win_mem", "complete")
+    batch = run_pipeline(spark, spark.read.parquet(staged)).routed
+    want = batch.groupBy(F.window("ts", "5 minutes").start.alias("window_start"), "sink").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+    def rows(df):  # window starts as wall-clock strings: ts is TIMESTAMP_NTZ in batch
+        return sorted(map(tuple, df.select(F.col("window_start").cast("string"), "sink", "n").collect()))
+
+    assert rows(want) and rows(got) == rows(want)
+
+
+def test_suppress_stream_equals_batch_dedup(spark, staged):
+    got = _run_to_memory(
+        spark, sp.suppress_stream(sp.stream_transcripts(spark, staged)), "suppress_mem"
+    )
+    batch = spark.read.parquet(staged)
+    want = batch.dropDuplicates(["conv_id", "text"])
+
+    def keys(df):
+        return sorted(map(tuple, df.select("conv_id", "text").collect()))
+
+    assert want.count() < batch.count()  # the input has duplicates to drop
+    assert keys(got) == keys(want)

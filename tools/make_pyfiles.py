@@ -1,8 +1,12 @@
 """Package axosyslog_spark for spark-submit --py-files.
 
-The archive must stay bit-reproducible (fixed timestamps, sorted
-member order) so tests/test_pyfiles_fresh.py can assert the committed
-dist/axosyslog_spark.zip matches the source tree exactly.
+    python tools/make_pyfiles.py    # writes dist/axosyslog_spark.zip
+
+The archive is a build output (``dist/`` is git-ignored): build it
+from the checkout you submit. Its bytes are reproducible (fixed
+timestamps, sorted member order), so two builds of one tree are
+identical; tests/test_spark_submit.py builds its own copy with
+``build``.
 """
 
 from __future__ import annotations
