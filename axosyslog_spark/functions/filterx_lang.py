@@ -193,6 +193,14 @@ def _merge(cond: Column, then: _State, other: _State, base: _State, ref) -> _Sta
     return out
 
 
+def _empty_list() -> Column:
+    return F.array().cast("array<string>")
+
+
+def _empty_dict() -> Column:
+    return F.map_from_arrays(_empty_list(), _empty_list())
+
+
 def _field_col(name: str) -> Column:
     # dotted open-schema names need backtick quoting
     return F.col(f"`{name}`") if "." in name else F.col(name)
@@ -922,7 +930,7 @@ class _Compiler:
                     self.next()
             self.eat("]")
             if not vals:
-                return F.array().cast("array<string>")
+                return _empty_list()
             return F.array(*vals)
         if t.text == "{":
             # dict literal (expr-literal-container.c): string keys,
@@ -932,10 +940,7 @@ class _Compiler:
             # produces)
             pairs = self._dict_literal_pairs(st, "")
             if not pairs:
-                return F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                )
+                return _empty_dict()
             return F.create_map(
                 *[x for k, v in pairs for x in (F.lit(k), v.cast("string"))]
             )
@@ -958,9 +963,9 @@ class _Compiler:
         args: list[Column] = []
         raws: list[str | None] = []  # plan-time strings for fns that
         # need them (format patterns, type names, glob patterns)
-        shapes: list[str | None] = []  # 'list' when the arg came from
-        # a [...] literal (any-of semantics in startswith/endswith/
-        # includes, func-str.c)
+        shapes: list[str | None] = []  # plan-time arg types (_arg_shape):
+        # 'list' gives startswith/endswith/includes any-of semantics
+        # (func-str.c); istype() reads them all
         kwargs: dict[str, Column] = {}
         kwraws: dict[str, str | None] = {}
         while not self.at(")"):
@@ -998,8 +1003,9 @@ class _Compiler:
                 raws.append(_unquote(t.text))
             else:
                 raws.append(None)
-            shapes.append("list" if t is not None and t.text == "[" else None)
+            start = self.i
             args.append(self.expr(st))
+            shapes.append(self._arg_shape(self.toks[start:self.i], st))
             if self.at(","):
                 self.next()
         self.eat(")")
@@ -1026,10 +1032,7 @@ class _Compiler:
                     if c is not None
                 ]
             if not entries:
-                return F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                )
+                return _empty_dict()
             return F.create_map(
                 *[x for k, v in entries for x in (F.lit(k), v.cast("string"))]
             )
@@ -1042,6 +1045,40 @@ class _Compiler:
         return _FUNCS_DISPATCH(
             fn, args, raws, kwargs, kwraws, self.known, shapes
         )
+
+    def _arg_shape(self, toks: list[Tok], st: _State) -> str | None:
+        """The FilterX type of one call argument when plan time knows
+        it: a literal's type, a whole [...] / {...} literal ('list' /
+        'dict'), or a $field this block has not written, typed from
+        ``string_fields`` like ``+=`` ('string' or 'non-string').
+        None when undecidable."""
+        t = toks[0]
+        if t.text in ("[", "{"):
+            depth = 0
+            for k, u in enumerate(toks):
+                if u.kind == "op" and u.text in ("(", "[", "{"):
+                    depth += 1
+                elif u.kind == "op" and u.text in (")", "]", "}"):
+                    depth -= 1
+                if depth == 0:
+                    if k != len(toks) - 1:
+                        return None
+                    return "list" if t.text == "[" else "dict"
+        if len(toks) != 1:
+            return None
+        if t.kind == "string":
+            return "string"
+        if t.kind == "number":
+            return "double" if "." in t.text else "integer"
+        if t.text in ("true", "false"):
+            return "boolean"
+        if t.text == "null":
+            return "null"
+        if t.kind == "field" and self.string_fields is not None:
+            name = self._field_name(t.text)
+            if name not in st.updates and (self.known is None or name in self.known):
+                return "string" if name in self.string_fields else "non-string"
+        return None
 
     def _maybe_key(self, st: _State) -> Column | None:
         """After a target token: parse ONE `["k"]` / `.name` path
@@ -1194,6 +1231,62 @@ def _need_raw(fn: str, raws: list[str | None], i: int) -> str:
     return raws[i]
 
 
+_FX_TYPES = ("string", "integer", "double", "boolean", "null", "list", "dict")
+
+
+def _istype(shape: str | None, type_name: str) -> Column:
+    """istype() (lib/filterx/func-istype.c) folded at plan time from
+    the operand's shape (_Compiler._arg_shape). A Column has no runtime
+    object type, so an operand or type name the shape cannot decide is
+    a compile error rather than a guess."""
+    if type_name not in _FX_TYPES:
+        raise FilterXSyntaxError(f"istype: unsupported type name {type_name!r}")
+    if shape == "non-string" and type_name == "string":
+        return F.lit(False)
+    if shape not in _FX_TYPES:
+        raise FilterXSyntaxError(
+            f"istype: cannot decide at plan time whether the operand is {type_name!r}"
+        )
+    return F.lit(shape == type_name)
+
+
+def _unset_empties(
+    m: Column,
+    targets: Column | None,
+    replacement: Column | None,
+    ignorecase: bool,
+) -> Column:
+    """unset_empties() — lib/filterx/func-unset-empties.c over the
+    flat open-schema map. Defaults remove NULL and "" values; an
+    explicit ``targets`` array REPLACES the defaults entirely (NULL is
+    removed only when the list carries a null element — the reference's
+    targets=[..., null, ...]); ``ignorecase`` folds string comparison;
+    ``replacement`` substitutes the value instead of removing the key."""
+    if targets is None:
+        def is_t(v: Column) -> Column:
+            return v.isNull() | (v == "")
+    else:
+        tlist = (
+            F.transform(targets, lambda x: F.lower(x)) if ignorecase
+            else targets
+        )
+        null_target = F.exists(targets, lambda x: x.isNull())
+
+        def is_t(v: Column) -> Column:
+            tv = F.lower(v) if ignorecase else v
+            return F.when(v.isNull(), null_target).otherwise(
+                F.coalesce(F.array_contains(tlist, tv), F.lit(False))
+            )
+
+    if replacement is not None:
+        return F.transform_values(
+            m, lambda _k, v: F.when(is_t(v), replacement).otherwise(v)
+        )
+    return F.map_filter(
+        m, lambda _k, v: ~F.coalesce(is_t(v), F.lit(True))
+    )
+
+
 def _FUNCS_DISPATCH(
     fn: str,
     a: list[Column],
@@ -1315,9 +1408,13 @@ def _FUNCS_DISPATCH(
     if fn == "parse_json":
         return F.from_json(one, "map<string,string>")
     if fn == "format_kv":
-        from axosyslog_spark.functions.filterx import format_kv_fx
-
-        return format_kv_fx(one)
+        return F.array_join(
+            F.transform(
+                F.map_entries(one),
+                lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+            ),
+            " ",
+        )
     if fn == "str_replace":
         return F.replace(one, a[1], a[2])
     # --- encode family (lib/filterx/func-encode.c) ---
@@ -1363,12 +1460,9 @@ def _FUNCS_DISPATCH(
     if fn == "strftime":
         # reference arg order: strftime(format, datetime)
         return F.date_format(a[1], strptime_to_spark(_need_raw(fn, raws, 0)))
-    if fn in ("datetime", "isodate"):
-        c = one.cast("timestamp")
-        if fn == "isodate":
-            return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ssXXX")
-        return c
-    if fn == "format_isodate":
+    if fn == "datetime":
+        return one.cast("timestamp")
+    if fn in ("isodate", "format_isodate"):
         return F.date_format(one.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX")
     # --- dict/json helpers ---
     if fn == "format_json":
@@ -1376,10 +1470,8 @@ def _FUNCS_DISPATCH(
     if fn == "keys":
         return F.map_keys(one)
     if fn == "unset_empties":
-        from axosyslog_spark.functions.filterx import unset_empties
-
         # recursive= accepted, no-op (flat map<string,string> values)
-        return unset_empties(
+        return _unset_empties(
             one,
             targets=kwargs.get("targets"),
             replacement=kwargs.get("replacement"),
@@ -1388,22 +1480,13 @@ def _FUNCS_DISPATCH(
     if fn == "regexp_subst":
         return F.regexp_replace(one, a[1], a[2])
     if fn == "regexp_search":
-        from axosyslog_spark.functions.filterx import regexp_search
-
-        return regexp_search(one, _need_raw(fn, raws, 1))
+        # expr-regexp-search.c: the first capture group, as a list
+        return F.array(F.regexp_extract(one, _need_raw(fn, raws, 1), 1))
     if fn == "istype":
-        from axosyslog_spark.functions.filterx import istype
-
-        return istype(one, _need_raw(fn, raws, 1))
+        return _istype(shapes[0] if shapes else None, _need_raw(fn, raws, 1))
     if fn == "repr":
         return one.cast("string")
-    # --- str-transform + typecast additions (filterx-globals.c:119-133) ---
-    if fn == "lower":
-        return F.lower(one)
-    if fn == "upper":
-        return F.upper(one)
-    if fn == "str_strip":
-        return F.trim(one)
+    # --- typecast additions (filterx-globals.c:119-133) ---
     if fn == "bytes":
         return one.cast("binary")
     if fn in ("uuid", "uuid4"):
@@ -1599,17 +1682,13 @@ def _FUNCS_DISPATCH(
     #     json_array() to a list; dict()/list()/object() with an arg
     #     pass the value through (the reference's dup-to-type), empty
     #     ctors make the empty container ---
-    if fn in ("json", "object") and a:
-        return F.from_json(one.cast("string"), "map<string,string>")
-    if fn == "json_array" and a:
-        return F.from_json(one.cast("string"), "array<string>")
-    if fn in ("dict", "object", "json") and not a:
-        return F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        )
-    if fn in ("list", "json_array") and not a:
-        return F.array().cast("array<string>")
-    if fn in ("dict", "list") and a:
+    if fn in ("json", "object", "json_array", "dict", "list"):
+        if not a:
+            return _empty_list() if fn in ("list", "json_array") else _empty_dict()
+        if fn == "json_array":
+            return F.from_json(one.cast("string"), "array<string>")
+        if fn in ("json", "object"):
+            return F.from_json(one.cast("string"), "map<string,string>")
         return one
     # lib/filterx/object-metrics-labels.c: a labels object is a
     # (name, value) list; our map<string,string> representation is
@@ -1619,12 +1698,7 @@ def _FUNCS_DISPATCH(
     # map itself and dedup_metrics_labels() is a true-returning
     # no-op like the reference's already-deduped fast path.
     if fn == "metrics_labels":
-        if not a:
-            return F.map_from_arrays(
-                F.array().cast("array<string>"),
-                F.array().cast("array<string>"),
-            )
-        return one
+        return one if a else _empty_dict()
     if fn == "dedup_metrics_labels":
         if not a:
             raise FilterXSyntaxError(

@@ -838,7 +838,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         if not args:
             return F.lit("")
         return F.concat_ws(
-            " ", *[F.length(a.col).cast("string") for a in args]
+            " ", *[tf.tf_length(a.col).cast("string") for a in args]
         )
     if name == "substr":
         if len(args) < 2:
@@ -854,7 +854,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
     if name == "lowercase":
         return F.lower(one())
     if name == "uppercase":
-        return F.upper(one())
+        return tf.tf_uppercase(one())
     if name == "sanitize":
         # options (str-funcs.c tf_sanitize_prepare): -r/--replacement
         # CHAR, -i/--invalid-chars SET, -C/--no-ctrl-chars
@@ -879,7 +879,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         if len(args) < 2:
             raise TemplateError("$(padding msg width [pad])")
         pad = args[2].lit if len(args) > 2 and args[2].lit else " "
-        return F.lpad(args[0].col, args[1].as_int("padding width"), pad)
+        return tf.tf_padding(args[0].col, args[1].as_int("padding width"), pad)
     if name == "replace-delimiter":
         if len(args) != 3:
             raise TemplateError("$(replace-delimiter from to msg)")
@@ -1098,20 +1098,19 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         # suite: $(base64-encode abcd abcd) == encode("abcdabcd"))
         if not args:
             return F.lit("")
-        payload = F.concat(*[a.col for a in args])
-        return F.base64(payload.cast("binary"))
+        return tf.tf_base64_encode(F.concat(*[a.col for a in args]))
     if name in ("sha256", "sha512", "sha1", "md5", "md4", "hash"):
         length = None
         if raw_args and raw_args[0] in ("--length", "-l"):
             length = args[1].as_int("--length")
             args = args[2:]
         payload = F.concat(*[a.col for a in args]) if args else F.lit("")
+        if name in ("sha256", "hash"):
+            return tf.tf_sha256(payload, length)
         h = {
-            "sha256": lambda c: F.sha2(c.cast("binary"), 256),
-            "hash": lambda c: F.sha2(c.cast("binary"), 256),
             "sha512": lambda c: F.sha2(c.cast("binary"), 512),
             "sha1": lambda c: F.sha1(c.cast("binary")),
-            "md5": lambda c: F.md5(c.cast("binary")),
+            "md5": tf.tf_md5,
             "md4": tf.tf_md4,
         }[name](payload)
         return F.substring(h, 1, length) if length else h

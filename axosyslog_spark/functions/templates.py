@@ -1,10 +1,12 @@
-"""Template functions and macros as Column builders.
+"""Column kernels behind the template compiler, and macros.
 
-Families (SURVEY.md §2.7; registry modules/basicfuncs/basic-funcs.c:76-150):
-cond, string, numeric, list, value-pairs, path, ip, encode, tags,
-crypto (modules/cryptofuncs/), format-json (modules/json/format-json.c),
-format-welf (modules/kvformat/format-welf.c), format-date
-(modules/timestamp/tf-format-date.c), plus the date-part macro family
+``functions/template_compiler.py`` is the only implementation of the
+``$(fn)`` language (registry modules/basicfuncs/basic-funcs.c:76-150);
+a kernel lives here only when the compiler, an operator or a query
+calls it as a Column builder, and then the compiler's ``$(fn)`` calls
+the same kernel. Also here: value-pairs formatters (format-flat-json,
+format-welf, graphite-output), the CEF/CIM/stardate Column builders
+(no ``$(...)`` name) and the date-part macro family
 (lib/template/macros.c:94-204: S_/R_/C_ x DATE/ISODATE/YEAR/...).
 """
 
@@ -14,21 +16,6 @@ import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# ---------------------------------------------------------------------------
-# cond funcs (modules/basicfuncs/cond-funcs.c)
-# ---------------------------------------------------------------------------
-
-
-def tf_if(cond: Column, a: Column, b: Column) -> Column:
-    """$(if cond a b)"""
-    return F.when(cond, a).otherwise(b)
-
-
-def tf_or(*cols: Column) -> Column:
-    """$(or a b ...) — first non-empty value."""
-    return F.coalesce(*[F.nullif(c, F.lit("")) for c in cols])
-
 
 # ---------------------------------------------------------------------------
 # string funcs (modules/basicfuncs/str-funcs.c)
@@ -56,8 +43,6 @@ def tf_substr(c: Column, pos: int, n: int | None = None) -> Column:
     return F.substring(c, start0 + 1, eff)
 
 
-def tf_strip(c: Column) -> Column: return F.trim(c)                       # $(strip)
-def tf_lowercase(c: Column) -> Column: return F.lower(c)                  # $(lowercase)
 def tf_uppercase(c: Column) -> Column: return F.upper(c)                  # $(uppercase)
 
 
@@ -70,9 +55,7 @@ def tf_sanitize(
     """$(sanitize) — str-funcs.c tf_sanitize: replace the invalid-char
     set (-i, default '/') and, unless -C, control chars, each with the
     -r replacement (default '_')."""
-    import re as _re
-
-    cls = "[" + _re.escape(invalid_chars) + ("\x00-\x1f]" if ctrl_chars else "]")
+    cls = "[" + re.escape(invalid_chars) + ("\x00-\x1f]" if ctrl_chars else "]")
     return F.regexp_replace(c, cls, replacement)
 
 
@@ -84,60 +67,6 @@ def tf_replace_delimiter(c: Column, from_chars: str, to: str) -> Column:
 def tf_padding(c: Column, width: int, pad: str = " ") -> Column:
     """$(padding) — left-pad to width."""
     return F.lpad(c, width, pad)
-
-
-def tf_explode(c: Column, sep: str) -> Column: return F.split(c, re_escape(sep))  # $(explode)
-def tf_implode(c: Column, sep: str) -> Column: return F.array_join(c, sep)        # $(implode)
-
-
-def re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
-
-
-# ---------------------------------------------------------------------------
-# numeric funcs (modules/basicfuncs/numeric-funcs.c)
-# ---------------------------------------------------------------------------
-
-def tf_sum(*cols: Column) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
-def tf_min(*cols: Column) -> Column: return F.least(*cols)
-def tf_max(*cols: Column) -> Column: return F.greatest(*cols)
-
-
-def tf_average(*cols: Column) -> Column:
-    return tf_sum(*cols) / F.lit(len(cols))
-
-
-def tf_round(c: Column, digits: int = 0) -> Column: return F.round(c, digits)
-def tf_ceil(c: Column) -> Column: return F.ceil(c)
-def tf_floor(c: Column) -> Column: return F.floor(c)
-
-
-# ---------------------------------------------------------------------------
-# list funcs (modules/basicfuncs/list-funcs.c) — syslog-ng comma lists
-# ---------------------------------------------------------------------------
-
-def tf_list_concat(*cols: Column) -> Column: return F.concat(*cols)
-def tf_list_head(c: Column) -> Column: return F.element_at(c, 1)
-def tf_list_nth(c: Column, n: int) -> Column: return F.element_at(c, n + 1)  # 0-based in ref
-def tf_list_tail(c: Column) -> Column: return F.slice(c, 2, 1_000_000)
-def tf_list_count(c: Column) -> Column: return F.size(c)
-def tf_list_append(c: Column, v: Column) -> Column: return F.array_append(c, v)
-def tf_list_search(c: Column, v: Column) -> Column: return F.array_position(c, v) - 1
-def tf_list_slice(c: Column, start: int, end: int) -> Column: return F.slice(c, start + 1, end - start)
-
-
-# iteration funcs (tf-map.c, tf-filter.c, tf-iterate.c) — higher-order
-def tf_map(c: Column, fn) -> Column: return F.transform(c, fn)
-def tf_filter(c: Column, fn) -> Column: return F.filter(c, fn)
-def tf_iterate(c: Column, fn, init: Column) -> Column: return F.aggregate(c, init, fn)
 
 
 # ---------------------------------------------------------------------------
@@ -237,11 +166,9 @@ def tf_ipv4_to_int(c: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# encode funcs (urlencode.c, misc-funcs.c)
+# encode funcs (misc-funcs.c)
 # ---------------------------------------------------------------------------
 
-def tf_url_encode(c: Column) -> Column: return F.url_encode(c)
-def tf_url_decode(c: Column) -> Column: return F.url_decode(c)
 def tf_base64_encode(c: Column) -> Column: return F.base64(c.cast("binary"))
 
 
@@ -269,20 +196,12 @@ def tf_md4(c: Column) -> Column:
     return _md4(c.cast("string"))
 
 
-def tf_sha512(c: Column) -> Column: return F.sha2(c.cast("binary"), 512)
-def tf_sha1(c: Column) -> Column: return F.sha1(c.cast("binary"))
 def tf_md5(c: Column) -> Column: return F.md5(c.cast("binary"))
-def tf_uuid() -> Column: return F.expr("uuid()")
 
 
 # ---------------------------------------------------------------------------
 # format funcs
 # ---------------------------------------------------------------------------
-
-def format_json(named_cols: dict[str, Column]) -> Column:
-    """$(format-json k=v ...) — modules/json/format-json.c."""
-    return F.to_json(F.struct(*[c.alias(k) for k, c in named_cols.items()]))
-
 
 def format_flat_json(named_cols: dict[str, Column]) -> Column:
     """$(format-flat-json k=v ...) — modules/json/format-json.c:465-480
@@ -323,11 +242,6 @@ def format_welf(named_cols: dict[str, Column]) -> Column:
         ).otherwise(_welf_escape(v, False))
         parts.append(F.concat(F.lit(f"{k}="), rendered))
     return F.concat_ws(" ", *parts)
-
-
-def format_date(c: Column, fmt: str) -> Column:
-    """$(format-date) — modules/timestamp/tf-format-date.c."""
-    return F.date_format(c, fmt)
 
 
 def format_graphite(m: Column, ts: Column) -> Column:
@@ -380,23 +294,17 @@ _CEF_KEY_RE = "^[A-Za-z0-9]+$"
 
 
 def format_cef_extension(named_cols: dict[str, Column]) -> Column:
-    """$(format-cef-extension k=v ...) — modules/cef/
-    format-cef-extension.c: keys sorted (strcmp walk), values
-    CEF-escaped, space-joined. Non-alphanumeric keys are skipped like
-    the reference's non-drop on-error path (it logs and walks on)."""
-    import re
-
-    parts = [
-        F.concat(F.lit(f"{k}="), cef_escape(named_cols[k].cast("string")))
-        for k in sorted(named_cols)
-        if re.fullmatch("[A-Za-z0-9]+", k)
-    ]
-    return F.concat_ws(" ", *parts)
+    """format_cef_extension_map over plan-time named columns."""
+    return format_cef_extension_map(F.create_map(
+        *[x for k, c in named_cols.items() for x in (F.lit(k), c.cast("string"))]
+    ))
 
 
 def format_cef_extension_map(pairs: Column) -> Column:
-    """format-cef-extension over a dynamic map<string,string> NV
-    column: sort entries, drop invalid keys, escape, space-join."""
+    """format-cef-extension (modules/cef/format-cef-extension.c) over a
+    map<string,string> NV column: keys sorted (strcmp walk), values
+    CEF-escaped, space-joined. Non-alphanumeric keys are skipped like
+    the reference's non-drop on-error path (it logs and walks on)."""
     entries = F.array_sort(F.map_entries(pairs))
     valid = F.filter(entries, lambda e: e["key"].rlike(_CEF_KEY_RE))
     strs = F.transform(
@@ -644,30 +552,3 @@ def macro(name: str, ts: Column | None = None, **cols: Column) -> Column:
         return F.lit("0") if rid is None else rid.cast("string")
     raise KeyError(f"unknown macro {name!r}")
 
-
-TEMPLATE_FUNCS = {
-    "if": tf_if, "or": tf_or,
-    "length": tf_length, "substr": tf_substr, "strip": tf_strip,
-    "lowercase": tf_lowercase, "uppercase": tf_uppercase,
-    "sanitize": tf_sanitize, "replace-delimiter": tf_replace_delimiter,
-    "padding": tf_padding, "explode": tf_explode, "implode": tf_implode,
-    "sum": tf_sum, "min": tf_min, "max": tf_max, "average": tf_average,
-    "round": tf_round, "ceil": tf_ceil, "floor": tf_floor,
-    "list-concat": tf_list_concat, "list-head": tf_list_head,
-    "list-nth": tf_list_nth, "list-tail": tf_list_tail,
-    "list-count": tf_list_count, "list-append": tf_list_append,
-    "list-search": tf_list_search, "list-slice": tf_list_slice,
-    "map": tf_map, "filter": tf_filter, "iterate": tf_iterate,
-    "basename": tf_basename, "dirname": tf_dirname,
-    "ipv4-to-int": tf_ipv4_to_int,
-    "url-encode": tf_url_encode, "url-decode": tf_url_decode,
-    "base64-encode": tf_base64_encode,
-    "sha256": tf_sha256, "hash": tf_sha256, "sha1": tf_sha1, "md5": tf_md5,
-    "sha512": tf_sha512, "md4": tf_md4,
-    "uuid": tf_uuid,
-    "format-json": format_json, "format-flat-json": format_flat_json,
-    "format-welf": format_welf,
-    "format-date": format_date, "stardate": tf_stardate,
-    "format-cef-extension": format_cef_extension,
-    "format-cim": format_cim,
-}

@@ -13,11 +13,15 @@ ones that also matter on a real multi-executor cluster:
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _GIB = 1 << 30
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": _GIB, "t": 1 << 40}
+_log = logging.getLogger(__name__)
 
 
 def available_memory() -> int | None:
@@ -58,6 +62,24 @@ def default_driver_mem(available: int | None = None) -> str:
     return f"{gib}g"
 
 
+def driver_java_options(driver_mem: str, available: int | None) -> str:
+    """Driver JVM flags for a ``driver_mem`` heap (a JVM size such as
+    ``5g``). The heap is fixed and pre-touched (``-Xms`` plus
+    AlwaysPreTouch, see get_spark) only when it fits in ``available``
+    bytes: a pre-touched heap larger than that cannot start, as with
+    an exported SPARK_DRIVER_MEM, or the 2g floor on a smaller host.
+    Unknown memory or an unparsed size keeps the pre-touch."""
+    m = re.fullmatch(r"(\d+)([kmgt])", driver_mem.strip().lower())
+    heap = int(m.group(1)) * _UNITS[m.group(2)] if m else None
+    if heap is not None and available is not None and heap > available:
+        _log.warning(
+            "driver heap %s exceeds the %d MiB available; starting "
+            "without -Xms and AlwaysPreTouch", driver_mem, available >> 20,
+        )
+        return "-XX:-DontCompileHugeMethods"
+    return f"-XX:-DontCompileHugeMethods -Xms{driver_mem} -XX:+AlwaysPreTouch"
+
+
 def get_spark(
     app_name: str = "axosyslog_spark",
     cores: int | None = None,
@@ -74,6 +96,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
+    driver_opts = driver_java_options(driver_mem, available_memory())
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -96,7 +119,8 @@ def get_spark(
         # flag, but a cluster deployment that forgot the executor side
         # would silently revert to the interpreted path.
         #
-        # -Xms=driver-memory + -XX:+AlwaysPreTouch — the launcher sets
+        # -Xms=driver-memory + -XX:+AlwaysPreTouch, when the heap fits
+        # (driver_java_options) — the launcher sets
         # only -Xmx, so the heap grows lazily and every expansion
         # page-faults on first touch; inside a memory-overcommitted VM
         # those faults are kernel-dominated and bursty (measured on
@@ -107,11 +131,7 @@ def get_spark(
         # startup, off every measured path. Executors on a real
         # cluster size their own heap; AlwaysPreTouch alone still
         # batches their expansion faults.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-XX:-DontCompileHugeMethods -Xms{driver_mem} "
-            "-XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.extraJavaOptions", driver_opts)
         .config(
             "spark.executor.extraJavaOptions",
             "-XX:-DontCompileHugeMethods -XX:+AlwaysPreTouch",

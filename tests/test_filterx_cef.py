@@ -1,10 +1,10 @@
-"""FilterX expression mapping + CEF/LEEF parser tests."""
+"""FilterX expression + CEF/LEEF parser tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from axosyslog_spark.functions import filterx as fx
+from axosyslog_spark.functions.filterx_lang import filterx
 from axosyslog_spark.operators.cef import parse_cef, parse_leef
 
 
@@ -13,27 +13,29 @@ def test_filterx_exprs(spark):
         [("a", None, "k1=v1 k2= k3=v3", "hello")],
         "s string, missing string, kv string, txt string",
     )
-    r = df.select(
-        fx.null_coalesce(F.col("missing"), F.lit("dflt")).alias("nc"),
-        fx.ternary(F.col("s") == "a", F.lit(1), F.lit(0)).alias("t"),
-        fx.switch_case(F.col("s"), {"a": F.lit("A"), "b": F.lit("B")}, F.lit("?")).alias("sw"),
-        fx.is_in(F.col("s"), ["a", "z"]).alias("inn"),
-        fx.regexp_match(F.col("txt"), "^hel").alias("m"),
-        fx.regexp_search(F.col("kv"), r"k1=(\w+) k2", 1).alias("grp"),
-        fx.str_slice(F.col("txt"), 1, 4).alias("sl"),
-        fx.isset(F.col("missing")).alias("iss"),
-        fx.parse_kv_fx(F.col("kv")).alias("kvmap"),
-    ).collect()[0]
+    r = filterx(df, r"""
+        $nc = $missing ?? "dflt";
+        $t = $s == "a" ? 1 : 0;
+        switch ($s) {
+          case "a": $sw = "A"; break;
+          case "b": $sw = "B"; break;
+          default: $sw = "?";
+        }
+        $inn = $s in ["a", "z"];
+        $m = $txt =~ /^hel/;
+        $grp = regexp_search($kv, "k1=(\\w+) k2");
+        $sl = $txt[1..4];
+        $iss = isset($missing);
+        $kvmap = parse_kv($kv);
+        $out = format_kv(unset_empties(parse_kv($kv)));
+    """).collect()[0]
     assert r.nc == "dflt" and r.t == 1 and r.sw == "A"
     assert r.inn is True and r.m is True
     assert r.grp == ["v1"] and r.sl == "ell"
     assert r.iss is False
     assert r.kvmap == {"k1": "v1", "k2": "", "k3": "v3"}
     # unset_empties / format_kv roundtrip
-    r2 = df.select(
-        fx.format_kv_fx(fx.unset_empties(fx.parse_kv_fx(F.col("kv")))).alias("out")
-    ).collect()[0]
-    assert r2.out == "k1=v1 k3=v3"
+    assert r.out == "k1=v1 k3=v3"
 
 
 def test_parse_cef(spark):

@@ -573,3 +573,35 @@ def test_move_is_identity(frame):
     out = filterx(frame, "$h2 = move($host);")
     got = _rows(out)
     assert all(got[i]["h2"] == got[i]["host"] for i in got)
+
+
+def test_istype_decided_at_plan_time(spark):
+    """istype() folds at plan time from literal shapes and the string
+    column types += already dispatches on; it is no longer constant
+    true."""
+    df = spark.createDataFrame([(1, "x")], "n int, s string")
+    r = filterx(df, """
+        $a = istype($n, "string");
+        $b = istype($s, "string");
+        $c = istype("lit", "string");
+        $d = istype(3, "integer");
+        $e = istype(1.5, "integer");
+        $f = istype([1, 2], "list");
+        $g = istype({"k": 1}, "dict");
+        $h = istype(null, "null");
+    """).collect()[0]
+    assert (r.a, r.b, r.c, r.d, r.e, r.f, r.g, r.h) == (
+        False, True, True, True, False, True, True, True
+    )
+
+
+@pytest.mark.parametrize("block", [
+    '$a = istype($n, "integer");',        # only known not to be a string
+    '$a = istype($n + 1, "integer");',    # an expression operand
+    '$s = 1; $a = istype($s, "string");', # written in this block
+    '$a = istype($s, "str");',            # unknown type name
+])
+def test_istype_undecidable_raises(spark, block):
+    df = spark.createDataFrame([(1, "x")], "n int, s string")
+    with pytest.raises(FilterXSyntaxError, match="istype"):
+        filterx(df, block)

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from axosyslog_spark.functions import templates as tf
+from axosyslog_spark.functions.template_compiler import TemplateContext, compile_template
 from axosyslog_spark.operators import rewrite as rw
 
 
@@ -83,14 +84,16 @@ def test_timezone_rewrites(spark):
 
 def test_string_and_numeric_funcs(spark):
     df = _one(spark, s="  /var/log/app.log  ", n=7)
+    ctx = TemplateContext(columns={"s": F.col("s"), "n": F.col("n")})
+    stripped = compile_template("$(strip ${s})", ctx)
     r = df.select(
-        tf.tf_strip(F.col("s")).alias("stripped"),
-        tf.tf_basename(tf.tf_strip(F.col("s"))).alias("base"),
-        tf.tf_dirname(tf.tf_strip(F.col("s"))).alias("dir"),
+        stripped.alias("stripped"),
+        tf.tf_basename(stripped).alias("base"),
+        tf.tf_dirname(stripped).alias("dir"),
         tf.tf_uppercase(F.lit("ab")).alias("up"),
         tf.tf_padding(F.lit("7"), 3, "0").alias("pad"),
-        tf.tf_sum(F.col("n"), F.lit(3)).alias("sum"),
-        tf.tf_average(F.col("n"), F.lit(3)).alias("avg"),
+        compile_template("$(sum ${n} 3)", ctx).cast("int").alias("sum"),
+        compile_template("$(average ${n} 3)", ctx).cast("double").alias("avg"),
         tf.tf_sha256(F.lit("abc"), 8).alias("h"),
         tf.tf_md5(F.lit("abc")).alias("m"),
         tf.tf_ipv4_to_int(F.lit("10.0.0.1")).alias("ip"),
@@ -106,14 +109,19 @@ def test_string_and_numeric_funcs(spark):
 
 def test_list_funcs(spark):
     df = spark.createDataFrame([(["a", "b", "c"],)], "l array<string>")
+    ctx = TemplateContext(columns={"l": F.array_join(F.col("l"), ",")})
+
+    def t(template):
+        return compile_template(template, ctx)
+
     r = df.select(
-        tf.tf_list_head(F.col("l")).alias("h"),
-        tf.tf_list_nth(F.col("l"), 1).alias("n1"),
-        tf.tf_list_count(F.col("l")).alias("c"),
-        tf.tf_implode(F.col("l"), ",").alias("joined"),
-        tf.tf_list_search(F.col("l"), F.lit("b")).alias("idx"),
-        tf.tf_map(F.col("l"), lambda x: F.upper(x)).alias("mapped"),
-        tf.tf_filter(F.col("l"), lambda x: x != "b").alias("filtered"),
+        t("$(list-head ${l})").alias("h"),
+        t("$(list-nth 1 ${l})").alias("n1"),
+        t("$(list-count ${l})").cast("int").alias("c"),
+        t("$(implode , ${l})").alias("joined"),
+        t("$(list-search b ${l})").cast("int").alias("idx"),
+        F.split(t("$(map $(uppercase $_) ${l})"), ",").alias("mapped"),
+        F.split(t("$(filter ('$_' ne 'b') ${l})"), ",").alias("filtered"),
     ).collect()[0]
     assert r.h == "a" and r.n1 == "b" and r.c == 3
     assert r.joined == "a,b,c" and r.idx == 1
@@ -123,10 +131,8 @@ def test_list_funcs(spark):
 def test_format_funcs(spark):
     df = _one(spark, a="x", b="y")
     r = df.select(
-        tf.format_json({"k1": F.col("a"), "k2": F.col("b")}).alias("j"),
         tf.format_welf({"dst": F.col("b"), "src": F.col("a")}).alias("w"),
     ).collect()[0]
-    assert r.j == '{"k1":"x","k2":"y"}'
     assert r.w == "dst=y src=x"
 
 

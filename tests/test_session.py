@@ -1,8 +1,13 @@
-"""Session sizing: the default pre-touched driver heap fits the host."""
+"""Session sizing: the default pre-touched driver heap fits the host,
+and a heap that does not fit is not pre-touched."""
 
 from __future__ import annotations
 
-from axosyslog_spark.session import available_memory, default_driver_mem
+from axosyslog_spark.session import (
+    available_memory,
+    default_driver_mem,
+    driver_java_options,
+)
 
 GIB = 1 << 30
 
@@ -27,3 +32,21 @@ def test_default_heap_formula():
     assert default_driver_mem(64 * GIB) == "16g"  # capped
     assert default_driver_mem(1 * GIB) == "2g"  # floor
     assert default_driver_mem(0) == "2g"  # unknown memory
+
+
+PRETOUCH = "-XX:-DontCompileHugeMethods -Xms{} -XX:+AlwaysPreTouch"
+
+
+def test_pretouch_only_when_heap_fits(caplog):
+    assert driver_java_options("5g", 15 * GIB) == PRETOUCH.format("5g")
+    assert driver_java_options("2g", 2 * GIB) == PRETOUCH.format("2g")  # exactly fits
+    assert driver_java_options("512m", 1 * GIB) == PRETOUCH.format("512m")
+    assert driver_java_options("5g", None) == PRETOUCH.format("5g")  # unknown memory
+    assert not caplog.records
+    # an exported 16g on a 15 GiB host; the 2g floor on a 1 GiB host
+    with caplog.at_level("WARNING", logger="axosyslog_spark.session"):
+        assert driver_java_options("16g", 15 * GIB) == "-XX:-DontCompileHugeMethods"
+        assert driver_java_options("2g", 1 * GIB) == "-XX:-DontCompileHugeMethods"
+        assert driver_java_options("2049M", 2 * GIB) == "-XX:-DontCompileHugeMethods"
+    assert len(caplog.records) == 3
+    assert "16g" in caplog.records[0].getMessage()

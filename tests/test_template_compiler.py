@@ -737,8 +737,7 @@ def test_basicfuncs_c_suite_map_filter(frame):
     """test_basicfuncs.c test_map/test_filter: per-element template
     eval with '$_' bound, composing through nested templates; filter
     takes a full condition. ($(iterate) keeps per-invocation state
-    across messages — N/A in a batch column model; the aggregate
-    tf_iterate form covers the fold use.)"""
+    across messages — N/A in a batch column model.)"""
     ctx = _ctx({})
 
     def r(t):
@@ -758,3 +757,36 @@ def test_basicfuncs_c_suite_map_filter(frame):
     assert r("$(filter ('$_' le '1') 0,1,2)") == "0,1"
     assert r("$(filter ('$(% $_ 2)' eq '0') 0,1,2,3)") == "0,2"
     assert r("$(filter ('1' eq '0') '')") == ""
+
+
+def test_frozen_builders_match_their_template_functions(spark):
+    """The eight builders q_op_template_funcs calls (with its
+    arguments) are the code behind their $(fn): rendering the template
+    equals the builder's output cast to string, on non-null rows
+    including an empty string and non-ASCII text."""
+    from axosyslog_spark.functions import templates as tf
+
+    texts = ["", "hello world, a longer line", "ünïcødé 日本語/текст.txt",
+             "/corpus/web/doc_42.txt", "no-slash"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    x = F.col("t")
+    ctx = TemplateContext(columns={"t": x})
+    cases = [
+        ("$(length ${t})", tf.tf_length(x)),
+        ("$(substr ${t} 0 16)", tf.tf_substr(x, 0, 16)),
+        ("$(uppercase ${t})", tf.tf_uppercase(x)),
+        ("$(padding ${t} 6 0)", tf.tf_padding(x, 6, "0")),
+        ("$(basename ${t})", tf.tf_basename(x)),
+        ("$(dirname ${t})", tf.tf_dirname(x)),
+        ("$(sha256 --length 16 ${t})", tf.tf_sha256(x, 16)),
+        ("$(md5 ${t})", tf.tf_md5(x)),
+    ]
+    out = df.select(
+        "t",
+        *[c for tmpl, b in cases
+          for c in (compile_template(tmpl, ctx), b.cast("string"))],
+    ).collect()
+    assert len(out) == len(texts)
+    for row in out:
+        for k, (tmpl, _) in enumerate(cases):
+            assert row[1 + 2 * k] == row[2 + 2 * k], (tmpl, row.t)
