@@ -642,12 +642,6 @@ def _apply_context_func(
     whole evaluation stays one higher-order-function expression —
     no explode, no shuffle."""
     if ctx.context_entries is None:
-        # pre-entries back-compat: a close frame that bound only the
-        # aggregate columns still answers the aggregate-shaped funcs
-        if name == "context-length" and "CONTEXT_LENGTH" in ctx.columns:
-            return ctx.columns["CONTEXT_LENGTH"].cast("string")
-        if name == "context-values" and "CONTEXT_VALUES" in ctx.columns:
-            return F.array_join(ctx.columns["CONTEXT_VALUES"], ",")
         raise TemplateError(
             f"$({name}) needs a correlation context (grouping-by / "
             "PatternDB context close frame)"

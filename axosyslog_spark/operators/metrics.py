@@ -29,10 +29,12 @@ def sink_counters(sinks: list[str]) -> list[Column]:
     (``__total``), as aggregates for ``DataFrame.observe``: the
     per-path ingress/egress counters the reference keeps on every log
     path (lib/cfg-tree.c:1087-1101), riding whatever action consumes
-    the routed frame instead of a second scan."""
-    return [
-        F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(s) for s in sinks
-    ] + [F.count(F.lit(1)).alias("__total")]
+    the routed frame instead of a second scan. Counts, not sums, so an
+    empty input (a bucket no conversation hashed into) reports 0, not
+    NULL."""
+    return [F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks] + [
+        F.count(F.lit(1)).alias("__total")
+    ]
 
 
 def _sorted_small(agg: DataFrame, *keys: str) -> DataFrame:

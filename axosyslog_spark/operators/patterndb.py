@@ -105,9 +105,9 @@ nothing and lets Catalyst prune unreferenced field columns.
 
 In-band framing contract: the framed decode requires the message text
 to be free of the control bytes \\x01-\\x04. This is ENFORCED here:
-match_idx()/apply() strip them with one F.translate before the text
-reaches either tier regex (syslog payloads never legitimately carry
-them — the reference's line-based sources strip control bytes too, so
+apply() strips them with one F.translate before the text reaches
+either tier regex (syslog payloads never legitimately carry them —
+the reference's line-based sources strip control bytes too, so
 behavior matches; hostile/binary input degrades to classification of
 the stripped text instead of garbled rule_ids).
 """
@@ -431,11 +431,6 @@ def compile_pattern(rule: PdbRule, pattern: str) -> CompiledPattern:
     return CompiledPattern(rule, "".join(parts), tuple(fields), prefix)
 
 
-def compile_rule(rule: PdbRule) -> CompiledPattern:
-    """Back-compat: compile the rule's first pattern."""
-    return compile_pattern(rule, rule.patterns[0])
-
-
 @dataclass(frozen=True)
 class PdbLeaf:
     """One dispatch-tree leaf: its literal prefix, its members in
@@ -673,11 +668,6 @@ class PatternDB:
     def _two_pass(self) -> bool:
         return any(leaf.strategy == "two-pass" for leaf in self.leaves)
 
-    # round-1 API: `rules` was the compiled list
-    @property
-    def rules(self) -> list[CompiledPattern]:
-        return self.patterns
-
     # --- single-execution classify + extract machinery ---
 
     def _decode(self, res: Column) -> tuple[Column, Column]:
@@ -691,29 +681,6 @@ class PatternDB:
             F.when(hit, self._leaf_lookup(res, self._leaf_idx_map)).cast("int"),
             F.when(hit, self._leaf_lookup(res, self._leaf_off_map)),
         )
-
-    def match_idx(self, text: Column) -> Column:
-        """Winning compiled-pattern ordinal; ordinal+N encodes a
-        partial (pattern-consumed, message-remainder) match; NULL if
-        unmatched. Mirrors radix.c's complete-then-partial two-pass.
-
-        Standalone expression form (no projection staging): fine for
-        one-off classification, but a result referenced more than once
-        may be evaluated more than once; apply() stages the shared
-        subtrees as materialized columns so each regex runs once per
-        row."""
-        if not self.patterns:
-            return F.lit(None).cast("int")
-        text = _strip_framing_bytes(text)
-        res = self._first_tier(text)
-        if self._two_pass:
-            res = self._partial_tier(text, res)
-        return self._decode(res)[0]
-
-    def classify(self, text: Column) -> Column:
-        """rule_id of the winning rule, NULL if unclassified."""
-        idx = self.match_idx(text)
-        return self._rule_id_for(idx)
 
     @staticmethod
     def _lut(values: list, idx_mod: Column, typ: str) -> Column:

@@ -14,11 +14,17 @@ one DataFrame projection stage:
   - cee_parser               — scl/cee/adapter.conf (@cee: JSON)
   - cisco_parser             — scl/cisco/plugin.conf (timestamp
     variants + %FAC-SEV-MNEMONIC triplet, documented subset)
+  - cisco_full_parser        — scl/cisco/plugin.conf full channel
+    (the one checked against the reference goldens)
   - fortigate_parser         — scl/fortigate/fortigate.conf
   - panos_parser             — scl/paloalto/panos.conf (TRAFFIC /
     THREAT / SYSTEM / CONFIG positional schemas)
   - app_parser               — lib/appmodel app-parser() analog:
     ordered (name, filter, parser) table, first-match-wins routing
+  - ewmm_parser              — scl/ewmm (enterprise-wide message model)
+  - credit_card_mask         — scl/rewrite/cc-mask.conf
+  - checkpoint_parser        — scl/checkpoint/plugin.conf
+  - junos_app_filter         — scl/junos/plugin.conf (filter only)
   - pihole_ftl_parser        — scl/pihole/pihole.conf
   - collectd_putval          — scl/collectd/plugin.conf (PUTVAL body)
   - splunk_hec_event         — scl/splunk/splunk.conf (HEC event JSON)
@@ -37,7 +43,7 @@ one DataFrame projection stage:
   - loggly_line / logmatic_line / sumologic_syslog_line /
     sumologic_http_body / elasticsearch_datastream_body /
     slack_attachment_body / discord_body / telegram_body /
-    logscale_event_body / google_pubsub_event+publish_body /
+    logscale_event_body / google_pubsub_event /
     azure_monitor_body — hosted-destination wire formats (the
     transports are N/A-batch; each block's rendered line/body is
     the artifact)
@@ -546,37 +552,8 @@ def ewmm_parser(
     )
 
 
-def format_gelf(
-    host: Column, msg: Column, level_num: Column, unixtime: Column,
-    program: Column | None = None, pid: Column | None = None,
-) -> Column:
-    """scl/graylog2 $(format-gelf): GELF 1.1 JSON — fixed version,
-    '-' fallbacks for host/short_message, NUMERIC level / timestamp /
-    _pid (the block casts level=int(${LEVEL_NUM}),
-    timestamp=int64(${R_UNIXTIME}), _pid=int(${PID}); GELF 1.1
-    requires numeric level+timestamp), _-prefixed additional fields,
-    --omit-empty-values (NULL / empty-string fields dropped).
-
-    Rendered via to_json over a typed struct so the numeric fields
-    stay numeric in the JSON (a map<string,string> would quote them).
-    Ref: scl/graylog2/plugin.conf template-function "format-gelf"."""
-    s = lambda c: F.nullif(c, F.lit(""))  # noqa: E731
-    fields: list[Column] = [
-        F.lit("1.1").alias("version"),
-        F.coalesce(s(host), F.lit("-")).alias("host"),
-        F.coalesce(s(msg), F.lit("-")).alias("short_message"),
-        level_num.cast("int").alias("level"),
-        unixtime.cast("bigint").alias("timestamp"),
-    ]
-    if program is not None:
-        fields.append(s(program).alias("_program"))
-    if pid is not None:
-        fields.append(s(pid.cast("string")).try_cast("int").alias("_pid"))
-    return F.to_json(F.struct(*fields), {"ignoreNullFields": "true"})
-
-
 # ---------------------------------------------------------------------------
-# credit-card-mask / credit-card-hash (scl/rewrite/cc-mask.conf)
+# credit-card-mask (scl/rewrite/cc-mask.conf)
 # ---------------------------------------------------------------------------
 
 # card-number regexes from scl/rewrite/cc-mask.conf:52-79, each split
@@ -601,11 +578,6 @@ _CC_SPLIT_REGEXES = (
     # discover: 6011/65xx, 16 digits
     r"(6(?:011|5[0-9]{2})[0-9]{2})([0-9]{6})([0-9]{4})",
 )
-# whole-match forms (for the hash variant)
-_CC_FULL_REGEXES = tuple(
-    rx.replace("(", "(?:").replace("(?:?:", "(?:").replace("(?:?", "(?")
-    for rx in _CC_SPLIT_REGEXES
-)
 
 
 def credit_card_mask(col: Column) -> Column:
@@ -616,27 +588,6 @@ def credit_card_mask(col: Column) -> Column:
     boundaries, so a card embedded in a longer digit run masks too."""
     for rx in _CC_SPLIT_REGEXES:
         col = F.regexp_replace(col, rx, "$1******$3")
-    return col
-
-
-def credit_card_hash(col: Column, length: int = 16) -> Column:
-    """credit-card-hash(): replace each card number with
-    $(sha1 --length 16 $0) — the first 16 hex chars of its SHA-1
-    (scl/rewrite/cc-mask.conf:92-100). Batch shape: extract the
-    per-scheme matches, then fold literal replacements (identical
-    digit strings hash identically, so replace-all per match value
-    equals the reference's per-occurrence subst)."""
-    for rx in _CC_FULL_REGEXES:
-        matches = F.array_distinct(
-            F.regexp_extract_all(col, F.lit(f"({rx})"), 1)
-        )
-        col = F.aggregate(
-            matches,
-            col,
-            lambda acc, m: F.replace(
-                acc, m, F.substring(F.sha1(m), 1, F.lit(length))
-            ),
-        )
     return col
 
 
@@ -728,57 +679,8 @@ def checkpoint_parser(
 
 
 # ---------------------------------------------------------------------------
-# websense / osquery / junos (scl/websense, scl/osquery, scl/junos)
+# junos (scl/junos)
 # ---------------------------------------------------------------------------
-
-
-def websense_parser(
-    df: DataFrame, src_col: str = "text", prefix: str = ".websense."
-) -> DataFrame:
-    """scl/websense websense-parser(): strip the timezone code after
-    the BSD stamp, inject 'Websense: ' before 'vendor=Websense' so the
-    syslog parser sees a PROGRAM, then RFC3164 header parse + default
-    kv-parser over the body (plugin.conf's two substs + syslog-parser
-    + kv-parser composition; the conf's "$1 " replacement leaves a
-    double space the lenient C parser skips — we drop it so the
-    header regex applies, same parsed output)."""
-    from axosyslog_spark.operators.parse import parse_rfc3164
-
-    fixed = F.regexp_replace(
-        F.col(src_col),
-        r"([A-Za-z]{3} [ 0-9]\d \d{2}:\d{2}:\d{2}) [A-Z]{3,4}",
-        "$1",
-    )
-    fixed = F.regexp_replace(fixed, "(vendor=Websense)", "Websense: $1")
-    out = parse_rfc3164(df.withColumn("__ws_fixed", fixed), "__ws_fixed")
-    from axosyslog_spark.operators.kvscan import kv_parse
-
-    out = kv_parse(out, "body", out_col=f"{prefix}kv", prefix=prefix)
-    return out.drop("__ws_fixed")
-
-
-def websense_app_filter(message: Column) -> Column:
-    """application websense[syslog-raw]: substring filter."""
-    return message.contains("vendor=Websense")
-
-
-def osquery_parser(
-    df: DataFrame, src_col: str = "text", prefix: str = ".osquery."
-) -> DataFrame:
-    """scl/osquery osquery() source channel: program-override
-    'osquery' + json-parser(prefix('.osquery.')) over the results-log
-    JSON lines."""
-    from axosyslog_spark.operators.jsonflatten import flatten_json_column
-
-    flat = flatten_json_column(F.col(src_col))
-    return df.withColumns(
-        {
-            "program": F.lit("osquery"),
-            f"{prefix}kv".replace("..", "."): F.transform_keys(
-                flat, lambda k, _v: F.concat(F.lit(prefix), k)
-            ),
-        }
-    )
 
 
 def junos_app_filter(sdata: Column) -> Column:
@@ -789,30 +691,6 @@ def junos_app_filter(sdata: Column) -> Column:
     extracts)."""
     v = F.element_at(sdata, ".SDATA.junos@2636.1.1.1.2.129.reason")
     return v.isNotNull() & (v != "")
-
-
-def netskope_parser(
-    df: DataFrame, src_col: str = "text", prefix: str = ".netskope."
-) -> DataFrame:
-    """scl/netskope netskope-parser(): strip the leading syslog pri
-    and json-parse the body with the prefix (plugin.conf's subst +
-    json-parser channel)."""
-    from axosyslog_spark.operators.jsonflatten import flatten_json_column
-
-    body = F.regexp_replace(F.col(src_col), "^<[0-9]+>", "")
-    flat = flatten_json_column(body)
-    return df.withColumn(
-        f"{prefix}kv",
-        F.transform_keys(flat, lambda k, _v: F.concat(F.lit(prefix), k)),
-    )
-
-
-def netskope_app_filter(message: Column) -> Column:
-    """application netskope[syslog-raw]: '<134>{' prefix plus the
-    insertion-epoch marker field."""
-    return message.startswith("<134>{") & message.contains(
-        "_insertion_epoch_timestamp"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1691,84 +1569,6 @@ def logscale_event_body(
     )
 
 
-def network_load_balancer(
-    df: DataFrame,
-    targets: list[str],
-    key: Column,
-    failover: bool = True,
-) -> DataFrame:
-    """scl/loadbalancer/gen-loadbalancer.sh network-load-balancer():
-    the generated config fans out into one flags(final) channel per
-    target, message i going to ``targets[i]`` where i == ${R_USEC} %
-    target_count; each channel's failover list is every OTHER target
-    in declaration order (generated unless the caller overrides).
-    Batch analog: ``key`` stands in for R_USEC (any uniformly-spread
-    int column — the wall-clock microsecond has no batch meaning),
-    and the final-flag exclusivity is inherent to the mod assignment.
-    Adds lb_target and (when failover and >=2 targets, like the
-    script's guard) lb_failover."""
-    n = len(targets)
-    if n == 0:
-        raise ValueError("network-load-balancer needs at least one target")
-    tarr = F.array(*[F.lit(t) for t in targets])
-    idx = (key.cast("bigint") % n).cast("int")
-    out = df.withColumn("lb_target", F.element_at(tarr, idx + 1))
-    if failover and n >= 2:
-        out = out.withColumn(
-            "lb_failover",
-            F.filter(tarr, lambda t: t != F.col("lb_target")),
-        )
-    return out
-
-
-def openobserve_log_body(
-    ts: Column,
-    host: Column,
-    program: Column,
-    pid: Column | None,
-    message: Column,
-    extra: dict[str, Column] | None = None,
-) -> Column:
-    """scl/openobserve/openobserve.conf openobserve-log() record: the
-    same rfc5424-minus-DATE-plus-@timestamp JSON record as
-    elasticsearch-datastream, POSTed to /api/{org}/{stream}/_json;
-    the '[' ... ']' array framing and auth are the sink's concern."""
-    body = elasticsearch_datastream_body(ts, host, program, pid, message,
-                                         extra)
-    # reuse the datastream record, minus its bulk-create header line
-    return F.substring_index(body, "\n", -1)
-
-
-def opensearch_body(
-    ts: Column,
-    host: Column,
-    program: Column,
-    pid: Column | None,
-    message: Column,
-    index: str,
-    op_type: str = "index",
-    custom_id: str = "",
-    extra: dict[str, Column] | None = None,
-) -> Column:
-    """scl/opensearch/opensearch.conf opensearch() _bulk body: the
-    action line $(format-json {op_type}._index / ._id with
-    --omit-empty-values, so an empty custom_id disappears) + newline +
-    the rfc5424 record with @timestamp — ndjson pair like
-    elasticsearch-datastream but with an explicit index/op_type."""
-    import json as _json
-
-    action: dict = {"_index": index}
-    if custom_id:
-        action["_id"] = custom_id
-    head = _json.dumps({op_type: action}, separators=(",", ":"))
-    record = F.substring_index(
-        elasticsearch_datastream_body(ts, host, program, pid, message,
-                                      extra),
-        "\n", -1,
-    )
-    return F.concat(F.lit(head + "\n"), record)
-
-
 # ---------------------------------------------------------------------------
 # round-5c batch: mariadb audit, postgresql csvlog, google-pubsub,
 # azure-monitor
@@ -1944,17 +1744,6 @@ def google_pubsub_event(data: Column, attributes: Column) -> Column:
     )
 
 
-def google_pubsub_publish_body(events: Column) -> Column:
-    """The POST body for :publish — body_prefix('{"messages":[') +
-    delimiter(',') + body_suffix(']}') over a batch's rendered
-    events (an array column from collect_list within the batch
-    key). Batching (batch-lines/bytes/timeout) is the sink's
-    concern; this renders one batch's body."""
-    return F.concat(
-        F.lit('{"messages":['), F.array_join(events, ","), F.lit("]}")
-    )
-
-
 def azure_monitor_body(events: Column) -> Column:
     """scl/azure/azure-monitor.conf azure_monitor(): the DCR ingestion
     POST body — body_prefix('[') + per-message body(`template`) joined
@@ -1963,77 +1752,3 @@ def azure_monitor_body(events: Column) -> Column:
     stream_name selection maps to the batch key of the groupBy that
     produced ``events``."""
     return F.concat(F.lit("["), F.array_join(events, ","), F.lit("]"))
-
-
-# ---------------------------------------------------------------------------
-# app-transform() — modules/appmodel/transformation.c + app-transform-
-# generator.c: named transformations bound to (application, topic),
-# each an ordered list of transforms, each an ordered list of parser /
-# filterx steps
-# ---------------------------------------------------------------------------
-
-from dataclasses import dataclass as _dataclass
-
-
-@_dataclass(frozen=True)
-class TransformStep:
-    """One step: a parser (DataFrame -> DataFrame callable) or a
-    filterx block source (transformation.h TransformStep)."""
-    name: str
-    parser: Callable[[DataFrame], DataFrame] | None = None
-    filterx: str | None = None
-
-
-@_dataclass(frozen=True)
-class Transform:
-    name: str
-    steps: tuple[TransformStep, ...]
-
-
-@_dataclass(frozen=True)
-class Transformation:
-    """transformation NAME[topic] { transform[name] { step[...] } }."""
-    app: str
-    topic: str
-    transforms: tuple[Transform, ...]
-
-
-def app_transform(
-    df: DataFrame,
-    transformations: list[Transformation],
-    app_col: str = "app",
-    topic: str = "default",
-    include_transforms: list[str] | None = None,
-) -> DataFrame:
-    """app-transform(filterx-app-variable($app) topic(T)
-    [include-transforms(...)]): rows whose application variable
-    matches a transformation's name (and topic) run that
-    transformation's transforms in declaration order, each transform's
-    steps in order; include-transforms keeps only the named
-    transforms; an unknown application passes through untouched
-    (the reference generates an empty branch). Branch-and-reunite like
-    app_parser — no shuffle, one union."""
-    from axosyslog_spark.functions.filterx_lang import compile_filterx
-
-    chosen = {
-        t.app: t for t in transformations if t.topic == topic
-    }
-    apps = [a for a in chosen]
-    rest = df.filter(
-        F.col(app_col).isNull() | ~F.col(app_col).isin(apps)
-    )
-    out = rest
-    for app in apps:
-        b = df.filter(F.col(app_col) == app)
-        for tr in chosen[app].transforms:
-            if include_transforms and tr.name not in include_transforms:
-                continue
-            for step in tr.steps:
-                if step.parser is not None:
-                    b = step.parser(b)
-                else:
-                    b = compile_filterx(
-                        step.filterx, known_fields=b.columns
-                    ).apply(b)
-        out = out.unionByName(b, allowMissingColumns=True)
-    return out

@@ -343,8 +343,14 @@ def unigram_rarity_buckets(
     ).sortWithinPartitions(F.asc("rarity_e6"), F.asc("id")).withColumn(
         "__pid", F.spark_partition_id()
     )
-    ranked = ranked.localCheckpoint()  # pin the partitioning: the pid
-    # column and the counts below must see the SAME physical layout
+    # Deliberate space-for-time trade: the eager localCheckpoint() pins
+    # ONE physical layout, so the __pid column and the per-partition
+    # counts collected below describe the same partitions (a recomputed
+    # range exchange may sample different boundaries). It costs one
+    # materialization of per_doc in executor storage plus a P-entry
+    # driver collect, and buys an exact global rank with no
+    # single-reducer window.
+    ranked = ranked.localCheckpoint()
     pid_counts = {
         r["__pid"]: r["cnt"]
         for r in ranked.groupBy("__pid").agg(

@@ -78,3 +78,29 @@ def test_lineage_totals_match_pipeline_counts(spark, tmp_path):
     total = lineage.groupBy().sum("total").collect()[0][0]
     expected = run_pipeline(spark, t).routed.count()
     assert total == expected
+
+
+def test_empty_buckets_commit_zero_counts(spark, tmp_path):
+    """A bucket no conversation hashes into still commits, with a zero
+    total and zero per-sink counts (an empty observe() must not read
+    as NULL)."""
+    t = synthesize_transcripts(spark, SF)
+    conv = t.groupBy("conv_id").count().filter("count = 52").orderBy("conv_id").first()
+    one = t.filter(t.conv_id == conv.conv_id)
+    out = str(tmp_path / "out")
+    rep = ck.run_checkpointed(spark, one, out, n_buckets=4)
+    assert rep.processed_buckets == [0, 1, 2, 3]
+    recs = ck.committed_buckets(out)
+    assert sorted(recs) == [0, 1, 2, 3]
+    empty = [r for r in recs.values() if r["total"] == 0]
+    assert len(empty) == 3
+    for r in empty:
+        assert set(r["sink_counts"].values()) == {0}
+    assert sum(r["total"] for r in recs.values()) == rep.total_rows > 0
+
+    # the observed run shares the counters: an empty input reads 0 too
+    from axosyslog_spark.plans.pipeline import run_pipeline_observed
+
+    routed, obs = run_pipeline_observed(spark, one.limit(0))
+    routed.write.format("noop").mode("overwrite").save()
+    assert set(obs.get.values()) == {0}

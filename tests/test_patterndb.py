@@ -13,7 +13,6 @@ from axosyslog_spark.operators.patterndb import (
     PatternDB,
     PdbRule,
     compile_pattern,
-    compile_rule,
 )
 
 
@@ -123,10 +122,9 @@ def test_shared_field_name_across_rules(spark):
 
 
 def test_compile_rejects_bad_patterns():
-    with pytest.raises(ValueError):
-        compile_rule(PdbRule("x", "open@ESTRING:a"))
-    with pytest.raises(ValueError):
-        compile_rule(PdbRule("x", "bad @NOCLASS:a@"))
+    for rule in (PdbRule("x", "open@ESTRING:a"), PdbRule("x", "bad @NOCLASS:a@")):
+        with pytest.raises(ValueError):
+            compile_pattern(rule, rule.patterns[0])
 
 
 # --- classes + match tiers ported from modules/correlation/tests/test_radix.c
@@ -266,21 +264,14 @@ def test_backtracking_does_not_leak_sentinels(spark):
 def test_trailing_newline_is_not_complete(spark):
     # ADVICE r2: Java `$` also matches before a final newline; radix.c
     # requires full consumption, so the complete tier anchors with \z.
-    # "v=1\n" must classify in the PARTIAL tier (pattern consumed,
-    # remainder "\n" ignored), exactly like the RE2 oracle mirror.
-    from pyspark.sql import functions as F
-
-    rules = [PdbRule("kv", "v=@NUMBER:v@")]
-    pdb = PatternDB(rules)
-    df = spark.createDataFrame([(0, "v=1"), (1, "v=1\n")], "id int, text string")
-    got = {
-        r["id"]: r
-        for r in df.select(
-            "id", pdb.match_idx(F.col("text")).alias("idx")
-        ).collect()
-    }
-    assert got[0]["idx"] == 0        # complete
-    assert got[1]["idx"] == 1        # 0 + n(=1): partial tier
+    # "v=1\n" matches "kv" only in the PARTIAL tier (pattern consumed,
+    # remainder "\n" ignored), exactly like the RE2 oracle mirror, so
+    # "nl", declared later, wins as the one complete match. A
+    # `$`-anchored complete tier would let "kv" win by declaration order.
+    rules = [PdbRule("kv", "v=@NUMBER:v@"), PdbRule("nl", "v=@NUMBER:n@\n")]
+    rows = _apply(spark, rules, ["v=1", "v=1\n"])
+    assert rows[0]["rule_id"] == "kv" and rows[0]["v"] == 1   # complete
+    assert rows[1]["rule_id"] == "nl" and rows[1]["n"] == 1   # complete
 
 
 def test_empty_and_null_text(spark):
@@ -490,10 +481,3 @@ def test_control_bytes_sanitized(spark):
     assert rows[3]["rule_id"] == "kv_status" and rows[3]["latency_ms"] == 3
     assert rows[4]["rule_id"] == "kv_status" and rows[4]["status"] == "ok"
     assert rows[5]["rule_id"] is None
-    # classify() (the standalone expression form) enforces it too
-    df = spark.createDataFrame([(l,) for l in lines], "text string")
-    from pyspark.sql import functions as F
-
-    pdb = PatternDB(F4_RULES)
-    got = [r[0] for r in df.select(pdb.classify(F.col("text"))).collect()]
-    assert got == ["kv_status", "kv_status", "login", "kv_status", "kv_status", None]

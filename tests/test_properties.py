@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from axosyslog_spark.operators import filters as flt
-from axosyslog_spark.operators.patterndb import PdbRule, compile_rule
+from axosyslog_spark.operators.patterndb import PdbRule, compile_pattern
 from axosyslog_spark.operators.route import RouteBranch, RouteSpec, route_flags
 
 # ---------------------------------------------------------------------------
@@ -214,7 +214,8 @@ def pattern_and_input(draw):
 @given(case=pattern_and_input())
 def test_patterndb_compile_matches_re(case):
     pattern, line, expected = case
-    compiled = compile_rule(PdbRule("r", pattern))
+    rule = PdbRule("r", pattern)
+    compiled = compile_pattern(rule, rule.patterns[0])
     m = re.match(compiled.regex, line)
     assert m is not None, (pattern, line, compiled.regex)
     for i, f in enumerate(compiled.fields):
@@ -292,13 +293,11 @@ def test_patterndb_never_garbled_by_control_bytes(spark, texts):
         [(i, t, s) for i, (t, s) in enumerate(zip(texts, stripped))],
         "id int, raw string, clean string",
     )
-    rows = df.select(
-        "id",
-        pdb.classify(F.col("raw")).alias("r"),
-        pdb.classify(F.col("clean")).alias("c"),
+    rows = pdb.apply(
+        pdb.apply(df, text_col="raw", prefix="r_"), text_col="clean", prefix="c_"
     ).collect()
     for r in rows:
-        assert r["r"] == r["c"]
+        assert r["r_rule_id"] == r["c_rule_id"]
 
 
 # ---------------------------------------------------------------------------

@@ -219,45 +219,6 @@ def test_ewmm_parser(spark):
     assert "._TAGS" not in r["ewmm"]
 
 
-def test_format_gelf(spark):
-    import json
-
-    df = spark.createDataFrame(
-        [("h1", "boom", 3, 1704067200, "prog", None)],
-        "host string, msg string, lvl int, ut bigint, prog string, pid string",
-    )
-    out = df.select(
-        scl.format_gelf(
-            F.col("host"), F.col("msg"), F.col("lvl"), F.col("ut"),
-            F.col("prog"), F.col("pid"),
-        ).alias("g")
-    ).first()["g"]
-    d = json.loads(out)
-    assert d["version"] == "1.1" and d["host"] == "h1"
-    # GELF 1.1 / the block's int() casts: numeric, not strings
-    assert d["short_message"] == "boom" and d["level"] == 3
-    assert d["timestamp"] == 1704067200
-    assert d["_program"] == "prog"
-    assert "_pid" not in d  # omit-empty-values
-
-
-def test_format_gelf_numeric_pid(spark):
-    import json
-
-    df = spark.createDataFrame(
-        [("h1", "x", 6, 1704067201, "p", "412")],
-        "host string, msg string, lvl int, ut bigint, prog string, pid string",
-    )
-    out = df.select(
-        scl.format_gelf(
-            F.col("host"), F.col("msg"), F.col("lvl"), F.col("ut"),
-            F.col("prog"), F.col("pid"),
-        ).alias("g")
-    ).first()["g"]
-    d = json.loads(out)
-    assert d["_pid"] == 412 and d["level"] == 6
-
-
 def test_iptables_duplicate_keys_no_abort(spark):
     """ADVICE r3 (high): a netfilter ICMP error line embeds the
     offending packet's header in brackets, repeating SRC/DST/PROTO/
@@ -291,8 +252,6 @@ def test_apache_malformed_date_yields_null(spark):
 
 
 def test_credit_card_mask(spark):
-    import hashlib
-
     df = spark.createDataFrame(
         [
             (0, "paid with 4111111111111111 ok"),            # visa 16
@@ -316,11 +275,6 @@ def test_credit_card_mask(spark):
     assert out[3] == "jcb 353011******0000 disc 601100******9424"
     assert out[4] == "diners 305693******5904 end"
     assert out[5] == "no cards 12345 here"
-
-    h = df.select(scl.credit_card_hash(F.col("text")).alias("h")).collect()
-    sha16 = hashlib.sha1(b"4111111111111111").hexdigest()[:16]
-    assert h[0]["h"] == f"paid with {sha16} ok"
-    assert h[5]["h"] == "no cards 12345 here"
 
 
 def test_checkpoint_parser_syslog_formats(spark):
@@ -367,40 +321,6 @@ def test_checkpoint_app_filter(spark):
     assert sorted(r["id"] for r in kept) == [0, 1]
 
 
-def test_websense_parser(spark):
-    line = (
-        "<158>Mar  1 14:51:03 PST wsgateway "
-        "vendor=Websense product=Security product_version=7.7.0 "
-        "action=permitted severity=1 category=153 user=jsmith "
-        "src_host=10.0.0.5 url=https://example.com/x"
-    )
-    df = spark.createDataFrame([(line,)], "text string")
-    r = scl.websense_parser(df).first().asDict()
-    assert r["bsd_ok"] and r["host"] == "wsgateway"
-    assert r["appname"] == "Websense"  # injected program
-    kv = r[".websense.kv"]
-    assert kv[".websense.vendor"] == "Websense"
-    assert kv[".websense.action"] == "permitted"
-    assert kv[".websense.user"] == "jsmith"
-    assert kv[".websense.url"] == "https://example.com/x"
-    assert r["msg_ts"] is not None and r["msg_ts"].month == 3
-    assert scl.websense_app_filter(F.lit(line)) is not None
-    kept = df.filter(scl.websense_app_filter(F.col("text"))).count()
-    assert kept == 1
-
-
-def test_osquery_parser(spark):
-    df = spark.createDataFrame(
-        [('{"name":"pack_sys","hostIdentifier":"h1","columns":{"pid":"7"}}',)],
-        "text string",
-    )
-    r = scl.osquery_parser(df).first().asDict()
-    assert r["program"] == "osquery"
-    kv = r[".osquery.kv"]
-    assert kv[".osquery.name"] == "pack_sys"
-    assert kv[".osquery.columns.pid"] == "7"
-
-
 def test_junos_app_filter(spark):
     df = spark.createDataFrame(
         [
@@ -411,20 +331,6 @@ def test_junos_app_filter(spark):
         "id int, sdata map<string,string>",
     )
     kept = df.filter(scl.junos_app_filter(F.col("sdata"))).collect()
-    assert [r["id"] for r in kept] == [0]
-
-
-def test_netskope_parser_and_filter(spark):
-    line = (
-        '<134>{"_insertion_epoch_timestamp": 1716200000, '
-        '"app": "Dropbox", "user": {"name": "jd"}}'
-    )
-    df = spark.createDataFrame([(0, line), (1, "<13>plain")], "id int, text string")
-    out = {r["id"]: r[".netskope.kv"] for r in scl.netskope_parser(df).collect()}
-    assert out[0][".netskope.app"] == "Dropbox"
-    assert out[0][".netskope.user.name"] == "jd"
-    assert out[0][".netskope._insertion_epoch_timestamp"] == "1716200000"
-    kept = df.filter(scl.netskope_app_filter(F.col("text"))).collect()
     assert [r["id"] for r in kept] == [0]
 
 
@@ -821,50 +727,6 @@ def test_chat_and_logscale_bodies(spark):
     assert "timezone" not in l
 
 
-def test_network_load_balancer(spark):
-    df = spark.createDataFrame([(i,) for i in range(7)], "k int")
-    out = scl.network_load_balancer(
-        df, ["s1:514", "s2:514", "s3:514"], F.col("k")).collect()
-    for r in out:
-        assert r["lb_target"] == ["s1:514", "s2:514", "s3:514"][r["k"] % 3]
-        assert r["lb_target"] not in r["lb_failover"]
-        assert len(r["lb_failover"]) == 2
-    # the script skips failover generation below 2 targets
-    one = scl.network_load_balancer(df, ["only:514"], F.col("k"))
-    assert "lb_failover" not in one.columns
-
-
-def test_openobserve_and_opensearch_bodies(spark):
-    import json as _json
-
-    df = spark.createDataFrame(
-        [(dt.datetime(2024, 6, 15, 10, 11, 5), "h1", "sshd", "77", "m1")],
-        "ts timestamp, host string, prog string, pid string, msg string",
-    )
-    row = df.select(
-        scl.openobserve_log_body(
-            F.col("ts"), F.col("host"), F.col("prog"), F.col("pid"),
-            F.col("msg"),
-        ).alias("oo"),
-        scl.opensearch_body(
-            F.col("ts"), F.col("host"), F.col("prog"), F.col("pid"),
-            F.col("msg"), index="logs", custom_id="id9",
-        ).alias("os"),
-        scl.opensearch_body(
-            F.col("ts"), F.col("host"), F.col("prog"), F.col("pid"),
-            F.col("msg"), index="logs",
-        ).alias("os_noid"),
-    ).first()
-    oo = _json.loads(row["oo"])
-    assert oo["@timestamp"] == "2024-06-15T10:11:05Z" and oo["HOST"] == "h1"
-    head, record = row["os"].split("\n", 1)
-    assert _json.loads(head) == {"index": {"_index": "logs", "_id": "id9"}}
-    assert _json.loads(record)["MESSAGE"] == "m1"
-    # empty custom_id omitted (--omit-empty-values)
-    assert _json.loads(row["os_noid"].split("\n", 1)[0]) == {
-        "index": {"_index": "logs"}}
-
-
 # ---------------------------------------------------------------------------
 # round-5c: mariadb audit, postgresql csvlog, google-pubsub, azure-monitor
 # ---------------------------------------------------------------------------
@@ -959,19 +821,15 @@ def test_google_pubsub_and_azure_bodies(spark):
     ev = df.select(
         scl.google_pubsub_event(F.col("data"), F.col("attrs")).alias("ev")
     )
-    body = ev.agg(
-        scl.google_pubsub_publish_body(F.collect_list("ev")).alias("b")
-    ).collect()[0]["b"]
     import base64
     import json
 
-    parsed = json.loads(body)
-    msg = parsed["messages"][0]
+    rendered = ev.collect()[0]["ev"]
+    msg = json.loads(rendered)
     assert base64.b64decode(msg["data"]).decode() == "hello"
     # flat attributes, reverse-lex key order in the rendered text
     assert msg["attributes"] == {"HOST": "h1", "PROGRAM": "app"}
-    raw = json.dumps(msg)  # roundtrip keeps python order; check source
-    assert body.index('"PROGRAM"') < body.index('"HOST"')
+    assert rendered.index('"PROGRAM"') < rendered.index('"HOST"')
 
     az = ev.agg(
         scl.azure_monitor_body(F.collect_list("ev")).alias("b")
@@ -1022,85 +880,6 @@ def test_postgresql_csvlog_functional_goldens(spark):
     assert out[1][".pgsql.connection_from"] == "localhost"
     assert out[1][".pgsql.virtual_transaction_id"] == "23/74060"
     assert all(out[i]["pgsql_ok"] for i in out)
-
-
-def test_app_transform(spark):
-    """app-transform() cases mirrored from the reference functional
-    suite (tests/light app-transform): the app variable selects the
-    transformation by name+topic, transforms run in order with all
-    steps, include-transforms filters, and an unknown app passes
-    through untouched."""
-    from pyspark.sql import DataFrame
-
-    def marker(name):
-        def step(df: DataFrame) -> DataFrame:
-            return df.withColumn(name, F.lit(True))
-        return step
-
-    def t11n(app):
-        return scl.Transformation(
-            app=app, topic="default",
-            transforms=tuple(
-                scl.Transform(
-                    name=f"parser_{p}",
-                    steps=tuple(
-                        scl.TransformStep(
-                            name=f"step_{s}",
-                            parser=marker(f"{app}___parser_{p}___step_{s}"),
-                        )
-                        for s in (1, 2)
-                    ),
-                )
-                for p in (1, 2)
-            ),
-        )
-
-    transformations = [t11n("parser_only_1"), t11n("parser_only_2")]
-    df = spark.createDataFrame(
-        [(0, "parser_only_1"), (1, "parser_only_2"), (2, "non_existing_app")],
-        "id int, app string",
-    )
-    out = {r["id"]: r.asDict() for r in
-           scl.app_transform(df, transformations).collect()}
-
-    def hits(d):
-        return {k for k, v in d.items() if v is True}
-
-    assert hits(out[0]) == {
-        "parser_only_1___parser_1___step_1",
-        "parser_only_1___parser_1___step_2",
-        "parser_only_1___parser_2___step_1",
-        "parser_only_1___parser_2___step_2",
-    }
-    assert hits(out[1]) == {
-        "parser_only_2___parser_1___step_1",
-        "parser_only_2___parser_1___step_2",
-        "parser_only_2___parser_2___step_1",
-        "parser_only_2___parser_2___step_2",
-    }
-    assert hits(out[2]) == set()
-
-    only1 = {r["id"]: r.asDict() for r in scl.app_transform(
-        df, transformations, include_transforms=["parser_1"]
-    ).collect()}
-    assert hits(only1[0]) == {
-        "parser_only_1___parser_1___step_1",
-        "parser_only_1___parser_1___step_2",
-    }
-
-    # a filterx step composes with parser steps
-    fx = scl.Transformation(
-        app="fxapp", topic="default",
-        transforms=(scl.Transform(
-            name="t", steps=(
-                scl.TransformStep(name="s1", filterx='$cls = "x";'),
-                scl.TransformStep(name="s2", parser=marker("after")),
-            )
-        ),),
-    )
-    df2 = spark.createDataFrame([(0, "fxapp")], "id int, app string")
-    r = scl.app_transform(df2, [fx]).collect()[0]
-    assert r["cls"] == "x" and r["after"] is True
 
 
 def test_cisco_full_parser_reference_goldens(spark):

@@ -83,3 +83,28 @@ def test_slog_seal_distributed(spark):
     assert by_chain["c2"][0]["slog_mac"] != c1[0]["slog_mac"] or (
         by_chain["c2"][0]["slog_ct"] != c1[0]["slog_ct"]
     )
+
+
+def test_pipe_slog_chains_verify_at_sf001(spark):
+    """Replay every sealed conversation of the gated ``pipe_slog`` query
+    at sf0.01: each chain, in counter order, verifies from k_0 and
+    decrypts to that conversation's turns in turn order."""
+    import __spark_entry__ as e
+
+    sf = "/root/testdata/sf0.01"
+    sealed: dict = {}
+    for r in e.q_pipe_slog(spark, sf).collect():
+        sealed.setdefault(r["conv_id"], []).append(r)
+    texts: dict = {}
+    for r in e._transcripts(spark, sf).select("conv_id", "turn_idx", "text").collect():
+        texts.setdefault(r["conv_id"], []).append((r["turn_idx"], r["text"]))
+    assert sealed and set(sealed) == set(texts)
+    for conv, rows in sealed.items():
+        entries = [
+            {"ctr": r["slog_ctr"], "ct": r["slog_ct"], "mac": r["slog_mac"],
+             "agg": r["slog_agg"]}
+            for r in sorted(rows, key=lambda r: r["slog_ctr"])
+        ]
+        ok, msgs = verify_chain(K0, entries)
+        assert ok, conv
+        assert msgs == [t for _, t in sorted(texts[conv])], conv

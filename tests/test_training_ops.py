@@ -1,5 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup, similarity, text analysis."""
 
 from __future__ import annotations
 
@@ -8,7 +7,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators import dedup, multimodal, similarity, textstats
+from axosyslog_spark.operators import dedup, similarity, textstats
 
 DOCS = [
     (0, "The quick brown fox jumps over the lazy dog near the river bank today"),
@@ -100,33 +99,6 @@ def test_embedding_near_dups(spark, vectors):
     assert (0, 4) in pairs
     assert (0, 1) in pairs
     assert not any(3 in p for p in pairs)
-
-
-def test_multimodal_roundtrip(spark, docs):
-    media = multimodal.synthesize_media(docs, "doc_id", "text")
-    assert [(f.name, f.dataType) for f in media.schema.fields] == [
-        (f.name, f.dataType) for f in multimodal.MEDIA_SCHEMA.fields
-    ]
-    decoded = multimodal.decode_media(media)
-    rows = {r.media_id: r for r in decoded.collect()}
-    assert set(rows) == {0, 1, 2, 3, 4}
-    assert rows[0].n_bytes == len(DOCS[0][1])
-    assert rows[0].width >= 64 and rows[0].height >= 64
-    # images have no duration; only videos have multiple frames
-    for r in rows.values():
-        if r.kind == "image":
-            assert r.duration_ms == 0 and r.n_frames == 1
-    # deterministic: same payload -> same feature hash
-    m2 = {r.media_id: r for r in multimodal.decode_media(media).collect()}
-    assert all(m2[k].feature_hash == rows[k].feature_hash for k in rows)
-
-
-def test_resize_and_frames(spark, docs):
-    media = multimodal.synthesize_media(docs, "doc_id", "text")
-    resized = multimodal.resize_images(media, max_side=100).collect()
-    assert resized and all(max(r.width, r.height) <= 100 for r in resized)
-    frames = multimodal.sample_frames(media, every_n=2).collect()
-    assert frames and all(r.frame_idx % 2 == 0 for r in frames)
 
 
 def test_embedding_near_dups_lsh_equals_exact_fixture(spark):
