@@ -69,6 +69,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.dateparse import parse_date, strftime_to_spark
+
 
 class FilterXSyntaxError(ValueError):
     pass
@@ -1175,49 +1177,6 @@ def _str_slice(e: Column, start: Column | None, end: Column | None) -> Column:
     return F.when(lo <= hi, F.substring(s, lo + 1, hi - lo))
 
 
-# strptime %-directive -> Spark datetime pattern (the subset the
-# reference's strptime()/strftime() traffic actually uses;
-# lib/filterx/func-strptime.c delegates to wall-clock strptime)
-_STRPTIME_MAP = {
-    "%Y": "yyyy", "%y": "yy", "%m": "MM", "%d": "dd", "%e": "d",
-    "%H": "HH", "%I": "hh", "%M": "mm", "%S": "ss", "%f": "SSSSSS",
-    "%b": "MMM", "%B": "MMMM", "%a": "EEE", "%A": "EEEE",
-    "%j": "DDD", "%p": "a", "%z": "XX", "%Z": "zzz", "%%": "%",
-}
-
-
-def strptime_to_spark(fmt: str) -> str:
-    """Translate a C-strptime %-format to a Spark datetime pattern;
-    literal letters are quoted (Spark treats bare letters as pattern
-    chars)."""
-    out: list[str] = []
-    lit = ""
-
-    def flush():
-        nonlocal lit
-        if lit:
-            if re.search(r"[A-Za-z]", lit):
-                out.append("'" + lit.replace("'", "''") + "'")
-            else:
-                out.append(lit)
-            lit = ""
-
-    i = 0
-    while i < len(fmt):
-        if fmt[i] == "%" and i + 1 < len(fmt):
-            d = fmt[i : i + 2]
-            if d not in _STRPTIME_MAP:
-                raise FilterXSyntaxError(f"unsupported strptime directive {d!r}")
-            flush()
-            out.append(_STRPTIME_MAP[d])
-            i += 2
-            continue
-        lit += fmt[i]
-        i += 1
-    flush()
-    return "".join(out)
-
-
 def _unquote(s: str) -> str:
     body = s[1:-1]
     return re.sub(r"\\(.)", lambda m: {"n": "\n", "t": "\t", "r": "\r"}.get(m.group(1), m.group(1)), body)
@@ -1456,14 +1415,16 @@ def _FUNCS_DISPATCH(
         return F.make_valid_utf8(one)
     # --- time family (func-strptime.c / filterx-globals.c strftime) ---
     if fn == "strptime":
-        return F.to_timestamp(one, strptime_to_spark(_need_raw(fn, raws, 1)))
+        return parse_date(one, (strftime_to_spark(_need_raw(fn, raws, 1)),))
     if fn == "strftime":
         # reference arg order: strftime(format, datetime)
-        return F.date_format(a[1], strptime_to_spark(_need_raw(fn, raws, 0)))
+        return F.date_format(a[1], strftime_to_spark(_need_raw(fn, raws, 0)))
+    # try_cast: a malformed datetime string is NULL, not a job abort
+    # under Spark 4's ANSI casts
     if fn == "datetime":
-        return one.cast("timestamp")
+        return one.try_cast("timestamp")
     if fn in ("isodate", "format_isodate"):
-        return F.date_format(one.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX")
+        return F.date_format(one.try_cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX")
     # --- dict/json helpers ---
     if fn == "format_json":
         return F.to_json(one)

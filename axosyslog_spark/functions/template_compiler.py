@@ -35,6 +35,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from axosyslog_spark.functions import templates as tf
+from axosyslog_spark.operators.dateparse import strftime_to_spark
 from axosyslog_spark.operators.filters import typed_cmp
 
 
@@ -594,44 +595,6 @@ def parse_condition(cond: str, ctx: TemplateContext) -> Column:
     raise TemplateError(f"unsupported $(if) condition: {cond!r}")
 
 
-# strftime -> Java SimpleDateFormat-ish conversion for $(format-date)
-_STRFTIME_MAP = {
-    "Y": "yyyy", "y": "yy", "m": "MM", "d": "dd", "e": "d", "H": "HH",
-    "I": "hh", "M": "mm", "S": "ss", "b": "MMM", "B": "MMMM", "a": "EEE",
-    "A": "EEEE", "j": "DDD", "p": "a", "z": "XX", "Z": "zz",
-    "F": "yyyy-MM-dd", "T": "HH:mm:ss", "%": "%",
-}
-
-
-def strftime_to_java(fmt: str) -> str:
-    out: list[str] = []
-    lit: list[str] = []
-
-    def flush_lit() -> None:
-        if lit:
-            chunk = "".join(lit)
-            if re.search(r"[A-Za-z']", chunk):
-                out.append("'" + chunk.replace("'", "''") + "'")
-            else:
-                out.append(chunk)
-            lit.clear()
-
-    i = 0
-    while i < len(fmt):
-        c = fmt[i]
-        if c == "%" and i + 1 < len(fmt):
-            key = fmt[i + 1]
-            if key in _STRFTIME_MAP:
-                flush_lit()
-                out.append(_STRFTIME_MAP[key])
-                i += 2
-                continue
-        lit.append(c)
-        i += 1
-    flush_lit()
-    return "".join(out)
-
-
 def _apply_context_func(
     name: str, raw_args: list[str], ctx: TemplateContext
 ) -> Column:
@@ -1126,7 +1089,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         )
         if ts is None:
             raise TemplateError("$(format-date) needs a stamp in the context")
-        return F.date_format(ts, strftime_to_java(args[0].lit))
+        return F.date_format(ts, strftime_to_spark(args[0].lit))
     if name == "graphite-output":
         # $(graphite-output k=tmpl ...) — same explicit-pairs calling
         # convention as $(format-welf); stamp provides the unixtime

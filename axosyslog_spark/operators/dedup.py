@@ -241,13 +241,25 @@ def minhash_near_dups(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Full MinHash pipeline: LSH candidates verified with exact
-    Jaccard (candidate set only — never all pairs)."""
+    Jaccard (candidate set only — never all pairs). Each candidate
+    pair joins its two shingle sets by id and intersects them; shingle
+    sets are distinct, so the intersection size is the shared count
+    jaccard_pairs would compute."""
     cand = minhash_lsh_candidates(df, id_col, text_col, k, bands, n)
-    exact = jaccard_pairs(df, id_col, text_col, n, threshold=0.0)
+    sh = shingle_table(df, id_col, text_col, n)
+    side = lambda i: sh.select(  # noqa: E731
+        F.col("id").alias(f"id{i}"), F.col("__sh").alias(f"sh{i}")
+    )
+    pairs = cand.join(side(1), "id1").join(side(2), "id2")
+    inter = F.size(F.array_intersect("sh1", "sh2")).cast("bigint")
+    # same integer-exact scaling as jaccard_pairs
+    jac = F.floor(
+        (inter * 1_000_000).cast("double")
+        / (F.size("sh1") + F.size("sh2") - inter)
+    ).cast("bigint")
     return (
-        cand.join(exact, ["id1", "id2"])
+        pairs.select("id1", "id2", jac.alias("jaccard_e6"))
         .filter(F.col("jaccard_e6") >= int(threshold * 1_000_000))
-        .select("id1", "id2", "jaccard_e6")
     )
 
 

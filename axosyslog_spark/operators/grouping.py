@@ -66,7 +66,6 @@ def salted_ordered_agg(
     sort_key: str = "turn_idx",
     value: str = "role",
     fragment_rows: int = 1024,
-    having: Column | None = None,
 ) -> DataFrame:
     """Skew-aware two-phase variant of grouped_ordered_agg.
 
@@ -98,7 +97,7 @@ def salted_ordered_agg(
             ).alias("pvals"),
         )
     )
-    out = partial.groupBy(key).agg(
+    return partial.groupBy(key).agg(
         F.sum("pc").alias("n_turns"),
         F.min("pmin_ts").alias("first_ts"),
         F.max("pmax_ts").alias("last_ts"),
@@ -110,9 +109,6 @@ def salted_ordered_agg(
             ",",
         ).alias("agg_values"),
     )
-    if having is not None:
-        out = out.filter(having)
-    return out
 
 
 def correlate(
@@ -295,12 +291,7 @@ _CONTEXT_SCOPE_COLS = {
 }
 
 
-def correlate_pdb(
-    df: DataFrame,
-    rules,
-    ts_col: str = "ts",
-    values_ctx=None,
-) -> DataFrame:
+def correlate_pdb(df: DataFrame, rules) -> DataFrame:
     """PatternDB correlation contexts from rule attributes
     (modules/correlation/pdb-context.c, synthetic-context.c): rules
     carrying ``context-id`` group their matched rows by
@@ -320,6 +311,7 @@ def correlate_pdb(
         compile_template,
     )
 
+    ctx = TemplateContext(field_fallback=True)
     out = None
     for rule in rules:
         if not rule.context_id:
@@ -327,7 +319,6 @@ def correlate_pdb(
         timeout_actions = [a for a in rule.actions if a.trigger == "timeout"]
         if not timeout_actions:
             continue
-        ctx = values_ctx or TemplateContext(field_fallback=True)
         matched = df.filter(F.col("rule_id") == rule.rule_id)
         key = compile_template(rule.context_id, ctx)
         scope_cols = [
@@ -341,22 +332,22 @@ def correlate_pdb(
             ),
         )
         gap_min = max(rule.context_timeout, 1) / 60.0
-        sess = sessionize(keyed, key="__ctx_key", ts_col=ts_col, gap_minutes=gap_min)
+        sess = sessionize(keyed, key="__ctx_key", gap_minutes=gap_min)
         # the context's message list, time-ordered (ts leads the struct
         # so array_sort orders by arrival like the reference's context
         # append) — feeds $(context-values)/$(context-lookup)/$(grep)
         # in action templates as one higher-order expression, no
         # explode/second shuffle
-        entry_fields = [ts_col] + [
+        entry_fields = ["ts"] + [
             c for c in keyed.columns
-            if c not in (ts_col, "__ctx_key")
+            if c not in ("ts", "__ctx_key")
             and not c.startswith("__")
             and dict(keyed.dtypes)[c] in ("string", "int", "bigint")
         ]
         agg = sess.groupBy("__ctx_key", "session_id").agg(
             F.count(F.lit(1)).alias("n_msgs"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
             F.array_sort(
                 F.collect_list(F.struct(*entry_fields))
             ).alias("__ctx_entries"),

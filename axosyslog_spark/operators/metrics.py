@@ -14,14 +14,10 @@ from pyspark.sql import functions as F
 
 
 def metrics_probe(
-    df: DataFrame,
-    labels: list[str],
-    increment: Column | None = None,
-    counter_name: str = "n",
+    df: DataFrame, labels: list[str], counter_name: str = "n"
 ) -> DataFrame:
-    """Counter keyed by label columns; increment defaults to 1/row."""
-    inc = increment if increment is not None else F.lit(1)
-    return df.groupBy(*labels).agg(F.sum(inc).alias(counter_name))
+    """Counter keyed by label columns, incremented by 1 per row."""
+    return df.groupBy(*labels).agg(F.sum(F.lit(1)).alias(counter_name))
 
 
 def sink_counters(sinks: list[str]) -> list[Column]:

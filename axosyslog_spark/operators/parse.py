@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import entries_to_map
 
 # RFC5424-ish: <PRI>VERSION SP TIMESTAMP SP HOSTNAME SP APP-NAME SP
@@ -77,8 +78,6 @@ def parse_header(df: DataFrame, text_col: str = "text") -> DataFrame:
     toks = F.col("__toks")
 
     def g(i: int) -> Column:
-        if i == 2:  # VERSION digit after ">"
-            return F.regexp_extract(F.element_at(toks, 1), ">([0-9])$", 1)
         # groups 3..9 == tokens 2..8 (ts, host, app, procid, msgid, sd, msg)
         return F.element_at(toks, i - 1)
 
@@ -149,11 +148,11 @@ def parse_kv(df: DataFrame, src_col: str = "body") -> DataFrame:
             "status": F.nullif(F.regexp_extract(src, r"status=([a-z]+)", 1), F.lit("")),
             "latency_ms": F.nullif(
                 F.regexp_extract(src, r"latency_ms=([0-9]+)", 1), F.lit("")
-            ).cast("bigint"),
+            ).try_cast("bigint"),
             "path": F.nullif(F.regexp_extract(src, r"path=([^ ]+)", 1), F.lit("")),
             "retry": F.nullif(
                 F.regexp_extract(src, r"retry=([0-9]+)", 1), F.lit("")
-            ).cast("int"),
+            ).try_cast("int"),
         }
     )
 
@@ -165,11 +164,11 @@ def parse_json_fields(df: DataFrame, src_col: str = "text") -> DataFrame:
     is_json = F.col("kind") == "json"
     return df.withColumns(
         {
-            "json_k": F.when(is_json, F.get_json_object(src, "$.k").cast("bigint")),
+            "json_k": F.when(is_json, F.get_json_object(src, "$.k").try_cast("bigint")),
             "json_event": F.when(is_json, F.get_json_object(src, "$.event")),
             "latency_ms": F.coalesce(
                 F.col("latency_ms"),
-                F.when(is_json, F.get_json_object(src, "$.latency_ms").cast("bigint")),
+                F.when(is_json, F.get_json_object(src, "$.latency_ms").try_cast("bigint")),
             ),
         }
     )
@@ -225,9 +224,7 @@ def parse_rfc3164(
     if year is None:
         # probe the month with a leap year so Feb 29 survives, then
         # apply the year-boundary rule against the receive time
-        probe = F.try_to_timestamp(
-            F.concat(F.lit("2000 "), stamp), F.lit("yyyy MMM d HH:mm:ss")
-        )
+        probe = parse_date(F.concat(F.lit("2000 "), stamp), ("yyyy MMM d HH:mm:ss",))
         mon, rmon = F.month(probe), F.month(F.col(recvd_col))
         ryear = F.year(F.col(recvd_col))
         year_col = (
@@ -292,9 +289,8 @@ def parse_rfc3164(
             "facility": ((pri - pri % 8) / 8).cast("int"),
             "msg_ts": F.when(
                 m,
-                F.try_to_timestamp(
-                    F.concat(year_col, F.lit(" "), stamp),
-                    F.lit("yyyy MMM d HH:mm:ss"),
+                parse_date(
+                    F.concat(year_col, F.lit(" "), stamp), ("yyyy MMM d HH:mm:ss",)
                 ),
             ),
             "host": F.when(m, g(3)),

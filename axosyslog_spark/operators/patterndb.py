@@ -758,8 +758,6 @@ class PatternDB:
     def apply_match_actions(
         self,
         df: DataFrame,
-        values_ctx=None,
-        ts_col: str = "ts",
         order_col: str = "turn_idx",
     ) -> DataFrame:
         """trigger='match' <actions>: every matched row whose rule
@@ -782,7 +780,7 @@ class PatternDB:
         credits across arrivals, which is inherently sequential; the
         event-time bucket admits the same steady-state N per T and is
         deterministic under replay. Ordered by ``order_col`` within a
-        bucket (falls back to ``ts_col``, then arbitrary). Unrated
+        bucket (falls back to ``ts``, then arbitrary). Unrated
         actions are untouched (rate 0 = unlimited, like the
         reference's early return).
 
@@ -811,7 +809,7 @@ class PatternDB:
         ]
         if not match_actions:
             return base
-        ctx = values_ctx or TemplateContext(
+        ctx = TemplateContext(
             columns={f: F.col(f) for f in self.field_names}, field_fallback=True
         )
         # all value names any action writes; every struct carries all of
@@ -865,12 +863,12 @@ class PatternDB:
                 "synthetic": F.lit(True),
             }
         ).drop("__pdb_act")
-        synth = self._rate_limit_actions(synth, match_actions, ts_col, order_col)
+        synth = self._rate_limit_actions(synth, match_actions, order_col)
         return base.unionByName(synth.drop("__pdb_ord"), allowMissingColumns=True)
 
     @staticmethod
     def _rate_limit_actions(
-        synth: DataFrame, match_actions, ts_col: str, order_col: str
+        synth: DataFrame, match_actions, order_col: str
     ) -> DataFrame:
         """First-N-per-(correlation key, event-time bucket) filter over
         the exploded synthetic rows — see apply_match_actions. One
@@ -903,17 +901,15 @@ class PatternDB:
             scope_key = F.when(
                 ordn == i, F.concat_ws("\x1f", *cols) if cols else F.lit("")
             ).otherwise(scope_key)
-        if ts_col in synth.columns:
+        if "ts" in synth.columns:
             quantum_v = F.element_at(quanta, ordn + 1)
-            bucket = F.floor(
-                F.col(ts_col).cast("timestamp").cast("double") / quantum_v
-            )
+            bucket = F.floor(F.col("ts").cast("timestamp").cast("double") / quantum_v)
         else:
             bucket = F.lit(0)
         order = (
             F.col(order_col)
             if order_col in synth.columns
-            else (F.col(ts_col) if ts_col in synth.columns else F.lit(1))
+            else (F.col("ts") if "ts" in synth.columns else F.lit(1))
         )
         w = Window.partitionBy(ordn, scope_key, bucket).orderBy(order)
         return (
@@ -927,7 +923,6 @@ class PatternDB:
         df: DataFrame,
         text_col: str = "text",
         prefix: str = "",
-        values_ctx=None,
         with_class: bool = False,
         with_tags: bool = False,
         program_col: str | None = None,
@@ -1025,7 +1020,10 @@ class PatternDB:
             expr = F.when(gi_col.isNotNull(), F.element_at(groups, gi_col))
             cast = self._casts.get(name)
             if cast:
-                expr = F.nullif(expr, F.lit("")).cast(cast)
+                # try_cast: a value the pattern accepts but the type
+                # cannot hold (an @NUMBER@ past bigint) is NULL, not a
+                # job abort under ANSI casts
+                expr = F.nullif(expr, F.lit("")).try_cast(cast)
             field_cols[f"{prefix}{name}"] = expr
         df = df.withColumns(field_cols)
 
@@ -1035,14 +1033,8 @@ class PatternDB:
                 compile_template,
             )
 
-            ctx = values_ctx or TemplateContext()
             ctx = TemplateContext(
-                columns={
-                    **{f: F.col(f"{prefix}{f}") for f in self.field_names},
-                    **ctx.columns,
-                },
-                stamp=ctx.stamp, recvd=ctx.recvd, now=ctx.now,
-                matches=ctx.matches, extras=ctx.extras,
+                columns={f: F.col(f"{prefix}{f}") for f in self.field_names}
             )
             value_cols: dict[str, Column] = {}
             for name in self.value_names:

@@ -59,6 +59,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.dateparse import parse_date
+
 # scl/apache/apache.conf: vhost filter `^[A-Za-z0-9\-\._]+:[0-9]+ `
 _VHOST = r"[A-Za-z0-9\-\._]+:[0-9]+"
 # combined/common core:  %h %l %u [%t] "%r" %>s %b ["%{Referer}" "%{UA}"]
@@ -101,14 +103,10 @@ def apache_accesslog_parser(
             f"{prefix}clientip": g(2),
             f"{prefix}ident": g(3),
             f"{prefix}auth": g(4),
-            # try_to_timestamp: the shape regex accepts any [...]
-            # content, and under Spark 4's ANSI default a malformed
-            # date inside the brackets must yield NULL (the block's
-            # drop-invalid semantics), not abort the job — same
-            # contract as the cisco/fortigate/panos siblings.
-            f"{prefix}timestamp": F.try_to_timestamp(
-                g(5), F.lit("dd/MMM/yyyy:HH:mm:ss XX")
-            ),
+            # the shape regex accepts any [...] content; a malformed
+            # date inside the brackets is NULL (the block's
+            # drop-invalid semantics), not a job abort
+            f"{prefix}timestamp": parse_date(g(5), ("dd/MMM/yyyy:HH:mm:ss XX",)),
             f"{prefix}rawrequest": raw,
             f"{prefix}response": g(7).try_cast("int"),
             f"{prefix}bytes": F.when(g(8) != "-", g(8)).try_cast("bigint"),
@@ -232,9 +230,7 @@ def cisco_parser(
     )
     # normalize double-space day padding ('Jan  5' -> 'Jan 5')
     ts_norm = F.regexp_replace(ts_str, r"\s+", " ")
-    ts = F.coalesce(
-        *[F.try_to_timestamp(ts_norm, F.lit(f)) for f in _CISCO_TS_FORMATS]
-    )
+    ts = parse_date(ts_norm, _CISCO_TS_FORMATS)
     trip_ok = body.rlike(_CISCO_TRIPLET)
     return df.withColumns(
         {
@@ -348,9 +344,7 @@ def cisco_full_parser(
     ts_norm = F.regexp_replace(
         F.regexp_replace(ts_str, r"\.(\d{3})$", ""), r"\s+", " "
     )
-    ts = F.coalesce(
-        *[F.try_to_timestamp(ts_norm, F.lit(f)) for f in _CISCO_TS_FORMATS]
-    )
+    ts = parse_date(ts_norm, _CISCO_TS_FORMATS)
     trip_ok = ok & msg.rlike(_CISCO_TRIPLET)
     return df.withColumns(
         {
@@ -415,9 +409,8 @@ def fortigate_parser(
     out = df.withColumns(
         {
             f"{prefix}kv": kv,
-            f"{prefix}ts": F.try_to_timestamp(
-                F.concat_ws(" ", get("date"), get("time")),
-                F.lit("yyyy-MM-dd HH:mm:ss"),
+            f"{prefix}ts": parse_date(
+                F.concat_ws(" ", get("date"), get("time")), ("yyyy-MM-dd HH:mm:ss",)
             ),
             "host": get("devname"),
         }
@@ -519,8 +512,8 @@ def panos_parser(
             f"{prefix}type": typ,
             f"{prefix}subtype": hdr["subtype"],
             f"{prefix}serial": hdr["serial"],
-            f"{prefix}time_generated": F.try_to_timestamp(
-                hdr["time_generated"], F.lit("yyyy/MM/dd HH:mm:ss")
+            f"{prefix}time_generated": parse_date(
+                hdr["time_generated"], ("yyyy/MM/dd HH:mm:ss",)
             ),
             f"{prefix}fields": F.when(ok, fields),
         }
@@ -627,14 +620,11 @@ def checkpoint_parser(
     is_syslog = src.startswith("<")
     toks = F.split(src, " ")
     t = lambda i: F.try_element_at(toks, F.lit(i))  # noqa: E731
-    iso = F.coalesce(
-        F.try_to_timestamp(t(2), F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(t(2), F.lit("yyyy-MM-dd'T'HH:mm:ssXX")),
-        F.try_to_timestamp(t(2), F.lit("yyyy-MM-dd'T'HH:mm:ss")),
+    iso = parse_date(
+        t(2),
+        ("yyyy-MM-dd'T'HH:mm:ssXXX", "yyyy-MM-dd'T'HH:mm:ssXX", "yyyy-MM-dd'T'HH:mm:ss"),
     )
-    two_part = F.try_to_timestamp(
-        F.concat_ws(" ", t(2), t(3)), F.lit("yyyy-MM-dd HH:mm:ss")
-    )
+    two_part = parse_date(F.concat_ws(" ", t(2), t(3)), ("yyyy-MM-dd HH:mm:ss",))
     seven = iso.isNotNull()
     nn = lambda c: F.nullif(c, F.lit("-"))  # noqa: E731 (csv null('-'))
     out = df.withColumns(
@@ -733,17 +723,7 @@ def pihole_ftl_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
         {
             "pihole_ok": m,
             # %f is 1-6 fraction digits; FTL writes milliseconds
-            "msg_ts": F.when(
-                m,
-                F.coalesce(
-                    F.try_to_timestamp(
-                        g(1), F.lit("yyyy-MM-dd HH:mm:ss.SSS")
-                    ),
-                    F.try_to_timestamp(
-                        g(1), F.lit("yyyy-MM-dd HH:mm:ss.SSSSSS")
-                    ),
-                ),
-            ),
+            "msg_ts": F.when(m, parse_date(g(1), ("yyyy-MM-dd HH:mm:ss.SSSSSS",))),
             "program": F.lit("Pi-hole"),
             "severity": new_sev,
             "pri": (F.col("facility") * 8 + new_sev).cast("int"),
@@ -1022,17 +1002,8 @@ def arr_parser(
     return df.withColumns(
         {
             "arr_ok": m,
-            "msg_ts": F.when(
-                m,
-                F.coalesce(
-                    *[
-                        F.try_to_timestamp(
-                            g(1), F.lit(f"yyyy-MM-dd HH:mm:ss.{frac}")
-                        )
-                        for frac in ("S", "SS", "SSS", "SSSSSS", "SSSSSSS")
-                    ]
-                ),
-            ),
+            # .NET writes 1-7 fraction digits (Spark keeps 6)
+            "msg_ts": F.when(m, parse_date(g(1), ("yyyy-MM-dd HH:mm:ss.SSSSSSS",))),
             "program": F.lit(program),
             "severity": new_sev,
             "pri": (F.col("facility") * 8 + new_sev).cast("int"),
@@ -1075,17 +1046,13 @@ def jellyfin_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
     return df.withColumns(
         {
             "jellyfin_ok": m,
+            # 1-6 fraction digits with a '+02:00' offset; the '+0200'
+            # offset form is accepted with millis only
             "msg_ts": F.when(
                 m,
-                F.coalesce(
-                    *[
-                        F.try_to_timestamp(g(1), F.lit(fmt))
-                        for fmt in (
-                            "yyyy-MM-dd HH:mm:ss.SSS XXX",
-                            "yyyy-MM-dd HH:mm:ss.SSS XX",
-                            "yyyy-MM-dd HH:mm:ss.SSSSSS XXX",
-                        )
-                    ]
+                parse_date(
+                    g(1),
+                    ("yyyy-MM-dd HH:mm:ss.SSSSSS XXX", "yyyy-MM-dd HH:mm:ss.SSS XX"),
                 ),
             ),
             "program": F.lit("Jellyfin"),
@@ -1131,9 +1098,7 @@ def qbittorrent_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
     return df.withColumns(
         {
             "qbittorrent_ok": m,
-            "msg_ts": F.when(
-                m, F.try_to_timestamp(g(2), F.lit("yyyy-MM-dd'T'HH:mm:ss"))
-            ),
+            "msg_ts": F.when(m, parse_date(g(2), ("yyyy-MM-dd'T'HH:mm:ss",))),
             "program": F.lit("qBittorrent"),
             "severity": new_sev,
             "pri": (F.col("facility") * 8 + new_sev).cast("int"),
@@ -1367,19 +1332,11 @@ def darwin_oslog_stream_parser(
         F.lit(" "),
         F.coalesce(fld("eventMessage"), F.lit("")),
     )
-    ts_raw = fld("timestamp")
     return df.withColumns(
         {
             "darwin_ok": mp.isNotNull(),
-            "msg_ts": F.coalesce(
-                *[
-                    F.try_to_timestamp(ts_raw, F.lit(fmt))
-                    for fmt in (
-                        "yyyy-MM-dd HH:mm:ss.SSSSSSXX",
-                        "yyyy-MM-dd HH:mm:ss.SSSXX",
-                        "yyyy-MM-dd HH:mm:ssXX",
-                    )
-                ]
+            "msg_ts": parse_date(
+                fld("timestamp"), ("yyyy-MM-dd HH:mm:ss[.SSSSSS]XX",)
             ),
             "program": F.when(mp.isNotNull(), program),
             "procid": F.when(mp.isNotNull(), fld("processID")),
@@ -1691,9 +1648,9 @@ def postgresql_csvlog_parser(
     df = df.withColumn(
         "pgsql_ok", F.col(f"`{prefix}message`").isNotNull()
     )
-    ts = F.to_timestamp(
+    ts = parse_date(
         F.substring(F.col(f"`{prefix}timestamp`"), 1, 23),
-        "yyyy-MM-dd HH:mm:ss.SSS",
+        ("yyyy-MM-dd HH:mm:ss.SSS",),
     )
     df = (
         df.withColumn("ts", ts)

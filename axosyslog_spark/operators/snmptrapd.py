@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import entries_to_map
 
 # varbind key characters (varbindlist-scanner.c _is_valid_key_character)
@@ -176,9 +177,7 @@ def snmptrapd_parser(
     out = df.withColumns(
         {
             "snmp_ok": ok,
-            "snmp_ts": F.when(
-                ok, F.try_to_timestamp(g(1), F.lit("yyyy-MM-dd HH:mm:ss"))
-            ),
+            "snmp_ts": F.when(ok, parse_date(g(1), ("yyyy-MM-dd HH:mm:ss",))),
             "program": F.when(ok, F.lit("snmptrapd")),
             out_col: F.when(ok, entries_to_map(prefixed)),
         }

@@ -99,7 +99,6 @@ def write_sinks(
     routed: DataFrame,
     target: str,
     iceberg: bool = False,
-    mode: str = "overwrite",
     n_partitions: int | None = None,
 ) -> None:
     """Per-sink fan-out write in ONE job: the routed frame is clustered
@@ -115,15 +114,11 @@ def write_sinks(
     """
     ordered = partition_and_sort(routed, n_partitions)
     if iceberg:
-        writer = ordered.writeTo(target).using("iceberg").partitionedBy(
+        ordered.writeTo(target).using("iceberg").partitionedBy(
             F.col("sink")
-        )
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
+        ).createOrReplace()
     else:
-        ordered.write.mode(mode).partitionBy("sink").parquet(target)
+        ordered.write.mode("overwrite").partitionBy("sink").parquet(target)
 
 
 def routed_output(routed: DataFrame) -> DataFrame:

@@ -33,12 +33,13 @@ def build_session(local_cores: int | None):
         from axosyslog_spark.session import get_spark
 
         return get_spark("axosyslog_spark.runner", cores=local_cores)
-    # under spark-submit: respect the cluster's master/conf, add ours
+    from axosyslog_spark.session import ENGINE_CONF
+
+    # under spark-submit: the cluster's master and sizing, the engine's
+    # settings
     spark = (
         SparkSession.builder.appName("axosyslog_spark.runner")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local mode is a correctness/bench sandbox; the configs below are the
-ones that also matter on a real multi-executor cluster:
+Local mode is a correctness/bench sandbox; ENGINE_CONF holds the
+settings that also matter on a real multi-executor cluster (the
+spark-submit runner applies the same table):
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 - shuffle partitions sized to cores locally; on a cluster this should
@@ -80,13 +81,49 @@ def driver_java_options(driver_mem: str, available: int | None) -> str:
     return f"-XX:-DontCompileHugeMethods -Xms{driver_mem} -XX:+AlwaysPreTouch"
 
 
+# Engine settings: applied by get_spark and by the spark-submit runner
+# (runner.build_session), so a cluster job plans and runs like a local
+# one. Local sizing (master, cores, shuffle partitions, driver heap and
+# flags, UI) is get_spark's alone.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+    # -XX:-DontCompileHugeMethods — wide generated spans (e.g. a
+    # 50-rule PatternDB dispatch tree: ~49 KB of bytecode in one
+    # whole-stage method) exceed HotSpot's DontCompileHugeMethods
+    # ceiling (8000 bytecodes) and silently run interpreted, a
+    # measured ~30x per-expression cost. get_spark sets it on the
+    # driver too: local mode only reads the driver flag, but a cluster
+    # deployment without the executor side would silently revert to
+    # the interpreted path. Executors on a real cluster size their own
+    # heap; AlwaysPreTouch alone still batches their expansion faults
+    # (see driver_java_options).
+    "spark.executor.extraJavaOptions": "-XX:-DontCompileHugeMethods -XX:+AlwaysPreTouch",
+    # PySpark's call-site capture (_with_origin) wraps every F.* /
+    # Column call with ~5 py4j calls and a Python stack walk; one
+    # plan build makes hundreds to thousands of such calls. Off,
+    # measured in one process with passes interleaved (150k turns,
+    # local[4]): route_fanout pass 1.68 s -> 1.48 s, patterndb_50
+    # pass 1.95 s -> 1.39 s (medians of 8). The cost: analysis
+    # errors lose the Python file:line "DataFrame" context. PySpark
+    # reads this once per process, from the first active session,
+    # so it has to be set at build time.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
 def get_spark(
     app_name: str = "axosyslog_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a local SparkSession with ENGINE_CONF.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores; the
     driver heap to $SPARK_DRIVER_MEM or default_driver_mem().
@@ -100,54 +137,21 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.driver.memory", driver_mem)
-        # Two JVM flags, both measured on this engine's hot paths:
-        #
-        # -XX:-DontCompileHugeMethods — wide generated spans (e.g. a
-        # 50-rule PatternDB dispatch tree: ~49 KB of bytecode in one
-        # whole-stage method) exceed HotSpot's DontCompileHugeMethods
-        # ceiling (8000 bytecodes) and silently run interpreted, a
-        # measured ~30x per-expression cost. Set on BOTH driver and
-        # executor unconditionally: local mode only reads the driver
-        # flag, but a cluster deployment that forgot the executor side
-        # would silently revert to the interpreted path.
-        #
         # -Xms=driver-memory + -XX:+AlwaysPreTouch, when the heap fits
-        # (driver_java_options) — the launcher sets
-        # only -Xmx, so the heap grows lazily and every expansion
-        # page-faults on first touch; inside a memory-overcommitted VM
-        # those faults are kernel-dominated and bursty (measured on
-        # the 5M-row pipeline at local[8]: 14.4s best with a growing
-        # heap vs 6.5s steady with a pre-touched fixed heap — 2.2x,
-        # with /proc/stat showing 2x more system than user time in the
-        # growing-heap runs). Pre-touching moves the cost to session
-        # startup, off every measured path. Executors on a real
-        # cluster size their own heap; AlwaysPreTouch alone still
-        # batches their expansion faults.
+        # (driver_java_options) — the launcher sets only -Xmx, so the
+        # heap grows lazily and every expansion page-faults on first
+        # touch; inside a memory-overcommitted VM those faults are
+        # kernel-dominated and bursty (measured on the 5M-row pipeline
+        # at local[8]: 14.4s best with a growing heap vs 6.5s steady
+        # with a pre-touched fixed heap — 2.2x, with /proc/stat
+        # showing 2x more system than user time in the growing-heap
+        # runs). Pre-touching moves the cost to session startup, off
+        # every measured path.
         .config("spark.driver.extraJavaOptions", driver_opts)
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-XX:-DontCompileHugeMethods -XX:+AlwaysPreTouch",
-        )
-        # PySpark's call-site capture (_with_origin) wraps every F.* /
-        # Column call with ~5 py4j calls and a Python stack walk; one
-        # plan build makes hundreds to thousands of such calls. Off,
-        # measured in one process with passes interleaved (150k turns,
-        # local[4]): route_fanout pass 1.68 s -> 1.48 s, patterndb_50
-        # pass 1.95 s -> 1.39 s (medians of 8). The cost: analysis
-        # errors lose the Python file:line "DataFrame" context. PySpark
-        # reads this once per process, from the first active session,
-        # so it has to be set here, at build time.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from axosyslog_spark.operators.csvparse import CsvColumn, CsvSpec, csv_parse
-from axosyslog_spark.operators.dateparse import date_parser
+from axosyslog_spark.operators.dateparse import date_parser, strftime_to_spark
 
 
 def _df(spark, lines):
@@ -69,6 +71,24 @@ def test_date_parser_timezone(spark):
     df = _df(spark, ["2024-06-01T12:00:00"])
     out = date_parser(df, "text", timezone="Europe/Budapest").collect()[0]
     assert out.parsed_ts == dt.datetime(2024, 6, 1, 10, 0, 0)  # CEST = +2
+
+
+def test_strftime_to_spark():
+    assert strftime_to_spark("%Y-%m-%dT%H:%M:%S") == "yyyy-MM-dd'T'HH:mm:ss"
+    assert strftime_to_spark("%b %d %H:%M") == "MMM dd HH:mm"
+    assert strftime_to_spark("at %H o'clock") == "'at 'HH' o''clock'"
+
+
+def test_strftime_to_spark_directive_union_and_raise():
+    # %f (FilterX strptime) and %F/%T ($(format-date)) in one map
+    assert strftime_to_spark("%F %T.%f") == "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    assert strftime_to_spark("100%% %e") == "100% d"
+    # a lone quote is quoted and doubled, never left to open a quote
+    assert strftime_to_spark("%H'%M") == "HH''''mm"
+    # Spark's optional-section brackets stay literal
+    assert strftime_to_spark("[%H]") == "'['HH']'"
+    with pytest.raises(ValueError, match="%Q"):
+        strftime_to_spark("%Y %Q")
 
 
 def test_csv_parser_reference_goldens(spark):

@@ -376,6 +376,17 @@ def test_time_builtins(spark):
     assert row["y"] == "2024/03/05"
 
 
+def test_strptime_malformed_row_is_null(spark):
+    # date-parser contract: a value no format matches is NULL; the
+    # job completes and the other rows parse
+    df = spark.createDataFrame(
+        [(0, "2024-03-05 12:34:56"), (1, "not a date")], "id int, ts string"
+    )
+    out = _rows(filterx(df, '$t = strptime($ts, "%Y-%m-%d %H:%M:%S");'))
+    assert str(out[0]["t"]).startswith("2024-03-05 12:34:56")
+    assert out[1]["t"] is None
+
+
 def test_str_builtins(spark):
     df = spark.createDataFrame([(0, "  pad  ")], "id int, t string")
     out = filterx(

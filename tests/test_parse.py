@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import datetime as dt
 
+from axosyslog_spark.functions.filterx_lang import filterx
 from axosyslog_spark.operators.parse import parse_stage
+from axosyslog_spark.operators.patterndb import PatternDB, PdbRule
 
 
 def _mk(spark, lines):
@@ -201,3 +203,41 @@ def test_rfc3164_lenient_branches_c_suite(spark):
         assert r["bsd_tags"] == ["syslog.rfc3164_invalid_program"], i
         assert r["host"] == "host", i
 
+
+
+def test_malformed_values_are_null_not_a_job_abort(spark):
+    # under Spark 4's ANSI casts each bad value below aborted the whole
+    # job (CAST_INVALID_INPUT); now it is NULL and the other rows are
+    # unchanged
+    lines = [
+        "<13>1 2024-01-01T00:00:07 h a 1 - - status=ok latency_ms=117 retry=2",
+        "<13>1 2024-01-01T00:00:08 h a 1 - - status=ok latency_ms=99999999999999999999",
+        '{"k": "abc"}',
+        '{"latency_ms": "12x"}',
+        '{"k": 5, "latency_ms": 7}',
+    ]
+    rows = parse_stage(_mk(spark, lines)).orderBy("turn_idx").collect()
+    assert (rows[0].status, rows[0].latency_ms, rows[0].retry) == ("ok", 117, 2)
+    assert (rows[1].status, rows[1].latency_ms) == ("ok", None)
+    assert rows[1].msg_ts == dt.datetime(2024, 1, 1, 0, 0, 8)
+    assert rows[2].kind == "json" and rows[2].json_k is None
+    assert rows[3].kind == "json" and rows[3].latency_ms is None
+    assert (rows[4].json_k, rows[4].latency_ms) == (5, 7)
+
+    pdb = PatternDB([PdbRule("num", "v=@NUMBER:v@")])
+    df = spark.createDataFrame(
+        [(0, "v=12"), (1, "v=99999999999999999999")], "id int, text string"
+    )
+    got = {r.id: (r.rule_id, r.v) for r in pdb.apply(df).collect()}
+    assert got == {0: ("num", 12), 1: ("num", None)}
+
+    df = spark.createDataFrame(
+        [(0, "2024-03-05 12:34:56"), (1, "not a date")], "id int, ts string"
+    )
+    fx = {
+        r.id: r
+        for r in filterx(df, "$d = datetime($ts); $iso = format_isodate($ts);").collect()
+    }
+    assert fx[0].d == dt.datetime(2024, 3, 5, 12, 34, 56)
+    assert fx[0].iso.startswith("2024-03-05T12:34:56")
+    assert fx[1].d is None and fx[1].iso is None

@@ -813,6 +813,20 @@ def test_postgresql_csvlog_parser(spark):
     assert all(out[i]["pgsql_ok"] for i in out)
 
 
+def test_postgresql_csvlog_malformed_timestamp_is_null(spark):
+    good = (
+        '2023-02-14 10:00:12.345 UTC,"postgres","mydb",4242,'
+        ',63eb4c2c.1092,3,,,,0,LOG,00000,'
+        '"checkpoint starting",,,,,,,,,"psql","client backend",,'
+    )
+    bad = good.replace("2023-02-14 10:00:12.345 UTC", "garbage-ts")
+    df = spark.createDataFrame([(0, good), (1, bad)], "id int, text string")
+    out = {r["id"]: r for r in scl.postgresql_csvlog_parser(df).collect()}
+    assert str(out[0]["ts"]).startswith("2023-02-14 10:00:12.345")
+    assert out[1]["ts"] is None
+    assert out[1]["message"] == "checkpoint starting" and out[1]["pid"] == 4242
+
+
 def test_google_pubsub_and_azure_bodies(spark):
     df = spark.createDataFrame(
         [("hello", {"HOST": "h1", "PROGRAM": "app"})],

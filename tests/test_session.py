@@ -1,7 +1,10 @@
 """Session sizing: the default pre-touched driver heap fits the host,
-and a heap that does not fit is not pre-touched."""
+and a heap that does not fit is not pre-touched; the spark-submit
+runner applies the same engine settings as get_spark."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 from axosyslog_spark.session import (
     available_memory,
@@ -50,3 +53,43 @@ def test_pretouch_only_when_heap_fits(caplog):
         assert driver_java_options("2049M", 2 * GIB) == "-XX:-DontCompileHugeMethods"
     assert len(caplog.records) == 3
     assert "16g" in caplog.records[0].getMessage()
+
+
+LOCAL_SIZING = {
+    "spark.master",
+    "spark.sql.shuffle.partitions",
+    "spark.driver.memory",
+    "spark.driver.extraJavaOptions",
+    "spark.ui.enabled",
+}
+
+
+def test_runner_cluster_session_has_the_engine_settings(monkeypatch):
+    """The spark-submit path (no --local-cores) builds its session with
+    every engine setting get_spark applies; get_spark adds only local
+    sizing on top. No JVM starts: getOrCreate records the options."""
+    from pyspark.sql import SparkSession
+
+    from axosyslog_spark import runner
+    from axosyslog_spark.session import get_spark
+
+    built = []
+
+    def record(builder):
+        built.append(dict(builder._options))
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda level: None)
+        )
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", record)
+    runner.build_session(None)
+    get_spark("t", cores=2)
+    cluster, local = built
+    assert "spark.master" not in cluster  # the cluster's master stays
+    assert "-XX:-DontCompileHugeMethods" in cluster["spark.executor.extraJavaOptions"]
+    assert cluster["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+    assert cluster["spark.sql.execution.arrow.pyspark.enabled"] == "true"
+    assert cluster["spark.sql.autoBroadcastJoinThreshold"] == str(64 << 20)
+    assert set(local) - set(cluster) == LOCAL_SIZING
+    shared = set(cluster) - {"spark.app.name"}
+    assert {k: local[k] for k in shared} == {k: cluster[k] for k in shared}

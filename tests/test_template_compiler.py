@@ -17,7 +17,6 @@ from axosyslog_spark.functions.template_compiler import (
     ValueRef,
     compile_template,
     is_trivial,
-    strftime_to_java,
     tokenize,
 )
 
@@ -108,12 +107,6 @@ def test_is_trivial():
     assert is_trivial("$1")
     assert not is_trivial("${HOST} x")
     assert not is_trivial("$(echo a)")
-
-
-def test_strftime_to_java():
-    assert strftime_to_java("%Y-%m-%dT%H:%M:%S") == "yyyy-MM-dd'T'HH:mm:ss"
-    assert strftime_to_java("%b %d %H:%M") == "MMM dd HH:mm"
-    assert strftime_to_java("at %H o'clock") == "'at 'HH' o''clock'"
 
 
 # ---------------------------------------------------------------------------
@@ -234,6 +227,8 @@ def test_render_list_funcs(frame):
 
 def test_render_format_date(frame):
     assert _render(frame, "$(format-date %Y/%m/%d)") == ["2024/03/05", "2024/12/31"]
+    # '[' ']' are literal text, not Spark's optional-section marks
+    assert _render(frame, "$(format-date [%H])") == ["[06]", "[23]"]
 
 
 def test_render_format_welf(frame):

@@ -2,7 +2,8 @@
 
 Runs every __spark_entry__.queries() entry against its oracle_sql()
 via DuckDB at a given sf dir, compares row count, column names and an
-order-insensitive value hash. Usage:
+order-insensitive value hash, and ends with one count line
+(``ok=N skip=N fail=N``). Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -55,7 +56,7 @@ def main() -> int:
     # queries — the local replica verifies BOTH sets
     qs = {**entrymod.queries(), **entrymod.extra_queries()}
     osql = {**entrymod.oracle_sql(), **entrymod.extra_oracle_sql()}
-    failures = 0
+    counts = {"ok": 0, "skip": 0, "fail": 0}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -63,31 +64,34 @@ def main() -> int:
             sdf = fn(spark, sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
-            failures += 1
+            counts["fail"] += 1
             continue
         if name not in osql:
             print(f"SKIP {name}: no oracle (rows={len(sdf)})")
+            counts["skip"] += 1
             continue
         try:
             ddf = con.execute(osql[name]).df()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
-            failures += 1
+            counts["fail"] += 1
             continue
         s, d = norm(sdf), norm(ddf)
         ok_rows = len(s) == len(d)
         ok_cols = list(s.columns) == list(d.columns)
         ok_vals = ok_rows and ok_cols and value_hash(s) == value_hash(d)
         status = "OK  " if (ok_rows and ok_cols and ok_vals) else "FAIL"
-        if status == "FAIL":
-            failures += 1
+        counts["ok" if status == "OK  " else "fail"] += 1
         print(f"{status} {name}: rows {len(s)}/{len(d)} cols={ok_cols} vals={ok_vals}")
         if not ok_vals and ok_rows and ok_cols and len(s) == len(d):
             diff = s.compare(d) if s.shape == d.shape else None
             if diff is not None and len(diff):
                 print(diff.head(5))
-    print("failures:", failures)
-    return 1 if failures else 0
+    # one count line to read the run from: the per-query lines share the
+    # terminal with Spark's '\r' progress bar, so line-anchored greps
+    # over a captured log undercount them
+    print(" ".join(f"{k}={v}" for k, v in counts.items()))
+    return 1 if counts["fail"] else 0
 
 
 if __name__ == "__main__":
