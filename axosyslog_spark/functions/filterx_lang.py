@@ -1483,9 +1483,9 @@ def _FUNCS_DISPATCH(
     # --- timezone family (lib/filterx/func-*timezone*.c; same
     #     semantics as the rewrite-step operators in rewrite.py) ---
     if fn == "fix_timezone":
-        return F.to_utc_timestamp(one.cast("timestamp"), _need_raw(fn, raws, 1))
+        return F.to_utc_timestamp(one.try_cast("timestamp"), _need_raw(fn, raws, 1))
     if fn == "set_timezone":
-        return F.from_utc_timestamp(one.cast("timestamp"), _need_raw(fn, raws, 1))
+        return F.from_utc_timestamp(one.try_cast("timestamp"), _need_raw(fn, raws, 1))
     # --- module-provided event-format builtins ---
     # (modules/cef/filterx-func-parse-cef.c / -parse-leef.c /
     #  -format-cef.c / -format-leef.c)
@@ -1616,28 +1616,16 @@ def _FUNCS_DISPATCH(
         name = "ts" if which == "stamp" else "recvd_ts"
         return F.col(name).cast("timestamp")
     if fn == "guess_timezone":
-        # func-timestamp.c guess_timezone(datetime): pick the zone
-        # whose UTC reinterpretation lands closest to the receive
-        # stamp — same argmin chain as rewrite.guess_timezone; the
-        # receive stamp is the frame's recvd_ts (second arg overrides)
+        # func-timestamp.c guess_timezone(datetime): the stamp
+        # reinterpreted in rewrite.guessed_zone; the receive stamp is
+        # the frame's recvd_ts (second arg overrides)
+        from axosyslog_spark.operators.rewrite import guessed_zone
+
         recvd = a[1] if len(a) > 1 else F.col("recvd_ts")
-        tzs = [
-            "UTC", "America/New_York", "America/Los_Angeles",
-            "Europe/London", "Europe/Budapest", "Asia/Tokyo",
-        ]
-        stamp = one.cast("timestamp")
-        deltas = {
-            tz: F.abs(
-                F.unix_timestamp(F.to_utc_timestamp(stamp, tz))
-                - F.unix_timestamp(recvd.cast("timestamp"))
-            )
-            for tz in tzs
-        }
-        best = F.least(*deltas.values())
-        out = F.to_utc_timestamp(stamp, tzs[-1])
-        for tz in reversed(tzs[:-1]):
-            out = F.when(deltas[tz] == best, F.to_utc_timestamp(stamp, tz)).otherwise(out)
-        return out
+        stamp = one.try_cast("timestamp")
+        return F.to_utc_timestamp(
+            stamp, guessed_zone(stamp, recvd.try_cast("timestamp"))
+        )
     # --- type constructors (filterx-globals.c json/json_array/dict/
     #     list/object): json() parses an object to our open-schema map,
     #     json_array() to a list; dict()/list()/object() with an arg

@@ -37,65 +37,18 @@ from pyspark.sql import functions as F
 from axosyslog_spark.functions import templates as tf
 from axosyslog_spark.operators.dateparse import strftime_to_spark
 from axosyslog_spark.operators.filters import typed_cmp
+from axosyslog_spark.operators.rewrite import value_pairs
 
 
-def _value_pairs_args(raw_args, ctx) -> list:
-    """Shared value-pairs argument parser for $(format-json) /
-    $(format-flat-json) / $(format-welf): explicit k=v pairs plus the
-    selection/transform option set (--scope/--key/--exclude accept
-    globs AND comma-separated lists, repeatable; transforms.c rekey
-    chain applied at compile time)."""
-    import fnmatch
-
-    from axosyslog_spark.operators.rewrite import (
-        VALUE_PAIRS_SCOPES,
-        apply_key_transforms,
-    )
-
-    pairs: list[tuple[str, Column]] = []
-    sel: list[str] = []
-    excl: list[str] = []
-    transforms: list[tuple] = []
-    i = 0
-    while i < len(raw_args):
-        arg = raw_args[i]
-        if arg == "--add-prefix":
-            transforms.append(("add-prefix", raw_args[i + 1])); i += 2
-        elif arg == "--replace-prefix":
-            old, _, new = raw_args[i + 1].partition("=")
-            transforms.append(("replace-prefix", old, new)); i += 2
-        elif arg == "--shift":
-            transforms.append(("shift", int(raw_args[i + 1]))); i += 2
-        elif arg == "--shift-levels":
-            transforms.append(("shift-levels", int(raw_args[i + 1])))
-            i += 2
-        elif arg == "--upper":
-            transforms.append(("upper",)); i += 1
-        elif arg == "--lower":
-            transforms.append(("lower",)); i += 1
-        elif arg in ("--scope", "-s"):
-            sel += VALUE_PAIRS_SCOPES[raw_args[i + 1]]; i += 2
-        elif arg in ("--key", "-k"):
-            sel += raw_args[i + 1].split(","); i += 2
-        elif arg in ("--exclude", "-x"):
-            excl += raw_args[i + 1].split(","); i += 2
-        elif arg == "--omit-empty-values":
-            i += 1  # NULLs already drop via ignoreNullFields
-        elif "=" in arg and not arg.startswith("--"):
-            k, _, v = arg.partition("=")
-            pairs.append((k, compile_template(v, ctx)))
-            i += 1
-        else:  # bare glob selection
-            sel.append(arg); i += 1
-    for n in sorted(ctx.columns):
-        if any(fnmatch.fnmatch(n.lower(), g.lower()) for g in sel) and \
-           not any(fnmatch.fnmatch(n.lower(), g.lower()) for g in excl):
-            pairs.append(
-                (apply_key_transforms(n, transforms), ctx.columns[n])
-            )
-    return pairs
-
-
+def _value_pairs(raw_args, ctx) -> dict[str, Column]:
+    """The value-pairs set of $(format-json), $(format-flat-json),
+    $(format-welf), $(values) and $(names): the explicit k=v pairs,
+    then the rewrite.value_pairs selection over the context's bound
+    names in sorted order (keys rekey at compile time)."""
+    selected, pairs = value_pairs(raw_args, sorted(ctx.columns))
+    out = {k: compile_template(v, ctx) for k, v in pairs}
+    out.update((k, ctx.columns[n]) for k, n in selected)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -481,8 +434,9 @@ def _int64(c: Column) -> Column:
 
 def _fmt_num(d: Column) -> Column:
     """Render a double like the reference's %g-ish integer fast path:
-    whole numbers print without a trailing .0."""
-    i = d.cast("bigint")
+    whole numbers inside the bigint range print without a trailing .0;
+    any other value prints as the double's string."""
+    i = d.try_cast("bigint")
     return F.when(d.isNull(), F.lit("NaN")).otherwise(
         F.when(d == i.cast("double"), i.cast("string")).otherwise(d.cast("string"))
     )
@@ -718,44 +672,15 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         return _apply_template_func(raw_args, ctx)
     if name in ("values", "names"):
         # basicfuncs/vp-funcs.c $(values ...)/$(names ...): render the
-        # value-pairs selection as an encoded comma list of values /
-        # names (LM_VT_LIST). The selectable set is the context's
-        # bound names (ctx.columns — the macro frame); scope names
-        # match case-insensitively against the bindings.
-        import fnmatch
-
-        from axosyslog_spark.operators.rewrite import VALUE_PAIRS_SCOPES
-
-        globs: list[str] = []
-        excls: list[str] = []
-        i = 0
-        while i < len(raw_args):
-            tok = raw_args[i]
-            if tok in ("--scope", "-s"):
-                globs += VALUE_PAIRS_SCOPES[raw_args[i + 1]]
-                i += 2
-            elif tok in ("--key", "-k"):
-                globs.append(raw_args[i + 1])
-                i += 2
-            elif tok in ("--exclude", "-x"):
-                excls.append(raw_args[i + 1])
-                i += 2
-            else:  # bare glob (value_pairs_new_from_cmdline default)
-                globs.append(tok)
-                i += 1
-        sel = sorted(
-            n for n in ctx.columns
-            if any(fnmatch.fnmatch(n.lower(), g.lower()) for g in globs)
-            and not any(fnmatch.fnmatch(n.lower(), g.lower()) for g in excls)
-        )
+        # value-pairs set as an encoded comma list (LM_VT_LIST) of
+        # values / names
+        pairs = _value_pairs(raw_args, ctx)
         if name == "names":
             # names are compile-time strings — encode plan-side
-            return F.lit(",".join(_str_repr_py(n) for n in sel))
-        if not sel:
+            return F.lit(",".join(_str_repr_py(n) for n in pairs))
+        if not pairs:
             return F.lit("")
-        return tf.list_repr(
-            F.array(*[ctx.columns[n].cast("string") for n in sel])
-        )
+        return tf.list_repr(F.array(*[c.cast("string") for c in pairs.values()]))
     if name == "dns-resolve-ip":
         # ip-funcs.c tf_dns_resolve_ip with use-dns(persist_only)
         # semantics: resolution consults ONLY the configured hosts
@@ -908,10 +833,12 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
             F.round(_num(args[0].col), digits)
             .cast(f"decimal(38,{digits})").cast("string")
         )
-    if name == "ceil":
-        return _fmt_num(F.ceil(_num(args[0].col)).cast("double"))
-    if name == "floor":
-        return _fmt_num(F.floor(_num(args[0].col)).cast("double"))
+    if name in ("ceil", "floor"):
+        # Spark's ceil/floor return a bigint that saturates beyond
+        # ±2^63; a double of magnitude >= 2^52 is already whole
+        x = _num(args[0].col)
+        whole = (F.ceil if name == "ceil" else F.floor)(x).cast("double")
+        return _fmt_num(F.when(F.abs(x) < 2.0**52, whole).otherwise(x))
     if name in ("map", "filter"):
         # tf-map.c / tf-filter.c: evaluate a template (map) or a
         # filter condition (filter) per list element, with '$_' bound
@@ -1141,7 +1068,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         # k=v pairs AND/OR the value-pairs selection (--key/--exclude
         # with globs and comma lists — test_format_welf.c
         # key_and_exclude table)
-        return tf.format_welf(dict(_value_pairs_args(raw_args, ctx)))
+        return tf.format_welf(_value_pairs(raw_args, ctx))
     if name in ("format-json", "format-flat-json"):
         # modules/json/format-json.c: explicit k=v pairs AND/OR a
         # value-pairs selection (globs / --scope / --key / --exclude)
@@ -1151,12 +1078,12 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         # pair order is reverse-lexicographic at each level
         # (tf_flat_value_pairs_sort's strcmp(s2, s1) — the functional
         # value-pairs goldens show the same order for the nested form)
-        pairs = _value_pairs_args(raw_args, ctx)
+        pairs = _value_pairs(raw_args, ctx)
         if name == "format-flat-json":
-            return tf.format_flat_json(dict(pairs))
+            return tf.format_flat_json(pairs)
         # nested render: dotted keys become objects
         tree: dict = {}
-        for k, col in pairs:
+        for k, col in pairs.items():
             d = tree
             parts = k.split(".")
             for p in parts[:-1]:

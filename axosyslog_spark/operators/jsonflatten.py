@@ -12,10 +12,10 @@ Reference: modules/json/json-parser.c:1-421 —
 Spark-first: recursion becomes ``max_depth`` bounded rounds of pure
 column algebra — from_json to ``map<string,string>`` (Spark returns
 nested objects as their raw JSON text), one flatten round per depth
-level, each materialized in its own projection so the expression tree
-stays linear in depth. No Python per row; a vectorized UDF is NOT
-needed because real-world nesting depth is small and the bound is
-explicit (raise it per call for deeper documents).
+level, nested in one expression (each round reads the one before it
+once, so the tree stays linear in depth). No Python per row; a
+vectorized UDF is NOT needed because real-world nesting depth is
+small and the bound is explicit (deeper objects stay raw JSON text).
 
 Deviation noted: the reference renders doubles via printf %f (3.14 ->
 "3.140000"); we keep the raw JSON token ("3.14"), which is lossless.
@@ -28,59 +28,56 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.kvscan import entries_to_map
+
 _MAP_SS = "map<string,string>"
 # a JSON array whose elements are all strings (spaces between tokens ok)
 _ALL_STRING_ARRAY_RE = r'^\[\s*(?:"(?:\\.|[^"\\])*"\s*(?:,\s*"(?:\\.|[^"\\])*"\s*)*)?\]$'
 
 
-def _entries_to_map_last_wins(entries: Column) -> Column:
-    """array<struct<key,value>> -> map, LAST duplicate key wins
-    (repeated NV sets overwrite in the reference; map_from_entries
-    would throw under the default EXCEPTION dedup policy)."""
-    return F.aggregate(
-        F.reverse(entries),
-        F.expr("map()").cast(_MAP_SS),
-        lambda acc, e: F.when(F.map_contains_key(acc, e["key"]), acc).otherwise(
-            F.map_concat(acc, F.create_map(e["key"], e["value"]))
-        ),
-    )
+def _flatten_round(entries: Column, key_delimiter: str) -> Column:
+    """One nesting level: every entry whose value is a JSON object
+    becomes that object's entries, keyed ``key + delimiter + child``."""
+
+    def expand(e: Column) -> Column:
+        child = F.from_json(e["value"], _MAP_SS)
+        return F.when(
+            e["value"].startswith("{") & child.isNotNull(),
+            F.transform(
+                F.map_entries(child),
+                lambda c: F.struct(
+                    F.concat(e["key"], F.lit(key_delimiter), c["key"]).alias("key"),
+                    c["value"].alias("value"),
+                ),
+            ),
+        ).otherwise(F.array(e))
+
+    return F.flatten(F.transform(entries, expand))
 
 
-def _looks_like_object(v: Column) -> Column:
-    return v.isNotNull() & v.startswith("{")
+def _finalize_array(e: Column) -> Column:
+    """json-parser.c extract_values_from_complex: an all-string array
+    becomes a comma list; any other array stays raw JSON."""
+    v = e["value"]
+    value = F.when(
+        v.rlike(_ALL_STRING_ARRAY_RE),
+        F.array_join(F.from_json(v, "array<string>"), ","),
+    ).otherwise(v)
+    return F.struct(e["key"].alias("key"), value.alias("value"))
 
 
 def flatten_json_column(
-    src: Column, key_delimiter: str = ".", max_depth: int = 3
+    src: Column, key_delimiter: str = ".", max_depth: int = 8
 ) -> Column:
-    """Column-level dotted-key flatten of a JSON-object string (the
-    filterx flatten() builtin): map<string,string> or NULL when the
-    input isn't a JSON object. Unlike json_flatten (which splits each
-    nesting round into its own projection), the rounds nest inside one
-    expression here, so max_depth stays small — use the DataFrame
-    operator for deep documents."""
+    """Dotted-key flatten of a JSON-object string: map<string,string>,
+    or NULL when the input isn't a JSON object. A repeated key keeps
+    its last value (kvscan.entries_to_map)."""
     top = F.from_json(src.cast("string"), _MAP_SS)
     entries = F.map_entries(top)
     for _ in range(max_depth):
-        entries = F.flatten(
-            F.transform(
-                entries,
-                lambda e: F.when(
-                    _looks_like_object(e["value"])
-                    & F.from_json(e["value"], _MAP_SS).isNotNull(),
-                    F.transform(
-                        F.map_entries(F.from_json(e["value"], _MAP_SS)),
-                        lambda c: F.struct(
-                            F.concat(
-                                e["key"], F.lit(key_delimiter), c["key"]
-                            ).alias("key"),
-                            c["value"].alias("value"),
-                        ),
-                    ),
-                ).otherwise(F.array(e)),
-            )
-        )
-    return F.when(top.isNotNull(), _entries_to_map_last_wins(entries))
+        entries = _flatten_round(entries, key_delimiter)
+    entries = F.transform(entries, _finalize_array)
+    return F.when(top.isNotNull(), entries_to_map(entries))
 
 
 def json_flatten(
@@ -93,72 +90,18 @@ def json_flatten(
     extract_prefix: str | None = None,
     marker: str | None = None,
 ) -> DataFrame:
-    """Adds ``out_col``: map<string,string> of dotted-key pairs (NULL
-    when the input isn't a JSON object / marker doesn't match) and
-    ``<out_col>_ok`` (parse success -> drop-invalid composes as a
-    filter on it)."""
+    """json-parser(): adds ``out_col``, the flatten_json_column map with
+    ``prefix`` on every key (NULL when the input isn't a JSON object or
+    the marker doesn't match), and ``<out_col>_ok`` (parse success ->
+    drop-invalid composes as a filter on it)."""
     src = F.col(src_col)
     if marker:
         src = F.when(src.startswith(marker), F.substring(src, len(marker) + 1, 2_000_000_000))
     if extract_prefix:
         src = F.get_json_object(src, f"$.{extract_prefix}")
-
-    work = f"__jf_entries_{out_col}"
-    top = F.from_json(src, _MAP_SS)
-    df = df.withColumn(
-        work,
-        F.when(
-            top.isNotNull(),
-            F.transform(
-                F.map_entries(top),
-                lambda e: F.struct(
-                    F.concat(F.lit(prefix), e["key"]).alias("key"),
-                    e["value"].alias("value"),
-                ),
-            ),
-        ),
-    )
-
-    # one flatten round per nesting level, each its own projection so
-    # whole-stage codegen sees a linear chain, not a 2^depth tree
-    for _ in range(max_depth):
-        entries = F.col(work)
-        expanded = F.flatten(
-            F.transform(
-                entries,
-                lambda e: F.when(
-                    _looks_like_object(e["value"])
-                    & F.from_json(e["value"], _MAP_SS).isNotNull(),
-                    F.transform(
-                        F.map_entries(F.from_json(e["value"], _MAP_SS)),
-                        lambda c: F.struct(
-                            F.concat(
-                                e["key"], F.lit(key_delimiter), c["key"]
-                            ).alias("key"),
-                            c["value"].alias("value"),
-                        ),
-                    ),
-                ).otherwise(F.array(e)),
-            )
-        )
-        df = df.withColumn(work, expanded)
-
-    # array handling (json-parser.c extract_values_from_complex):
-    # all-string arrays -> comma list; other arrays stay raw JSON
-    def finalize(e: Column) -> Column:
-        v = e["value"]
-        is_str_arr = v.isNotNull() & v.rlike(_ALL_STRING_ARRAY_RE)
-        value = F.when(
-            is_str_arr, F.array_join(F.from_json(v, "array<string>"), ",")
-        ).otherwise(v)
-        return F.struct(e["key"].alias("key"), value.alias("value"))
-
-    entries = F.transform(F.col(work), finalize)
-    return (
-        df.withColumn(
-            out_col,
-            F.when(entries.isNotNull(), _entries_to_map_last_wins(entries)),
-        )
-        .withColumn(f"{out_col}_ok", F.col(out_col).isNotNull())
-        .drop(work)
+    flat = flatten_json_column(src, key_delimiter, max_depth)
+    if prefix:
+        flat = F.transform_keys(flat, lambda k, _v: F.concat(F.lit(prefix), k))
+    return df.withColumn(out_col, flat).withColumn(
+        f"{out_col}_ok", F.col(out_col).isNotNull()
     )

@@ -180,25 +180,33 @@ def entries_to_map(entries: Column) -> Column:
     the map keeps first-occurrence ORDER with last-occurrence VALUE
     (the CEF/LEEF formatters re-emit extensions in map order, which
     round-trips only under this ordering). O(k²) per row in the pair
-    count, but k is tens at most for every log format we parse."""
-    uniq = F.filter(
-        entries,
-        lambda e, i: F.size(
-            F.filter(F.slice(entries, 1, i), lambda p: p["key"] == e["key"])
+    count, but k is tens at most for every log format we parse.
+
+    The fold reads ``entries`` inside per-element lambdas, so it binds
+    ``entries`` to one lambda variable first: the producing expression
+    (a scan, a flatten) then runs once per row, not once per element."""
+
+    def fold(es: Column) -> Column:
+        uniq = F.filter(
+            es,
+            lambda e, i: F.size(
+                F.filter(F.slice(es, 1, i), lambda p: p["key"] == e["key"])
+            )
+            == 0,
         )
-        == 0,
-    )
-    return F.map_from_entries(
-        F.transform(
-            uniq,
-            lambda e: F.struct(
-                e["key"].alias("key"),
-                F.element_at(
-                    F.filter(entries, lambda p: p["key"] == e["key"]), -1
-                )["value"].alias("value"),
-            ),
+        return F.map_from_entries(
+            F.transform(
+                uniq,
+                lambda e: F.struct(
+                    e["key"].alias("key"),
+                    F.element_at(
+                        F.filter(es, lambda p: p["key"] == e["key"]), -1
+                    )["value"].alias("value"),
+                ),
+            )
         )
-    )
+
+    return F.transform(F.array(entries), fold)[0]
 
 
 def kv_pairs_to_map(pairs: Column, prefix: str = "") -> Column:

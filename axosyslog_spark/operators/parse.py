@@ -360,102 +360,51 @@ def format_rfc5424(
 
 
 def parse_sdata(df: DataFrame, sd_col: str, out_col: str = "sdata") -> DataFrame:
-    """RFC5424 STRUCTURED-DATA -> map with dotted keys.
+    """RFC5424 STRUCTURED-DATA -> map with dotted keys, the one SD
+    parser (modules/syslogformat/syslog-format.c:591-706; also
+    sdata-parser(), which reads the same shape out of $MESSAGE).
 
-    `[id k="v" k2="v2"][id2 a="b"]` becomes
-    `{.SDATA.id.k: v, .SDATA.id.k2: v2, .SDATA.id2.a: b}` — the
-    reference's SDATA NV naming (modules/syslogformat/
-    syslog-format.c:591-706). '-' or unparsable -> empty map.
-    Pure column algebra: nested regexp_extract_all + transform.
+    `[id k="v" k2=v2][id2]` becomes
+    `{.SDATA.id.k: v, .SDATA.id.k2: v2, .SDATA.id2: ""}`: a value may
+    be quoted or unquoted and is everything after the param's first
+    '='; a bare SD-ID is stored with an empty value. '-', NULL or a
+    string with no [...] block gives an empty map. A param repeated
+    inside a block keeps its last value (entries_to_map; the
+    reference's nv-table overwrites). Pure column algebra: nested
+    regexp_extract_all + transform.
     """
     src = F.col(sd_col)
     blocks = F.regexp_extract_all(src, F.lit(r"\[([^\]]+)\]"), 1)
-    entries = F.flatten(
-        F.transform(
-            blocks,
-            lambda b: F.transform(
-                F.regexp_extract_all(b, F.lit(r'([\w.@-]+)="([^"]*)"'), 0),
-                lambda p: F.struct(
-                    F.concat(
-                        F.lit(".SDATA."),
-                        F.substring_index(b, " ", 1),
-                        F.lit("."),
-                        F.substring_index(p, "=", 1),
-                    ).alias("key"),
-                    F.regexp_extract(p, '"(.*)"', 1).alias("value"),
-                ),
+    param_re = r'([\w.@-]+)=(?:"[^"]*"|[^\s\]]+)'
+
+    def block_entries(b: Column) -> Column:
+        params = F.transform(
+            F.regexp_extract_all(b, F.lit(param_re), 0),
+            lambda p: F.struct(
+                F.concat(
+                    F.lit(".SDATA."),
+                    F.substring_index(b, " ", 1),
+                    F.lit("."),
+                    F.substring_index(p, "=", 1),
+                ).alias("key"),
+                F.regexp_replace(
+                    F.regexp_replace(p, r"^[\w.@-]+=", ""), '^"(.*)"$', "$1"
+                ).alias("value"),
             ),
         )
-    )
-    return df.withColumn(
-        out_col,
-        F.when(src.isNull() | (src == "-"), F.expr("map()").cast("map<string,string>"))
-        # last-wins fold: RFC5424 allows a param name to repeat inside
-        # an SD block; the reference's nv-table overwrites, while
-        # map_from_entries would abort the job (DUPLICATED_MAP_KEY)
-        .otherwise(entries_to_map(entries)),
-    )
-
-
-def sdata_parser(
-    df: DataFrame,
-    src_col: str,
-    out_col: str = "sdata",
-    prefix: str = ".SDATA.",
-) -> DataFrame:
-    """sdata-parser() — modules/sdata-parser: parse an SDATA-shaped
-    STRING (usually carried in $MESSAGE) into the dotted map. Unlike
-    the RFC5424 header path, the standalone parser ACCEPTS UNQUOTED
-    param values (``sub=Vimsvc.ha-eventmgr``) — the functional suite's
-    golden round-trips them back out quoted through the $SDATA macro.
-    Rows with no [id ...] block get an empty map (parse failure)."""
-    from axosyslog_spark.operators.kvscan import entries_to_map
-
-    src = F.col(src_col)
-    blocks = F.regexp_extract_all(src, F.lit(r"\[([^\]]+)\]"), 1)
-    param_re = r'([\w.@-]+)=(?:"[^"]*"|[^\s\]]+)'
-    def _block_entries(b, params):
-        # an SD-ID with no params is legal and stored with an empty
-        # value (test_syslog_format.c
-        # test_sdata_id_without_param_is_accepted...)
         bare = F.struct(
-            F.concat(F.lit(prefix), b).alias("key"),
-            F.lit("").alias("value"),
+            F.concat(F.lit(".SDATA."), b).alias("key"), F.lit("").alias("value")
         )
         return F.when(
-            (F.size(params) == 0) & b.rlike(r"^[\w.@-]+$"),
-            F.array(bare),
+            (F.size(params) == 0) & b.rlike(r"^[\w.@-]+$"), F.array(bare)
         ).otherwise(params)
 
-    entries = F.flatten(
-        F.transform(
-            blocks,
-            lambda b: _block_entries(b, F.transform(
-                F.regexp_extract_all(b, F.lit(param_re), 0),
-                lambda p: F.struct(
-                    F.concat(
-                        F.lit(prefix),
-                        F.substring_index(b, " ", 1),
-                        F.lit("."),
-                        F.substring_index(p, "=", 1),
-                    ).alias("key"),
-                    # value = after the FIRST '=' (quoted values may
-                    # carry '='), quotes stripped when present
-                    F.regexp_replace(
-                        F.regexp_replace(p, r"^[\w.@-]+=", ""),
-                        '^"(.*)"$',
-                        "$1",
-                    ).alias("value"),
-                ),
-            )),
-        )
-    )
     return df.withColumn(
         out_col,
         F.when(
             src.isNull() | (F.size(blocks) == 0),
             F.expr("map()").cast("map<string,string>"),
-        ).otherwise(entries_to_map(entries)),
+        ).otherwise(entries_to_map(F.flatten(F.transform(blocks, block_entries)))),
     )
 
 

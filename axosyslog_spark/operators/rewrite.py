@@ -8,8 +8,13 @@ costs one pass regardless of N (the reference pays a pipe hop each).
 
 from __future__ import annotations
 
+import fnmatch
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from axosyslog_spark.operators.filters import glob_match
 
 
 def set_value(df: DataFrame, name: str, value: Column | str) -> DataFrame:
@@ -131,17 +136,12 @@ def groupset(
     df: DataFrame, value: Column, map_col: str = "kv", key_glob: str = "*"
 ) -> DataFrame:
     """groupset() — rewrite-groupset.c: apply a value to every matching
-    key of the open-schema map column (glob over field names)."""
-    import fnmatch
-    import re as _re
-
-    rx = fnmatch.translate(key_glob)
-    # transform_values with a key-glob condition
+    key of the open-schema map column (LMF_GLOB over field names)."""
     return df.withColumn(
         map_col,
         F.transform_values(
             F.col(map_col),
-            lambda k, v: F.when(k.rlike(rx.replace("\\Z", "$")), value).otherwise(v),
+            lambda k, v: F.when(glob_match(k, key_glob), value).otherwise(v),
         ),
     )
 
@@ -167,6 +167,34 @@ def set_timezone(df: DataFrame, ts_col: str, tz: str) -> DataFrame:
     return df.withColumn(ts_col, F.from_utc_timestamp(F.col(ts_col), tz))
 
 
+_GUESS_TIMEZONE_CANDIDATES = [
+    "UTC", "America/New_York", "America/Los_Angeles",
+    "Europe/London", "Europe/Budapest", "Asia/Tokyo",
+]
+
+
+def guessed_zone(
+    stamp: Column, recvd: Column, candidate_tzs: list[str] | None = None
+) -> Column:
+    """The candidate zone whose UTC reinterpretation of the (naively
+    parsed) stamp lands closest to the receive time: one |delta| per
+    candidate and an argmin when-chain. The first zone in list order
+    wins ties, and is the answer when either stamp is NULL."""
+    tzs = candidate_tzs or _GUESS_TIMEZONE_CANDIDATES
+    deltas = {
+        tz: F.abs(
+            F.unix_timestamp(F.to_utc_timestamp(stamp, tz))
+            - F.unix_timestamp(recvd)
+        )
+        for tz in tzs
+    }
+    best = F.least(*deltas.values())
+    pick = F.lit(tzs[0])
+    for tz in reversed(tzs):
+        pick = F.when(deltas[tz] == best, F.lit(tz)).otherwise(pick)
+    return pick
+
+
 def guess_timezone(
     df: DataFrame,
     ts_col: str,
@@ -175,26 +203,12 @@ def guess_timezone(
     out_col: str = "guessed_tz",
 ) -> DataFrame:
     """guess-timezone() — modules/timestamp/rewrite-guess-timezone.c:
-    pick the timezone whose UTC reinterpretation of the (naively
-    parsed) stamp lands closest to the receive time. Pure column
-    algebra: one |delta| per candidate + an argmin when-chain, all in
-    one projection."""
-    tzs = candidate_tzs or [
-        "UTC", "America/New_York", "America/Los_Angeles",
-        "Europe/London", "Europe/Budapest", "Asia/Tokyo",
-    ]
-    deltas = {
-        tz: F.abs(
-            F.unix_timestamp(F.to_utc_timestamp(F.col(ts_col), tz))
-            - F.unix_timestamp(F.col(recvd_col))
-        )
-        for tz in tzs
-    }
-    best = F.least(*deltas.values())
-    pick = F.lit(tzs[0])
-    for tz in reversed(tzs):
-        pick = F.when(deltas[tz] == best, F.lit(tz)).otherwise(pick)
-    out = df.withColumn(out_col, pick)
+    ``out_col`` names the guessed zone (guessed_zone) and
+    ``<ts_col>_fixed`` is the stamp reinterpreted in it, all in one
+    projection."""
+    out = df.withColumn(
+        out_col, guessed_zone(F.col(ts_col), F.col(recvd_col), candidate_tzs)
+    )
     return out.withColumn(
         ts_col + "_fixed",
         F.to_utc_timestamp(F.col(ts_col), F.col(out_col)),
@@ -246,34 +260,102 @@ def apply_key_transforms(key: str, transforms: list[tuple]) -> str:
     return key
 
 
+def value_pairs(
+    args: Sequence[str],
+    names: Iterable[str],
+    transforms: Sequence[tuple] = (),
+) -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
+    """The value-pairs selector (lib/value-pairs/value-pairs.c
+    value_pairs_new_from_cmdline): parse an option list, then select
+    and rekey ``names``.
+
+      --scope/-s S[,S...]     the named column sets of VALUE_PAIRS_SCOPES
+      --key/-k G[,G...]       globs to select
+      --exclude/-x G[,G...]   globs to drop (exclusion wins)
+      GLOB                    a bare word selects like --key
+      --add-prefix P, --replace-prefix OLD=NEW, --shift N,
+      --shift-levels N, --upper, --lower
+                              the rekey chain (apply_key_transforms),
+                              run before ``transforms``
+      --omit-empty-values     accepted; NULL values drop already
+      k=v                     an explicit pair, returned unparsed
+
+    The list options repeat. Globs match case-insensitively, so scope
+    column names also select macro names (HOST, PROGRAM). Returns
+    ``(selected, pairs)``: ``selected`` holds ``(new_key, name)`` in
+    the order of ``names``; ``pairs`` the ``(k, v)`` words in argument
+    order. An unknown scope raises ValueError."""
+    globs: list[str] = []
+    excludes: list[str] = []
+    chain: list[tuple] = []
+    pairs: list[tuple[str, str]] = []
+    it = iter(args)
+
+    def operand() -> str:
+        value = next(it, None)
+        if value is None:
+            raise ValueError(f"value-pairs option {arg} needs a value")
+        return value
+
+    for arg in it:
+        if arg in ("--scope", "-s"):
+            for scope in operand().split(","):
+                if scope not in VALUE_PAIRS_SCOPES:
+                    raise ValueError(
+                        f"unknown value-pairs scope {scope!r}; known: "
+                        + ", ".join(VALUE_PAIRS_SCOPES)
+                    )
+                globs += VALUE_PAIRS_SCOPES[scope]
+        elif arg in ("--key", "-k"):
+            globs += operand().split(",")
+        elif arg in ("--exclude", "-x"):
+            excludes += operand().split(",")
+        elif arg == "--add-prefix":
+            chain.append(("add-prefix", operand()))
+        elif arg == "--replace-prefix":
+            old, _, new = operand().partition("=")
+            chain.append(("replace-prefix", old, new))
+        elif arg in ("--shift", "--shift-levels"):
+            chain.append((arg[2:], int(operand())))
+        elif arg in ("--upper", "--lower"):
+            chain.append((arg[2:],))
+        elif arg == "--omit-empty-values":
+            pass
+        elif "=" in arg and not arg.startswith("--"):
+            k, _, v = arg.partition("=")
+            pairs.append((k, v))
+        else:
+            globs.append(arg)
+    globs = [g.lower() for g in globs]
+    excludes = [g.lower() for g in excludes]
+    chain += transforms
+    selected = [
+        (apply_key_transforms(n, chain), n)
+        for n in names
+        if any(fnmatch.fnmatchcase(n.lower(), g) for g in globs)
+        and not any(fnmatch.fnmatchcase(n.lower(), g) for g in excludes)
+    ]
+    return selected, pairs
+
+
 def value_pairs_select(
     df: DataFrame,
     include_globs: list[str] | None = None,
     exclude_globs: list[str] | None = None,
-    add_prefix: str = "",
     scope: str | None = None,
     transforms: list[tuple] | None = None,
 ) -> DataFrame:
-    """value-pairs projection: select column sets by scope name and/or
-    glob with include/exclude and rekey transforms
-    (lib/value-pairs/value-pairs.c:126-137, transforms.c). Static
-    columns rekey at PLAN time; see value_pairs_rekey_map for dynamic
+    """value-pairs projection: the columns value_pairs selects by glob
+    and/or scope, renamed by the rekey ``transforms``. Static columns
+    rekey at PLAN time; see value_pairs_rekey_map for dynamic
     map-column keys."""
-    import fnmatch
-
-    globs = list(include_globs or [])
+    args = list(include_globs or [])
     if scope:
-        globs += VALUE_PAIRS_SCOPES[scope]
-    trans = list(transforms or [])
-    if add_prefix:
-        trans.insert(0, ("add-prefix", add_prefix))
-    cols = []
-    for c in df.columns:
-        if any(fnmatch.fnmatch(c, g) for g in globs) and not any(
-            fnmatch.fnmatch(c, g) for g in (exclude_globs or [])
-        ):
-            cols.append(F.col(c).alias(apply_key_transforms(c, trans)))
-    return df.select(*cols)
+        args += ["--scope", scope]
+    for g in exclude_globs or []:
+        args += ["--exclude", g]
+    selected, _ = value_pairs(args, df.columns, transforms or ())
+    return df.select(*[F.col(n).alias(k) for k, n in selected])
 
 
 def value_pairs_rekey_map(

@@ -181,17 +181,9 @@ def cee_parser(
     df: DataFrame, src_col: str = "text", out_col: str = "cee"
 ) -> DataFrame:
     """scl/cee: json-parser(marker('@cee:') prefix('.cee.'))."""
-    from axosyslog_spark.operators.jsonflatten import flatten_json_column
+    from axosyslog_spark.operators.jsonflatten import json_flatten
 
-    src = F.col(src_col)
-    flat = flatten_json_column(
-        F.when(
-            src.startswith("@cee:"), F.substring(src, 6, 2_000_000_000)
-        )
-    )
-    return df.withColumn(
-        out_col, F.transform_keys(flat, lambda k, _v: F.concat(F.lit(".cee."), k))
-    )
+    return json_flatten(df, src_col, out_col, prefix=".cee.", marker="@cee:")
 
 
 # scl/cisco plugin.conf timestamp patterns (the three @define's)

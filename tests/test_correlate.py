@@ -72,7 +72,7 @@ def test_value_pairs_scope(spark):
         [(13, "h", "a", "b", 5, 1)],
         "pri int, host string, appname string, body string, severity int, facility int",
     )
-    out = value_pairs_select(df, scope="rfc3164", add_prefix="o.")
+    out = value_pairs_select(df, scope="rfc3164", transforms=[("add-prefix", "o.")])
     assert set(out.columns) == {"o.pri", "o.host", "o.appname", "o.body"}
     out2 = value_pairs_select(df, scope="selected-macros")
     assert set(out2.columns) == {"severity", "facility"}

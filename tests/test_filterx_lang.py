@@ -387,6 +387,38 @@ def test_strptime_malformed_row_is_null(spark):
     assert out[1]["t"] is None
 
 
+def test_timezone_builtins_malformed_row_is_null(spark):
+    # fix/set/guess_timezone read their argument with try_cast: a value
+    # that is not a timestamp makes that row NULL, the job completes
+    df = spark.createDataFrame(
+        [(0, "2024-03-05 12:00:00", "2024-03-05 11:00:02"),
+         (1, "not a date", "2024-03-05 11:00:02")],
+        "id int, s string, recvd_ts string",
+    )
+    out = _rows(filterx(df, """
+        $fz = fix_timezone($s, "UTC");
+        $sz = set_timezone($s, "UTC");
+        $gz = guess_timezone($s);
+        """))
+    assert str(out[0]["fz"]).startswith("2024-03-05 12:00:00")
+    assert str(out[0]["sz"]).startswith("2024-03-05 12:00:00")
+    # a 12:00 wall clock received at 11:00 UTC was written at UTC+1
+    assert str(out[0]["gz"]).startswith("2024-03-05 11:00:00")
+    assert out[1]["fz"] is None and out[1]["sz"] is None
+    assert out[1]["gz"] is None
+
+
+def test_flatten_nested_and_array_document(spark):
+    # the json-parser rules: all-string arrays become comma lists and
+    # nesting flattens to the depth bound of json_flatten (8)
+    df = spark.createDataFrame(
+        [(0, '{"tags":["x","y"],"a":{"b":{"c":{"d":{"e":1}}}}}')],
+        "id int, doc string",
+    )
+    out = _rows(filterx(df, "$flat = flatten($doc);"))
+    assert out[0]["flat"] == {"tags": "x,y", "a.b.c.d.e": "1"}
+
+
 def test_str_builtins(spark):
     df = spark.createDataFrame([(0, "  pad  ")], "id int, t string")
     out = filterx(

@@ -94,7 +94,7 @@ def test_sdata_parser_unquoted_values_roundtrip(spark):
     re-renders the block with quotes."""
     from pyspark.sql import functions as F
 
-    from axosyslog_spark.operators.parse import format_sdata, sdata_parser
+    from axosyslog_spark.operators.parse import format_sdata, parse_sdata
 
     line = (
         "[Originator@6876 sub=Vimsvc.ha-eventmgr opID=esxui-13c6-6b16 "
@@ -102,7 +102,7 @@ def test_sdata_parser_unquoted_values_roundtrip(spark):
     )
     df = spark.createDataFrame([(0, line), (1, "no sdata here")],
                                "id int, msg string")
-    out = sdata_parser(df, "msg")
+    out = parse_sdata(df, "msg")
     rows = {r["id"]: r for r in out.select(
         "id", "sdata", format_sdata(F.col("sdata")).alias("rendered")
     ).collect()}

@@ -67,9 +67,23 @@ def test_groupset_glob(spark):
     assert out == {"a.x": "X", "a.y": "X", "b.z": "3"}
 
 
+def test_groupset_glob_is_lmf_glob(spark):
+    # LMF_GLOB: the whole key must match, only * and ? are wildcards
+    df = spark.createDataFrame(
+        [({"a.x": "1", "za.x": "2", "[a].x": "3", "b.x": "4"},)],
+        "kv map<string,string>",
+    )
+    out = rw.groupset(df, F.lit("X"), key_glob="a.*").collect()[0].kv
+    assert out == {"a.x": "X", "za.x": "2", "[a].x": "3", "b.x": "4"}
+    out = rw.groupset(df, F.lit("X"), key_glob="[a].?").collect()[0].kv
+    assert out == {"a.x": "1", "za.x": "2", "[a].x": "X", "b.x": "4"}
+
+
 def test_value_pairs_select(spark):
     df = spark.createDataFrame([(1, 2, 3)], "h_a int, h_b int, other int")
-    out = rw.value_pairs_select(df, ["h_*"], exclude_globs=["h_b"], add_prefix="p.")
+    out = rw.value_pairs_select(
+        df, ["h_*"], exclude_globs=["h_b"], transforms=[("add-prefix", "p.")]
+    )
     assert out.columns == ["p.h_a"]
 
 

@@ -108,6 +108,16 @@ def test_cee_parser(spark):
     assert out[1] in (None, {})
 
 
+def test_cee_parser_is_the_json_parser(spark):
+    # json-parser rules through marker('@cee:') prefix('.cee.'): string
+    # arrays become comma lists, nesting flattens to the depth bound 8
+    doc = '@cee:{"tags":["x","y"],"a":{"b":{"c":{"d":{"e":1}}}}}'
+    df = spark.createDataFrame([(0, doc)], "id int, text string")
+    [row] = scl.cee_parser(df).collect()
+    assert row["cee"] == {".cee.tags": "x,y", ".cee.a.b.c.d.e": "1"}
+    assert row["cee_ok"]
+
+
 def test_cisco_parser(spark):
     df = spark.createDataFrame(
         [

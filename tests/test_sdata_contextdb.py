@@ -21,7 +21,8 @@ def test_parse_sdata(spark):
         ".SDATA.exampleSDID@32473.eventSource": "Application",
         ".SDATA.origin.ip": "1.2.3.4",
     }
-    assert got[1] == {} and got[2] == {} and got[3] == {}
+    # a bare SD-ID is stored with an empty value (test_syslog_format.c)
+    assert got[1] == {} and got[2] == {} and got[3] == {".SDATA.empty": ""}
 
 
 def test_sdata_escaped_value_chars(spark):
@@ -105,7 +106,7 @@ def test_sdata_parser_c_suite_cases(spark):
     round-trip quoted through format_sdata."""
     from pyspark.sql import functions as F
 
-    from axosyslog_spark.operators.parse import format_sdata, sdata_parser
+    from axosyslog_spark.operators.parse import format_sdata, parse_sdata
 
     cases = [
         (0, "-"), (1, "["), (2, "[]"), (3, "]"), (4, "[foobar"),
@@ -114,7 +115,7 @@ def test_sdata_parser_c_suite_cases(spark):
         (7, "[foo bar=baz]"),
         (8, "[Originator@6876 sub=Vimsvc.ha-eventmgr opID=esxui-13c6-6b16 sid=5214bde6 user=root]"),
     ]
-    df = sdata_parser(
+    df = parse_sdata(
         spark.createDataFrame(cases, "id int, text string"), "text"
     )
     out = {r["id"]: r["sdata"] for r in df.collect()}

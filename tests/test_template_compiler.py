@@ -429,6 +429,73 @@ def test_values_and_names_funcs(frame):
     assert got == ['"hello world"', '"x=1 y=2"']
 
 
+_VP_CTX = {
+    "HOST": "h1", "PROGRAM": "app", "MSG": "hello", "PID": "42",
+    "PRI": "13", "SEVERITY": "5", "test.key1": "v1", "test.key2": "v2",
+}
+
+
+@pytest.mark.parametrize(
+    "options",
+    [
+        "--key HOST,PROGRAM",
+        "--key HOST --key PROGRAM",
+        "--key * --exclude MSG,PID,test.*",
+        "--scope rfc5424,selected-macros",
+        "--key test.* --add-prefix x.",
+        "--key test.* --replace-prefix test=t",
+        "--key test.* --shift 2",
+        "--key test.* --shift-levels 1",
+        "--key test.* --upper",
+        "--key HOST --lower",
+    ],
+)
+def test_value_pairs_options_agree_across_functions(frame, options):
+    """$(names), $(values), $(format-flat-json) and $(format-welf) parse
+    one value-pairs option list the same way (vp-funcs.c, format-json.c,
+    format-welf.c all call value_pairs_new_from_cmdline)."""
+    import json
+
+    ctx = TemplateContext(columns={k: F.lit(v) for k, v in _VP_CTX.items()})
+    names = _render(frame, f"$(names {options})", ctx)[0].split(",")
+    values = _render(frame, f"$(values {options})", ctx)[0].split(",")
+    flat = json.loads(_render(frame, f"$(format-flat-json {options})", ctx)[0])
+    welf = dict(
+        kv.split("=", 1)
+        for kv in _render(frame, f"$(format-welf {options})", ctx)[0].split(" ")
+    )
+    assert names != [""]
+    assert sorted(names) == sorted(flat) == sorted(welf)
+    assert values == [flat[n] for n in names] == [welf[n] for n in names]
+
+
+def test_value_pairs_unknown_scope_or_missing_value_raises(frame):
+    for func in ("format-json", "format-flat-json", "format-welf", "values", "names"):
+        with pytest.raises(ValueError, match="known: rfc3164"):
+            _render(frame, f"$({func} --scope nv-pairs)")
+    with pytest.raises(ValueError, match="--key needs a value"):
+        _render(frame, "$(names --key)")
+
+
+def test_numeric_results_beyond_bigint_render_as_doubles(frame):
+    # only whole values inside the bigint range take the integer form;
+    # ceil/floor no longer saturate at ±2^63
+    cases = {
+        "$(sum 1e30 1)": "1.0E30",
+        "$(max 1e30 2)": "1.0E30",
+        "$(round 1e30)": "1.0E30",
+        "$(* 1e20 1e20)": "1.0E40",
+        "$(average 1e300 1e300)": "1.0E300",
+        "$(ceil 1e30)": "1.0E30",
+        "$(floor -1e30)": "-1.0E30",
+        "$(ceil 2.5)": "3",
+        "$(floor -2.5)": "-3",
+        "$(sum 1.5 2.5)": "4",
+    }
+    for template, expected in cases.items():
+        assert _render(frame, template) == [expected] * 2, template
+
+
 def test_msg_ref_context_addressing(spark):
     """eval.c msg_ref: @0 addresses the NEWEST context message, @1 one
     older; out-of-range expands to empty without evaluating."""
