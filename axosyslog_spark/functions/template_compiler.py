@@ -826,12 +826,14 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         if digits == 0:
             return _fmt_num(F.round(_num(args[0].col), 0))
         # fixed-precision render: exactly `digits` decimals, zero-padded
-        # ("$(round 2 20)" prints 2.000... with 20 zeros)
-        return F.when(
-            _num(args[0].col).isNull(), F.lit("NaN")
-        ).otherwise(
-            F.round(_num(args[0].col), digits)
-            .cast(f"decimal(38,{digits})").cast("string")
+        # ("$(round 2 20)" prints 2.000... with 20 zeros); a value the
+        # decimal cannot hold renders as the double's string
+        r = F.round(_num(args[0].col), digits)
+        return F.when(r.isNull(), F.lit("NaN")).otherwise(
+            F.coalesce(
+                r.try_cast(f"decimal(38,{digits})").cast("string"),
+                r.cast("string"),
+            )
         )
     if name in ("ceil", "floor"):
         # Spark's ceil/floor return a bigint that saturates beyond

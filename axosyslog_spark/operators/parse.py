@@ -306,8 +306,8 @@ def format_sdata(sdata: Column) -> Column:
     """Dotted-key SDATA map back to RFC5424 STRUCTURED-DATA text —
     the inverse of parse_sdata: {.SDATA.id.param: v, ...} renders as
     '[id param="v" ...][id2 ...]' with SD-IDs in first-appearance
-    order, or '-' when the map is null/empty. Quote escaping is kept
-    symmetric with parse_sdata (neither escapes; documented subset).
+    order, or '-' when the map is null/empty. A value's '"', '\\' and
+    ']' are backslash-escaped, as parse_sdata unescapes them.
     Cost note: the per-id filter re-walks the entry array — fine for
     SDATA-sized maps (a handful of entries)."""
     entries = F.map_entries(sdata)
@@ -326,7 +326,9 @@ def format_sdata(sdata: Column) -> Column:
                 F.filter(entries, lambda e: kid(e) == i),
                 F.lit(""),
                 lambda acc, e: F.concat(
-                    acc, F.lit(" "), kparam(e), F.lit('="'), e["value"], F.lit('"')
+                    acc, F.lit(" "), kparam(e), F.lit('="'),
+                    F.regexp_replace(e["value"], r'(["\\\]])', r"\\$1"),
+                    F.lit('"'),
                 ),
             ),
             F.lit("]"),
@@ -368,14 +370,27 @@ def parse_sdata(df: DataFrame, sd_col: str, out_col: str = "sdata") -> DataFrame
     `{.SDATA.id.k: v, .SDATA.id.k2: v2, .SDATA.id2: ""}`: a value may
     be quoted or unquoted and is everything after the param's first
     '='; a bare SD-ID is stored with an empty value. '-', NULL or a
-    string with no [...] block gives an empty map. A param repeated
-    inside a block keeps its last value (entries_to_map; the
-    reference's nv-table overwrites). Pure column algebra: nested
-    regexp_extract_all + transform.
+    string with no [...] block gives an empty map. Inside a quoted
+    value the RFC5424 escapes \\" \\\\ and \\] are part of the value and
+    are unescaped; an unquoted value holds no quote, space or ']'. A
+    param repeated inside a block keeps its last value
+    (entries_to_map; the reference's nv-table overwrites). Pure column
+    algebra: nested regexp_extract_all + transform.
     """
     src = F.col(sd_col)
-    blocks = F.regexp_extract_all(src, F.lit(r"\[([^\]]+)\]"), 1)
-    param_re = r'([\w.@-]+)=(?:"[^"]*"|[^\s\]]+)'
+    quoted = r'"(?:\\.|[^"\\])*"'
+    blocks = F.regexp_extract_all(
+        src, F.lit(r"\[((?:" + quoted + r'|[^\]"])+)\]'), 1
+    )
+    param_re = r"([\w.@-]+)=(?:" + quoted + r'|[^\s\]"]+)'
+
+    def sd_value(v: Column) -> Column:
+        return F.when(
+            v.startswith('"'),
+            F.regexp_replace(
+                F.regexp_extract(v, '^"(.*)"$', 1), r'\\(["\\\]])', "$1"
+            ),
+        ).otherwise(v)
 
     def block_entries(b: Column) -> Column:
         params = F.transform(
@@ -387,9 +402,7 @@ def parse_sdata(df: DataFrame, sd_col: str, out_col: str = "sdata") -> DataFrame
                     F.lit("."),
                     F.substring_index(p, "=", 1),
                 ).alias("key"),
-                F.regexp_replace(
-                    F.regexp_replace(p, r"^[\w.@-]+=", ""), '^"(.*)"$', "$1"
-                ).alias("value"),
+                sd_value(F.regexp_replace(p, r"^[\w.@-]+=", "")).alias("value"),
             ),
         )
         bare = F.struct(

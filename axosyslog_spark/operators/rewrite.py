@@ -173,14 +173,12 @@ _GUESS_TIMEZONE_CANDIDATES = [
 ]
 
 
-def guessed_zone(
-    stamp: Column, recvd: Column, candidate_tzs: list[str] | None = None
-) -> Column:
+def guessed_zone(stamp: Column, recvd: Column) -> Column:
     """The candidate zone whose UTC reinterpretation of the (naively
     parsed) stamp lands closest to the receive time: one |delta| per
     candidate and an argmin when-chain. The first zone in list order
     wins ties, and is the answer when either stamp is NULL."""
-    tzs = candidate_tzs or _GUESS_TIMEZONE_CANDIDATES
+    tzs = _GUESS_TIMEZONE_CANDIDATES
     deltas = {
         tz: F.abs(
             F.unix_timestamp(F.to_utc_timestamp(stamp, tz))
@@ -199,7 +197,6 @@ def guess_timezone(
     df: DataFrame,
     ts_col: str,
     recvd_col: str,
-    candidate_tzs: list[str] | None = None,
     out_col: str = "guessed_tz",
 ) -> DataFrame:
     """guess-timezone() — modules/timestamp/rewrite-guess-timezone.c:
@@ -207,7 +204,7 @@ def guess_timezone(
     ``<ts_col>_fixed`` is the stamp reinterpreted in it, all in one
     projection."""
     out = df.withColumn(
-        out_col, guessed_zone(F.col(ts_col), F.col(recvd_col), candidate_tzs)
+        out_col, guessed_zone(F.col(ts_col), F.col(recvd_col))
     )
     return out.withColumn(
         ts_col + "_fixed",
@@ -261,9 +258,7 @@ def apply_key_transforms(key: str, transforms: list[tuple]) -> str:
 
 
 def value_pairs(
-    args: Sequence[str],
-    names: Iterable[str],
-    transforms: Sequence[tuple] = (),
+    args: Sequence[str], names: Iterable[str]
 ) -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
     """The value-pairs selector (lib/value-pairs/value-pairs.c
     value_pairs_new_from_cmdline): parse an option list, then select
@@ -275,8 +270,7 @@ def value_pairs(
       GLOB                    a bare word selects like --key
       --add-prefix P, --replace-prefix OLD=NEW, --shift N,
       --shift-levels N, --upper, --lower
-                              the rekey chain (apply_key_transforms),
-                              run before ``transforms``
+                              the rekey chain (apply_key_transforms)
       --omit-empty-values     accepted; NULL values drop already
       k=v                     an explicit pair, returned unparsed
 
@@ -328,7 +322,6 @@ def value_pairs(
             globs.append(arg)
     globs = [g.lower() for g in globs]
     excludes = [g.lower() for g in excludes]
-    chain += transforms
     selected = [
         (apply_key_transforms(n, chain), n)
         for n in names
@@ -354,8 +347,13 @@ def value_pairs_select(
         args += ["--scope", scope]
     for g in exclude_globs or []:
         args += ["--exclude", g]
-    selected, _ = value_pairs(args, df.columns, transforms or ())
-    return df.select(*[F.col(n).alias(k) for k, n in selected])
+    selected, _ = value_pairs(args, df.columns)
+    return df.select(
+        *[
+            F.col(n).alias(apply_key_transforms(k, transforms or []))
+            for k, n in selected
+        ]
+    )
 
 
 def value_pairs_rekey_map(

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from axosyslog_spark.operators.enrich import enrich_with_context_db, load_context_db
-from axosyslog_spark.operators.parse import parse_sdata
+from axosyslog_spark.operators.parse import format_sdata, parse_sdata
 
 
 def test_parse_sdata(spark):
@@ -27,11 +27,27 @@ def test_parse_sdata(spark):
 
 def test_sdata_escaped_value_chars(spark):
     df = spark.createDataFrame(
-        [(0, '[m k="a b c" n="x=y"]')], "id int, sd string"
+        [
+            (0, '[m k="a b c" n="x=y"]'),
+            # RFC5424 PARAM-VALUE escapes \" \\ \] unescape into the value
+            (1, r'[id msg="a \"b=c\"" p="x\]y\\z"][id2 q=1]'),
+        ],
+        "id int, sd string",
     )
-    got = parse_sdata(df, "sd").collect()[0].sdata
-    assert got[".SDATA.m.k"] == "a b c"
-    assert got[".SDATA.m.n"] == "x=y"
+    got = {r.id: r.sdata for r in parse_sdata(df, "sd").collect()}
+    assert got[0][".SDATA.m.k"] == "a b c"
+    assert got[0][".SDATA.m.n"] == "x=y"
+    assert got[1] == {
+        ".SDATA.id.msg": 'a "b=c"',
+        ".SDATA.id.p": "x]y\\z",
+        ".SDATA.id2.q": "1",
+    }
+    # format_sdata escapes what parse_sdata unescapes: the map round-trips
+    rendered = parse_sdata(df, "sd").select(
+        "id", format_sdata(F.col("sdata")).alias("sd")
+    )
+    again = {r.id: r.sdata for r in parse_sdata(rendered, "sd").collect()}
+    assert again == got
 
 
 def _db(spark, tmp_path):

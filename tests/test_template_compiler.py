@@ -484,6 +484,9 @@ def test_numeric_results_beyond_bigint_render_as_doubles(frame):
         "$(sum 1e30 1)": "1.0E30",
         "$(max 1e30 2)": "1.0E30",
         "$(round 1e30)": "1.0E30",
+        "$(round 1e37 2)": "1.0E37",
+        "$(round 1e19 20)": "1.0E19",
+        "$(round 2 3)": "2.000",
         "$(* 1e20 1e20)": "1.0E40",
         "$(average 1e300 1e300)": "1.0E300",
         "$(ceil 1e30)": "1.0E30",
