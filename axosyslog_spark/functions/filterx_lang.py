@@ -66,10 +66,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.csvparse import CsvColumn, CsvSpec, csv_columns, csv_tokens
 from axosyslog_spark.operators.dateparse import parse_date, strftime_to_spark
+from axosyslog_spark.operators.jsonflatten import flatten_json_column
 
 
 class FilterXSyntaxError(ValueError):
@@ -1477,8 +1479,6 @@ def _FUNCS_DISPATCH(
     if fn == "flatten":
         # our open-schema dict is map<string,string> (already flat); a
         # JSON-string arg flattens through the dotted-key flattener
-        from axosyslog_spark.operators.jsonflatten import flatten_json_column
-
         return flatten_json_column(one)
     # --- timezone family (lib/filterx/func-*timezone*.c; same
     #     semantics as the rewrite-step operators in rewrite.py) ---
@@ -1492,12 +1492,7 @@ def _FUNCS_DISPATCH(
     if fn in ("parse_cef", "parse_leef", "format_cef", "format_leef"):
         from axosyslog_spark.operators import cef
 
-        return {
-            "parse_cef": cef.parse_cef_fx,
-            "parse_leef": cef.parse_leef_fx,
-            "format_cef": cef.format_cef_fx,
-            "format_leef": cef.format_leef_fx,
-        }[fn](one)
+        return getattr(cef, f"{fn}_fx")(one)
     # modules/xml: parse_xml / parse_windows_eventlog_xml / format_xml
     if fn == "parse_xml":
         from axosyslog_spark.operators.xmlparse import xml_flatten_col
@@ -1520,18 +1515,18 @@ def _FUNCS_DISPATCH(
 
         return format_windows_eventlog_xml_fx(one)
     # modules/csvparser filterx-func-parse-csv.c: with a columns list a
-    # dict comes back (quote-aware via from_csv); without columns a
-    # plain delimiter split list (quote handling needs the fixed-arity
-    # schema, documented subset)
+    # dict of the present columns, without one the list of every field;
+    # both quote-aware, through csv-parser's own field extraction
     if fn == "parse_csv":
         cols = raws[1] if len(raws) > 1 and raws[1] else None
         delim = raws[2] if len(raws) > 2 and raws[2] else ","
         if cols is None:
-            return F.split(one, re.escape(delim))
+            return csv_tokens(one, CsvSpec((), delimiter=delim))
         names = [c.strip() for c in cols.split(",")]
-        schema = ", ".join(f"`{n}` string" for n in names)
-        struct = F.from_csv(one, schema, {"sep": delim})
-        return F.from_json(F.to_json(struct), "map<string,string>")
+        spec = CsvSpec(tuple(map(CsvColumn, names)), delimiter=delim, drop_invalid=False)
+        vals, _ = csv_columns(one, spec)
+        m = F.map_from_arrays(F.array(*map(F.lit, names)), F.array(*vals))
+        return F.map_filter(m, lambda _k, v: v.isNotNull())
     # modules/csvparser filterx-func-format-csv.c: list or dict values
     # joined with the delimiter
     if fn == "format_csv":
@@ -1552,18 +1547,13 @@ def _FUNCS_DISPATCH(
         import json as _json
 
         with open(_need_raw(fn, raws, 0)) as fh:
-            data = _json.load(fh)
-        if not isinstance(data, dict):
+            text = fh.read()
+        if not isinstance(_json.loads(text), dict):
             raise FilterXSyntaxError("cache_json_file: top level must be a dict")
-        flat: dict[str, str] = {}
-        for k, v in data.items():
-            if isinstance(v, dict):
-                for k2, v2 in v.items():
-                    flat[f"{k}.{k2}"] = str(v2)
-            else:
-                flat[k] = str(v)
-        pairs = [x for kv in flat.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
-        return F.create_map(*pairs)
+        # json-parser's flatten rules, run once here; the result is inlined
+        flat = SparkSession.active().range(1).select(flatten_json_column(F.lit(text)))
+        pairs = [(F.lit(k), F.lit(v).cast("string")) for k, v in flat.first()[0].items()]
+        return F.create_map(*[x for kv in pairs for x in kv])
     # --- digest (lib/filterx/func-digest.c): digest(input, alg="sha256") ---
     if fn == "digest":
         alg = (

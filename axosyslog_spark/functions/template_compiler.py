@@ -446,22 +446,26 @@ def _arith(op: str, args: list[Arg]) -> Column:
     """$(+ a b) family — numeric-funcs.c: gint64 arithmetic when BOTH
     operands parse as integers, double arithmetic (incl. '.25' and
     '5e-1' forms) when they only parse as doubles; 'NaN' on parse
-    failure AND on division/modulo by zero; integer division
-    truncates; double results render without a trailing .0."""
+    failure, on division/modulo by zero AND on gint64 overflow (the
+    try_ forms; plain ANSI bigint arithmetic would abort the job);
+    integer division truncates; double results render without a
+    trailing .0."""
     sa, sb = args[0].col.cast("string"), args[1].col.cast("string")
     ia, ib = sa.try_cast("bigint"), sb.try_cast("bigint")
     da, db = sa.try_cast("double"), sb.try_cast("double")
     int_mode = ia.isNotNull() & ib.isNotNull()
 
     if op == "+":
-        ri, rd = ia + ib, da + db
+        ri, rd = F.try_add(ia, ib), da + db
     elif op == "-":
-        ri, rd = ia - ib, da - db
+        ri, rd = F.try_subtract(ia, ib), da - db
     elif op == "*":
-        ri, rd = ia * ib, da * db
+        ri, rd = F.try_multiply(ia, ib), da * db
     elif op == "/":
-        # gint64 division truncates toward zero (numeric-funcs.c)
-        ri = F.when(ib != 0, F.try_divide(ia, ib).cast("bigint"))
+        # exact gint64 division, truncating toward zero; MIN / -1
+        # overflows
+        fits = (ib != 0) & ~((ia == -(2**63)) & (ib == -1))
+        ri = F.when(fits, F.call_function("div", ia, ib))
         rd = F.when(db != 0.0, F.try_divide(da, db))
     else:  # % — fmod() in double mode
         ri = F.when(ib != 0, ia % ib)

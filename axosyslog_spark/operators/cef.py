@@ -1,17 +1,17 @@
 """CEF / LEEF event-format parsers.
 
-Reference: modules/cef/filterx-func-parse-cef.c + event-format-parser.c
-(header fields split on a dialect separator with \\-escapes, then an
-extension section of key=value pairs).
+Reference: modules/cef/filterx-func-parse-cef.c, filterx-func-parse-leef.c,
+event-format-parser.c.
 
 CEF:  CEF:version|vendor|product|device_version|event_class|name|severity|ext
-LEEF: LEEF:version|vendor|product|firmware|event_id|ext(tab- or |-separated)
+LEEF: LEEF:1.0|vendor|product|version|event_id|ext (tab-separated)
+      LEEF:2.0|vendor|product|version|event_id|delimiter|ext
 
-Spark mapping: bounded split for the header (7 fields + greedy
-extension), a dup-safe split+fold for extensions — single projection.
-(str_to_map / map_from_entries / map_concat all abort the job on a
-duplicate key under Spark's default mapKeyDedupPolicy=EXCEPTION; the
-reference parser overwrites — last occurrence wins.)
+Each format is parsed once (``_cef``, ``_leef``, over the one header
+tokenizer ``_fields``); the DataFrame operators and the FilterX
+builtins are two projections of that parse (``_frame``, ``_fx_map``).
+Extension entries fold through kvscan.entries_to_map: the last
+occurrence of a key wins, where map_from_entries would abort the job.
 """
 
 from __future__ import annotations
@@ -19,63 +19,128 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators.kvscan import entries_to_map
+from axosyslog_spark.operators.kvscan import entries_to_map, kv_scan
+
+# In-band markers for an escaped backslash / an escaped pipe while the
+# header is split. Same contract as kvscan._BS: a literal STX/ETX byte
+# is stripped from the input first, so it cannot forge an escape.
+_ESC_BS, _ESC_PIPE = "\x02", "\x03"
+
+
+def _fields(src: Column, sig: str, n: int) -> Column:
+    """The one header tokenizer: the text after ``sig`` split on its
+    first n-1 unescaped '|' ('\\|' is a pipe, '\\\\' a backslash), at
+    most n fields that still hold the escape markers; NULL unless src
+    starts with sig."""
+    body = F.regexp_replace(F.substr(src, F.lit(len(sig) + 1)), r"[\x02\x03]", "")
+    body = F.regexp_replace(body, r"\\\\", _ESC_BS)
+    body = F.regexp_replace(body, r"\\\|", _ESC_PIPE)
+    return F.when(src.startswith(sig), F.split(body, r"\|", n))
+
+
+def _field(fields: Column, i: int) -> Column:
+    """Header field i (1-based), unescaped; NULL past the end, so a
+    short or foreign line is "not this format", never a job abort."""
+    f = F.try_element_at(fields, F.lit(i))
+    return F.replace(F.replace(f, F.lit(_ESC_PIPE), F.lit("|")), F.lit(_ESC_BS), F.lit("\\"))
+
+
+def _raw(f: Column) -> Column:
+    """A tokenizer field as written (the extension)."""
+    f = F.replace(f, F.lit(_ESC_PIPE), F.lit("\\|"))
+    return F.replace(f, F.lit(_ESC_BS), F.lit("\\\\"))
 
 
 def _ext_entries(ext: Column, pair_re: Column) -> Column:
-    """Extension section -> array<struct<key,value>>: split on the
-    pair delimiter regex, first '=' separates key from value (no '='
-    -> NULL value, like str_to_map), empty tokens dropped."""
-    toks = F.filter(F.split(ext, pair_re), lambda t: t != "")
+    """LEEF extension -> array<struct<key,value>>: split on the pair
+    delimiter regex, the first '=' separates key from value (no '=' ->
+    NULL value), empty tokens dropped."""
+    toks = F.transform(
+        F.filter(F.split(ext, pair_re), lambda t: t != ""), lambda t: F.split(t, "=", 2)
+    )
     return F.transform(
         toks,
-        lambda t: F.struct(
-            F.substring_index(t, "=", 1).alias("key"),
-            F.when(
-                t.contains("="),
-                F.substring(
-                    t,
-                    F.length(F.substring_index(t, "=", 1)) + 2,
-                    F.lit(2_000_000_000),
-                ),
-            ).alias("value"),
+        lambda kv: F.struct(
+            kv[0].alias("key"), F.try_element_at(kv, F.lit(2)).alias("value")
         ),
     )
+
+
+def _cef(src: Column) -> tuple[Column, list[Column], Column]:
+    """The one CEF parse: (ok, the 7 header values, extension entries).
+    The extension goes through the kv-scanner (filterx-func-parse-cef.c
+    cef_cfg): an unquoted value absorbs following words without '='."""
+    f = _fields(src, "CEF:", 8)
+    ok = src.startswith("CEF:") & (F.size(f) >= 8)
+    pairs = kv_scan(_raw(F.try_element_at(f, F.lit(8))))
+    ext = F.transform(pairs, lambda p: p.dropFields("was_quoted"))
+    return ok, [_field(f, i) for i in range(1, 8)], ext
+
+
+def _leef(src: Column) -> tuple[Column, list[Column], Column]:
+    """The one LEEF parse: (ok, the 5 header values, extension
+    entries). LEEF 1.0 separates extensions with a tab; LEEF 2.0 names
+    its delimiter in an extra header field: a literal char, 'x26' or
+    '0x26' hex, or empty for tab (filterx-func-parse-leef.c:43-76)."""
+    f = _fields(src, "LEEF:", 7)
+    hdr = [_field(f, i) for i in range(1, 6)]
+    is20 = hdr[0].startswith("2.")
+    d = _field(f, 6)
+    hexpart = F.regexp_extract(d, r"^(?:0[xX]|[xX])([0-9A-Fa-f]{2})$", 1)
+    delim = (
+        F.when(d == "", F.lit("\t"))
+        .when(hexpart != "", F.char(F.conv(hexpart, 16, 10).cast("int")))
+        .when(F.length(d) == 1, d)
+    )
+    ok = src.startswith("LEEF:") & (
+        (is20 & (F.size(f) >= 7) & delim.isNotNull())
+        | (~is20 & (F.size(f) >= 6))
+    )
+    # 1.0: everything after the 5th pipe is the extension
+    ext = F.when(is20, F.try_element_at(f, F.lit(7))).otherwise(
+        F.array_join(F.slice(f, 6, 2), "|")
+    )
+    pair_re = F.when(is20, F.concat(F.lit(r"\Q"), delim, F.lit(r"\E"))).otherwise(
+        F.lit("\t")
+    )
+    return ok, hdr, _ext_entries(_raw(ext), pair_re)
+
+
+def _frame(df: DataFrame, fmt: str, names: tuple, parsed: tuple) -> DataFrame:
+    """DataFrame projection: ``<fmt>_ok``, the header columns and the
+    ``<fmt>_ext`` map; NULLs when the row is not this format."""
+    ok, hdr, ext = parsed
+    cols = {n: F.when(ok, v) for n, v in zip(names, hdr)}
+    ext_map = F.when(ok, entries_to_map(ext))
+    return df.withColumns({f"{fmt}_ok": ok, **cols, f"{fmt}_ext": ext_map})
+
+
+def _fx_map(names: tuple, parsed: tuple) -> Column:
+    """FilterX projection: one map of header + extension entries (an
+    extension key overwrites a same-named header key); NULL when the
+    row is not this format."""
+    ok, hdr, ext = parsed
+    entries = F.array(
+        *[F.struct(F.lit(n).alias("key"), v.alias("value")) for n, v in zip(names, hdr)]
+    )
+    return F.when(ok, entries_to_map(F.concat(entries, ext)))
+
 
 CEF_HEADER_FIELDS = (
     "cef_version", "vendor", "product", "device_version",
     "event_class", "event_name", "cef_severity",
 )
+LEEF_HEADER_FIELDS = ("leef_version", "vendor", "product", "firmware", "event_id")
 
 
-def parse_cef(df: DataFrame, src_col: str = "text", prefix: str = "") -> DataFrame:
+def parse_cef(df: DataFrame, src_col: str = "text") -> DataFrame:
     """Parse CEF lines; non-CEF rows get nulls + cef_ok=false."""
-    src = F.col(src_col)
-    is_cef = src.startswith("CEF:")
-    parts = F.split(F.regexp_replace(src, "^CEF:", ""), r"(?<!\\)\|", 8)
-    out = df.withColumn(f"{prefix}cef_ok", is_cef & (F.size(parts) >= 8))
-    for i, name in enumerate(CEF_HEADER_FIELDS):
-        val = F.when(F.col(f"{prefix}cef_ok"), F.element_at(parts, i + 1))
-        out = out.withColumn(prefix + name, F.regexp_replace(val, r"\\([|\\])", "$1"))
-    ext = F.when(F.col(f"{prefix}cef_ok"), F.element_at(parts, 8))
-    return out.withColumn(
-        f"{prefix}cef_ext", entries_to_map(_ext_entries(ext, F.lit(" ")))
-    )
+    return _frame(df, "cef", CEF_HEADER_FIELDS, _cef(F.col(src_col)))
 
 
-def parse_leef(df: DataFrame, src_col: str = "text", prefix: str = "") -> DataFrame:
-    """Parse LEEF 1.0/2.0 lines (tab-separated extension)."""
-    src = F.col(src_col)
-    is_leef = src.startswith("LEEF:")
-    parts = F.split(F.regexp_replace(src, "^LEEF:", ""), r"(?<!\\)\|", 6)
-    out = df.withColumn(f"{prefix}leef_ok", is_leef & (F.size(parts) >= 6))
-    for i, name in enumerate(("leef_version", "vendor", "product", "firmware", "event_id")):
-        val = F.when(F.col(f"{prefix}leef_ok"), F.element_at(parts, i + 1))
-        out = out.withColumn(prefix + name, val)
-    ext = F.when(F.col(f"{prefix}leef_ok"), F.element_at(parts, 6))
-    return out.withColumn(
-        f"{prefix}leef_ext", entries_to_map(_ext_entries(ext, F.lit("\t")))
-    )
+def parse_leef(df: DataFrame, src_col: str = "text") -> DataFrame:
+    """Parse LEEF 1.0/2.0 lines; non-LEEF rows get nulls + leef_ok=false."""
+    return _frame(df, "leef", LEEF_HEADER_FIELDS, _leef(F.col(src_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -97,80 +162,16 @@ LEEF_FX_FIELDS = (
 )
 
 
-def _unescape_hdr(c: Column) -> Column:
-    return F.regexp_replace(c, r"\\([|\\])", "$1")
-
-
 def parse_cef_fx(src: Column) -> Column:
-    """filterx parse_cef(): one map<string,string> of the 7 header
-    fields + the space-separated extension k=v pairs (values absorb
-    following words without '=', per the kv-scanner config in
-    filterx-func-parse-cef.c cef_cfg). NULL when not a CEF line."""
-    from axosyslog_spark.operators.kvscan import kv_scan
-
-    is_cef = src.startswith("CEF:")
-    parts = F.split(F.regexp_replace(src, "^CEF:", ""), r"(?<!\\)\|", 8)
-    hdr = F.array(
-        *[
-            F.struct(
-                F.lit(n).alias("key"),
-                _unescape_hdr(F.element_at(parts, i + 1)).alias("value"),
-            )
-            for i, n in enumerate(CEF_FX_FIELDS)
-        ]
-    )
-    pairs = kv_scan(F.element_at(parts, 8))
-    ext = F.transform(
-        pairs,
-        lambda p: F.struct(p["key"].alias("key"), p["value"].alias("value")),
-    )
-    # single last-wins fold over header+extension entries: an
-    # extension key that collides with a header name overwrites it
-    # (dict-insert order in the filterx builtin), and duplicate
-    # extension keys don't abort the job
-    return F.when(
-        is_cef & (F.size(parts) >= 8), entries_to_map(F.concat(hdr, ext))
-    )
+    """filterx parse_cef(): the 7 header fields + the extension pairs
+    as one map<string,string>. NULL when not a CEF line."""
+    return _fx_map(CEF_FX_FIELDS, _cef(src))
 
 
 def parse_leef_fx(src: Column) -> Column:
-    """filterx parse_leef(): LEEF 1.0 (tab-separated extensions) and
-    2.0 (explicit delimiter header field — literal char, 'x26' or
-    '0x26' hex forms, filterx-func-parse-leef.c:43-76). NULL when not
-    a LEEF line."""
-    is_leef = src.startswith("LEEF:")
-    body = F.regexp_replace(src, "^LEEF:", "")
-    p1 = F.split(body, r"(?<!\\)\|", 6)  # 1.0: ext is field 6
-    p2 = F.split(body, r"(?<!\\)\|", 7)  # 2.0: delim field 6, ext 7
-    ver = F.element_at(p1, 1)
-    is20 = ver.startswith("2.")
-    delim_raw = F.element_at(p2, 6)
-    hexpart = F.regexp_extract(delim_raw, r"^(?:0[xX]|[xX])([0-9A-Fa-f]{2})$", 1)
-    delim = (
-        F.when(delim_raw == "", F.lit("\t"))
-        .when(hexpart != "", F.char(F.conv(hexpart, 16, 10).cast("int")))
-        .when(F.length(delim_raw) == 1, delim_raw)
-    )
-    ext_raw = F.when(is20, F.element_at(p2, 7)).otherwise(F.element_at(p1, 6))
-    pair_re = F.when(is20, F.concat(F.lit(r"\Q"), delim, F.lit(r"\E"))).otherwise(
-        F.lit("\t")
-    )
-    hdr = F.array(
-        *[
-            F.struct(
-                F.lit(n).alias("key"),
-                _unescape_hdr(F.element_at(p2, i + 1)).alias("value"),
-            )
-            for i, n in enumerate(LEEF_FX_FIELDS)
-        ]
-    )
-    ok = is_leef & (
-        (is20 & (F.size(p2) >= 7) & delim.isNotNull())
-        | (~is20 & (F.size(p1) >= 6))
-    )
-    return F.when(
-        ok, entries_to_map(F.concat(hdr, _ext_entries(ext_raw, pair_re)))
-    )
+    """filterx parse_leef(): the 5 header fields + the extension pairs
+    as one map<string,string>. NULL when not a LEEF line."""
+    return _fx_map(LEEF_FX_FIELDS, _leef(src))
 
 
 def _escape_hdr(c: Column) -> Column:

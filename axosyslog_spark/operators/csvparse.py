@@ -6,12 +6,16 @@ csvparser.h:30-41), delimiters, quote pairs, null-value, greedy
 (last column swallows the rest), strip-whitespace, drop-invalid
 (row must fill every column unless greedy).
 
-Spark mapping: `from_csv` where the dialect allows (quoted fields),
-else a bounded `split` — both single-pass projections.
+Spark mapping: `csv_columns` is the one field extraction, behind
+csv_parse and FilterX parse_csv(): `from_csv` where the dialect allows
+(quoted fields), else a bounded `split` — both single-pass
+projections. `csv_tokens` lists every field when there is no column
+list (FilterX parse_csv(text)).
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -61,34 +65,44 @@ class CsvSpec:
 def csv_parse(df: DataFrame, spec: CsvSpec, src_col: str = "text") -> DataFrame:
     """Apply the csv spec; adds one column per spec column plus
     ``csv_ok`` (the drop-invalid signal — filter on it to drop)."""
-    src = F.col(src_col)
+    vals, ok = csv_columns(F.col(src_col), spec)
+    cols = {spec.prefix + c.name: v for c, v in zip(spec.columns, vals)}
+    return df.withColumns({**cols, "csv_ok": ok})
+
+
+def csv_columns(src: Column, spec: CsvSpec) -> tuple[list[Column], Column]:
+    """The one field extraction: (one value per spec column, ok). ok is
+    the drop-invalid verdict (always true without drop_invalid); a
+    missing column is NULL."""
     n = len(spec.columns)
 
     custom = bool(spec.quotes or spec.quote_pairs or spec.delimiter_strings)
     if spec.quote and not spec.greedy and not custom:
-        # quoted dialect -> from_csv handles embedded delimiters
-        schema = ", ".join(f"`{c.name}` STRING" for c in spec.columns)
-        opts = {"sep": spec.delimiter, "quote": spec.quote or '"'}
+        # quoted dialect -> from_csv handles embedded delimiters; under
+        # drop_invalid one extra sentinel column catches a long row
+        width = n + 1 if spec.drop_invalid else n
+        schema = ", ".join(f"_{i} STRING" for i in range(width))
+        opts = {"sep": spec.delimiter, "quote": spec.quote}
         if spec.escape is not None:
             opts["escape"] = spec.escape
         # null-value handling stays in _post (nullif): a field that
         # carries the null TOKEN is a legal row — only a truly missing
-        # column may fail the drop-invalid check below
+        # column (or a filled sentinel) fails the drop-invalid check
         parsed = F.from_csv(src, F.lit(schema), opts)
+        vals = [parsed[f"_{i}"] for i in range(width)]
         ok = F.lit(True)
-        for i, c in enumerate(spec.columns):
-            val = parsed[c.name]
-            if i < n - 1 or spec.drop_invalid:
-                ok = ok & val.isNotNull()
-            df = df.withColumn(spec.prefix + c.name, _post(val, c, spec))
-        return df.withColumn("csv_ok", ok if spec.drop_invalid else F.lit(True))
+        if spec.drop_invalid:
+            ok = vals.pop().isNull()
+            for v in vals:
+                ok = ok & v.isNotNull()
+        return [_post(v, c, spec) for v, c in zip(vals, spec.columns)], ok
 
     # plain split dialect (optionally greedy)
     limit = n if spec.greedy else -1
     if spec.delimiter_strings:
-        sep = "|".join(_escape(s) for s in spec.delimiter_strings)
+        sep = "|".join(re.escape(s) for s in spec.delimiter_strings)
     else:
-        sep = _escape(spec.delimiter)
+        sep = re.escape(spec.delimiter)
     if spec.dialect == "escape-unquoted-delimiter":
         # csv-scanner.c CSV_SCANNER_ESCAPE_UNQUOTED_DELIMITER: a
         # backslash protects ONLY the delimiter in unquoted fields
@@ -107,15 +121,27 @@ def csv_parse(df: DataFrame, spec: CsvSpec, src_col: str = "text") -> DataFrame:
     # the scanner discards BOTH short and long rows (greedy's limit
     # already caps size at n, so == is the one check for both modes)
     ok = F.size(parts) == n if spec.drop_invalid else F.lit(True)
+    vals = []
     for i, c in enumerate(spec.columns):
-        val = F.when(F.size(parts) > i, F.element_at(parts, i + 1))
-        val = _unquote(val, spec)
+        val = _unquote(F.try_element_at(parts, F.lit(i + 1)), spec)
         posted = _post(val, c, spec)
         if spec.drop_invalid and c.cast:
             # type-hint mismatch discards the row (on-type-error(drop))
             ok = ok & (val.isNull() | posted.isNotNull())
-        df = df.withColumn(spec.prefix + c.name, posted)
-    return df.withColumn("csv_ok", ok)
+        vals.append(posted)
+    return vals, ok
+
+
+def csv_tokens(src: Column, spec: CsvSpec) -> Column:
+    """Every field of the line as array<string> (no column list): a
+    field wrapped in the spec's quote, followed by a delimiter or the
+    end, may hold delimiters; quotes are stripped and the escape
+    dialect decoded like a column value."""
+    d = re.escape(spec.delimiter)
+    q = re.escape(spec.quote)
+    field = rf"{q}(?:\\.|[^{q}\\])*{q}(?={d}|$)|(?:(?!{d}).)*"
+    toks = F.regexp_extract_all(src, F.lit(rf"(?s)(?:^|{d})({field})"), 1)
+    return F.transform(toks, lambda t: _unquote(t, spec))
 
 
 def _quote_pairs(spec: CsvSpec) -> list[tuple[str, str]]:
@@ -171,25 +197,12 @@ def _unquote(val: Column, spec: CsvSpec) -> Column:
     """Strip a configured quote pair off a field and decode the
     dialect's escapes (split path; from_csv handles the default '"'
     dialect natively)."""
-    pairs = _quote_pairs(spec) if (spec.quotes or spec.quote_pairs or spec.quote) else []
-    if not pairs:
-        return val
     out = val
     inner = F.substring(val, 2, F.length(val) - 2)
-    for o, c in reversed(pairs):
-        quoted = (
-            (F.length(val) >= 2)
-            & val.startswith(o)
-            & val.endswith(c)
-        )
+    for o, c in reversed(_quote_pairs(spec)):
+        quoted = (F.length(val) >= 2) & val.startswith(o) & val.endswith(c)
         out = F.when(quoted, _decode_escapes(inner, c, spec.dialect)).otherwise(out)
     return out
-
-
-def _escape(delim: str) -> str:
-    import re
-
-    return re.escape(delim)
 
 
 def _post(val: Column, c: CsvColumn, spec: CsvSpec) -> Column:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators.textstats import normalize_text, tokens
+from axosyslog_spark.operators.textstats import normalize_text, tokens, word_ngrams
 
 
 # ---------------------------------------------------------------------------
@@ -62,22 +62,8 @@ def drop_exact_dups(
 # ---------------------------------------------------------------------------
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a token array.
-
-    Formulated as zip_with over shifted slices — NOT as a transform
-    whose lambda indexes into ``toks`` — because outer expressions
-    referenced inside a higher-order-function lambda are re-evaluated
-    PER ELEMENT: the naive `transform(sequence(...), i ->
-    element_at(toks, i+j))` form re-ran the whole tokenization
-    (3 regex passes over the text) for every shingle, ~75x slower at
-    5k docs. zip_with arguments evaluate once per row.
-    """
-    k = F.size(toks) - (n - 1)
-    parts = [F.slice(toks, j + 1, F.greatest(k, F.lit(0))) for j in range(n)]
-    grams = parts[0]
-    for p in parts[1:]:
-        grams = F.zip_with(grams, p, lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.array_distinct(F.when(k >= 1, grams).otherwise(F.array().cast("array<string>")))
+    """Distinct word n-gram shingles from a token array."""
+    return F.array_distinct(word_ngrams(toks, n))
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -520,8 +506,6 @@ def substring_spans(
     cap like minhash banding applies if a gram is pathologically
     common), then per-pair window + agg. No driver-side loops.
     """
-    from axosyslog_spark.operators.textstats import normalize_text, tokens
-
     toks = df.select(
         F.col(id_col).alias("id"),
         tokens(normalize_text(F.col(text_col))).alias("__toks"),

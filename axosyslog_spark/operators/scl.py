@@ -1545,8 +1545,8 @@ def mariadb_audit_parser(
     real `prefix`serverhost.
 
     The audit plugin's quoted fields ('SELECT ... WHERE 0=1') carry
-    backslash-escaped quotes (\\') — from_csv's backslash escape
-    dialect matches the scanner's escape-backslash flag. drop-invalid
+    backslash-escaped quotes (\\') — the quoted csv dialect's backslash
+    escape matches the scanner's escape-backslash flag. drop-invalid
     surfaces as ``mariadb_ok``: the scanner drops on SHORT COLUMN
     COUNT only (empty fields are legal — CONNECT rows carry empty
     database/object), so ok keys on the LAST column being present

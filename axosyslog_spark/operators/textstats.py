@@ -114,10 +114,12 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _word_ngrams(toks: Column, n: int) -> Column:
-    """NON-distinct word n-grams (zip_with over shifted slices — same
-    per-row-linear shape as dedup.shingles_from_tokens, which wraps
-    this idea with array_distinct for set semantics)."""
+def word_ngrams(toks: Column, n: int) -> Column:
+    """NON-distinct word n-grams of a token array (the one n-gram
+    function; dedup.shingles_from_tokens is its array_distinct). zip_with
+    over shifted slices evaluates ``toks`` once per row; a transform
+    whose lambda indexes into ``toks`` re-ran the whole tokenization
+    per element, ~75x slower at 5k docs."""
     k = F.size(toks) - (n - 1)
     parts = [F.slice(toks, j + 1, F.greatest(k, F.lit(0))) for j in range(n)]
     grams = parts[0]
@@ -165,7 +167,7 @@ def gopher_repetition(
     )
 
     grams = base.select(
-        "id", "__nlen", F.explode(_word_ngrams(F.col("__toks"), n)).alias("gram")
+        "id", "__nlen", F.explode(word_ngrams(F.col("__toks"), n)).alias("gram")
     )
     per_gram = grams.groupBy("id", "__nlen", "gram").agg(
         F.count(F.lit(1)).alias("cnt")

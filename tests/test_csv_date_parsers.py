@@ -27,8 +27,8 @@ def test_csv_quoted_dialect(spark):
 
 def test_csv_drop_invalid(spark):
     spec = CsvSpec(columns=(CsvColumn("a"), CsvColumn("b"), CsvColumn("c")))
-    rows = csv_parse(_df(spark, ["1,2,3", "1,2"]), spec).collect()
-    assert [r.csv_ok for r in rows] == [True, False]
+    rows = csv_parse(_df(spark, ["1,2,3", "1,2", "1,2,3,4"]), spec).collect()
+    assert [r.csv_ok for r in rows] == [True, False, False]
 
 
 def test_csv_greedy_rest(spark):

@@ -164,6 +164,23 @@ def test_cache_json_file_builtin(spark, tmp_path):
     assert [r["owner"] for r in out] == ["unknown", "alice"]
 
 
+def test_cache_json_file_uses_json_parser_rules(spark, tmp_path):
+    """The cached map is json-parser's flatten of the document: every
+    nesting level dotted, JSON scalar text, null stays NULL."""
+    from pyspark.sql import functions as F
+
+    from axosyslog_spark.operators.jsonflatten import flatten_json_column
+
+    doc = '{"a":{"b":{"c":1}},"t":true,"n":null,"l":["x","y"]}'
+    p = tmp_path / "nested.json"
+    p.write_text(doc)
+    df = spark.createDataFrame([("x",)], "s string")
+    got = filterx(df, f'$db = cache_json_file("{p}");').first()["db"]
+    want = df.select(flatten_json_column(F.lit(doc))).first()[0]
+    assert got == want
+    assert got["a.b.c"] == "1" and got["t"] == "true" and got["n"] is None
+
+
 def test_update_metric_counters(spark):
     from axosyslog_spark.functions.filterx_lang import compile_filterx
 

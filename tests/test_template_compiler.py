@@ -210,6 +210,19 @@ def test_render_arithmetic(frame):
     assert _render(frame, "$(/ 7 2)") == ["3", "3"]
     assert _render(frame, "$(% 7 2)") == ["1", "1"]
     assert _render(frame, "$(+ ${HOST} 1)") == ["NaN", "NaN"]
+    # gint64 overflow renders NaN instead of aborting the job, and
+    # integer division stays exact past 2^53
+    for t, want in (
+        ("$(+ 9223372036854775807 1)", "NaN"),
+        ("$(- -9223372036854775808 1)", "NaN"),
+        ("$(* 9223372036854775807 2)", "NaN"),
+        ("$(/ -9223372036854775808 -1)", "NaN"),
+        ("$(+ 9223372036854775806 1)", "9223372036854775807"),
+        ("$(/ 9007199254740993 1)", "9007199254740993"),
+        ("$(/ 9223372036854775807 2)", "4611686018427387903"),
+        ("$(/ -7 2)", "-3"),
+    ):
+        assert _render(frame, t) == [want, want], t
 
 
 def test_render_if_and_or(frame):
