@@ -8,7 +8,7 @@ LEEF: LEEF:1.0|vendor|product|version|event_id|ext (tab-separated)
       LEEF:2.0|vendor|product|version|event_id|delimiter|ext
 
 Each format is parsed once (``_cef``, ``_leef``, over the one header
-tokenizer ``_fields``); the DataFrame operators and the FilterX
+tokenizer ``_header``); the DataFrame operators and the FilterX
 builtins are two projections of that parse (``_frame``, ``_fx_map``).
 Extension entries fold through kvscan.entries_to_map: the last
 occurrence of a key wins, where map_from_entries would abort the job.
@@ -21,34 +21,25 @@ from pyspark.sql import functions as F
 
 from axosyslog_spark.operators.kvscan import entries_to_map, kv_scan
 
-# In-band markers for an escaped backslash / an escaped pipe while the
-# header is split. Same contract as kvscan._BS: a literal STX/ETX byte
-# is stripped from the input first, so it cannot forge an escape.
-_ESC_BS, _ESC_PIPE = "\x02", "\x03"
+# One header field: '\|' (a pipe) and '\\' (a backslash) are escapes;
+# any other character but an unescaped '|' stands for itself. Written
+# as runs between escapes (possessive), so a long field costs Java's
+# regex engine no recursion per character.
+_FIELD = r"[^\\|]*+(?:\\.[^\\|]*+)*+"
 
 
-def _fields(src: Column, sig: str, n: int) -> Column:
-    """The one header tokenizer: the text after ``sig`` split on its
-    first n-1 unescaped '|' ('\\|' is a pipe, '\\\\' a backslash), at
-    most n fields that still hold the escape markers; NULL unless src
-    starts with sig."""
-    body = F.regexp_replace(F.substr(src, F.lit(len(sig) + 1)), r"[\x02\x03]", "")
-    body = F.regexp_replace(body, r"\\\\", _ESC_BS)
-    body = F.regexp_replace(body, r"\\\|", _ESC_PIPE)
-    return F.when(src.startswith(sig), F.split(body, r"\|", n))
-
-
-def _field(fields: Column, i: int) -> Column:
-    """Header field i (1-based), unescaped; NULL past the end, so a
-    short or foreign line is "not this format", never a job abort."""
-    f = F.try_element_at(fields, F.lit(i))
-    return F.replace(F.replace(f, F.lit(_ESC_PIPE), F.lit("|")), F.lit(_ESC_BS), F.lit("\\"))
-
-
-def _raw(f: Column) -> Column:
-    """A tokenizer field as written (the extension)."""
-    f = F.replace(f, F.lit(_ESC_PIPE), F.lit("\\|"))
-    return F.replace(f, F.lit(_ESC_BS), F.lit("\\\\"))
+def _header(body: Column, n: int) -> tuple[Column, Column]:
+    """The one header tokenizer: (the first n '|'-terminated fields of
+    body, unescaped; the text after them, as written). Fewer fields
+    when body holds fewer than n unescaped pipes, so a short or foreign
+    line is "not this format", never a job abort."""
+    cut = rf"(?s)^((?:{_FIELD}\|){{0,{n}}})(.*)"
+    # every match inside the head ends on its pipe: none is empty
+    fields = F.regexp_extract_all(
+        F.regexp_extract(body, cut, 1), F.lit(rf"(?s)({_FIELD})\|"), 1
+    )
+    unescaped = F.transform(fields, lambda f: F.regexp_replace(f, r"\\([\\|])", "$1"))
+    return unescaped, F.regexp_extract(body, cut, 2)
 
 
 def _ext_entries(ext: Column, pair_re: Column) -> Column:
@@ -70,11 +61,10 @@ def _cef(src: Column) -> tuple[Column, list[Column], Column]:
     """The one CEF parse: (ok, the 7 header values, extension entries).
     The extension goes through the kv-scanner (filterx-func-parse-cef.c
     cef_cfg): an unquoted value absorbs following words without '='."""
-    f = _fields(src, "CEF:", 8)
-    ok = src.startswith("CEF:") & (F.size(f) >= 8)
-    pairs = kv_scan(_raw(F.try_element_at(f, F.lit(8))))
-    ext = F.transform(pairs, lambda p: p.dropFields("was_quoted"))
-    return ok, [_field(f, i) for i in range(1, 8)], ext
+    hdr, ext = _header(F.substr(src, F.lit(5)), 7)
+    ok = src.startswith("CEF:") & (F.size(hdr) == 7)
+    pairs = F.transform(kv_scan(ext), lambda p: p.dropFields("was_quoted"))
+    return ok, [F.try_element_at(hdr, F.lit(i)) for i in range(1, 8)], pairs
 
 
 def _leef(src: Column) -> tuple[Column, list[Column], Column]:
@@ -82,28 +72,24 @@ def _leef(src: Column) -> tuple[Column, list[Column], Column]:
     entries). LEEF 1.0 separates extensions with a tab; LEEF 2.0 names
     its delimiter in an extra header field: a literal char, 'x26' or
     '0x26' hex, or empty for tab (filterx-func-parse-leef.c:43-76)."""
-    f = _fields(src, "LEEF:", 7)
-    hdr = [_field(f, i) for i in range(1, 6)]
-    is20 = hdr[0].startswith("2.")
-    d = _field(f, 6)
+    hdr, rest = _header(F.substr(src, F.lit(6)), 5)
+    vals = [F.try_element_at(hdr, F.lit(i)) for i in range(1, 6)]
+    is20 = vals[0].startswith("2.")
+    dfield, ext20 = _header(rest, 1)
+    d = F.try_element_at(dfield, F.lit(1))
     hexpart = F.regexp_extract(d, r"^(?:0[xX]|[xX])([0-9A-Fa-f]{2})$", 1)
     delim = (
         F.when(d == "", F.lit("\t"))
         .when(hexpart != "", F.char(F.conv(hexpart, 16, 10).cast("int")))
         .when(F.length(d) == 1, d)
     )
-    ok = src.startswith("LEEF:") & (
-        (is20 & (F.size(f) >= 7) & delim.isNotNull())
-        | (~is20 & (F.size(f) >= 6))
-    )
+    ok = src.startswith("LEEF:") & (F.size(hdr) == 5) & (~is20 | delim.isNotNull())
     # 1.0: everything after the 5th pipe is the extension
-    ext = F.when(is20, F.try_element_at(f, F.lit(7))).otherwise(
-        F.array_join(F.slice(f, 6, 2), "|")
-    )
+    ext = F.when(is20, ext20).otherwise(rest)
     pair_re = F.when(is20, F.concat(F.lit(r"\Q"), delim, F.lit(r"\E"))).otherwise(
         F.lit("\t")
     )
-    return ok, hdr, _ext_entries(_raw(ext), pair_re)
+    return ok, vals, _ext_entries(ext, pair_re)
 
 
 def _frame(df: DataFrame, fmt: str, names: tuple, parsed: tuple) -> DataFrame:

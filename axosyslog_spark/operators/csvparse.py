@@ -6,17 +6,18 @@ csvparser.h:30-41), delimiters, quote pairs, null-value, greedy
 (last column swallows the rest), strip-whitespace, drop-invalid
 (row must fill every column unless greedy).
 
-Spark mapping: `csv_columns` is the one field extraction, behind
-csv_parse and FilterX parse_csv(): `from_csv` where the dialect allows
-(quoted fields), else a bounded `split` — both single-pass
-projections. `csv_tokens` lists every field when there is no column
-list (FilterX parse_csv(text)).
+Spark mapping: `_fields` is the one field tokenizer (one
+`regexp_extract_all` whose field regex knows the quote pairs, escape
+dialect and delimiters; a bounded `split` under greedy). `csv_columns`
+reads the spec's columns from it, behind csv_parse and FilterX
+parse_csv(text, columns); `csv_tokens` lists every field, behind
+FilterX parse_csv(text).
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,26 +40,19 @@ class CsvSpec:
     drop_invalid: bool = True     # parse_ok=False when the column count
     # mismatches (short OR long, like the scanner) or a type hint fails
     prefix: str = ""
-    # dialect (csv-scanner.c CSVScannerDialect): the in-quote escape
-    # character. None keeps the scanner's backslash default
-    # (escape-backslash); pass the quote char itself for the
-    # escape-double-char dialect (doubled quotes inside a quoted field).
-    escape: str | None = None
     # csv-scanner quoting breadth (functional-suite options):
     #   quotes("~^")      — a SET of symmetric quote characters
     #   quote-pairs("><") — consecutive (open, close) character pairs
-    # Fields wrapped in a configured pair are unwrapped and their
-    # escape dialect decoded. (Embedded delimiters inside such quotes
-    # need the from_csv fast path — the default '"' dialect; the pair
-    # path is the split dialect, documented bounded parity.)
+    # Fields wrapped in a configured pair may hold delimiters; they
+    # are unwrapped and their escape dialect decoded.
     quotes: str | None = None
     quote_pairs: str | None = None
     # delimiters(strings("^^^", "~~~")) — multi-character delimiter
     # alternatives (any of them splits)
     delimiter_strings: tuple[str, ...] = ()
     # escape-none | escape-backslash | escape-backslash-with-sequences
-    # | escape-double-char (csv-scanner.c dialect enum) — applied to
-    # quoted fields on the split path
+    # | escape-double-char | escape-unquoted-delimiter (csv-scanner.c
+    # dialect enum) — how a field escapes a quote or a delimiter
     dialect: str = "escape-backslash"
 
 
@@ -73,51 +67,9 @@ def csv_parse(df: DataFrame, spec: CsvSpec, src_col: str = "text") -> DataFrame:
 def csv_columns(src: Column, spec: CsvSpec) -> tuple[list[Column], Column]:
     """The one field extraction: (one value per spec column, ok). ok is
     the drop-invalid verdict (always true without drop_invalid); a
-    missing column is NULL."""
+    missing column is NULL, an empty field is ''."""
     n = len(spec.columns)
-
-    custom = bool(spec.quotes or spec.quote_pairs or spec.delimiter_strings)
-    if spec.quote and not spec.greedy and not custom:
-        # quoted dialect -> from_csv handles embedded delimiters; under
-        # drop_invalid one extra sentinel column catches a long row
-        width = n + 1 if spec.drop_invalid else n
-        schema = ", ".join(f"_{i} STRING" for i in range(width))
-        opts = {"sep": spec.delimiter, "quote": spec.quote}
-        if spec.escape is not None:
-            opts["escape"] = spec.escape
-        # null-value handling stays in _post (nullif): a field that
-        # carries the null TOKEN is a legal row — only a truly missing
-        # column (or a filled sentinel) fails the drop-invalid check
-        parsed = F.from_csv(src, F.lit(schema), opts)
-        vals = [parsed[f"_{i}"] for i in range(width)]
-        ok = F.lit(True)
-        if spec.drop_invalid:
-            ok = vals.pop().isNull()
-            for v in vals:
-                ok = ok & v.isNotNull()
-        return [_post(v, c, spec) for v, c in zip(vals, spec.columns)], ok
-
-    # plain split dialect (optionally greedy)
-    limit = n if spec.greedy else -1
-    if spec.delimiter_strings:
-        sep = "|".join(re.escape(s) for s in spec.delimiter_strings)
-    else:
-        sep = re.escape(spec.delimiter)
-    if spec.dialect == "escape-unquoted-delimiter":
-        # csv-scanner.c CSV_SCANNER_ESCAPE_UNQUOTED_DELIMITER: a
-        # backslash protects ONLY the delimiter in unquoted fields
-        # ('\|' is a literal '|', '\z' stays '\z'). Split at
-        # unescaped delimiters, unescape inside each field. (An
-        # escaped backslash directly before a delimiter would need an
-        # even-backslash-count guard Java's bounded lookbehind cannot
-        # express — documented drift for that corner.)
-        sep = r"(?<!\\)(?:" + sep + ")"
-    parts = F.split(src, sep, limit)
-    if spec.dialect == "escape-unquoted-delimiter":
-        unesc = F.lit("\\" + spec.delimiter)
-        parts = F.transform(
-            parts, lambda p: F.replace(p, unesc, F.lit(spec.delimiter))
-        )
+    parts = _fields(src, spec)
     # the scanner discards BOTH short and long rows (greedy's limit
     # already caps size at n, so == is the one check for both modes)
     ok = F.size(parts) == n if spec.drop_invalid else F.lit(True)
@@ -133,15 +85,59 @@ def csv_columns(src: Column, spec: CsvSpec) -> tuple[list[Column], Column]:
 
 
 def csv_tokens(src: Column, spec: CsvSpec) -> Column:
-    """Every field of the line as array<string> (no column list): a
-    field wrapped in the spec's quote, followed by a delimiter or the
-    end, may hold delimiters; quotes are stripped and the escape
-    dialect decoded like a column value."""
-    d = re.escape(spec.delimiter)
-    q = re.escape(spec.quote)
-    field = rf"{q}(?:\\.|[^{q}\\])*{q}(?={d}|$)|(?:(?!{d}).)*"
-    toks = F.regexp_extract_all(src, F.lit(rf"(?s)(?:^|{d})({field})"), 1)
-    return F.transform(toks, lambda t: _unquote(t, spec))
+    """Every field of the line as array<string> (no column list),
+    unquoted and decoded like a column value."""
+    return F.transform(_fields(src, spec), lambda t: _unquote(t, spec))
+
+
+def _fields(src: Column, spec: CsvSpec) -> Column:
+    """The one field tokenizer: the line's fields as written. A field
+    wrapped in a configured quote pair and followed by a delimiter or
+    the end may hold delimiters. Greedy is a split bounded at the
+    column count that ignores quotes: the last field takes the rest of
+    the line."""
+    delims = spec.delimiter_strings or (spec.delimiter,)
+    sep = "|".join(re.escape(s) for s in delims)
+    if spec.dialect == "escape-unquoted-delimiter":
+        # csv-scanner.c CSV_SCANNER_ESCAPE_UNQUOTED_DELIMITER: a
+        # backslash protects ONLY the delimiter in unquoted fields
+        # ('\|' is a literal '|', '\z' stays '\z'). Split at
+        # unescaped delimiters, unescape inside each field. (An
+        # escaped backslash directly before a delimiter would need an
+        # even-backslash-count guard Java's bounded lookbehind cannot
+        # express — documented drift for that corner.)
+        sep = r"(?<!\\)(?:" + sep + ")"
+    if spec.greedy:
+        parts = F.split(src, sep, len(spec.columns))
+    else:
+        quoted = [
+            rf"{re.escape(o)}{_quoted_body(c, spec.dialect)}{re.escape(c)}(?=(?:{sep})|\z)"
+            for o, c in _quote_pairs(spec)
+        ]
+        field = "|".join([*quoted, rf"(?:(?!{sep}).)*"])
+        # one delimiter goes in front, so every match starts with a
+        # delimiter: no match is empty, and Matcher.find (which steps
+        # one character past an empty match) never skips a field
+        lined = F.concat(F.lit(delims[0]), src)
+        parts = F.regexp_extract_all(lined, F.lit(rf"(?s)(?:{sep})({field})"), 1)
+    if spec.dialect == "escape-unquoted-delimiter":
+        unesc = F.lit("\\" + spec.delimiter)
+        parts = F.transform(
+            parts, lambda p: F.replace(p, unesc, F.lit(spec.delimiter))
+        )
+    return parts
+
+
+def _quoted_body(close: str, dialect: str) -> str:
+    """Regex for the inside of a quoted field: what may stand between
+    the quotes under the escape dialect (decoded by _decode_escapes)."""
+    # runs between escapes (possessive): no regex recursion per character
+    c = re.escape(close)
+    if dialect == "escape-none":
+        return rf"[^{c}]*+"
+    if dialect == "escape-double-char":
+        return rf"[^{c}]*+(?:{c}{c}[^{c}]*+)*+"
+    return rf"[^{c}\\]*+(?:\\.[^{c}\\]*+)*+"
 
 
 def _quote_pairs(spec: CsvSpec) -> list[tuple[str, str]]:
@@ -195,8 +191,7 @@ def _decode_escapes(inner: Column, close: str, dialect: str) -> Column:
 
 def _unquote(val: Column, spec: CsvSpec) -> Column:
     """Strip a configured quote pair off a field and decode the
-    dialect's escapes (split path; from_csv handles the default '"'
-    dialect natively)."""
+    dialect's escapes."""
     out = val
     inner = F.substring(val, 2, F.length(val) - 2)
     for o, c in reversed(_quote_pairs(spec)):

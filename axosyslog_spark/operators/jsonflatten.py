@@ -28,11 +28,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from axosyslog_spark.operators.kvscan import entries_to_map
+from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
 
 _MAP_SS = "map<string,string>"
 # a JSON array whose elements are all strings (spaces between tokens ok)
-_ALL_STRING_ARRAY_RE = r'^\[\s*(?:"(?:\\.|[^"\\])*"\s*(?:,\s*"(?:\\.|[^"\\])*"\s*)*)?\]$'
+_ALL_STRING_ARRAY_RE = rf"^\[\s*(?:{QUOTED}\s*(?:,\s*{QUOTED}\s*)*)?\]$"
 
 
 def _flatten_round(entries: Column, key_delimiter: str) -> Column:

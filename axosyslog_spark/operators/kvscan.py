@@ -39,6 +39,12 @@ _KEY = r"[A-Za-z0-9._-]+"
 # legitimately carry STX, so behavior matches the reference's
 # control-stripping line sources.
 _BS = "\x02"
+# A double- (QUOTED) or single-quoted (_QS) value with backslash
+# escapes, written as possessive runs between escapes: an alternation
+# under '*' costs Java's regex engine one stack frame per character and
+# overflows the task's stack (a fatal error) at a few thousand.
+QUOTED = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+_QS = r"'[^'\\]*+(?:\\.[^'\\]*+)*+'"
 
 
 def _skip_regex(vs: str, ps: str) -> str:
@@ -52,12 +58,10 @@ def _pair_regex(value_separator: str = "=", pair_separator: str = ", ") -> str:
     """Group-0 regex matching one key[=]value pair span."""
     vs = re.escape(value_separator)
     ps = re.escape(pair_separator)
-    quoted_d = r'"(?:\\.|[^"\\])*"'
-    quoted_s = r"'(?:\\.|[^'\\])*'"
     # unquoted: non-greedy absorption until pair-sep / space+next-key /
     # space+pair-sep / trailing spaces / end (kv-scanner.c _match_delimiter)
     unq = rf".*?(?={ps}|[ ]+(?:$|{_KEY}[ ]*{vs}|{ps})|$)"
-    return rf"{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(?:{quoted_d}|{quoted_s}|{unq})"
+    return rf"{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(?:{QUOTED}|{_QS}|{unq})"
 
 
 def _unescape(v: Column) -> Column:
@@ -86,8 +90,8 @@ def kv_scan(
     def decode(p: Column) -> Column:
         key = F.regexp_extract(p, f"^({_KEY})", 1)
         raw = F.regexp_extract(p, f"(?s)^{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(.*)$", 1)
-        qd = raw.rlike(r'^"(?:\\.|[^"\\])*"$')
-        qs = raw.rlike(r"^'(?:\\.|[^'\\])*'$")
+        qd = raw.rlike(f"^{QUOTED}$")
+        qs = raw.rlike(f"^{_QS}$")
         body = F.substring(raw, 2, F.length(raw) - 2)
         value = F.when(qd | qs, _unescape(body)).otherwise(raw)
         return F.struct(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from axosyslog_spark.operators.dateparse import parse_date
-from axosyslog_spark.operators.kvscan import entries_to_map
+from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
 
 # RFC5424-ish: <PRI>VERSION SP TIMESTAMP SP HOSTNAME SP APP-NAME SP
 #              PROCID SP MSGID SP STRUCTURED-DATA SP MSG
@@ -378,11 +378,10 @@ def parse_sdata(df: DataFrame, sd_col: str, out_col: str = "sdata") -> DataFrame
     algebra: nested regexp_extract_all + transform.
     """
     src = F.col(sd_col)
-    quoted = r'"(?:\\.|[^"\\])*"'
     blocks = F.regexp_extract_all(
-        src, F.lit(r"\[((?:" + quoted + r'|[^\]"])+)\]'), 1
+        src, F.lit(r'\[((?:[^\]"]++|' + QUOTED + r")+)\]"), 1
     )
-    param_re = r"([\w.@-]+)=(?:" + quoted + r'|[^\s\]"]+)'
+    param_re = r"([\w.@-]+)=(?:" + QUOTED + r'|[^\s\]"]+)'
 
     def sd_value(v: Column) -> Column:
         return F.when(

@@ -1557,6 +1557,8 @@ def mariadb_audit_parser(
         columns=tuple(CsvColumn(c) for c in _MARIADB_COLUMNS),
         delimiter=",",
         quote="'",
+        # the CONNECT rows' empty database/object read as unset
+        null_value="",
         prefix=prefix,
         drop_invalid=False,
     )
@@ -1625,8 +1627,10 @@ def postgresql_csvlog_parser(
         columns=tuple(CsvColumn(n, cast) for n, cast in _PGSQL_COLUMNS),
         delimiter=",",
         quote='"',
-        escape='"',
+        dialect="escape-double-char",
         strip=True,
+        # csvlog writes an absent value as an empty field: read it unset
+        null_value="",
         # the trailing columns are version-gated (13+/14+); a 24-column
         # v12 line must still parse -> only the always-present core is
         # required (drop-invalid on the non-gated prefix is approximated

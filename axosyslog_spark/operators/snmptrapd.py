@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from axosyslog_spark.operators.dateparse import parse_date
-from axosyslog_spark.operators.kvscan import entries_to_map
+from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
 
 # varbind key characters (varbindlist-scanner.c _is_valid_key_character)
 _KEYC = r"[A-Za-z0-9_.:-]"
@@ -78,7 +78,7 @@ _V1_RE = (
 # the newline, mirroring the scanner's stop character)
 _VB_RE = (
     rf"{_KEYC}+[ ]*=[ \t]*(?:[^: \t\n]*:[ ]*)?"
-    rf"(?:\"(?:\\.|[^\"\\])*\""
+    rf"(?:{QUOTED}"
     rf"|.*?(?=\t|[ ]+(?:\t|{_KEYC}+[ ]*=|$)|$))"
 )
 
@@ -104,7 +104,7 @@ def _varbind_entries(section: Column) -> Column:
             rest.rlike(r"^[^: \t]*:"),
             F.regexp_replace(rest, r"^[^: \t]*:[ ]*", ""),
         ).otherwise(rest)
-        quoted = val.rlike(r'^"(?:\\.|[^"\\])*"$')
+        quoted = val.rlike(f"^{QUOTED}$")
         val = F.when(quoted, _unquote(val)).otherwise(val)
         return F.struct(key.alias("key"), val.alias("value"))
 

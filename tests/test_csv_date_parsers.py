@@ -27,8 +27,11 @@ def test_csv_quoted_dialect(spark):
 
 def test_csv_drop_invalid(spark):
     spec = CsvSpec(columns=(CsvColumn("a"), CsvColumn("b"), CsvColumn("c")))
-    rows = csv_parse(_df(spark, ["1,2,3", "1,2", "1,2,3,4"]), spec).collect()
-    assert [r.csv_ok for r in rows] == [True, False, False]
+    lines = ["1,2,3", "1,2", "1,2,3,4", "1,,3", "1,2,3,"]
+    rows = csv_parse(_df(spark, lines), spec).collect()
+    # an empty field is a field: it neither fails nor pads the count
+    assert [r.csv_ok for r in rows] == [True, False, False, True, False]
+    assert rows[3].b == ""
 
 
 def test_csv_greedy_rest(spark):
@@ -118,6 +121,14 @@ def test_csv_parser_reference_goldens(spark):
     assert run("~foo~,>bar<", quote=None, quote_pairs="><~~") == (
         "foo", "bar", True,
     )
+    # every quote pair may hold delimiters
+    assert run("~f,o~,>b,r<", quote=None, quote_pairs="><~~") == (
+        "f,o", "b,r", True,
+    )
+    assert run('"f,""o""",bar', dialect="escape-double-char") == (
+        'f,"o"', "bar", True,
+    )
+    assert run("f|'b|r'", delimiter="|", quote="'") == ("f", "b|r", True)
     assert run("foo,bar", quote=None, dialect="escape-none") == (
         "foo", "bar", True,
     )

@@ -132,6 +132,14 @@ EVENT_FORMAT_TABLE = [
      {"src": "1.2.3.4", "msg": "a|b"}),
     ("LEEF:1.0|V|P", None, None),
     ("plain text with no pipes", None, None),
+    # STX/ETX bytes in an extension value are data
+    ("CEF:0|V|P|1|100|n|5|k=a\x02b\x03c", ("0", "V", "P", "1", "100", "n", "5"),
+     {"k": "a\x02b\x03c"}),
+    ("LEEF:1.0|V|P|1|100|k=a\x02b\x03c", ("1.0", "V", "P", "1", "100"),
+     {"k": "a\x02b\x03c"}),
+    # a long quoted value costs the regex no stack frame per character
+    ('CEF:0|V|P|1|100|n|5|k="%s" m=1' % ("a" * 20000), ("0", "V", "P", "1", "100", "n", "5"),
+     {"k": "a" * 20000, "m": "1"}),
 ]
 
 
@@ -190,6 +198,12 @@ def test_parse_csv_list_and_dict_agree_on_quotes(spark):
     lines = {
         '"a,b",c,d': ["a,b", "c", "d"],
         'x,"y \\"z\\"",w': ["x", 'y "z"', "w"],
+        # empty fields, leading and trailing, are fields
+        ",b,c": ["", "b", "c"],
+        "a,,": ["a", "", ""],
+        "1,,3": ["1", "", "3"],
+        # a long quoted field costs the regex no recursion per character
+        '"' + "q" * 20000 + '",c,d': ["q" * 20000, "c", "d"],
     }
     df = spark.createDataFrame([(t,) for t in lines], "t string")
     rows = filterx(df, '$l = parse_csv($t); $m = parse_csv($t, "x,y,z");').collect()

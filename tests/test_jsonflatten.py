@@ -30,8 +30,9 @@ def test_depth_bound_leaves_rest_as_json(spark):
 
 
 def test_all_string_array_becomes_comma_list(spark):
-    m, _ = _flatten(spark, '{"tags": ["a", "b", "c"], "one": ["x"]}')
-    assert m == {"tags": "a,b,c", "one": "x"}
+    long = "a" * 20000
+    m, _ = _flatten(spark, '{"tags": ["a", "b", "c"], "one": ["x"], "long": ["%s"]}' % long)
+    assert m == {"tags": "a,b,c", "one": "x", "long": long}
 
 
 def test_mixed_array_stays_raw_json(spark):

@@ -13,6 +13,8 @@ def test_parse_sdata(spark):
         (1, "-"),
         (2, None),
         (3, "[empty]"),
+        # long values cost the regex no stack frame per character
+        (4, '[id q="%s" u=%s]' % ("a" * 20000, "b" * 20000)),
     ]
     df = spark.createDataFrame(rows, "id int, sd string")
     got = {r.id: r.sdata for r in parse_sdata(df, "sd").collect()}
@@ -23,6 +25,7 @@ def test_parse_sdata(spark):
     }
     # a bare SD-ID is stored with an empty value (test_syslog_format.c)
     assert got[1] == {} and got[2] == {} and got[3] == {".SDATA.empty": ""}
+    assert got[4] == {".SDATA.id.q": "a" * 20000, ".SDATA.id.u": "b" * 20000}
 
 
 def test_sdata_escaped_value_chars(spark):

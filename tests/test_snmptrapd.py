@@ -193,3 +193,13 @@ def test_v2_message_with_garbage_stops_at_newline(spark):
     m = r["snmp"]
     assert m[".snmp.iso.3.6.1.2.1.1.3.0"] == "(875496867) 101 days, 7:56:08.67"
     assert ".snmp.garbage" not in m
+
+
+def test_long_quoted_varbind_value(spark):
+    v = "a" * 20000
+    r = _parse(
+        spark,
+        "2017-05-10 12:46:14 host [UDP: [127.0.0.1]:34257->[127.0.0.1]:162]:\n"
+        f'iso.3.6.1.4.1.8072.2.1.3 = STRING: "{v}"',
+    )
+    assert r["snmp_ok"] and r["snmp"][".snmp.iso.3.6.1.4.1.8072.2.1.3"] == v
