@@ -69,9 +69,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.templates import macro
 from axosyslog_spark.operators.csvparse import CsvColumn, CsvSpec, csv_columns, csv_tokens
 from axosyslog_spark.operators.dateparse import parse_date, strftime_to_spark
 from axosyslog_spark.operators.jsonflatten import flatten_json_column
+from axosyslog_spark.operators.parse import rfc5424_header
 
 
 class FilterXSyntaxError(ValueError):
@@ -1285,26 +1287,19 @@ def _FUNCS_DISPATCH(
             "timestamp", F.col("ts") if known and "ts" in known else None
         )
         # RFC5424 §6.2.3 requires the TIMESTAMP to carry a zone
-        # designator; XXX renders 'Z' under the session's pinned-UTC
-        # timezone (offset form elsewhere)
+        # designator: ISODATE's XXX renders 'Z' under the session's
+        # pinned-UTC timezone (offset form elsewhere)
         ts_str = (
-            F.coalesce(
-                F.date_format(
-                    ts.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX"
-                ),
-                F.lit("-"),
-            )
+            F.coalesce(macro("ISODATE", ts.cast("timestamp")), F.lit("-"))
             if ts is not None
             else F.lit("-")
         )
         line = F.concat(
-            F.lit("<"), F.coalesce(pri.cast("string"), F.lit("13")),
-            F.lit(">1 "), ts_str, F.lit(" "),
-            dash(kwargs.get("host", F.lit(""))), F.lit(" "),
-            dash(kwargs.get("program", F.lit(""))), F.lit(" "),
-            dash(kwargs.get("pid", F.lit(""))), F.lit(" "),
-            dash(kwargs.get("msgid", F.lit(""))), F.lit(" - "),
-            F.coalesce(one.cast("string"), F.lit("")),
+            rfc5424_header(
+                F.coalesce(pri.cast("string"), F.lit("13")), ts_str,
+                *[dash(kwargs.get(k, F.lit(""))) for k in ("host", "program", "pid", "msgid")],
+            ),
+            F.lit(" - "), F.coalesce(one.cast("string"), F.lit("")),
         )
         if "add_octet_count" in (kwargs | kwraws) and kwraws.get(
             "add_octet_count"

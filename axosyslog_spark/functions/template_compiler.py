@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from axosyslog_spark.functions import templates as tf
 from axosyslog_spark.operators.dateparse import strftime_to_spark
 from axosyslog_spark.operators.filters import typed_cmp
+from axosyslog_spark.operators.kvscan import QUOTED
 from axosyslog_spark.operators.rewrite import value_pairs
 
 
@@ -58,7 +59,7 @@ def _value_pairs(raw_args, ctx) -> dict[str, Column]:
 # element is only representable as '""').
 # ---------------------------------------------------------------------------
 
-_LIST_ELEM_RE = "\"(?:[^\"\\\\]|\\\\.)*\"|'[^']*'|[^,]+"
+_LIST_ELEM_RE = QUOTED + "|'[^']*'|[^,]+"
 
 
 def _list_parse(c: Column) -> Column:
@@ -1079,33 +1080,12 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         # modules/json/format-json.c: explicit k=v pairs AND/OR a
         # value-pairs selection (globs / --scope / --key / --exclude)
         # with the transforms.c rekey chain applied at COMPILE time
-        # (keys here are plan-time strings); format-json nests dotted
-        # keys into objects, format-flat-json emits them verbatim;
-        # pair order is reverse-lexicographic at each level
-        # (tf_flat_value_pairs_sort's strcmp(s2, s1) — the functional
-        # value-pairs goldens show the same order for the nested form)
-        pairs = _value_pairs(raw_args, ctx)
-        if name == "format-flat-json":
-            return tf.format_flat_json(pairs)
-        # nested render: dotted keys become objects
-        tree: dict = {}
-        for k, col in pairs.items():
-            d = tree
-            parts = k.split(".")
-            for p in parts[:-1]:
-                d = d.setdefault(p, {})
-            d[parts[-1]] = col
-
-        def emit(d: dict) -> Column:
-            fields = []
-            for k in sorted(d, reverse=True):
-                v = d[k]
-                fields.append(
-                    (emit(v) if isinstance(v, dict) else v).alias(k)
-                )
-            return F.struct(*fields)
-
-        return F.to_json(emit(tree), {"ignoreNullFields": "true"})
+        # (keys here are plan-time strings), through the one JSON
+        # encoder: format-json nests dotted keys into objects,
+        # format-flat-json emits them verbatim
+        return tf.format_json(
+            _value_pairs(raw_args, ctx), flat=name == "format-flat-json"
+        )
     if name == "binary":
         # $(binary n n ...) — basicfuncs/str-funcs.c:505-578
         # tf_binary_prepare: a compile-time constant built from

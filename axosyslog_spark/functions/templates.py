@@ -4,8 +4,9 @@
 ``$(fn)`` language (registry modules/basicfuncs/basic-funcs.c:76-150);
 a kernel lives here only when the compiler, an operator or a query
 calls it as a Column builder, and then the compiler's ``$(fn)`` calls
-the same kernel. Also here: value-pairs formatters (format-flat-json,
-format-welf, graphite-output), the CEF/CIM/stardate Column builders
+the same kernel. Also here: value-pairs formatters (the one JSON-object
+encoder behind format-json/format-flat-json, format-welf,
+graphite-output), the CEF/CIM/stardate Column builders
 (no ``$(...)`` name) and the date-part macro family
 (lib/template/macros.c:94-204: S_/R_/C_ x DATE/ISODATE/YEAR/...).
 """
@@ -203,14 +204,46 @@ def tf_md5(c: Column) -> Column: return F.md5(c.cast("binary"))
 # format funcs
 # ---------------------------------------------------------------------------
 
-def format_flat_json(named_cols: dict[str, Column]) -> Column:
-    """$(format-flat-json k=v ...) — modules/json/format-json.c:465-480
-    tf_flat_json_append: same pair rendering as $(format-json) but keys
-    stay flat (a dotted key is emitted verbatim, never nested into
-    objects) and pairs appear in REVERSE lexicographic key order
-    (tf_flat_value_pairs_sort, format-json.c:459, strcmp(s2, s1))."""
-    keys = sorted(named_cols, reverse=True)
-    return F.to_json(F.struct(*[named_cols[k].alias(k) for k in keys]))
+def json_order(pairs):
+    """format-json's one pair order, reverse-lexicographic at every
+    level (tf_flat_value_pairs_sort, format-json.c:459: strcmp(s2,
+    s1)). Plan-time names (a dict) sort here; a runtime
+    map<string,string> Column sorts its entries in the plan, with its
+    NULL values dropped, and stays a map (a JSON object when encoded)."""
+    if isinstance(pairs, dict):
+        return {k: pairs[k] for k in sorted(pairs, reverse=True)}
+    present = F.filter(F.map_entries(pairs), lambda e: e["value"].isNotNull())
+    return F.map_from_entries(F.reverse(F.array_sort(present)))
+
+
+def format_json(pairs, flat: bool = False) -> Column:
+    """The one JSON-object encoder (modules/json/format-json.c): NULL
+    values (and names bound to None) are omitted and pairs follow
+    ``json_order``. ``pairs`` is
+    either plan-time named Columns, where a dotted name nests into
+    objects unless ``flat`` ($(format-flat-json), format-json.c:465-480
+    tf_flat_json_append), or a runtime map<string,string> Column, whose
+    keys stay flat because the plan cannot see them. A value that is
+    itself a runtime map goes through ``json_order`` first."""
+    if not isinstance(pairs, dict):
+        return F.to_json(json_order(pairs))
+    tree: dict = {}
+    for k, col in pairs.items():
+        if col is None:
+            continue
+        *path, leaf = [k] if flat else k.split(".")
+        d = tree
+        for p in path:
+            d = d.setdefault(p, {})
+        d[leaf] = col
+
+    def emit(d: dict) -> Column:
+        return F.struct(*[
+            (emit(v) if isinstance(v, dict) else v).alias(k)
+            for k, v in json_order(d).items()
+        ])
+
+    return F.to_json(emit(tree), {"ignoreNullFields": "true"})
 
 
 def _welf_escape(c: Column, quote: bool) -> Column:
@@ -277,19 +310,6 @@ def tf_stardate(c: Column, digits: int = 2) -> Column:
     return F.format_string(f"%.{digits}f", yr + frac)
 
 
-def cef_escape(c: Column) -> Column:
-    """CEF extension value escaping (format-cef-extension.c
-    tf_cef_append_escaped): backslash first, then '=', LF, CR; other
-    control chars < 0x20 become \\uXXXX."""
-    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit("="), F.lit("\\="))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    for i in [*range(0, 10), 11, 12, *range(14, 32)]:
-        c = F.replace(c, F.lit(chr(i)), F.lit("\\u%04x" % i))
-    return c
-
-
 _CEF_KEY_RE = "^[A-Za-z0-9]+$"
 
 
@@ -302,15 +322,16 @@ def format_cef_extension(named_cols: dict[str, Column]) -> Column:
 
 def format_cef_extension_map(pairs: Column) -> Column:
     """format-cef-extension (modules/cef/format-cef-extension.c) over a
-    map<string,string> NV column: keys sorted (strcmp walk), values
-    CEF-escaped, space-joined. Non-alphanumeric keys are skipped like
-    the reference's non-drop on-error path (it logs and walks on)."""
+    map<string,string> NV column: keys sorted (strcmp walk), through
+    the one extension encoder (cef.format_extension), space-joined.
+    Non-alphanumeric keys are skipped like the reference's non-drop
+    on-error path (it logs and walks on)."""
+    from axosyslog_spark.operators.cef import format_extension
+
     entries = F.array_sort(F.map_entries(pairs))
-    valid = F.filter(entries, lambda e: e["key"].rlike(_CEF_KEY_RE))
-    strs = F.transform(
-        valid, lambda e: F.concat(e["key"], F.lit("="), cef_escape(e["value"]))
+    return format_extension(
+        F.filter(entries, lambda e: e["key"].rlike(_CEF_KEY_RE)), " "
     )
-    return F.array_join(strs, " ")
 
 
 def format_cim(
@@ -324,10 +345,10 @@ def format_cim(
       --key _*  --key *.*      (kept as-is)
       --key .*  --replace-prefix .=_  (``.foo`` -> ``_foo``)
 
-    ``pairs`` is the open-schema NV map; output is a JSON object with
-    keys in sorted order (deterministic; the reference walks the
-    value-pairs set in key order). String-typed values (the map is
-    map<string,string>; --auto-cast numeric unquoting is not applied)."""
+    ``pairs`` is the open-schema NV map; output is ``format_json`` over
+    the runtime map (reverse-lexicographic keys, flat). String-typed
+    values (the map is map<string,string>; --auto-cast numeric
+    unquoting is not applied)."""
     cim = F.transform_keys(
         F.map_filter(pairs, lambda k, v: k.startswith(".cim.")),
         lambda k, v: F.substring(k, 6, 2_000_000_000),
@@ -348,14 +369,11 @@ def format_cim(
 
     # entries-level merge + fold: a renamed dotted key colliding with
     # a plain '_'-key must overwrite, not abort (map_concat throws
-    # under the default dedup policy). Dedup FIRST in source-precedence
-    # order (entries_to_map is last-value-wins, so list the weakest
-    # source first: builtins < plain < cim < dotted — only a renamed
-    # dotted key can collide with a plain '_'-key, and it must win),
-    # THEN sort the now-unique entries so the JSON key order is
-    # deterministic. Sorting before the fold would make the
-    # lexicographically-largest VALUE win instead of the intended
-    # source.
+    # under the default dedup policy). entries_to_map is
+    # last-value-wins, so list the weakest source first: builtins <
+    # plain < cim < dotted — only a renamed dotted key can collide with
+    # a plain '_'-key, and it must win. format_json orders the
+    # now-unique keys.
     merged = F.concat(
         F.map_entries(
             F.create_map(
@@ -365,9 +383,7 @@ def format_cim(
         ),
         F.map_entries(plain), F.map_entries(cim), F.map_entries(dotted),
     )
-    deduped = entries_to_map(merged)
-    ordered = entries_to_map(F.array_sort(F.map_entries(deduped)))
-    return F.to_json(ordered)
+    return format_json(entries_to_map(merged))
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
-"""CEF / LEEF event-format parsers.
+"""CEF / LEEF event-format parsers and the one extension encoder.
 
 Reference: modules/cef/filterx-func-parse-cef.c, filterx-func-parse-leef.c,
-event-format-parser.c.
+event-format-parser.c, format-cef-extension.c.
 
 CEF:  CEF:version|vendor|product|device_version|event_class|name|severity|ext
 LEEF: LEEF:1.0|vendor|product|version|event_id|ext (tab-separated)
@@ -12,6 +12,9 @@ tokenizer ``_header``); the DataFrame operators and the FilterX
 builtins are two projections of that parse (``_frame``, ``_fx_map``).
 Extension entries fold through kvscan.entries_to_map: the last
 occurrence of a key wins, where map_from_entries would abort the job.
+The other direction is written once too: ``format_extension`` (with
+``cef_escape``) renders the extension for $(format-cef-extension) and
+the FilterX format_cef()/format_leef() builtins.
 """
 
 from __future__ import annotations
@@ -164,6 +167,31 @@ def _escape_hdr(c: Column) -> Column:
     return F.regexp_replace(c.cast("string"), r"([|\\])", r"\\$1")
 
 
+def cef_escape(c: Column) -> Column:
+    """The one CEF extension value escape (format-cef-extension.c
+    tf_cef_append_escaped): backslash first, then '=', LF, CR; other
+    control chars < 0x20 become \\uXXXX."""
+    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
+    c = F.replace(c, F.lit("="), F.lit("\\="))
+    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
+    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
+    for i in [*range(0, 10), 11, 12, *range(14, 32)]:
+        c = F.replace(c, F.lit(chr(i)), F.lit("\\u%04x" % i))
+    return c
+
+
+def format_extension(entries: Column, sep: str) -> Column:
+    """The one CEF/LEEF extension encoder: ``key=value`` per entry of an
+    array<struct<key,value>>, the value through ``cef_escape``, joined
+    by ``sep``; an entry with a NULL value is skipped."""
+    return F.array_join(
+        F.transform(
+            entries, lambda e: F.concat(e["key"], F.lit("="), cef_escape(e["value"]))
+        ),
+        sep,
+    )
+
+
 def _format_event_fx(m: Column, sig: str, fields: tuple, ext_sep: str) -> Column:
     hdr = F.concat_ws(
         "|", *[_escape_hdr(F.coalesce(F.element_at(m, f), F.lit(""))) for f in fields]
@@ -171,23 +199,14 @@ def _format_event_fx(m: Column, sig: str, fields: tuple, ext_sep: str) -> Column
     ext_entries = F.filter(
         F.map_entries(m), lambda e: ~e["key"].isin(*fields)
     )
-    ext = F.array_join(
-        F.transform(
-            ext_entries,
-            lambda e: F.concat(
-                e["key"], F.lit("="),
-                F.regexp_replace(e["value"], r"([=\\])", r"\\$1"),
-            ),
-        ),
-        ext_sep,
-    )
-    return F.concat(F.lit(sig), hdr, F.lit("|"), ext)
+    return F.concat(F.lit(sig), hdr, F.lit("|"), format_extension(ext_entries, ext_sep))
 
 
 def format_cef_fx(m: Column) -> Column:
     """filterx format_cef(dict): inverse of parse_cef_fx — named header
     keys (| and \\ escaped) then the remaining keys as space-separated
-    k=v extensions in map order (event-format-formatter.c)."""
+    k=v extensions in map order (event-format-formatter.c), values
+    CEF-escaped."""
     return _format_event_fx(m, "CEF:", CEF_FX_FIELDS, " ")
 
 

@@ -224,6 +224,27 @@ def suppress(
     ).drop("__dup")
 
 
+def event_time_bucket(ts: Column, window_s) -> Column:
+    """The ``window_s``-second event-time bucket of ``ts`` (an int or a
+    Column). Cast via timestamp first: TIMESTAMP_NTZ -> double is not
+    allowed directly (the session tz is pinned UTC, so ntz==utc here)."""
+    return F.floor(ts.cast("timestamp").cast("double") / window_s)
+
+
+def first_n(
+    df: DataFrame, keys: list, order, n, zero_unlimited: bool = False
+) -> DataFrame:
+    """The one first-N-per-window kernel behind every rate limit: keep
+    the first ``n`` rows (an int or a per-row Column) of each ``keys``
+    group in ``order``; with ``zero_unlimited`` a rate of 0 keeps them
+    all. One window shuffle on ``keys``."""
+    w = Window.partitionBy(*keys).orderBy(order)
+    keep = F.col("__rn") <= n
+    if zero_unlimited:
+        keep = (n == 0) | keep
+    return df.withColumn("__rn", F.row_number().over(w)).filter(keep).drop("__rn")
+
+
 def rate_limit(
     df: DataFrame,
     key_cols: list[str],
@@ -235,12 +256,7 @@ def rate_limit(
     token bucket → deterministic batch equivalent). This is the
     whole-batch cap; for the time-replenished contract see
     ``rate_limit_bucket``."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= max_rows)
-        .drop("__rn")
-    )
+    return first_n(df, key_cols, order_col, max_rows)
 
 
 def rate_limit_bucket(
@@ -269,17 +285,8 @@ def rate_limit_bucket(
     ``streaming.pipeline.rate_limit_bucket_stateful`` implements the
     SAME contract incrementally, so batch and streaming keep-sets are
     equal on any input (asserted in tests)."""
-    # cast via timestamp first: TIMESTAMP_NTZ → double is not allowed
-    # directly (the session tz is pinned UTC, so ntz==utc here)
-    bucket = F.floor(
-        F.col(ts_col).cast("timestamp").cast("double") / F.lit(window_s)
-    )
-    w = Window.partitionBy(*key_cols, bucket).orderBy(order_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= rate)
-        .drop("__rn")
-    )
+    bucket = event_time_bucket(F.col(ts_col), F.lit(window_s))
+    return first_n(df, [*key_cols, bucket], order_col, rate)
 
 
 # scope -> key columns widened into the context key (correlation-key.h:29-40)

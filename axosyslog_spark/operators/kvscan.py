@@ -43,7 +43,9 @@ _BS = "\x02"
 # escapes, written as possessive runs between escapes: an alternation
 # under '*' costs Java's regex engine one stack frame per character and
 # overflows the task's stack (a fatal error) at a few thousand.
-QUOTED = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+# QUOTED_BODY is the text between the double quotes.
+QUOTED_BODY = r'[^"\\]*+(?:\\.[^"\\]*+)*+'
+QUOTED = f'"{QUOTED_BODY}"'
 _QS = r"'[^'\\]*+(?:\\.[^'\\]*+)*+'"
 
 

@@ -339,6 +339,20 @@ def format_sdata(sdata: Column) -> Column:
     ).otherwise(F.array_join(blocks, ""))
 
 
+def rfc5424_header(
+    pri: Column, stamp: Column, host: Column, app: Column, procid: Column,
+    msgid: Column,
+) -> Column:
+    """The one RFC5424 header builder: ``<PRI>1 STAMP HOST APP PROCID
+    MSGID`` from already-rendered string Columns. The stamp format and
+    the absent-value rule (``${X}`` renders empty, ``${X:--}`` '-')
+    are each template's own, so every caller renders its fields first."""
+    return F.concat(
+        F.lit("<"), pri, F.lit(">1 "), stamp, F.lit(" "), host, F.lit(" "),
+        app, F.lit(" "), procid, F.lit(" "), msgid,
+    )
+
+
 def format_rfc5424(
     pri: Column, ts: Column, host: Column, appname: Column, procid: Column,
     body: Column, msgid: Column | None = None, sdata: Column | None = None,
@@ -347,18 +361,16 @@ def format_rfc5424(
     $(format-syslog-5424) analog (modules/syslogformat/
     syslog-format-plugin.c:60). Inverse of parse_header for our header
     subset; roundtrip is unit-tested (bit-exact output contract).
+    Absent header values render '-', the stamp has no zone.
     ``sdata`` may be a rendered string or a dotted-key map column."""
     sd = F.lit("-") if sdata is None else sdata
-    return F.concat(
-        F.lit("<"), pri.cast("string"), F.lit(">1 "),
-        F.date_format(ts, TS_FMT_SPARK), F.lit(" "),
-        F.coalesce(host, F.lit("-")), F.lit(" "),
-        F.coalesce(appname, F.lit("-")), F.lit(" "),
-        F.coalesce(procid, F.lit("-")), F.lit(" "),
+    header = rfc5424_header(
+        pri.cast("string"), F.date_format(ts, TS_FMT_SPARK),
+        F.coalesce(host, F.lit("-")), F.coalesce(appname, F.lit("-")),
+        F.coalesce(procid, F.lit("-")),
         F.coalesce(msgid, F.lit("-")) if msgid is not None else F.lit("-"),
-        F.lit(" "), sd, F.lit(" "),
-        F.coalesce(body, F.lit("")),
     )
+    return F.concat(header, F.lit(" "), sd, F.lit(" "), F.coalesce(body, F.lit("")))
 
 
 def parse_sdata(df: DataFrame, sd_col: str, out_col: str = "sdata") -> DataFrame:

@@ -876,9 +876,11 @@ class PatternDB:
         least one action declares a rate."""
         if not any(a.rate for _, a in match_actions):
             return synth
-        from pyspark.sql import Window
-
-        from axosyslog_spark.operators.grouping import _CONTEXT_SCOPE_COLS
+        from axosyslog_spark.operators.grouping import (
+            _CONTEXT_SCOPE_COLS,
+            event_time_bucket,
+            first_n,
+        )
 
         ordn = F.col("__pdb_ord")
         rates = literal_array([a.rate for _, a in match_actions], "int")
@@ -902,8 +904,7 @@ class PatternDB:
                 ordn == i, F.concat_ws("\x1f", *cols) if cols else F.lit("")
             ).otherwise(scope_key)
         if "ts" in synth.columns:
-            quantum_v = F.element_at(quanta, ordn + 1)
-            bucket = F.floor(F.col("ts").cast("timestamp").cast("double") / quantum_v)
+            bucket = event_time_bucket(F.col("ts"), F.element_at(quanta, ordn + 1))
         else:
             bucket = F.lit(0)
         order = (
@@ -911,12 +912,7 @@ class PatternDB:
             if order_col in synth.columns
             else (F.col("ts") if "ts" in synth.columns else F.lit(1))
         )
-        w = Window.partitionBy(ordn, scope_key, bucket).orderBy(order)
-        return (
-            synth.withColumn("__rn", F.row_number().over(w))
-            .filter((rate_v == 0) | (F.col("__rn") <= rate_v))
-            .drop("__rn")
-        )
+        return first_n(synth, [ordn, scope_key, bucket], order, rate_v, zero_unlimited=True)
 
     def apply(
         self,

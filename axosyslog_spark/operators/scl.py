@@ -46,7 +46,9 @@ one DataFrame projection stage:
     logscale_event_body / google_pubsub_event /
     azure_monitor_body — hosted-destination wire formats (the
     transports are N/A-batch; each block's rendered line/body is
-    the artifact)
+    the artifact). The JSON bodies pass their named Columns to the
+    one JSON encoder (templates.format_json), the syslog lines their
+    rendered fields to the one RFC5424 header (parse.rfc5424_header)
 
 Everything is column algebra; `drop-invalid` behaviors surface as an
 `*_ok` boolean so routing can keep the reference's path semantics.
@@ -59,7 +61,14 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.templates import (
+    format_json,
+    json_order,
+    macro,
+    tf_base64_encode,
+)
 from axosyslog_spark.operators.dateparse import parse_date
+from axosyslog_spark.operators.kvscan import QUOTED_BODY
 
 # scl/apache/apache.conf: vhost filter `^[A-Za-z0-9\-\._]+:[0-9]+ `
 _VHOST = r"[A-Za-z0-9\-\._]+:[0-9]+"
@@ -68,10 +77,10 @@ _APACHE_RE = (
     rf"^(?:({_VHOST}) )?"            # 1 vhost:port (vhost_* formats)
     r"(\S+) (\S+) (\S+) "            # 2 clientip  3 ident  4 auth
     r"\[([^\]]*)\] "                 # 5 timestamp ('[]' quote-pair)
-    r"\"((?:[^\"\\]|\\.)*)\" "       # 6 rawrequest (backslash escapes)
+    rf"\"({QUOTED_BODY})\" "          # 6 rawrequest (backslash escapes)
     r"(\S+) (\S+)"                   # 7 response  8 bytes
-    r"(?: \"((?:[^\"\\]|\\.)*)\""    # 9 referrer (combined only)
-    r" \"((?:[^\"\\]|\\.)*)\")?$"    # 10 agent
+    rf"(?: \"({QUOTED_BODY})\""       # 9 referrer (combined only)
+    rf" \"({QUOTED_BODY})\")?$"       # 10 agent
 )
 
 
@@ -367,22 +376,21 @@ def app_parser(
 ) -> DataFrame:
     """lib/appmodel app-parser() analog: an ordered application table
     of (name, detection filter, parser). Detection is first-match-wins
-    in declaration order (one when-chain, no shuffle); each matched
-    subset runs its application's parser and the branches re-unite
-    (unmatched rows pass through with app = NULL), mirroring the
-    auto-parsing junction the reference generates."""
-    sel = F.lit(None).cast("string")
-    for name, cond, _ in reversed(apps):
-        sel = F.when(cond, F.lit(name)).otherwise(sel)
-    tagged = df.withColumn(out_col, sel)
-    branches = [
-        parse(tagged.filter(F.col(out_col) == name))
-        for name, _, parse in apps
-    ]
-    rest = tagged.filter(F.col(out_col).isNull())
-    out = rest
-    for b in branches:
-        out = out.unionByName(b, allowMissingColumns=True)
+    in declaration order (enrich.filter_selector's when-chain, no
+    shuffle); each matched subset runs its application's parser and
+    the branches re-unite (unmatched rows pass through with app =
+    NULL), mirroring the auto-parsing junction the reference
+    generates."""
+    from axosyslog_spark.operators.enrich import filter_selector
+
+    tagged = df.withColumn(
+        out_col, filter_selector([(name, cond) for name, cond, _ in apps])
+    )
+    out = tagged.filter(F.col(out_col).isNull())
+    for name, _, parse in apps:
+        out = out.unionByName(
+            parse(tagged.filter(F.col(out_col) == name)), allowMissingColumns=True
+        )
     return out
 
 
@@ -765,6 +773,15 @@ def collectd_putval(
     )
 
 
+def _nonempty(c: Column | str | None) -> Column | None:
+    """format-json --omit-empty-values for one value: '' and NULL are
+    omitted; None (a value not passed) stays None, which the encoder
+    omits as well."""
+    if c is None:
+        return None
+    return F.nullif((c if isinstance(c, Column) else F.lit(c)).cast("string"), F.lit(""))
+
+
 def splunk_hec_event(
     event: Column,
     host: Column,
@@ -780,28 +797,20 @@ def splunk_hec_event(
     ``time`` renders as the reference's ${S_UNIXTIME}.${S_MSEC};
     empty-string/NULL fields are omitted (--omit-empty-values);
     ``fields`` (the indexed-fields map) nests as a flat JSON object
-    ($(format-flat-json)). Typed struct + to_json keeps field order
-    and omits NULLs JVM-side."""
-    as_col = lambda v: v if isinstance(v, Column) else F.lit(v)  # noqa: E731
-    s = lambda c: F.nullif(as_col(c).cast("string"), F.lit(""))  # noqa: E731
+    ($(format-flat-json))."""
     time_str = F.concat(
         F.unix_timestamp(ts).cast("string"), F.lit("."),
         F.date_format(ts, "SSS"),
     )
-    parts: list[Column] = [
-        s(index).alias("index") if index is not None
-        else F.lit(None).cast("string").alias("index"),
-        s(source).alias("source") if source is not None
-        else F.lit(None).cast("string").alias("source"),
-        s(sourcetype).alias("sourcetype") if sourcetype is not None
-        else F.lit(None).cast("string").alias("sourcetype"),
-        s(host).alias("host"),
-        time_str.alias("time"),
-        event.cast("string").alias("event"),
-    ]
-    if fields is not None:
-        parts.append(fields.alias("fields"))
-    return F.to_json(F.struct(*parts), {"ignoreNullFields": "true"})
+    return format_json({
+        "index": _nonempty(index),
+        "source": _nonempty(source),
+        "sourcetype": _nonempty(sourcetype),
+        "host": _nonempty(host),
+        "time": time_str,
+        "event": event.cast("string"),
+        "fields": None if fields is None else json_order(fields),
+    })
 
 
 def mbox_source(
@@ -860,18 +869,13 @@ def default_network_drivers(
             ("checkpoint", checkpoint_app_filter(text), checkpoint_parser)
         ]
 
-    sel = F.lit(None).cast("string")
-    for name, cond, _ in reversed(raw_apps):
-        sel = F.when(cond, F.lit(name)).otherwise(sel)
-    tagged = df.withColumn("app", sel)
-    branches: list[DataFrame] = [
-        parser(tagged.filter(F.col("app") == name)).withColumn(
-            "path", F.lit("raw-app")
-        )
-        for name, _, parser in raw_apps
-    ]
-
-    rest = tagged.filter(F.col("app").isNull())
+    # the raw-topic parsers mark their rows, so the split below prunes
+    # at plan time: `path` is a literal in each union branch
+    raw = app_parser(df, [
+        (name, cond, lambda d, parse=parse: parse(d).withColumn("path", F.lit("raw-app")))
+        for name, cond, parse in raw_apps
+    ])
+    rest = raw.filter(F.col("path").isNull()).drop("path")
     lead5424 = text.rlike(r"^<[0-9]{1,3}>[0-9] ")
     p5 = parse_header(rest.filter(lead5424), text_col)
     p3 = parse_rfc3164(rest.filter(~lead5424), text_col, year=year)
@@ -894,34 +898,18 @@ def default_network_drivers(
         ]
 
     is_ewmm = F.col("appname") == "@syslog-ng"
-    branches.append(
-        ewmm_parser(
-            parsed.filter(is_ewmm), src_col="body", program_col=None
-        ).withColumn("path", F.lit("ewmm"))
-    )
-    after_ewmm = parsed.filter(
-        ~F.coalesce(is_ewmm, F.lit(False))
-    )
-    sel2 = F.lit(None).cast("string")
-    for name, cond, _ in reversed(syslog_apps):
-        sel2 = F.when(cond, F.lit(name)).otherwise(sel2)
-    tagged2 = after_ewmm.withColumn("app", sel2)
-    for name, _, parser in syslog_apps:
-        branches.append(
-            parser(tagged2.filter(F.col("app") == name)).withColumn(
-                "path", F.lit("app")
-            )
-        )
-    branches.append(
-        tagged2.filter(F.col("app").isNull()).withColumn(
-            "path", F.lit("syslog")
+    ewmm = ewmm_parser(parsed.filter(is_ewmm), src_col="body", program_col=None)
+    apps = app_parser(parsed.filter(~F.coalesce(is_ewmm, F.lit(False))), syslog_apps)
+    return (
+        raw.filter(F.col("path").isNotNull())
+        .unionByName(ewmm.withColumn("path", F.lit("ewmm")), allowMissingColumns=True)
+        .unionByName(
+            apps.withColumn(
+                "path", F.when(F.col("app").isNull(), F.lit("syslog")).otherwise(F.lit("app"))
+            ),
+            allowMissingColumns=True,
         )
     )
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b, allowMissingColumns=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -958,7 +946,12 @@ def solaris_msgid_parser(df: DataFrame, src_col: str = "message") -> DataFrame:
 # scl/arr/arr.conf — the *arr application family's internal log format
 # ---------------------------------------------------------------------------
 
-_ARR_RE = r"^([^|]*)\|([^|]*)\|([^|]*)\|((?:.|\n)*)"
+# A message group (?:.|\n)*: Java's '.' matches all but
+# \n, \r, \u0085, \u2028 and \u2029, so the alternation is this one
+# character class, which costs the regex engine no stack frame per
+# character as an alternation under '*' does.
+_ANY_BUT_CR = r"[^\r\u0085\u2028\u2029]*"
+_ARR_RE = r"^([^|]*)\|([^|]*)\|([^|]*)\|(" + _ANY_BUT_CR + ")"
 
 
 def arr_parser(
@@ -1009,7 +1002,7 @@ def arr_parser(
 # scl/jellyfin/jellyfin.conf
 # ---------------------------------------------------------------------------
 
-_JELLYFIN_RE = r"^\[([^\]]*)\] \[([A-Z]{3})\] \[[0-9]+\] ((?:.|\n)*)"
+_JELLYFIN_RE = r"^\[([^\]]*)\] \[([A-Z]{3})\] \[[0-9]+\] (" + _ANY_BUT_CR + ")"
 
 
 def jellyfin_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
@@ -1151,34 +1144,24 @@ def nodejs_winston_parser(
 
 
 def _syslog5424_prefix(
-    pri: Column,
-    ts: Column,
-    host: Column,
-    program: Column,
-    pid: Column | None,
-    msgid: Column | None,
-    dash_fallback: bool,
+    pri: Column, ts: Column, host: Column, program: Column, pid: Column,
+    msgid: Column,
 ) -> Column:
     """``<PRI>1 ISODATE HOST PROGRAM PID MSGID`` — shared header of the
-    hosted-logging destination templates. ``dash_fallback`` renders
-    absent values as '-' (the blocks written as ${X:--}); without it a
-    bare macro renders empty, faithfully producing the double-space the
-    reference would emit."""
-    absent = F.lit("-") if dash_fallback else F.lit("")
+    hosted-logging destination templates (PRI defaults to 13), over
+    fields each template has already rendered with ``_or``."""
+    from axosyslog_spark.operators.parse import rfc5424_header
 
-    def v(c: Column | None) -> Column:
-        if c is None:
-            return absent
-        return F.coalesce(c.cast("string"), absent)
-
-    from axosyslog_spark.functions.templates import macro
-
-    return F.concat(
-        F.lit("<"), F.coalesce(pri.cast("string"), F.lit("13")), F.lit(">1 "),
-        macro("ISODATE", ts), F.lit(" "),
-        v(host), F.lit(" "), v(program), F.lit(" "), v(pid), F.lit(" "),
-        v(msgid),
+    return rfc5424_header(
+        F.coalesce(pri.cast("string"), F.lit("13")), macro("ISODATE", ts),
+        host, program, pid, msgid,
     )
+
+
+def _or(c: Column | None, absent: str) -> Column:
+    """A template macro's absent value: ``${X}`` renders empty
+    (absent=''), ``${X:--}`` renders '-' (absent='-')."""
+    return F.lit(absent) if c is None else F.coalesce(c.cast("string"), F.lit(absent))
 
 
 def loggly_line(
@@ -1195,10 +1178,11 @@ def loggly_line(
     """scl/loggly/loggly.conf loggly() wire line:
     ``<PRI>1 ISODATE HOST PROGRAM PID MSGID [token@41058 tag="tag"]
     payload`` (the customer token rides an SD-ELEMENT with Loggly's
-    IANA enterprise number 41058; bare macros, no '-' fallbacks).
+    IANA enterprise number 41058; bare macros, no '-' fallbacks, so an
+    absent value leaves the double space the reference emits).
     Transport framing (trailing newline, tcp) is the sink's concern."""
     return F.concat(
-        _syslog5424_prefix(pri, ts, host, program, pid, msgid, False),
+        _syslog5424_prefix(pri, ts, *[_or(c, "") for c in (host, program, pid, msgid)]),
         F.lit(f' [{token}@41058 tag="{tag}"] '), payload.cast("string"),
     )
 
@@ -1217,12 +1201,10 @@ def logmatic_line(
     """scl/logmatic/logmatic.conf logmatic() wire line: the raw API
     token PREFIXES the frame — ``token <PRI>1 ISODATE HOST:-- ...
     SDATA:-- payload`` (all header macros carry '-' fallbacks)."""
-    sd = F.coalesce(sdata.cast("string"), F.lit("-")) if sdata is not None \
-        else F.lit("-")
     return F.concat(
         F.lit(f"{token} "),
-        _syslog5424_prefix(pri, ts, host, program, pid, msgid, True),
-        F.lit(" "), sd, F.lit(" "), payload.cast("string"),
+        _syslog5424_prefix(pri, ts, *[_or(c, "-") for c in (host, program, pid, msgid)]),
+        F.lit(" "), _or(sdata, "-"), F.lit(" "), payload.cast("string"),
     )
 
 
@@ -1242,14 +1224,10 @@ def sumologic_syslog_line(
     tag="tag"] payload`` — like loggly but the collector token is the
     SD-ID itself (no enterprise number) and PROGRAM/PID/MSGID carry
     '-' fallbacks while HOST does not."""
-    from axosyslog_spark.functions.templates import macro
-
-    dash = lambda c: F.coalesce(c.cast("string"), F.lit("-")) if c is not None else F.lit("-")  # noqa: E731
     return F.concat(
-        F.lit("<"), F.coalesce(pri.cast("string"), F.lit("13")), F.lit(">1 "),
-        macro("ISODATE", ts), F.lit(" "),
-        F.coalesce(host.cast("string"), F.lit("")), F.lit(" "),
-        dash(program), F.lit(" "), dash(pid), F.lit(" "), dash(msgid),
+        _syslog5424_prefix(
+            pri, ts, _or(host, ""), *[_or(c, "-") for c in (program, pid, msgid)]
+        ),
         F.lit(f' [{token} tag="{tag}"] '), payload.cast("string"),
     )
 
@@ -1258,12 +1236,8 @@ def sumologic_http_body(nv_pairs: Column) -> Column:
     """scl/sumologic/sumologic.conf sumologic-http() POST body:
     $(format-json --scope all-nv-pairs --exclude SOURCE) over the
     message's name-value map — here a map<string,string> column with
-    the SOURCE key excluded, rendered as one JSON object (keys sorted
-    for determinism, matching value-pairs' sorted iteration)."""
-    filtered = F.map_filter(nv_pairs, lambda k, _: k != "SOURCE")
-    return F.to_json(
-        F.map_from_entries(F.array_sort(F.map_entries(filtered)))
-    )
+    the SOURCE key excluded, through the one JSON encoder."""
+    return format_json(F.map_filter(nv_pairs, lambda k, _: k != "SOURCE"))
 
 
 # ---------------------------------------------------------------------------
@@ -1366,24 +1340,15 @@ def elasticsearch_datastream_body(
     nv-pairs with DATE swapped for an ISO @timestamp. NULL fields are
     omitted like --omit-empty under format-json's defaults for unset
     names; the batch body_suffix newline is the sink's concern."""
-    from axosyslog_spark.functions.templates import macro
-
-    parts: list[Column] = [
-        macro("ISODATE", ts).alias("@timestamp"),
-        F.nullif(F.coalesce(host.cast("string"), F.lit("")), F.lit(""))
-        .alias("HOST"),
-        F.nullif(F.coalesce(program.cast("string"), F.lit("")), F.lit(""))
-        .alias("PROGRAM"),
-        (F.nullif(F.coalesce(pid.cast("string"), F.lit("")), F.lit(""))
-         if pid is not None else F.lit(None).cast("string")).alias("PID"),
-        message.cast("string").alias("MESSAGE"),
-    ]
-    if extra:
-        parts.extend(c.cast("string").alias(k) for k, c in extra.items())
-    return F.concat(
-        F.lit('{"create":{ }}\n'),
-        F.to_json(F.struct(*parts), {"ignoreNullFields": "true"}),
-    )
+    pairs = {
+        "@timestamp": macro("ISODATE", ts),
+        "HOST": _nonempty(host),
+        "PROGRAM": _nonempty(program),
+        "PID": _nonempty(pid),
+        "MESSAGE": message.cast("string"),
+        **{k: c.cast("string") for k, c in (extra or {}).items()},
+    }
+    return F.concat(F.lit('{"create":{ }}\n'), format_json(pairs))
 
 
 # slack() default color ladder, one per severity 0..7 (slack.conf
@@ -1412,8 +1377,6 @@ def slack_attachment_body(
     is what format-json does with empty values under --cast. The
     surrounding '{"attachments":[' body-prefix / ']}' suffix and
     the webhook POST are the sink's concern."""
-    from axosyslog_spark.functions.templates import macro
-
     sev_name = macro("PRIORITY", severity=severity.cast("int"))
     byline = F.concat(
         F.lit("host: "), F.coalesce(host.cast("string"), F.lit("")),
@@ -1424,17 +1387,13 @@ def slack_attachment_body(
     color = F.element_at(
         F.array(*[F.lit(c) for c in colors]), (severity.cast("int") % 8) + 1
     )
-    return F.to_json(
-        F.struct(
-            F.concat(message.cast("string"), F.lit(" - "), byline)
-            .alias("fallback"),
-            color.alias("color"),
-            byline.alias("author_name"),
-            message.cast("string").alias("text"),
-            F.unix_timestamp(ts).cast("string").alias("ts"),
-        ),
-        {"ignoreNullFields": "true"},
-    )
+    return format_json({
+        "fallback": F.concat(message.cast("string"), F.lit(" - "), byline),
+        "color": color,
+        "author_name": byline,
+        "text": message.cast("string"),
+        "ts": F.unix_timestamp(ts).cast("string"),
+    })
 
 
 def discord_body(
@@ -1448,16 +1407,12 @@ def discord_body(
     over content (the template truncated to max-msg-length, default
     '[empty message]' fallback applied by the caller's template),
     username / avatar_url omitted when empty, tts as a JSON bool."""
-    parts = [
-        F.substring(message.cast("string"), 1, max_msg_length)
-        .alias("content"),
-        (F.lit(username) if username else F.lit(None).cast("string"))
-        .alias("username"),
-        (F.lit(avatar_url) if avatar_url else F.lit(None).cast("string"))
-        .alias("avatar_url"),
-        F.lit(tts).alias("tts"),
-    ]
-    return F.to_json(F.struct(*parts), {"ignoreNullFields": "true"})
+    return format_json({
+        "content": F.substring(message.cast("string"), 1, max_msg_length),
+        "username": F.lit(username) if username else None,
+        "avatar_url": F.lit(avatar_url) if avatar_url else None,
+        "tts": F.lit(tts),
+    })
 
 
 def telegram_body(
@@ -1495,27 +1450,14 @@ def logscale_event_body(
     optional timezone, and attributes = the rfc5424 scope minus
     MESSAGE/DATE (--omit-empty-values drops unset names). The
     '[{"events":[' framing and bearer-token POST are the sink's."""
-    from axosyslog_spark.functions.templates import macro
-
-    def s(c: Column | None) -> Column:
-        if c is None:
-            return F.lit(None).cast("string")
-        return F.nullif(c.cast("string"), F.lit(""))
-
-    attrs = F.struct(
-        s(host).alias("HOST"), s(program).alias("PROGRAM"),
-        s(pid).alias("PID"),
-    )
-    return F.to_json(
-        F.struct(
-            rawstring.cast("string").alias("rawstring"),
-            macro("ISODATE", ts).alias("timestamp"),
-            (F.lit(timezone) if timezone else F.lit(None).cast("string"))
-            .alias("timezone"),
-            attrs.alias("attributes"),
-        ),
-        {"ignoreNullFields": "true"},
-    )
+    return format_json({
+        "rawstring": rawstring.cast("string"),
+        "timestamp": macro("ISODATE", ts),
+        "timezone": F.lit(timezone) if timezone else None,
+        "attributes.HOST": _nonempty(host),
+        "attributes.PROGRAM": _nonempty(program),
+        "attributes.PID": _nonempty(pid),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -1679,21 +1621,8 @@ def google_pubsub_event(data: Column, attributes: Column) -> Column:
     attributes=literal($(format-flat-json `attributes`))). ``data``
     is base64-wrapped; ``attributes`` is a map column rendered as a
     FLAT json object embedded verbatim (literal())."""
-    from axosyslog_spark.functions.templates import tf_base64_encode
-
-    # format-flat-json over a map: flat keys, reverse-lex entry order
-    # (tf_flat_value_pairs_sort's strcmp(s2, s1)); to_json preserves
-    # map entry order, so sort-then-rebuild renders it directly
-    attrs_json = F.to_json(
-        F.map_from_entries(F.reverse(F.array_sort(F.map_entries(attributes))))
-    )
-    # '{"data":"<b64>"}' spliced with the literal() attributes object
-    head = F.to_json(F.struct(tf_base64_encode(data).alias("data")))
-    return F.concat(
-        F.substr(head, F.lit(1), F.length(head) - 1),
-        F.lit(',"attributes":'),
-        attrs_json,
-        F.lit("}"),
+    return format_json(
+        {"data": tf_base64_encode(data), "attributes": json_order(attributes)}
     )
 
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (callers compose)
+from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
 
@@ -159,37 +159,33 @@ def windows_eventlog_xml_parser(
     return df.withColumn(out_col, winlog_flatten_col(df[src_col], prefix))
 
 
+def _xml_element(head, name, value, empty_end="/>"):
+    """The one XML element renderer: ``<head>value</name>`` with the
+    value's & < > escaped, ``<head`` + ``empty_end`` for an empty or
+    NULL value (modules/xml/filterx-func-format-xml.c
+    append_inner_dict_end_tag's empty-body branch)."""
+    v = F.replace(value, F.lit("&"), F.lit("&amp;"))
+    v = F.replace(v, F.lit("<"), F.lit("&lt;"))
+    v = F.replace(v, F.lit(">"), F.lit("&gt;"))
+    return F.when(
+        F.coalesce(value, F.lit("")) == "", F.concat(F.lit("<"), head, F.lit(empty_end))
+    ).otherwise(
+        F.concat(F.lit("<"), head, F.lit(">"), v, F.lit("</"), name, F.lit(">"))
+    )
+
+
+def _format_entries(m, element):
+    """A FLAT map<string,string> rendered entry by entry, in map order."""
+    return F.array_join(F.transform(F.map_entries(m), element), "")
+
+
 def format_xml_fx(m):
     """filterx format_xml(dict) for a FLAT map<string,string>: each
-    entry renders as <key>value</key> in map order, an empty value as
-    the self-closing <key/> (modules/xml/filterx-func-format-xml.c
-    append_inner_dict_end_tag's empty-body branch). Values are
-    XML-escaped (& < >); the reference's nested-dict / @attribute
+    entry renders as <key>value</key>, an empty value as the
+    self-closing <key/>. The reference's nested-dict / @attribute
     forms have no meaning for a flat map column and are documented
     out of this subset."""
-    from pyspark.sql import functions as F
-
-    def esc(v):
-        v = F.replace(v, F.lit("&"), F.lit("&amp;"))
-        v = F.replace(v, F.lit("<"), F.lit("&lt;"))
-        return F.replace(v, F.lit(">"), F.lit("&gt;"))
-
-    return F.array_join(
-        F.transform(
-            F.map_entries(m),
-            lambda e: F.when(
-                F.coalesce(e["value"], F.lit("")) == "",
-                F.concat(F.lit("<"), e["key"], F.lit("/>")),
-            ).otherwise(
-                F.concat(
-                    F.lit("<"), e["key"], F.lit(">"),
-                    esc(e["value"]),
-                    F.lit("</"), e["key"], F.lit(">"),
-                )
-            ),
-        ),
-        "",
-    )
+    return _format_entries(m, lambda e: _xml_element(e["key"], e["key"], e["value"]))
 
 
 def format_windows_eventlog_xml_fx(m):
@@ -198,37 +194,17 @@ def format_windows_eventlog_xml_fx(m):
     (filterx-func-format-windows-eventlog-xml.c:30-66): a key of the
     form 'EventData.<Name>' (any dotted prefix before 'EventData.')
     renders as <Data Name='<Name>'>value</Data>, the empty value as
-    the self-closing <Data Name='<Name>' />. Other keys render like
-    format_xml; the reference's fully-nested dict walk applies the
-    same leaf rule inside the EventData subtree."""
-    from pyspark.sql import functions as F
-
-    def esc(v):
-        v = F.replace(v, F.lit("&"), F.lit("&amp;"))
-        v = F.replace(v, F.lit("<"), F.lit("&lt;"))
-        return F.replace(v, F.lit(">"), F.lit("&gt;"))
-
+    the self-closing <Data Name='<Name>' />. The reference's
+    fully-nested dict walk applies the same leaf rule inside the
+    EventData subtree."""
     def one(e):
-        is_data = e["key"].rlike(r"(^|\.)EventData\.[^.]+$")
         name = F.regexp_extract(e["key"], r"EventData\.([^.]+)$", 1)
-        empty = F.coalesce(e["value"], F.lit("")) == ""
-        data = F.when(
-            empty,
-            F.concat(F.lit("<Data Name='"), name, F.lit("' />")),
-        ).otherwise(
-            F.concat(
-                F.lit("<Data Name='"), name, F.lit("'>"),
-                esc(e["value"]), F.lit("</Data>"),
-            )
+        data = _xml_element(
+            F.concat(F.lit("Data Name='"), name, F.lit("'")), F.lit("Data"),
+            e["value"], " />",
         )
-        plain = F.when(
-            empty, F.concat(F.lit("<"), e["key"], F.lit("/>"))
-        ).otherwise(
-            F.concat(
-                F.lit("<"), e["key"], F.lit(">"), esc(e["value"]),
-                F.lit("</"), e["key"], F.lit(">"),
-            )
-        )
-        return F.when(is_data, data).otherwise(plain)
+        return F.when(
+            e["key"].rlike(r"(^|\.)EventData\.[^.]+$"), data
+        ).otherwise(_xml_element(e["key"], e["key"], e["value"]))
 
-    return F.array_join(F.transform(F.map_entries(m), one), "")
+    return _format_entries(m, one)

@@ -140,6 +140,14 @@ def test_list_funcs(spark):
     assert r.h == "a" and r.n1 == "b" and r.c == 3
     assert r.joined == "a,b,c" and r.idx == 1
     assert r.mapped == ["A", "B", "C"] and r.filtered == ["a", "c"]
+    # a 20,000-character quoted element holding commas
+    long = spark.createDataFrame([('"' + "q," * 10000 + '",b',)], "s string")
+    lctx = TemplateContext(columns={"s": F.col("s")})
+    r = long.select(
+        compile_template("$(list-count ${s})", lctx).cast("int").alias("c"),
+        compile_template("$(list-head ${s})", lctx).alias("h"),
+    ).first()
+    assert r.c == 2 and r.h == "q," * 10000
 
 
 def test_format_funcs(spark):
@@ -233,7 +241,8 @@ def test_format_cef_extension(spark):
 
 def test_format_cim(spark):
     """scl/cim/template.conf: .cim.* shift 5, .* -> _*, keep _*/dotted,
-    drop bare names, @timestamp/@message pairs, sorted JSON keys."""
+    drop bare names, @timestamp/@message pairs, format-json's
+    reverse-lexicographic key order."""
     import datetime as dt
 
     df = spark.createDataFrame(
@@ -249,8 +258,8 @@ def test_format_cim(spark):
     iso = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
     out = df.select(tf.format_cim(pairs, iso, F.col("msg")).alias("j")).collect()[0].j
     assert out == (
-        '{"@message":"hello","@timestamp":"2024-01-02T03:04:05Z",'
-        '"_internal":"x","_priv":"y","action":"allow","net.src":"1.2.3.4"}'
+        '{"net.src":"1.2.3.4","action":"allow","_priv":"y","_internal":"x",'
+        '"@timestamp":"2024-01-02T03:04:05Z","@message":"hello"}'
     )
 
 
@@ -273,8 +282,8 @@ def test_format_cim_dotted_overrides_plain(spark):
     iso = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
     out = df.select(tf.format_cim(pairs, iso, F.col("msg")).alias("j")).collect()[0].j
     assert out == (
-        '{"@message":"m","@timestamp":"2024-01-02T03:04:05Z",'
-        '"_collide":"aaa"}'
+        '{"_collide":"aaa","@timestamp":"2024-01-02T03:04:05Z",'
+        '"@message":"m"}'
     )
 
 
@@ -444,8 +453,8 @@ def test_format_flat_json_reverse_key_order(spark):
     # flat dotted keys, REVERSE lexicographic pair order
     df = spark.createDataFrame([("v1", "v2", "v3")], "a string, z string, m string")
     out = df.select(
-        tf.format_flat_json(
-            {"a.key": F.col("a"), "z.key": F.col("z"), "m.key": F.col("m")}
+        tf.format_json(
+            {"a.key": F.col("a"), "z.key": F.col("z"), "m.key": F.col("m")}, flat=True
         ).alias("j")
     ).first()["j"]
     assert out == '{"z.key":"v2","m.key":"v3","a.key":"v1"}'
@@ -457,3 +466,82 @@ def test_map_value_pairs_equals_column_copies(spark):
     want = df.select("*", F.col("a").alias("a2"), F.col("b").alias("b2"))
     assert out.columns == want.columns
     assert out.collect() == want.collect()
+
+
+def test_one_encoder_per_wire_format(spark):
+    """Each wire format has one encoder, so every producer of it
+    agrees: each JSON object, from $(format-json), an SCL destination
+    body or format_cim, lists its keys in reverse-lexicographic order
+    at every level (format-json.c:459, strcmp(s2, s1)) on the raw
+    string; $(format-cef-extension), FilterX format_cef() and
+    format_leef() escape an extension value alike; format_xml() and
+    format_windows_eventlog_xml() render a non-EventData key alike."""
+    import datetime as dt
+    import json
+
+    from axosyslog_spark.functions.filterx_lang import compile_filterx
+    from axosyslog_spark.operators import scl
+
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 6, 15, 10, 11, 5), "h1", "app", "9", 3, "msg", "v")],
+        "ts timestamp, host string, prog string, pid string, sev int,"
+        " msg string, v string",
+    )
+    ts, host, prog, pid, msg = (F.col(c) for c in ("ts", "host", "prog", "pid", "msg"))
+    nv = F.create_map(*[F.lit(x) for x in ("akey", "1", "zkey", "2", "mkey", "3")])
+    ctx = TemplateContext(columns={"A": host, "B": prog})
+    producers = {
+        "format-json": compile_template(
+            "$(format-json b=${B} a=${A} c.y=${A} c.x=${B} d=x)", ctx
+        ),
+        "format-flat-json": compile_template("$(format-flat-json c.x=${B} a=${A})", ctx),
+        "splunk": scl.splunk_hec_event(
+            msg, host, ts, index=F.lit("main"), source="src",
+            fields=F.create_map(F.lit("env"), F.lit("prod"), F.lit("zone"), F.lit("b")),
+        ),
+        "elasticsearch": F.substring_index(
+            scl.elasticsearch_datastream_body(ts, host, prog, pid, msg), "\n", -1
+        ),
+        "slack": scl.slack_attachment_body(msg, host, prog, pid, F.col("sev"), ts),
+        "discord": scl.discord_body(msg, username="u", avatar_url="a"),
+        "logscale": scl.logscale_event_body(msg, ts, host, prog, pid, timezone="UTC"),
+        "pubsub": scl.google_pubsub_event(msg, nv),
+        "sumologic": scl.sumologic_http_body(nv),
+        "format_cim": tf.format_cim(
+            F.create_map(F.lit(".cim.a"), F.lit("1"), F.lit("_b"), F.lit("2")), host, msg
+        ),
+    }
+    row = df.select(*[c.alias(n) for n, c in producers.items()]).first()
+    for name in producers:
+        levels = []
+        json.loads(
+            row[name], object_pairs_hook=lambda p: levels.append([k for k, _ in p]) or dict(p)
+        )
+        assert len(levels[-1]) > 1, name
+        for keys in levels:
+            assert keys == sorted(keys, reverse=True), (name, row[name])
+    assert json.loads(row["format-json"])["c"] == {"y": "h1", "x": "app"}
+
+    vals = ["a=b", "c\\d", "l1\nl2", "r1\rr2", "t1\tt2"]
+    ext = {
+        "a=b": "a\\=b", "c\\d": "c\\\\d", "l1\nl2": "l1\\nl2",
+        "r1\rr2": "r1\\rr2", "t1\tt2": "t1\\u0009t2",
+    }
+    maps = spark.createDataFrame(
+        [(v, {"k": v, "z": v.replace("=", "<")}) for v in vals],
+        "v string, m map<string,string>",
+    )
+    blk = compile_filterx(
+        "$cef = format_cef($m); $leef = format_leef($m);"
+        "$xml = format_xml($m); $win = format_windows_eventlog_xml($m);",
+        known_fields=maps.columns,
+    )
+    out = blk.apply(maps).withColumn("tpl", tf.format_cef_extension_map(F.col("m")))
+    for r in out.collect():
+        entries = set(r.tpl.split(" "))
+        assert f"k={ext[r.v]}" in entries and len(entries) == 2
+        assert set(r.cef.split("|", 7)[7].split(" ")) == entries
+        assert set(r.leef.split("|", 5)[5].split("\t")) == entries
+        assert r.xml == r.win
+        if r.v == "a=b":
+            assert "<k>a=b</k>" in r.xml and "<z>a&lt;b</z>" in r.xml

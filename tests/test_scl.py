@@ -25,8 +25,14 @@ COMMON = (
 
 
 def test_apache_accesslog_parser_formats(spark):
+    # row 3: 20,000-character quoted fields, matched without a stack
+    # frame per character
+    long_line = (
+        '127.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "GET /' + "p" * 20000
+        + ' HTTP/1.1" 200 5 "' + "r" * 20000 + '" "' + "a\\\"" * 5000 + '"'
+    )
     df = spark.createDataFrame(
-        [(0, VHOST_COMBINED), (1, COMMON), (2, "not an access log")],
+        [(0, VHOST_COMBINED), (1, COMMON), (2, "not an access log"), (3, long_line)],
         "id int, text string",
     )
     out = {
@@ -48,6 +54,10 @@ def test_apache_accesslog_parser_formats(spark):
     assert c["apache_ok"] and c["apache_vhost"] is None
     assert c["apache_referrer"] is None and c["apache_agent"] is None
     assert not out[2]["apache_ok"]
+    big = out[3]
+    assert big["apache_ok"] and big["apache_request"] == "/" + "p" * 20000
+    assert big["apache_referrer"] == "r" * 20000
+    assert big["apache_agent"] == 'a"' * 5000
 
 
 def test_apache_nonhttp_rawrequest_drops_triplet(spark):
@@ -504,6 +514,8 @@ def test_arr_parser(spark):
         (0, "2024-03-01 12:34:56.7|Info|DownloadService|Report sent"),
         (1, "2024-03-01 12:34:56.7|Fatal|Main|boom"),   # Fatal unresolvable
         (2, "stray line"),
+        # a 20,000-character message spanning lines; it ends at a CR
+        (3, "2024-03-01 12:34:56.7|Info|Main|" + "m\n" * 10000 + "\rtail"),
     ]
     df = spark.createDataFrame(rows, "id int, text string")
     out = {r["id"]: r for r in scl.arr_parser(df, "Radarr").collect()}
@@ -514,6 +526,7 @@ def test_arr_parser(spark):
     # set-severity only knows syslog names: Fatal keeps the default
     assert out[1]["severity"] == 5
     assert not out[2]["arr_ok"] and out[2]["message"] == "stray line"
+    assert out[3]["arr_ok"] and out[3]["message"] == "m\n" * 10000
 
 
 def test_jellyfin_parser(spark):
@@ -521,6 +534,7 @@ def test_jellyfin_parser(spark):
         (0, '[2024-05-01 10:00:00.123 +02:00] [INF] [22] Core started'),
         (1, '[2024-05-01 10:00:01.000 +00:00] [ERR] [3] It broke'),
         (2, "partial garbage"),
+        (3, "[2024-05-01 10:00:02.000 +00:00] [ERR] [3] " + "j" * 20000),
     ]
     df = spark.createDataFrame(rows, "id int, text string")
     out = {r["id"]: r for r in scl.jellyfin_parser(df).collect()}
@@ -533,6 +547,7 @@ def test_jellyfin_parser(spark):
     # ERR resolves via syslog-names
     assert out[1]["severity"] == 3
     assert not out[2]["jellyfin_ok"]
+    assert out[3]["jellyfin_ok"] and out[3]["message"] == "j" * 20000
 
 
 def test_qbittorrent_parser(spark):
@@ -624,8 +639,8 @@ def test_sumologic_http_body(spark):
             )
         ).alias("body")
     )
-    # SOURCE excluded, keys sorted, JSON-escaped
-    assert df.first()["body"] == '{"akey":"va\\"l","zkey":"v2"}'
+    # SOURCE excluded, format-json's reverse key order, JSON-escaped
+    assert df.first()["body"] == '{"zkey":"v2","akey":"va\\"l"}'
 
 
 def test_darwin_oslog_stream_parser(spark):
