@@ -12,10 +12,23 @@ String escaping follows Spark's default literal grammar
 (``spark.sql.parser.escapedStringLiterals=false``): backslash escapes
 are processed, so ``\\`` and ``'`` are backslash-escaped and every other
 character, non-ASCII included, is taken verbatim.
+
+The same cost recurs per expression: every ``F.*`` call and Column
+operator is a py4j round trip, so a plan rebuilt on every batch pays
+for its whole expression graph each time (a route_fanout pass made
+~1,900 calls before Spark ran anything). ``per_jvm``/``JvmMemo``
+build an expression graph once per JVM and hand the same Column
+proxies to every later plan; Columns by name (``F.col``) carry no
+plan id, so one proxy is valid in any DataFrame of that JVM.
 """
 
 from __future__ import annotations
 
+import functools
+import threading
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,3 +51,77 @@ def literal_array(values, elem_type: str) -> Column:
     """``array<elem_type>`` constant built with one JVM call, whatever
     the number of elements (see module docstring)."""
     return F.expr(f"CAST({sql_literal(list(values))} AS array<{elem_type}>)")
+
+
+_BY_ID = object()
+_MEMO_SIZE = 64
+_MEMOS: weakref.WeakSet = weakref.WeakSet()
+
+
+def _memo_key(value):
+    """Plain values (str/int/bool/None and tuples of them) key by
+    value; anything else (specs holding Columns, sessions, rulesets)
+    by identity. The memo keeps a reference to the arguments, so an id
+    stays unique while its entry lives."""
+    if value is None or isinstance(value, (str, int, float)):
+        return value
+    if isinstance(value, tuple):
+        return tuple(map(_memo_key, value))
+    return (_BY_ID, id(value))
+
+
+class JvmMemo:
+    """Values built once per (py4j gateway, key).
+
+    The gateway is part of the key: a relaunched JVM never receives
+    proxies made for the one before it (the entries are dropped when
+    it changes). Past _MEMO_SIZE entries the oldest goes, so plans
+    built from a fresh spec per batch do not grow it without bound.
+    Thread-safe: a streaming foreachBatch builds its plans on another
+    thread."""
+
+    def __init__(self):
+        self._lock = threading.RLock()
+        self._gateway = None
+        self._entries: dict = {}
+        _MEMOS.add(self)
+
+    def get(self, key: tuple, build):
+        """``build()``, made on the first call for ``key`` in this JVM.
+        ``key`` holds the arguments ``build`` depends on (see
+        _memo_key)."""
+        k = tuple(map(_memo_key, key))
+        with self._lock:
+            gateway = SparkContext._gateway
+            if gateway is not self._gateway:
+                self._gateway, self._entries = gateway, {}
+            hit = self._entries.get(k)
+            if hit is None:
+                if len(self._entries) >= _MEMO_SIZE:
+                    del self._entries[next(iter(self._entries))]
+                hit = self._entries[k] = (key, build())
+            return hit[1]
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries = {}
+
+
+def clear_memos() -> None:
+    """Drop every memoized plan expression; the next build of each
+    plan makes its Columns again."""
+    for memo in list(_MEMOS):
+        memo.clear()
+
+
+def per_jvm(build):
+    """Decorator: memoize a function that builds Columns, per JVM and
+    arguments (JvmMemo). The function must depend on its arguments
+    alone; pass lists as tuples so equal ones share an entry."""
+    memo = JvmMemo()
+
+    @functools.wraps(build)
+    def cached(*args):
+        return memo.get(args, lambda: build(*args))
+
+    return cached

@@ -18,8 +18,10 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from axosyslog_spark.functions.literals import per_jvm
 
 
 @dataclass(frozen=True)
@@ -57,6 +59,7 @@ def tool_lookup_rows() -> list[tuple[str, str, str, str]]:
 TOOL_DEFAULT = {"tool_category": "unknown", "risk_level": "medium", "owner": "team-default"}
 
 
+@per_jvm
 def tool_lookup_df(spark: SparkSession) -> DataFrame:
     """The registry as a SQL VALUES relation — the same clause the
     DuckDB oracle reads. Spark plans it as a JVM-local LocalRelation,
@@ -69,7 +72,8 @@ def tool_lookup_df(spark: SparkSession) -> DataFrame:
     Inlining the registry as a CASE chain or a create_map literal
     instead of joining measured 3.5x slower: CollapseProject copies
     it into every route predicate and the generated method falls back
-    to interpreted code; the join keeps a codegen boundary there."""
+    to interpreted code; the join keeps a codegen boundary there.
+    One relation per session: every plan of that session reuses it."""
     return spark.sql(f"SELECT * FROM {tool_lookup_values_sql()}")
 
 
@@ -84,18 +88,27 @@ def tool_lookup_values_sql(alias: str = "tl") -> str:
 
 def enrich(df: DataFrame, db: DataFrame, spec: LookupSpec) -> DataFrame:
     """Generic add-contextual-data: broadcast left join + default fallback."""
-    sel = [F.col(spec.db_key).alias(f"__db_{spec.db_key}")] + [
+    dim, cond, defaults = _enrich_plan(db, spec)
+    out = df.join(dim, cond, "left")
+    return out.drop(f"__db_{spec.db_key}").withColumns(defaults)
+
+
+@per_jvm
+def _enrich_plan(db: DataFrame, spec: LookupSpec) -> tuple[DataFrame, Column, dict[str, Column]]:
+    """enrich's broadcast dimension, join condition and default
+    fallbacks, built once per JVM, database frame and spec. The
+    condition compares the columns by name: ``df[key]`` would carry
+    one frame's plan id and could not be reused on the next frame."""
+    dim_key = f"__db_{spec.db_key}"
+    sel = [F.col(spec.db_key).alias(dim_key)] + [
         F.col(c).alias(spec.prefix + c) for c in spec.columns
     ]
-    dim = db.select(*sel)
-    out = df.join(
-        F.broadcast(dim), df[spec.key] == dim[f"__db_{spec.db_key}"], "left"
-    ).drop(f"__db_{spec.db_key}")
-    for c in spec.columns:
-        name = spec.prefix + c
-        if c in spec.default:
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(spec.default[c])))
-    return out
+    defaults = {
+        spec.prefix + c: F.coalesce(F.col(spec.prefix + c), F.lit(spec.default[c]))
+        for c in spec.columns
+        if c in spec.default
+    }
+    return F.broadcast(db.select(*sel)), F.col(spec.key) == F.col(dim_key), defaults
 
 
 def load_context_db(spark: SparkSession, path: str) -> DataFrame:

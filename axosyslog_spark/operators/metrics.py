@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.literals import per_jvm
+
 
 def metrics_probe(
     df: DataFrame, labels: list[str], counter_name: str = "n"
@@ -27,10 +29,22 @@ def sink_counters(sinks: list[str]) -> list[Column]:
     path (lib/cfg-tree.c:1087-1101), riding whatever action consumes
     the routed frame instead of a second scan. Counts, not sums, so an
     empty input (a bucket no conversation hashed into) reports 0, not
-    NULL."""
-    return [F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks] + [
-        F.count(F.lit(1)).alias("__total")
-    ]
+    NULL. Built once per JVM and sink list."""
+    return list(_sink_counters(tuple(sinks)))
+
+
+@per_jvm
+def _sink_counters(sinks: tuple[str, ...]) -> tuple[Column, ...]:
+    return (
+        *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks],
+        F.count(F.lit(1)).alias("__total"),
+    )
+
+
+@per_jvm
+def _row_count() -> Column:
+    """The ``n`` counter of sink_counts and sink_histogram."""
+    return F.count(F.lit(1)).alias("n")
 
 
 def _sorted_small(agg: DataFrame, *keys: str) -> DataFrame:
@@ -46,7 +60,7 @@ def _sorted_small(agg: DataFrame, *keys: str) -> DataFrame:
 def sink_counts(routed: DataFrame) -> DataFrame:
     """Per-sink delivered-row counts — the exact per-sink count gate."""
     return _sorted_small(
-        routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n")), "sink"
+        routed.groupBy("sink").agg(_row_count()), "sink"
     )
 
 
@@ -54,5 +68,5 @@ def sink_histogram(routed: DataFrame) -> DataFrame:
     """(sink, severity, tool_category) histogram (FIXTURES.md F6)."""
     keys = ("sink", "severity", "tool_category")
     return _sorted_small(
-        routed.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")), *keys
+        routed.groupBy(*keys).agg(_row_count()), *keys
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.literals import per_jvm
 from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
 
@@ -55,7 +56,28 @@ def parse_header(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Adds: kind, parse_ok, pri, severity, facility, host, appname,
     procid, msg_ts, body, tags.
+
+    Two-step projection ON PURPOSE: `kind` and the token array are
+    materialized in their own Project so every downstream column
+    reads them as plain attribute references. Folding everything
+    into one withColumns repeats the split/classify subtrees per
+    column and whole-stage codegen does NOT reliably CSE them —
+    measured 2x slower at 5M rows.
     """
+    kind, toks, pri_raw, fields = _header_columns(text_col)
+    return (
+        df.withColumn("kind", kind)
+        .withColumn("__toks", toks)
+        .withColumn("__pri_raw", pri_raw)
+        .withColumns(fields)
+        .drop("__toks", "__pri_raw")
+    )
+
+
+@per_jvm
+def _header_columns(text_col: str) -> tuple[Column, Column, Column, dict[str, Column]]:
+    """parse_header's staged columns (kind, __toks, __pri_raw, then the
+    output fields), built once per JVM and source column."""
     text = F.col(text_col)
 
     # Extraction fast path: classification already proved the full
@@ -63,18 +85,10 @@ def parse_header(df: DataFrame, text_col: str = "text") -> DataFrame:
     # space-separated parts with the message intact in part 8 (the
     # regex's field groups are \S+, i.e. single-space separated).
     # ONE split replaces nine regexp_extract passes over the line.
-    #
-    # Two-step projection ON PURPOSE: `kind` and the token array are
-    # materialized in their own Project so every downstream column
-    # reads them as plain attribute references. Folding everything
-    # into one withColumns repeats the split/classify subtrees per
-    # column and whole-stage codegen does NOT reliably CSE them —
-    # measured 2x slower at 5M rows.
-    df = df.withColumn("kind", classify_kind(text))
     kind = F.col("kind")
     # tokenize ONLY syslog rows (null array otherwise — element_at on
     # null stays null and every consumer is already kind-gated)
-    df = df.withColumn("__toks", F.when(kind == "syslog", F.split(text, " ", 8)))
+    toks_expr = F.when(kind == "syslog", F.split(text, " ", 8))
     toks = F.col("__toks")
 
     def g(i: int) -> Column:
@@ -87,52 +101,49 @@ def parse_header(df: DataFrame, text_col: str = "text") -> DataFrame:
     # elimination does not reliably dedup branch-nested copies — the
     # staged attribute runs the regex once per row (measured 1.97s ->
     # 1.64s on the 5M-row header stage, round 6)
-    df = df.withColumn(
-        "__pri_raw",
-        F.regexp_extract(F.element_at(toks, 1), "^<([0-9]{1,3})>", 1).cast("int"),
-    )
+    pri_raw_expr = F.regexp_extract(
+        F.element_at(toks, 1), "^<([0-9]{1,3})>", 1
+    ).cast("int")
     pri_raw = F.col("__pri_raw")
     # invalid PRI (>191) falls back to the default, like a failed parse
     pri_num = F.when(
         (kind == "syslog") & (pri_raw <= 191), pri_raw
     ).otherwise(F.lit(DEFAULT_PRI))
 
-    df = df.withColumns(
-        {
-            "parse_ok": kind != "free",
-            "pri": pri_num,
-            "severity": (pri_num % 8).cast("int"),
-            "facility": ((pri_num - pri_num % 8) / 8).cast("int"),
-            "host": F.when(kind == "syslog", g(4)),
-            "appname": F.when(kind == "syslog", g(5)),
-            "procid": F.when(kind == "syslog", g(6)),
-            # RFC5424 TIMESTAMP carries a zone designator (Z or
-            # +hh:mm); the transcripts generator emits naked stamps —
-            # accept both. Dispatch on length (naked == exactly 19
-            # chars) instead of coalesce(parse, parse): a failed
-            # try_to_timestamp walks the JVM exception path per row,
-            # measured 27% slower on the 5M-row ts stage than one
-            # length compare (A/B r5); each row parses exactly once.
-            # An arithmetic substring->try_make_timestamp variant of
-            # the naked-stamp branch measured 2.2x faster ISOLATED but
-            # consistently ~0.45s SLOWER inside this projection (r6
-            # A/B, both token stagings) — the formatter stays.
-            "msg_ts": F.when(
-                kind == "syslog",
-                F.when(
-                    F.length(g(3)) == 19,
-                    F.try_to_timestamp(g(3), F.lit(TS_FMT_SPARK)),
-                ).otherwise(
-                    F.try_to_timestamp(g(3), F.lit(TS_FMT_SPARK + "XXX"))
-                ),
+    fields = {
+        "parse_ok": kind != "free",
+        "pri": pri_num,
+        "severity": (pri_num % 8).cast("int"),
+        "facility": ((pri_num - pri_num % 8) / 8).cast("int"),
+        "host": F.when(kind == "syslog", g(4)),
+        "appname": F.when(kind == "syslog", g(5)),
+        "procid": F.when(kind == "syslog", g(6)),
+        # RFC5424 TIMESTAMP carries a zone designator (Z or
+        # +hh:mm); the transcripts generator emits naked stamps —
+        # accept both. Dispatch on length (naked == exactly 19
+        # chars) instead of coalesce(parse, parse): a failed
+        # try_to_timestamp walks the JVM exception path per row,
+        # measured 27% slower on the 5M-row ts stage than one
+        # length compare (A/B r5); each row parses exactly once.
+        # An arithmetic substring->try_make_timestamp variant of
+        # the naked-stamp branch measured 2.2x faster ISOLATED but
+        # consistently ~0.45s SLOWER inside this projection (r6
+        # A/B, both token stagings) — the formatter stays.
+        "msg_ts": F.when(
+            kind == "syslog",
+            F.when(
+                F.length(g(3)) == 19,
+                F.try_to_timestamp(g(3), F.lit(TS_FMT_SPARK)),
+            ).otherwise(
+                F.try_to_timestamp(g(3), F.lit(TS_FMT_SPARK + "XXX"))
             ),
-            "body": F.when(kind == "syslog", g(9)).otherwise(text),
-            "tags": F.when(kind != "free", F.array(kind)).otherwise(
-                F.array(F.lit("unparsed"))
-            ),
-        }
-    ).drop("__toks", "__pri_raw")
-    return df
+        ),
+        "body": F.when(kind == "syslog", g(9)).otherwise(text),
+        "tags": F.when(kind != "free", F.array(kind)).otherwise(
+            F.array(F.lit("unparsed"))
+        ),
+    }
+    return classify_kind(text), toks_expr, pri_raw_expr, fields
 
 
 def parse_kv(df: DataFrame, src_col: str = "body") -> DataFrame:
@@ -142,36 +153,54 @@ def parse_kv(df: DataFrame, src_col: str = "body") -> DataFrame:
     pair-separator ' '). Implemented as anchored regexp extraction so
     it composes with the syslog body (kv fields live in the body).
     """
+    return df.withColumns(_kv_columns(src_col))
+
+
+@per_jvm
+def _kv_columns(src_col: str) -> dict[str, Column]:
     src = F.col(src_col)
-    return df.withColumns(
-        {
-            "status": F.nullif(F.regexp_extract(src, r"status=([a-z]+)", 1), F.lit("")),
-            "latency_ms": F.nullif(
-                F.regexp_extract(src, r"latency_ms=([0-9]+)", 1), F.lit("")
-            ).try_cast("bigint"),
-            "path": F.nullif(F.regexp_extract(src, r"path=([^ ]+)", 1), F.lit("")),
-            "retry": F.nullif(
-                F.regexp_extract(src, r"retry=([0-9]+)", 1), F.lit("")
-            ).try_cast("int"),
-        }
-    )
+    return {
+        "status": F.nullif(F.regexp_extract(src, r"status=([a-z]+)", 1), F.lit("")),
+        "latency_ms": F.nullif(
+            F.regexp_extract(src, r"latency_ms=([0-9]+)", 1), F.lit("")
+        ).try_cast("bigint"),
+        "path": F.nullif(F.regexp_extract(src, r"path=([^ ]+)", 1), F.lit("")),
+        "retry": F.nullif(
+            F.regexp_extract(src, r"retry=([0-9]+)", 1), F.lit("")
+        ).try_cast("int"),
+    }
+
+
+_JSON_TMP = ("__json_k", "__json_event", "__json_latency_ms")
 
 
 def parse_json_fields(df: DataFrame, src_col: str = "text") -> DataFrame:
     """json-parser() analog for the embedded JSON shape: promote known
-    fields ($.k, $.event, $.latency_ms) to typed columns."""
-    src = F.col(src_col)
-    is_json = F.col("kind") == "json"
-    return df.withColumns(
-        {
-            "json_k": F.when(is_json, F.get_json_object(src, "$.k").try_cast("bigint")),
-            "json_event": F.when(is_json, F.get_json_object(src, "$.event")),
-            "latency_ms": F.coalesce(
-                F.col("latency_ms"),
-                F.when(is_json, F.get_json_object(src, "$.latency_ms").try_cast("bigint")),
-            ),
-        }
-    )
+    fields ($.k, $.event, $.latency_ms) to typed columns.
+
+    ONE json_tuple parses each JSON row once for all three fields,
+    where three get_json_object calls parsed it three times. json_tuple
+    is a generator and breaks the codegen stage, yet whole route_fanout
+    passes still measured faster with it (150k turns, 4 vCPUs, 14
+    alternating rounds in one process: 0.664 s median against 0.708 s,
+    faster in 12). On a duplicate key json_tuple reports the LAST pair,
+    as RFC 8259 §4 notes many parsers do (get_json_object reported the
+    first)."""
+    tup, fields = _json_columns(src_col)
+    return df.select("*", tup).withColumns(fields).drop(*_JSON_TMP)
+
+
+@per_jvm
+def _json_columns(src_col: str) -> tuple[Column, dict[str, Column]]:
+    # non-JSON rows feed NULL: json_tuple still emits one all-NULL row
+    src = F.when(F.col("kind") == "json", F.col(src_col))
+    tup = F.json_tuple(src, "k", "event", "latency_ms").alias(*_JSON_TMP)
+    k, event, latency = (F.col(c) for c in _JSON_TMP)
+    return tup, {
+        "json_k": k.try_cast("bigint"),
+        "json_event": event,
+        "latency_ms": F.coalesce(F.col("latency_ms"), latency.try_cast("bigint")),
+    }
 
 
 # BSD syslog: <PRI>MMM dd HH:mm:ss HOST TAG[PID]: MSG

@@ -120,7 +120,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from axosyslog_spark.functions.literals import literal_array
+from axosyslog_spark.functions.literals import JvmMemo, literal_array
 
 # In-band framing bytes for the single-execution classify+extract
 # (see module docstring); message text containing any of them would
@@ -500,6 +500,7 @@ class PatternDB:
 
     def __init__(self, rules: list[PdbRule], programs: tuple[str, ...] = ()):
         self.programs = tuple(programs)
+        self._plans = JvmMemo()  # apply's staged projections
         self._init_rules(rules)
 
     def _init_rules(self, rules: list[PdbRule]):
@@ -937,16 +938,51 @@ class PatternDB:
         re-evaluate the regex per referencing column (Catalyst's
         CollapseProject keeps multiply-referenced non-cheap aliases
         staged, which is exactly what we rely on).
+
+        The staged projections are built once per JVM and arguments
+        and kept on the instance: parse_header plus a 50-rule apply
+        made 1,561 py4j calls on every build, a replay makes 129. The
+        <values> columns read ``df.columns``, so only a ruleset with
+        <values> keys the projections on the input's columns too.
         """
+        key = (text_col, prefix, with_class, with_tags, program_col)
+        if self.value_names:
+            key += (tuple(df.columns),)
+        stages = self._plans.get(key, lambda: self._stages(*key))
+        for cols, drop in stages:
+            # withColumn is one py4j call; withColumns converts its
+            # arguments element by element
+            if len(cols) == 1:
+                df = df.withColumn(*next(iter(cols.items())))
+            elif cols:
+                df = df.withColumns(cols)
+            if drop:
+                df = df.drop(*drop)
+        return df
+
+    def _stages(
+        self,
+        text_col: str,
+        prefix: str,
+        with_class: bool,
+        with_tags: bool,
+        program_col: str | None,
+        columns: tuple[str, ...] = (),
+    ) -> list[tuple[dict[str, Column], tuple[str, ...]]]:
+        """apply's projections in order, each (columns to add, columns
+        to drop after it); ``columns`` are the input's, read only by
+        the <values> stage."""
         text = _strip_framing_bytes(F.col(text_col))
         n = len(self.patterns)
         idx_col, groups_col = f"__pdb_idx{prefix}", f"__pdb_groups{prefix}"
         r_col = f"__pdb_r{prefix}"
+        stages: list[tuple[dict[str, Column], tuple[str, ...]]] = []
         if not self.patterns:
-            df = df.withColumns(
+            stages.append((
                 {idx_col: F.lit(None).cast("int"),
-                 groups_col: F.lit(None).cast("array<string>")}
-            )
+                 groups_col: F.lit(None).cast("array<string>")},
+                (),
+            ))
         else:
             gated = text
             if program_col is not None and self.programs:
@@ -959,7 +995,7 @@ class PatternDB:
             # and an inline expression would re-run the translate per
             # reference per row
             txt_col = f"__pdb_txt{prefix}"
-            df = df.withColumn(txt_col, gated)
+            stages.append(({txt_col: gated}, ()))
             gated = F.col(txt_col)
             # stage 1 — the routed leaf's tier regexes (one execution
             # per row on merged leaves; on two-pass leaves the partial
@@ -968,18 +1004,16 @@ class PatternDB:
             # (leaf-table lookups), kept in whole-stage codegen below
             # stage 3's stage break; stage 3 — winner's block sliced
             # out at that offset
-            df = df.withColumn(r_col, self._first_tier(gated))
+            stages.append(({r_col: self._first_tier(gated)}, ()))
             if self._two_pass:
-                df = df.withColumn(
-                    r_col, self._partial_tier(gated, F.col(r_col))
-                )
+                stages.append(({r_col: self._partial_tier(gated, F.col(r_col))}, ()))
             off_col = f"__pdb_off{prefix}"
             idx, off = self._decode(F.col(r_col))
-            df = df.withColumns({idx_col: idx, off_col: off})
-            df = df.withColumn(
-                groups_col,
-                self._groups_from_result(F.col(r_col), F.col(off_col)),
-            ).drop(r_col, txt_col, off_col)
+            stages.append(({idx_col: idx, off_col: off}, ()))
+            stages.append((
+                {groups_col: self._groups_from_result(F.col(r_col), F.col(off_col))},
+                (r_col, txt_col, off_col),
+            ))
         idx = F.col(idx_col)
         mod = idx % max(n, 1)
         proj2 = {
@@ -995,7 +1029,7 @@ class PatternDB:
                 mod,
                 "array<string>",
             )
-        df = df.withColumns(proj2)
+        stages.append((proj2, ()))
         groups = F.col(groups_col)
 
         # field extraction: per-field constant int array mapping ordinal
@@ -1021,7 +1055,7 @@ class PatternDB:
                 # job abort under ANSI casts
                 expr = F.nullif(expr, F.lit("")).try_cast(cast)
             field_cols[f"{prefix}{name}"] = expr
-        df = df.withColumns(field_cols)
+        stages.append((field_cols, ()))
 
         if self.value_names:
             from axosyslog_spark.functions.template_compiler import (
@@ -1029,6 +1063,7 @@ class PatternDB:
                 compile_template,
             )
 
+            present = {*columns, *proj2, *field_cols}
             ctx = TemplateContext(
                 columns={f: F.col(f"{prefix}{f}") for f in self.field_names}
             )
@@ -1036,7 +1071,7 @@ class PatternDB:
             for name in self.value_names:
                 expr = (
                     F.col(f"{prefix}{name}").cast("string")
-                    if f"{prefix}{name}" in df.columns
+                    if f"{prefix}{name}" in present
                     else F.lit(None).cast("string")
                 )
                 # when-chain only over the rules that define this value
@@ -1050,6 +1085,8 @@ class PatternDB:
                             compile_template(tmpl, ctx),
                         ).otherwise(expr)
                 value_cols[f"{prefix}{name}"] = expr
-            df = df.withColumns(value_cols)
+            stages.append((value_cols, ()))
 
-        return df.drop(idx_col, groups_col)
+        last, _ = stages.pop()
+        stages.append((last, (idx_col, groups_col)))
+        return stages

@@ -643,8 +643,8 @@ def checkpoint_parser(
             "msgid": F.when(is_syslog, nn(F.when(seven, t(6)).otherwise(t(7)))),
             f"{prefix}msg": F.when(
                 is_syslog,
-                F.when(seven, F.element_at(F.split(src, " ", 7), 7)).otherwise(
-                    F.element_at(F.split(src, " ", 8), 8)
+                F.when(seven, F.try_element_at(F.split(src, " ", 7), F.lit(7))).otherwise(
+                    F.try_element_at(F.split(src, " ", 8), F.lit(8))
                 ),
             ),
         }

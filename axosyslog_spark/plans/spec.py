@@ -29,6 +29,7 @@ Example ("switch from the reference" shape):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,10 +66,17 @@ class PipelineSpec:
     # a filterx {} block applied after enrich/templates, before routing
     filterx_block: str | None = None
 
+    @cached_property
+    def pattern_db(self) -> PatternDB:
+        """The compiled ruleset, one per spec: its apply plans are
+        memoized on the instance, so every compile reuses them. Built
+        at the first compile; rules changed after it need a new spec."""
+        return PatternDB(self.patterns)
+
     def compile(self, spark: SparkSession, transcripts: DataFrame) -> "CompiledPipeline":
         df = parse_stage(transcripts) if self.header_parse else transcripts
         if self.patterns:
-            df = PatternDB(self.patterns).apply(
+            df = self.pattern_db.apply(
                 df,
                 text_col=self.pattern_source_col,
                 with_class=any(r.rule_class for r in self.patterns),

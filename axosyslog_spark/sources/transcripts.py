@@ -30,9 +30,11 @@ The embedded ``text`` payload mixes four shapes (FIXTURES.md F1):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from axosyslog_spark.functions.literals import per_jvm
 
 # ---------------------------------------------------------------------------
 # Shared derivation spec (keep the Spark exprs and the DuckDB CTE in sync!)
@@ -75,11 +77,18 @@ def _build_from_events(ev: DataFrame) -> DataFrame:
     bytes/row of primitives instead of ~180 bytes/row of derived
     strings (guide §2.3, project before the exchange; round 6).
     """
+    windowed, derived = _transcript_columns()
+    return ev.select(*windowed).select(*derived)
+
+
+@per_jvm
+def _transcript_columns() -> tuple[list[Column], list[Column]]:
+    """The two select lists of _build_from_events (window first, then
+    every derived column), built once per JVM."""
     w = Window.partitionBy("user_id").orderBy("event_id")
-    ev = ev.select(
-        "event_id", "user_id", "event_type", "value", "props", "ts",
-        (F.row_number().over(w) - 1).cast("int").alias("__turn_idx"),
-    )
+    windowed = [
+        F.col(c) for c in ("event_id", "user_id", "event_type", "value", "props", "ts")
+    ] + [(F.row_number().over(w) - 1).cast("int").alias("__turn_idx")]
     eid = F.col("event_id")
     uid = F.col("user_id")
     sev = (eid % 8).cast("int")
@@ -140,14 +149,14 @@ def _build_from_events(ev: DataFrame) -> DataFrame:
         ),
     ).otherwise(F.lit(""))
 
-    return ev.select(
+    return windowed, [
         F.concat(F.lit("conv-"), F.lpad(uid.cast("string"), 8, "0")).alias("conv_id"),
         F.col("__turn_idx").alias("turn_idx"),
         role.alias("role"),
         text.alias("text"),
         tool.alias("tool"),
         F.col("ts").alias("ts"),
-    )
+    ]
 
 
 def synthesize_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -71,6 +71,37 @@ def test_json_shape(spark):
     assert row.latency_ms == 31
 
 
+def test_json_fields_edge_cases_from_parquet(spark, tmp_path):
+    """One json_tuple per row: nested values come back as JSON text,
+    non-integers and overflow as NULL, escapes decoded, broken or
+    non-object JSON as NULL fields. On a duplicate key the LAST pair
+    wins (json_tuple; RFC 8259 §4 notes many parsers report the last
+    pair), where the former get_json_object reported the first. Read
+    from parquet, so nothing is constant-folded at plan time."""
+    lines = [
+        '{"k": {"a": 1}, "event": ["x", 2], "latency_ms": 1.5}',
+        '{"k": 99999999999999999999, "latency_ms": 9223372036854775808}',
+        '{"k": -3, "event": "a\\"b\\\\c\\u00e9", "latency_ms": "7"}',
+        '{"k": 1, "event": "trunc',
+        '{"k": 1, "event": "x"} trailing garbage',
+        "{}",
+        '{"k":1,"k":2}',
+    ]
+    path = str(tmp_path / "json.parquet")
+    _mk(spark, lines).write.parquet(path)
+    rows = parse_stage(spark.read.parquet(path)).orderBy("turn_idx").collect()
+    got = [(r.kind, r.json_k, r.json_event, r.latency_ms) for r in rows]
+    assert got == [
+        ("json", None, '["x",2]', None),
+        ("json", None, None, None),
+        ("json", -3, 'a"b\\cé', 7),
+        ("json", None, None, None),
+        ("json", 1, "x", None),
+        ("json", None, None, None),
+        ("json", 2, None, None),
+    ]
+
+
 def test_malformed_is_unparsed(spark):
     # garbage prefix must NOT classify as kv even though it contains k=v
     row = parse_stage(_mk(spark, ["BADHDR 2024-01-01T00:00:07 host-1 status=error latency_ms=3"])).collect()[0]

@@ -1,6 +1,8 @@
 """Plan-building overhead contracts: constant tables cross to the JVM
-in O(1) py4j calls, the tool registry is a JVM-local relation, and the
-bounded sink aggregates sort without a range exchange."""
+in O(1) py4j calls, the tool registry is a JVM-local relation, the
+bounded sink aggregates sort without a range exchange, and a plan's
+expressions are built once per JVM, so a later build of the same pass
+makes O(1) py4j calls whatever the ruleset size."""
 
 from __future__ import annotations
 
@@ -155,3 +157,114 @@ def test_sink_aggregates_sort_without_range_exchange(spark, agg, keys):
     assert rows == sorted(rows, key=key)
     want = _routed(spark).groupBy(*keys).count().orderBy(*keys).collect()
     assert rows == [tuple(r) for r in want]
+
+
+# ---------------------------------------------------------------------------
+# Plan expressions are built once per JVM: a later build of the same
+# plan makes O(1) py4j calls, whatever the ruleset size.
+
+
+@pytest.fixture(scope="module")
+def events_dir(spark, tmp_path_factory):
+    """A small events.parquet for synthesize_transcripts."""
+    d = tmp_path_factory.mktemp("events")
+    spark.sql(
+        "SELECT id AS event_id, id % 7 AS user_id, "
+        "element_at(array('click', 'run', 'error'), CAST(id % 3 + 1 AS INT)) AS event_type, "
+        "CAST(id % 11 AS DOUBLE) AS value, '{\"k\": 4}' AS props, "
+        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts "
+        "FROM range(60)"
+    ).write.parquet(str(d / "events.parquet"))
+    return str(d)
+
+
+def _synthetic_rules(n: int) -> list[PdbRule]:
+    """Distinct-prefix rules that share their field names."""
+    return [
+        PdbRule(
+            f"syn{i:02d}",
+            f"svc-{i:02d} op=@ESTRING:op: @code=@NUMBER:code@ detail=@ANYSTRING:detail@",
+        )
+        for i in range(n)
+    ]
+
+
+def _ruleset(n_rules: int) -> PatternDB:
+    from axosyslog_spark.operators.pdb_load import load_fixture
+
+    [rs] = load_fixture()
+    return PatternDB(list(rs.rules) + _synthetic_rules(n_rules - len(rs.rules)))
+
+
+# Second-build py4j calls at the time of writing: 185 observed, 237
+# histogram, 129 parse_header + apply (each with synthesize_transcripts).
+# What remains is the DataFrame methods' own argument conversion, one
+# call per list element. A cold build makes more than five times the
+# bound: 1,247 / 1,244 / 931 for 5 rules and 1,561 for 50.
+SECOND_BUILD_MAX = {"observed": 200, "histogram": 240, "apply": 140}
+
+
+def _pass_builds(spark, events_dir):
+    from axosyslog_spark.operators.parse import parse_header
+    from axosyslog_spark.plans.pipeline import run_pipeline, run_pipeline_observed
+    from axosyslog_spark.sources.transcripts import synthesize_transcripts
+
+    def observed():
+        run_pipeline_observed(spark, synthesize_transcripts(spark, events_dir))
+
+    def histogram():
+        run_pipeline(spark, synthesize_transcripts(spark, events_dir)).histogram
+
+    def apply(pdb):
+        base = synthesize_transcripts(spark, events_dir)
+        return lambda: pdb.apply(parse_header(base), text_col="body", with_class=True)
+
+    return {
+        "observed": [observed],
+        "histogram": [histogram],
+        "apply": [apply(_ruleset(5)), apply(_ruleset(50))],
+    }
+
+
+def test_second_build_costs_constant_py4j_calls(spark, events_dir):
+    from axosyslog_spark.functions.literals import clear_memos
+
+    for name, builds in _pass_builds(spark, events_dir).items():
+        firsts, seconds = [], []
+        for build in builds:
+            clear_memos()
+            firsts.append(_py4j_calls(build))
+            seconds.append(_py4j_calls(build))
+        # the same count for a 5-rule and a 50-rule ruleset
+        assert len(set(seconds)) == 1, (name, seconds)
+        assert seconds[0] <= SECOND_BUILD_MAX[name], (name, seconds)
+        assert SECOND_BUILD_MAX[name] * 5 < min(firsts), (name, firsts)
+
+
+def _text_frame(spark, tmp_path, name, lines):
+    path = str(tmp_path / f"{name}.parquet")
+    spark.createDataFrame(
+        [(i, t, t[::-1]) for i, t in enumerate(lines)], "id int, body string, rev string"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_cached_apply_matches_a_fresh_ruleset_on_another_frame(spark, tmp_path):
+    rules = _synthetic_rules(6)
+    pdb = PatternDB(rules)
+    first = _text_frame(spark, tmp_path, "a", ["svc-01 op=get code=1 detail=x"])
+    pdb.apply(first, text_col="body", with_class=True).collect()
+    lines = [f"svc-{i:02d} op=put code={i} detail=row {i}" for i in range(6)]
+    second = _text_frame(spark, tmp_path, "b", lines + ["unmatched"])
+
+    def rows(db, df, text_col):
+        out = db.apply(df, text_col=text_col, with_class=True)
+        return sorted(tuple(r) for r in out.collect())
+
+    cached = rows(pdb, second, "body")
+    assert cached == rows(PatternDB(rules), second, "body")
+    assert sum(r[3] is not None for r in cached) == 6  # rule_id column
+    # text_col is part of the cache key: the reversed column matches nothing
+    by_rev = rows(pdb, second, "rev")
+    assert by_rev != cached
+    assert all(r[3] is None for r in by_rev)

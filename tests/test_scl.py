@@ -1069,6 +1069,28 @@ def test_panos_parser_reference_goldens(spark):
         assert r["panos_fields"].get("device_name") == dev, i
 
 
+def test_checkpoint_parser_short_lines_do_not_abort(spark, tmp_path):
+    """'<'-led lines with too few tokens for the MSG column: the ISO
+    ("seven") branch on a 3-token line and the two-part branch on a
+    1-token line read past the split. Under ANSI that used to raise
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT and abort the job; the message is
+    NULL instead. Read from parquet: a literal frame is constant-folded
+    at plan time and hides the runtime error."""
+    path = str(tmp_path / "short.parquet")
+    spark.createDataFrame(
+        [(0, "<13>hello"), (1, "<13>1 2024-01-01T00:00:00Z host")],
+        "id int, text string",
+    ).write.parquet(path)
+    out = {
+        r["id"]: r.asDict()
+        for r in scl.checkpoint_parser(spark.read.parquet(path)).collect()
+    }
+    assert out[0][".checkpoint.msg"] is None
+    assert not out[0][".checkpoint.ok"]
+    assert out[1][".checkpoint.msg"] is None
+    assert out[1]["host"] == "host"
+
+
 def test_checkpoint_parser_reference_goldens(spark):
     """Every row of the reference's checkpoint functional suite
     (tests/light functional_tests/parsers/checkpoint): the 8-column

@@ -5,7 +5,7 @@ p1   parse_header with staged pri token (regex once, not inlined 6x)
 p2   p1 + split-based RFC5424 validation (no full-line rlike probe)
 kv0  current parse_kv (4 regexp_extract scans)
 kv1  str_to_map single scan + try_cast
-js0  current parse_json_fields (3 get_json_object)
+js0  current parse_json_fields (one json_tuple)
 js1  from_json once into a struct
 """
 from __future__ import annotations
