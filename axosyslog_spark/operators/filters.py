@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.matchgroups import extract, match_groups, matched, with_matches
+
 STRING_LIKE = {"string", "json", "list", "bytes"}
 
 _OPS = ("==", "!=", "<", "<=", ">", ">=", "===", "!==")
@@ -255,9 +257,12 @@ def glob_match(col: Column, pattern: str) -> Column:
 
 
 def match_store_groups(df, pattern: str, src_col: str = "text", n_groups: int = 3):
-    """match() with capture storage: $1..$n transient columns
-    (lib/filter/filter-re.c filter_match_new; logmsg $0..$255)."""
-    out = df.withColumn("__m0", F.regexp_extract(F.col(src_col), pattern, 0))
-    for i in range(1, n_groups + 1):
-        out = out.withColumn(f"__m{i}", F.regexp_extract(F.col(src_col), pattern, i))
-    return out.withColumn("__matched", F.col("__m0") != "")
+    """match() with capture storage: $0..$n transient columns
+    (lib/filter/filter-re.c filter_match_new; logmsg $0..$255) from one
+    framed match (matchgroups.match_groups). A group reads "" when the
+    pattern missed, as regexp_extract does; ``__matched`` is true also
+    for an empty match (``a*`` on "xyz"), as the reference's match() is."""
+    out = with_matches(df, {"__mg": match_groups(F.col(src_col), pattern)})
+    m = F.col("__mg")
+    groups = {f"__m{i}": extract(m, i) for i in range(n_groups + 1)}
+    return out.withColumns({**groups, "__matched": matched(m)}).drop("__mg")

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 _KEY = r"[A-Za-z0-9._-]+"
 # Placeholder for escaped backslash during staged unescape.
-# IN-BAND contract (same as patterndb.py's framing bytes), ENFORCED
+# IN-BAND contract (like matchgroups.py's framing bytes), ENFORCED
 # below: _unescape and kv_stray_words strip a literal \x02 from their
 # input before using it as a marker, so hostile/binary input loses the
 # STX byte instead of garbling the value. Syslog payloads never

@@ -9,14 +9,16 @@ Reference semantics:
   - default PRI when absent = 13 (facility user(1), severity notice(5)) —
     syslog-format.c default priority behavior.
 
-Spark mapping: pure column algebra — one regexp_extract pass for the
-header (Catalyst collapses the repeated regexp_extract calls on the
-same pattern into a single evaluation per referenced group within one
-projection), `when` chains for classification, casts for typed
-promotion. No Python executes per row.
+Spark mapping: pure column algebra — one split for the RFC5424 header,
+one framed match per RFC3164 tier and per regexp-parser pattern
+(matchgroups.match_groups; a regexp_extract per group would run the
+regex once per group), `when` chains for classification, casts for
+typed promotion. No Python executes per row.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -24,6 +26,9 @@ from pyspark.sql import functions as F
 from axosyslog_spark.functions.literals import per_jvm
 from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
+from axosyslog_spark.operators.matchgroups import (
+    capturing_groups, group, match_groups, matched, with_matches,
+)
 
 # RFC5424-ish: <PRI>VERSION SP TIMESTAMP SP HOSTNAME SP APP-NAME SP
 #              PROCID SP MSGID SP STRUCTURED-DATA SP MSG
@@ -209,23 +214,18 @@ RFC3164_RE = (
     # pri-less lines from legacy daemons — e.g. the sudo row in the
     # reference's topic-syslog functional suite — defaulting pri=13)
     # optional space after the pri (the reference skips it), PID is
-    # any bracketed token (test_syslog_format.c uses literal "pid")
+    # any bracketed token (test_syslog_format.c uses literal "pid").
+    # Groups: 1 pri, 2 stamp, 3 host, 4 program-onward (LP_CHECK_PROGRAM
+    # puts an invalid program back into the MSG), 5 program, 6 pid, 7 msg
     r"^(?:<([0-9]{1,3})> ?)?"
     r"([A-Z][a-z]{2} [ 0-9][0-9] [0-9]{2}:[0-9]{2}:[0-9]{2}) "
-    r"([^ ]+) ([^\[ :]+)(?:\[([^\] :]+)\])?: (.*)$"
+    r"([^ ]+) (([^\[ :]+)(?:\[([^\] :]+)\])?: (.*))$"
 )
 
 # pri-led line with NO timestamp: "<PRI> PROGRAM[PID]: MSG"
-# (syslog-format.c missing-timestamp branch; HOST stays unset)
-RFC3164_NO_TS_RE = r"^<([0-9]{1,3})> ?([^\[ :]+)(?:\[([^\] :]+)\])?: (.*)$"
-# header up to (and including) HOST, capturing program-onward — used
-# by LP_CHECK_PROGRAM to put an invalid program back into the MSG
-RFC3164_REST_RE = (
-    r"^(?:<([0-9]{1,3})> ?)?"
-    r"([A-Z][a-z]{2} [ 0-9][0-9] [0-9]{2}:[0-9]{2}:[0-9]{2}) "
-    r"([^ ]+) (.*)$"
-)
-RFC3164_NO_TS_REST_RE = r"^<([0-9]{1,3})> ?(.*)$"
+# (syslog-format.c missing-timestamp branch; HOST stays unset).
+# Groups: 1 pri, 2 program-onward, 3 program, 4 pid, 5 msg
+RFC3164_NO_TS_RE = r"^<([0-9]{1,3})> ?(([^\[ :]+)(?:\[([^\] :]+)\])?: (.*))$"
 
 
 def parse_rfc3164(
@@ -243,11 +243,14 @@ def parse_rfc3164(
     belongs to LAST year, a January stamp received in December to NEXT
     year, anything else to the receive year."""
     text = F.col(text_col)
-    m = text.rlike(RFC3164_RE)
-
-    def g(i: int):
-        return F.regexp_extract(text, RFC3164_RE, i)
-
+    # one framed match per tier, each staged in its own column; the
+    # no-timestamp tier runs only where the full header missed
+    bsd, no_ts = "__bsd_m", "__bsd_no_ts_m"
+    df = with_matches(df, {bsd: match_groups(text, RFC3164_RE)})
+    m = matched(F.col(bsd))
+    df = with_matches(df, {no_ts: F.when(~m, match_groups(text, RFC3164_NO_TS_RE))})
+    m2 = matched(F.col(no_ts))
+    g, g2 = partial(group, F.col(bsd)), partial(group, F.col(no_ts))
     # space-padded BSD days ("Jan  5") -> collapse for parsing
     stamp = F.regexp_replace(g(2), "  ", " ")
     if year is None:
@@ -269,21 +272,14 @@ def parse_rfc3164(
     # a timestamp still parses PROGRAM[PID]: MSG; a '<'-led line whose
     # pri never closes keeps the WHOLE input as MSG with the
     # invalid-pri quality tag (the BSD handler never rejects)
-    m2 = ~m & text.rlike(RFC3164_NO_TS_RE)
     bad_pri = ~m & ~m2 & text.rlike(r"^<[0-9]")
-
-    def g2(i: int):
-        return F.regexp_extract(text, RFC3164_NO_TS_RE, i)
-
     pri_str = F.when(m, g(1)).when(m2, g2(1))
     pri = F.when(
         (pri_str.try_cast("int") <= 191), pri_str.try_cast("int")
     ).otherwise(F.lit(DEFAULT_PRI))
-    prog = F.when(m, g(4)).when(m2, g2(2))
-    pid = F.when(m, F.nullif(g(5), F.lit(""))).when(
-        m2, F.nullif(g2(3), F.lit(""))
-    )
-    body = F.when(m, g(6)).when(m2, g2(4)).otherwise(text)
+    prog = F.when(m, g(5)).when(m2, g2(3))
+    pid = F.nullif(F.when(m, g(6)).when(m2, g2(4)), F.lit(""))
+    body = F.when(m, g(7)).when(m2, g2(5)).otherwise(text)
     tags = (
         F.when(m2, F.array(
             F.lit("syslog.missing_timestamp"),
@@ -298,12 +294,7 @@ def parse_rfc3164(
         # the MSG with the rfc3164_invalid_program tag
         valid = prog.rlike(r"^[A-Za-z0-9.\-_()/]+$") & prog.rlike("[A-Za-z]")
         invalid = (m | m2) & ~F.coalesce(valid, F.lit(True))
-        hdr_rest = F.coalesce(
-            F.nullif(F.regexp_extract(text, RFC3164_REST_RE, 4), F.lit("")),
-            F.nullif(F.regexp_extract(text, RFC3164_NO_TS_REST_RE, 2), F.lit("")),
-            text,
-        )
-        body = F.when(invalid, hdr_rest).otherwise(body)
+        body = F.when(invalid, F.when(m, g(4)).otherwise(g2(2))).otherwise(body)
         prog = F.when(invalid, F.lit(None)).otherwise(prog)
         pid = F.when(invalid, F.lit(None)).otherwise(pid)
         tags = F.when(
@@ -328,7 +319,7 @@ def parse_rfc3164(
             "body": body,
             "bsd_tags": tags,
         }
-    )
+    ).drop(bsd, no_ts)
 
 
 def format_sdata(sdata: Column) -> Column:
@@ -472,41 +463,6 @@ def parse_stage(df: DataFrame) -> DataFrame:
     return parse_json_fields(parse_kv(parse_header(df)))
 
 
-def _capturing_groups(pattern: str) -> list[str | None]:
-    """Names of the capturing groups of `pattern` in ordinal order
-    (None = unnamed). Mirrors how PCRE numbers groups: every unescaped
-    '(' that is not a (?:/(?=/(?!... construct captures; (?<name>...)
-    captures under a name."""
-    import re as _re
-
-    names: list[str | None] = []
-    i, n = 0, len(pattern)
-    in_class = False
-    while i < n:
-        ch = pattern[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if in_class:
-            if ch == "]":
-                in_class = False
-            i += 1
-            continue
-        if ch == "[":
-            in_class = True
-            i += 1
-            continue
-        if ch == "(":
-            m = _re.match(r"\(\?P?<([A-Za-z_][A-Za-z0-9_]*)>", pattern[i:])
-            if m:
-                names.append(m.group(1))
-            elif pattern[i : i + 2] != "(?":
-                names.append(None)
-            # (?: (?= (?! (?i) ... do not capture
-        i += 1
-    return names
-
-
 def regexp_parser(
     df: DataFrame,
     patterns: list[str] | tuple[str, ...],
@@ -525,14 +481,16 @@ def regexp_parser(
     unless drop_unmatched=False.
 
     Goldens: tests/light functional_tests/parsers/regexp-parser ported
-    in tests/test_parse.py. Column algebra only: one rlike + one
-    regexp_extract per (pattern, group)."""
+    in tests/test_parse.py. One framed match per pattern
+    (matchgroups.match_groups), staged in its own column and run only
+    on the rows every earlier pattern missed; each name reads its
+    groups out of the one staged array that matched."""
     import re as _re
 
     src = F.col(src_col)
     compiled: list[tuple[str, list[tuple[str, int]]]] = []
     for pat in patterns:
-        names = _capturing_groups(pat)
+        names = capturing_groups(pat)
         named = [(nm, ix + 1) for ix, nm in enumerate(names) if nm]
         dup = len({nm for nm, _ in named}) < len(named)
         if dup:
@@ -552,9 +510,7 @@ def regexp_parser(
                 counter[nm] = counter.get(nm, 0) + 1
                 return f"(?<{nm}X{counter[nm]}>"
 
-            pat = _re.sub(
-                r"\(\?P?<([A-Za-z_][A-Za-z0-9_]*)>", _rename, pat
-            )
+            pat = _re.sub(r"\(\?P?<([A-Za-z_][A-Za-z0-9_]*)>", _rename, pat)
         java_pat = ("(?i)" if "ignore-case" in flags else "") + pat
         # config-time compile error parity; Python spells named groups
         # (?P<name> where Java/PCRE accept (?<name> — normalize for the
@@ -562,26 +518,21 @@ def regexp_parser(
         _re.compile(_re.sub(r"\(\?<([A-Za-z_])", r"(?P<\1", java_pat))
         compiled.append((java_pat, named))
 
-    match_cols = [src.rlike(p) for p, _ in compiled]
-    matched_any = match_cols[0]
-    for m in match_cols[1:]:
-        matched_any = matched_any | m
-
+    staged = [f"__rx{j}" for j in range(len(compiled))]
+    out, missed = df, F.lit(True)
+    for c, (p, _) in zip(staged, compiled):
+        out = with_matches(out, {c: F.when(missed, match_groups(src, p))})
+        missed = missed & ~F.coalesce(matched(F.col(c)), F.lit(False))
+    if drop_unmatched:
+        out = out.filter(~missed)
+    # a missed or gated pattern's groups are NULL: the first non-empty
+    # group is the winning pattern's leftmost participating instance
     all_names = sorted({nm for _, named in compiled for nm, _ in named})
-    new_cols: dict[str, Column] = {}
-    for nm in all_names:
-        val = F.lit(None).cast("string")
-        # reverse order so the FIRST matching pattern wins the chain
-        for (p, named), is_m in zip(compiled[::-1], match_cols[::-1]):
-            ixs = [ix for n2, ix in named if n2 == nm]
-            if not ixs:
-                continue
-            ext = F.coalesce(
-                *[F.nullif(F.regexp_extract(src, p, ix), F.lit("")) for ix in ixs]
-            ) if len(ixs) > 1 else F.nullif(
-                F.regexp_extract(src, p, ixs[0]), F.lit("")
-            )
-            val = F.when(is_m, ext).otherwise(val)
-        new_cols[prefix + nm] = val
-    out = df.withColumns(new_cols) if new_cols else df
-    return out.filter(matched_any) if drop_unmatched else out
+    new_cols = {
+        prefix + nm: F.coalesce(*[
+            F.nullif(group(F.col(c), ix), F.lit(""))
+            for c, (_, named) in zip(staged, compiled) for n2, ix in named if n2 == nm
+        ])
+        for nm in all_names
+    }
+    return out.withColumns(new_cols).drop(*staged)

@@ -103,13 +103,12 @@ This composition is the scale path: at 10^12 rows a pandas-UDF trie
 would move every text through Arrow; the alternation regex moves
 nothing and lets Catalyst prune unreferenced field columns.
 
-In-band framing contract: the framed decode requires the message text
-to be free of the control bytes \\x01-\\x04. This is ENFORCED here:
-apply() strips them with one F.translate before the text reaches
-either tier regex (syslog payloads never legitimately carry them —
-the reference's line-based sources strip control bytes too, so
-behavior matches; hostile/binary input degrades to classification of
-the stripped text instead of garbled rule_ids).
+In-band framing contract (operators/matchgroups.py owns the bytes):
+the framed decode requires text free of \\x01-\\x04, so apply() strips
+them (matchgroups.strip_framing_bytes) before either tier regex —
+syslog payloads never legitimately carry them (the reference's
+line-based sources strip control bytes too); hostile/binary input
+degrades to classification of the stripped text, not garbled rule_ids.
 """
 
 from __future__ import annotations
@@ -121,16 +120,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from axosyslog_spark.functions.literals import JvmMemo, literal_array
+from axosyslog_spark.operators.matchgroups import (
+    BLOCK_SEP, FIELD_SEP, HIT, MARK, regex_tokens, strip_framing_bytes,
+)
 
-# In-band framing bytes for the single-execution classify+extract
-# (see module docstring); message text containing any of them would
-# garble extraction (syslog payloads never carry control bytes — the
-# reference's NVTable would store them, but its line-based sources
-# strip them first).
-_BLOCK_SEP = "\x01"   # separates sentinels in the classify header
-_MARK = "\x02"        # prepended to the text; each alt's sentinel captures it
-_HIT = "\x03"         # result prefix proving the tier regex matched
-_FIELD_SEP = "\x04"   # separates field values in the extract result
 # first leaf-id character (see _leaf_frame): clear of the framing bytes
 _LEAF_ID_BASE = 0x10
 # leaf ids are single characters below the surrogate block; a ruleset
@@ -144,27 +137,6 @@ _MAX_LEAF_IDS = 0xD000 - _LEAF_ID_BASE
 # apply times, 1.2M rows, 7 interleaved pairs): k=2 0.998, k=4 1.136,
 # k=8 1.105; 400k rows, 5 pairs: k=16 1.196, k=32 1.313, k=50 1.372.
 _MERGE_MAX_MEMBERS = 2
-
-
-def _strip_framing_bytes(text: Column) -> Column:
-    """Enforce the in-band framing contract (module docstring):
-    JVM-side translate removing \\x01-\\x04 before the text meets the
-    framed classify/extract. Without this a literal \\x02 in hostile
-    input would silently yield a wrong rule_id/field values.
-
-    MUST stay a single-reference expression. A round-5 attempt gated
-    the translate behind four contains() probes (standalone microbench
-    3.3x faster on clean text), but the guard references `text` six
-    times instead of once, and when a composed pipeline's optimizer
-    collapses the materializing Project (CollapseProject re-inlines
-    __pdb_txt into EVERY dispatch-tree node), the expression tree
-    multiplies: the config-pipeline aggregate's generated
-    processNext() blew past Janino's 64 KB method limit, task binaries
-    grew 3.3 MB -> 18.4 MB, and the interpreted fallback OOMed a 16 GB
-    heap on 10k rows (test_config). On the real apply path the guard's
-    benefit was same-window noise anyway — the unconditional translate
-    stays."""
-    return F.translate(text, _BLOCK_SEP + _MARK + _HIT + _FIELD_SEP, "")
 
 
 # IPv4 with per-octet 0..255 validation (r_parser_ip: each octet is
@@ -223,21 +195,12 @@ def _decapture(pattern: str) -> str:
     """Turn capturing groups of an embedded PCRE param into
     non-capturing ones so they don't shift our field numbering
     (the reference stores only the whole PCRE match)."""
-    out: list[str] = []
-    i = 0
-    while i < len(pattern):
-        c = pattern[i]
-        if c == "\\" and i + 1 < len(pattern):
-            out.append(pattern[i : i + 2])
-            i += 2
-            continue
-        if c == "(" and not pattern.startswith("(?", i):
-            out.append("(?:")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    out, last = [], 0
+    for i, tok in regex_tokens(pattern):
+        if tok == "(" and not pattern.startswith("(?", i):
+            out += [pattern[last:i], "(?:"]
+            last = i + 1
+    return "".join(out) + pattern[last:]
 
 
 @dataclass(frozen=True)
@@ -465,7 +428,7 @@ def _leaf_frame(
     # '\' (leaf 76) are metacharacters there and must be escaped
     lid_repl = lid.replace("\\", "\\\\").replace("$", "\\$")
     body = "|".join(
-        f"(?:({_MARK}){c.body}\\z)" if anchored else f"(?:({_MARK}){c.body})"
+        f"(?:({MARK}){c.body}\\z)" if anchored else f"(?:({MARK}){c.body})"
         for c, anchored in alts
     )
     header: list[str] = []
@@ -477,15 +440,15 @@ def _leaf_frame(
     g = 0
     for c, _anchored in alts:
         g += 1  # sentinel group
-        header.append(f"${g}{_BLOCK_SEP}")
+        header.append(f"${g}{BLOCK_SEP}")
         blocks.append(
-            "".join(f"${g + j + 1}{_FIELD_SEP}" for j in range(len(c.fields)))
-            + _BLOCK_SEP
+            "".join(f"${g + j + 1}{FIELD_SEP}" for j in range(len(c.fields)))
+            + BLOCK_SEP
         )
         g += len(c.fields)
         offs.append(off)
         off += len(c.fields) + 1
-    repl = _HIT + lid_repl + "".join(header) + "".join(blocks)
+    repl = HIT + lid_repl + "".join(header) + "".join(blocks)
     return (f"^(?:{body})", repl, offs)
 
 
@@ -618,7 +581,7 @@ class PatternDB:
         JVM call, see _lut)."""
         arr2d = literal_array(table, "array<int>")
         leaf1 = F.ascii(F.substring(res, 2, 1)) - (_LEAF_ID_BASE - 1)
-        local1 = F.instr(res, _MARK) - 2
+        local1 = F.instr(res, MARK) - 2
         return F.element_at(F.element_at(arr2d, leaf1), local1)
 
     def _route(self, text: Column, leaf_expr) -> Column:
@@ -645,7 +608,7 @@ class PatternDB:
         the complete tier on a two-pass one — rendered into the framed
         result, or the marked input unchanged (it starts with \\x02,
         not \\x03) when no alternative matched."""
-        marked = F.concat(F.lit(_MARK), text)
+        marked = F.concat(F.lit(MARK), text)
         return self._route(
             text, lambda leaf: F.regexp_replace(marked, *leaf.tiers[0])
         )
@@ -656,7 +619,7 @@ class PatternDB:
         every other row keeps ``first``. ``first`` should be a staged
         column: it is referenced at each leaf."""
         return F.when(
-            first.startswith(_MARK),
+            first.startswith(MARK),
             self._route(
                 text,
                 lambda leaf: F.regexp_replace(first, *leaf.tiers[1])
@@ -677,7 +640,7 @@ class PatternDB:
         _leaf_off_map tables (partial-tier entries already carry the +N
         offset). Both NULL when no regex matched (the result still
         starts with \\x02), so unmatched rows never index the tables."""
-        hit = res.startswith(_HIT)
+        hit = res.startswith(HIT)
         return (
             F.when(hit, self._leaf_lookup(res, self._leaf_idx_map)).cast("int"),
             F.when(hit, self._leaf_lookup(res, self._leaf_off_map)),
@@ -740,9 +703,9 @@ class PatternDB:
         slower end-to-end. The split keeps both halves JIT-compiled;
         its cost is one small-array copy per row."""
         block = F.substring_index(
-            res.substr(off, F.length(res)), _BLOCK_SEP, 1
+            res.substr(off, F.length(res)), BLOCK_SEP, 1
         )
-        groups = F.when(off.isNotNull(), F.split(block, _FIELD_SEP))
+        groups = F.when(off.isNotNull(), F.split(block, FIELD_SEP))
         return F.transform(groups, lambda v: v)
 
     def program_filter(self, program: Column) -> Column:
@@ -972,7 +935,7 @@ class PatternDB:
         """apply's projections in order, each (columns to add, columns
         to drop after it); ``columns`` are the input's, read only by
         the <values> stage."""
-        text = _strip_framing_bytes(F.col(text_col))
+        text = strip_framing_bytes(F.col(text_col))
         n = len(self.patterns)
         idx_col, groups_col = f"__pdb_idx{prefix}", f"__pdb_groups{prefix}"
         r_col = f"__pdb_r{prefix}"

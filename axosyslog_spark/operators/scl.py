@@ -57,6 +57,7 @@ Everything is column algebra; `drop-invalid` behaviors surface as an
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,6 +70,10 @@ from axosyslog_spark.functions.templates import (
 )
 from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import QUOTED_BODY
+from axosyslog_spark.operators.matchgroups import (
+    extract, group, match_groups, matched, with_matches,
+)
+from axosyslog_spark.operators.rewrite import set_severity, severity_by_name
 
 # scl/apache/apache.conf: vhost filter `^[A-Za-z0-9\-\._]+:[0-9]+ `
 _VHOST = r"[A-Za-z0-9\-\._]+:[0-9]+"
@@ -93,13 +98,10 @@ def apache_accesslog_parser(
     into verb/request/httpversion with the HTTP/ prefix stripped
     (the block's second csv-parser + subst), numeric casts for
     response/bytes. Non-matching rows get {prefix}ok = false."""
-    src = F.col(src_col)
-    m = F.regexp_extract_all(src, F.lit(_APACHE_RE), 0)
-    ok = F.size(m) > 0
-
-    def g(i: int) -> Column:
-        return F.when(ok, F.regexp_extract(src, _APACHE_RE, i))
-
+    df = with_matches(df, {"__apache_m": match_groups(F.col(src_col), _APACHE_RE)})
+    m = F.col("__apache_m")
+    ok = matched(m)
+    g = partial(group, m)
     unesc = lambda c: F.regexp_replace(c, r"\\(.)", "$1")  # noqa: E731
     raw = unesc(g(6))
     # request-line: VERB SP REQUEST SP HTTPVERSION (drop-invalid in the
@@ -130,7 +132,7 @@ def apache_accesslog_parser(
             ),
         }
     )
-    return out
+    return out.drop("__apache_m")
 
 
 def sudo_parser(
@@ -202,6 +204,11 @@ _CISCO_TS = (
 )
 _CISCO_TS_ISO = r"^(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})"
 _CISCO_TS_NXOS = r"^(\d{4} [A-Za-z]{3} [0-9 ]\d \d{2}:\d{2}:\d{2})"
+# the three shapes as one ladder: the first alternative that matches
+# sets its own group (1 IOS, 2 ISO, 3 NX-OS)
+_CISCO_TS_LADDER = "^(?:" + "|".join(
+    p[1:] for p in (_CISCO_TS, _CISCO_TS_ISO, _CISCO_TS_NXOS)
+) + ")"
 _CISCO_TS_FORMATS = (
     "MMM d h:mm:ss a.SSS", "MMM d h:mm:ss a", "MMM d HH:mm:ss.SSS",
     "MMM d HH:mm:ss", "MMM d yyyy HH:mm:ss.SSS", "MMM d yyyy HH:mm:ss",
@@ -214,44 +221,47 @@ _CISCO_TS_FORMATS = (
 _CISCO_TRIPLET = r"%([A-Z0-9_]+(?:-[A-Z0-9_]+)?)-([0-7])-([A-Z0-9_]+) ?:"
 
 
+def _ts_ladder(m: Column) -> Column:
+    """The stamp a _CISCO_TS_LADDER match found (NULL when none)."""
+    return F.coalesce(*[F.nullif(group(m, i), F.lit("")) for i in (1, 2, 3)])
+
+
+def _triplet(m: Column, prefix: str) -> dict[str, Column]:
+    """FACILITY / SEVERITY / MNEMONIC of a _CISCO_TRIPLET match."""
+    return {
+        f"{prefix}facility": group(m, 1),
+        f"{prefix}severity": group(m, 2).try_cast("int"),
+        f"{prefix}mnemonic": group(m, 3),
+    }
+
+
 def cisco_parser(
     df: DataFrame, src_col: str = "text", prefix: str = "cisco_"
 ) -> DataFrame:
     """scl/cisco cisco-parser() documented subset: optional leading
     sequence number, the three timestamp shapes (IOS / ISO / NX-OS)
     parsed through the block's strptime format ladder, and the
-    %FAC[-SUB]-SEV-MNEMONIC triplet with the remainder as message."""
-    src = F.col(src_col)
-    body = F.regexp_replace(src, r"^(?:<\d+>)?(?:\d+: )?", "")  # seqno
-    ts_str = F.coalesce(
-        *[
-            F.nullif(F.regexp_extract(body, p, 1), F.lit(""))
-            for p in (_CISCO_TS, _CISCO_TS_ISO, _CISCO_TS_NXOS)
-        ]
-    )
+    %FAC[-SUB]-SEV-MNEMONIC triplet with the rest of its line as
+    message."""
+    body = F.col("__cisco_body")
+    df = df.withColumn(
+        "__cisco_body", F.regexp_replace(F.col(src_col), r"^(?:<\d+>)?(?:\d+: )?", "")
+    )  # seqno
+    df = with_matches(df, {
+        "__cisco_ts": match_groups(body, _CISCO_TS_LADDER),
+        "__cisco_trip": match_groups(body, _CISCO_TRIPLET + r"\s*(.*)"),
+    })
+    trip = F.col("__cisco_trip")
     # normalize double-space day padding ('Jan  5' -> 'Jan 5')
-    ts_norm = F.regexp_replace(ts_str, r"\s+", " ")
-    ts = parse_date(ts_norm, _CISCO_TS_FORMATS)
-    trip_ok = body.rlike(_CISCO_TRIPLET)
+    ts_norm = F.regexp_replace(_ts_ladder(F.col("__cisco_ts")), r"\s+", " ")
     return df.withColumns(
         {
-            f"{prefix}ts": ts,
-            f"{prefix}ok": trip_ok,
-            f"{prefix}facility": F.when(
-                trip_ok, F.regexp_extract(body, _CISCO_TRIPLET, 1)
-            ),
-            f"{prefix}severity": F.when(
-                trip_ok, F.regexp_extract(body, _CISCO_TRIPLET, 2)
-            ).try_cast("int"),
-            f"{prefix}mnemonic": F.when(
-                trip_ok, F.regexp_extract(body, _CISCO_TRIPLET, 3)
-            ),
-            f"{prefix}message": F.when(
-                trip_ok,
-                F.ltrim(F.regexp_extract(body, _CISCO_TRIPLET + r"\s*(.*)$", 4)),
-            ),
+            f"{prefix}ts": parse_date(ts_norm, _CISCO_TS_FORMATS),
+            f"{prefix}ok": matched(trip),
+            **_triplet(trip, prefix),
+            f"{prefix}message": F.ltrim(group(trip, 4)),
         }
-    )
+    ).drop("__cisco_body", "__cisco_ts", "__cisco_trip")
 
 
 _CISCO_HDR_ISO_HOST = _CISCO_TS_ISO[1:] + r"\w* (\S+)\s*$"  # drop '^' re-anchor below
@@ -278,46 +288,33 @@ def cisco_full_parser(
     cisco-parser ported in tests/test_scl.py."""
     src = F.col(src_col)
     pri = F.regexp_extract(src, r"^<(\d+)>", 1).try_cast("int")
-    rest = F.regexp_replace(src, r"^<\d+>", "")
+    rest, header, msg = (F.col(c) for c in ("__cisco_rest", "__cisco_hdr", "__cisco_msg"))
     split_at = F.instr(rest, ": %")
     ok = split_at > 0
-    header = F.regexp_replace(
-        F.substring(rest, F.lit(1), split_at - 1),
-        r"^(?:[0-9]+: |: )", "",
-    )
-    msg = F.concat(F.lit("%"), F.substr(rest, split_at + F.lit(3)))
-
-    # branch 1 (plugin.conf first if): timestamp at the header start,
-    # with an OPTIONAL trailing host (the inner if is else-less, so a
-    # missing host still takes this branch and HOST stays unset)
-    ts_at_head = F.coalesce(
-        *[
-            F.nullif(F.regexp_extract(header, p, 1), F.lit(""))
-            for p in (_CISCO_TS, _CISCO_TS_ISO, _CISCO_TS_NXOS)
-        ]
-    )
+    df = df.withColumn("__cisco_rest", F.regexp_replace(src, r"^<\d+>", ""))
+    df = df.withColumns({
+        "__cisco_hdr": F.regexp_replace(
+            F.substring(rest, F.lit(1), split_at - 1), r"^(?:[0-9]+: |: )", ""
+        ),
+        "__cisco_msg": F.concat(F.lit("%"), F.substr(rest, split_at + F.lit(3))),
+    })
+    df = with_matches(df, {
+        # branch 1 (plugin.conf first if): timestamp at the header
+        # start, with an OPTIONAL trailing host (the inner if is
+        # else-less, so a missing host still takes this branch and
+        # HOST stays unset)
+        "__cisco_ts": match_groups(header, _CISCO_TS_LADDER),
+        "__cisco_cpu": match_groups(header, _CISCO_CPU),
+        "__cisco_host": match_groups(header, r"^([^:]+): (.*)"),
+        "__cisco_trip": F.when(ok, match_groups(msg, _CISCO_TRIPLET)),
+    })
+    ts_at_head = _ts_ladder(F.col("__cisco_ts"))
     iso_host = F.regexp_extract(header, r"^" + _CISCO_HDR_ISO_HOST, 2)
-    ts_host = F.regexp_extract(
-        header, _CISCO_TS[:-1] + r") (\S+)\s*$", 2
-    )
-    cpu = F.nullif(
-        F.concat(
-            F.regexp_extract(header, _CISCO_CPU, 1),
-            F.regexp_extract(header, _CISCO_CPU, 3),
-        ),
-        F.lit(""),
-    )
-    cpu_rest = F.when(
-        cpu.isNotNull(),
-        F.concat(
-            F.regexp_extract(header, _CISCO_CPU, 2),
-            F.regexp_extract(header, _CISCO_CPU, 4),
-        ),
-    )
-    host_colon = F.regexp_extract(header, r"^([^:]+): (.*)", 1)
-    host_rest = F.regexp_extract(header, r"^([^:]+): (.*)", 2)
-    bare_host = F.regexp_extract(header, r"^([^:]+)$", 1)
-
+    ts_host = F.regexp_extract(header, _CISCO_TS[:-1] + r") (\S+)\s*$", 2)
+    cpu_m, host_m = F.col("__cisco_cpu"), F.col("__cisco_host")
+    cpu = F.nullif(F.concat(group(cpu_m, 1), group(cpu_m, 3)), F.lit(""))
+    host_colon = group(host_m, 1)
+    bare_host = F.when(~header.contains(":"), header)
     host = (
         F.when(
             ts_at_head.isNotNull(),
@@ -327,18 +324,15 @@ def cisco_full_parser(
         .when(host_colon != "", host_colon)
         .otherwise(F.nullif(bare_host, F.lit("")))
     )
-    ts_src = (
-        F.when(ts_at_head.isNotNull(), header)
-        .when(cpu.isNotNull(), F.ltrim(cpu_rest))
-        .when(host_colon != "", host_rest)
-        .otherwise(F.lit(""))
-    )
-    ts_str = F.coalesce(
-        *[
-            F.nullif(F.regexp_extract(ts_src, p, 1), F.lit(""))
-            for p in (_CISCO_TS, _CISCO_TS_ISO, _CISCO_TS_NXOS)
-        ]
-    )
+    # the stamp after a cpu module or a "HOST: " prefix, where the
+    # header does not start with one
+    ts_rest = F.when(
+        cpu.isNotNull(), F.ltrim(F.concat(group(cpu_m, 2), group(cpu_m, 4)))
+    ).when(host_colon != "", group(host_m, 2))
+    df = with_matches(df, {
+        "__cisco_ts2": F.when(ts_at_head.isNull(), match_groups(ts_rest, _CISCO_TS_LADDER)),
+    })
+    ts_str = F.coalesce(ts_at_head, _ts_ladder(F.col("__cisco_ts2")))
     msec = F.coalesce(
         F.regexp_extract(ts_str, r"\.(\d{3})$", 1).try_cast("int"), F.lit(0)
     )
@@ -346,7 +340,7 @@ def cisco_full_parser(
         F.regexp_replace(ts_str, r"\.(\d{3})$", ""), r"\s+", " "
     )
     ts = parse_date(ts_norm, _CISCO_TS_FORMATS)
-    trip_ok = ok & msg.rlike(_CISCO_TRIPLET)
+    trip = F.col("__cisco_trip")
     return df.withColumns(
         {
             f"{prefix}pri": F.when(ok, pri),
@@ -355,18 +349,10 @@ def cisco_full_parser(
             f"{prefix}ts": F.when(ok, ts),
             f"{prefix}msec": F.when(ok & ts.isNotNull(), msec),
             f"{prefix}msg": F.when(ok, msg),
-            f"{prefix}facility": F.when(
-                trip_ok, F.regexp_extract(msg, _CISCO_TRIPLET, 1)
-            ),
-            f"{prefix}severity": F.when(
-                trip_ok, F.regexp_extract(msg, _CISCO_TRIPLET, 2)
-            ).try_cast("int"),
-            f"{prefix}mnemonic": F.when(
-                trip_ok, F.regexp_extract(msg, _CISCO_TRIPLET, 3)
-            ),
-            f"{prefix}ok": trip_ok,
+            **_triplet(trip, prefix),
+            f"{prefix}ok": ok & matched(trip),
         }
-    )
+    ).drop(*[c for c in df.columns if c.startswith("__cisco_")])
 
 
 def app_parser(
@@ -687,6 +673,38 @@ def junos_app_filter(sdata: Column) -> Column:
 # round-5 batch: pihole, collectd, splunk-hec, mbox, default-network-drivers
 # ---------------------------------------------------------------------------
 
+
+def _regexp_app_parser(
+    df: DataFrame, src_col: str, ok_col: str, pattern: str, program: str,
+    ts: tuple[int, tuple[str, ...]], message: int,
+    severity: Callable[[Callable[[int], Column]], Column], **groups: int,
+) -> DataFrame:
+    """The shape of the file-application SCL blocks (pihole, arr,
+    jellyfin, qbittorrent): regexp-parser(`pattern`) over the line,
+    date-parser(formats ts[1]) on group ts[0], PROGRAM pinned, MESSAGE
+    from group `message` (the line itself where the pattern missed),
+    the ``groups`` columns, and set-severity(severity(g)) where g(i)
+    reads group $i — a NULL severity keeps the previous one, as the
+    reference's set-severity leaves the message unchanged then. A frame
+    without severity/facility starts from a no-parse file source's pri
+    13 (facility user, severity notice)."""
+    src = F.col(src_col)
+    df = with_matches(df, {"__app_m": match_groups(src, pattern)})
+    m = F.col("__app_m")
+    g = partial(group, m)
+    for name, default in (("severity", 5), ("facility", 1)):
+        if name not in df.columns:
+            df = df.withColumn(name, F.lit(default).cast("int"))
+    out = df.withColumns({
+        ok_col: matched(m),
+        "msg_ts": parse_date(g(ts[0]), ts[1]),
+        "program": F.lit(program),
+        **{name: g(i) for name, i in groups.items()},
+        "message": F.when(matched(m), g(message)).otherwise(src),
+    })
+    return set_severity(out, F.coalesce(severity(g), F.col("severity"))).drop("__app_m")
+
+
 # scl/pihole/pihole.conf pihole_ftl(): "[TS PID] LEVEL: MESSAGE"
 _PIHOLE_RE = (
     r"^\[([^ ]+ [^ ]+) [^ \]]+\] "
@@ -701,34 +719,12 @@ def pihole_ftl_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
     non-empty (condition(... ne "")) — and only when the word resolves
     in the syslog-names alias table (FATAL does not; the reference's
     set-severity leaves the message unchanged then). Non-matching
-    lines keep their text as MESSAGE with pihole_ok = false.
-
-    Defaults a no-parse file source's pri 13 (facility user,
-    severity notice) when the frame carries no severity/facility."""
-    from axosyslog_spark.operators.rewrite import severity_by_name
-
-    src = F.col(src_col)
-    m = src.rlike(_PIHOLE_RE)
-
-    def g(i: int) -> Column:
-        return F.regexp_extract(src, _PIHOLE_RE, i)
-
-    if "severity" not in df.columns:
-        df = df.withColumn("severity", F.lit(5).cast("int"))
-    if "facility" not in df.columns:
-        df = df.withColumn("facility", F.lit(1).cast("int"))
-    sev_word = F.when(m, F.nullif(g(2), F.lit("")))
-    new_sev = F.coalesce(severity_by_name(sev_word), F.col("severity"))
-    return df.withColumns(
-        {
-            "pihole_ok": m,
-            # %f is 1-6 fraction digits; FTL writes milliseconds
-            "msg_ts": F.when(m, parse_date(g(1), ("yyyy-MM-dd HH:mm:ss.SSSSSS",))),
-            "program": F.lit("Pi-hole"),
-            "severity": new_sev,
-            "pri": (F.col("facility") * 8 + new_sev).cast("int"),
-            "message": F.when(m, g(3)).otherwise(src),
-        }
+    lines keep their text as MESSAGE with pihole_ok = false."""
+    return _regexp_app_parser(
+        # %f is 1-6 fraction digits; FTL writes milliseconds
+        df, src_col, "pihole_ok", _PIHOLE_RE, "Pi-hole",
+        ts=(1, ("yyyy-MM-dd HH:mm:ss.SSSSSS",)), message=3,
+        severity=lambda g: severity_by_name(g(2)),
     )
 
 
@@ -928,18 +924,16 @@ def solaris_msgid_parser(df: DataFrame, src_col: str = "message") -> DataFrame:
     rows pass through untouched (the reference's channel is an if{}
     with no else)."""
     src = F.col(src_col)
-    m = src.startswith("[ID ") & src.rlike(_SOLARIS_MSGID_RE)
-    bracket = F.regexp_extract(src, _SOLARIS_MSGID_RE, 1)
+    df = with_matches(df, {
+        "__solaris_m": F.when(src.startswith("[ID "), match_groups(src, _SOLARIS_MSGID_RE)),
+    })
+    m = F.col("__solaris_m")
     return df.withColumns(
         {
-            "solaris_msgid": F.when(
-                m, F.element_at(F.split(bracket, " "), 2)
-            ),
-            src_col: F.when(
-                m, F.regexp_extract(src, _SOLARIS_MSGID_RE, 2)
-            ).otherwise(src),
+            "solaris_msgid": F.element_at(F.split(group(m, 1), " "), 2),
+            src_col: F.when(matched(m), group(m, 2)).otherwise(src),
         }
-    )
+    ).drop("__solaris_m")
 
 
 # ---------------------------------------------------------------------------
@@ -969,32 +963,11 @@ def arr_parser(
     from $3. Rows not matching the shape pass through with
     arr_ok=false (the file source's multi-line-prefix guarantees the
     shape in the reference; a batch table can carry strays)."""
-    from axosyslog_spark.operators.rewrite import severity_by_name
-
-    src = F.col(src_col)
-    m = src.rlike(_ARR_RE) & (src.contains("|"))
-
-    def g(i: int) -> Column:
-        return F.regexp_extract(src, _ARR_RE, i)
-
-    if "severity" not in df.columns:
-        df = df.withColumn("severity", F.lit(5).cast("int"))
-    if "facility" not in df.columns:
-        df = df.withColumn("facility", F.lit(1).cast("int"))
-    new_sev = F.coalesce(
-        severity_by_name(F.when(m, g(2))), F.col("severity")
-    ).cast("int")
-    return df.withColumns(
-        {
-            "arr_ok": m,
-            # .NET writes 1-7 fraction digits (Spark keeps 6)
-            "msg_ts": F.when(m, parse_date(g(1), ("yyyy-MM-dd HH:mm:ss.SSSSSSS",))),
-            "program": F.lit(program),
-            "severity": new_sev,
-            "pri": (F.col("facility") * 8 + new_sev).cast("int"),
-            f"{prefix}module": F.when(m, g(3)),
-            "message": F.when(m, g(4)).otherwise(src),
-        }
+    return _regexp_app_parser(
+        # .NET writes 1-7 fraction digits (Spark keeps 6)
+        df, src_col, "arr_ok", _ARR_RE, program,
+        ts=(1, ("yyyy-MM-dd HH:mm:ss.SSSSSSS",)), message=4,
+        severity=lambda g: severity_by_name(g(2)), **{f"{prefix}module": 3},
     )
 
 
@@ -1013,38 +986,12 @@ def jellyfin_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
     set-severity($2): of Serilog's VRB/DBG/INF/WRN/ERR/FTL only ERR
     resolves in the syslog-names table (the reference's set-severity
     keeps the old severity for the rest — faithful, if surprising)."""
-    from axosyslog_spark.operators.rewrite import severity_by_name
-
-    src = F.col(src_col)
-    m = src.rlike(_JELLYFIN_RE)
-
-    def g(i: int) -> Column:
-        return F.regexp_extract(src, _JELLYFIN_RE, i)
-
-    if "severity" not in df.columns:
-        df = df.withColumn("severity", F.lit(5).cast("int"))
-    if "facility" not in df.columns:
-        df = df.withColumn("facility", F.lit(1).cast("int"))
-    new_sev = F.coalesce(
-        severity_by_name(F.when(m, g(2))), F.col("severity")
-    ).cast("int")
-    return df.withColumns(
-        {
-            "jellyfin_ok": m,
-            # 1-6 fraction digits with a '+02:00' offset; the '+0200'
-            # offset form is accepted with millis only
-            "msg_ts": F.when(
-                m,
-                parse_date(
-                    g(1),
-                    ("yyyy-MM-dd HH:mm:ss.SSSSSS XXX", "yyyy-MM-dd HH:mm:ss.SSS XX"),
-                ),
-            ),
-            "program": F.lit("Jellyfin"),
-            "severity": new_sev,
-            "pri": (F.col("facility") * 8 + new_sev).cast("int"),
-            "message": F.when(m, g(3)).otherwise(src),
-        }
+    return _regexp_app_parser(
+        # 1-6 fraction digits with a '+02:00' offset; the '+0200'
+        # offset form is accepted with millis only
+        df, src_col, "jellyfin_ok", _JELLYFIN_RE, "Jellyfin",
+        ts=(1, ("yyyy-MM-dd HH:mm:ss.SSSSSS XXX", "yyyy-MM-dd HH:mm:ss.SSS XX")),
+        message=3, severity=lambda g: severity_by_name(g(2)),
     )
 
 
@@ -1053,6 +1000,8 @@ def jellyfin_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _QBIT_RE = r"^\((.)\) ([^ ]+) - (.*)"
+# the block's if/elif severity ladder over $1
+_QBIT_LEVELS = {"C": 2, "W": 4, "I": 6, "N": 5}
 
 
 def qbittorrent_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
@@ -1061,34 +1010,11 @@ def qbittorrent_parser(df: DataFrame, src_col: str = "text") -> DataFrame:
     PROGRAM='qBittorrent', and the if/elif severity ladder over $1:
     C->critical, W->warning, I->info, N->notice (any other letter
     keeps the previous severity)."""
-    src = F.col(src_col)
-    m = src.rlike(_QBIT_RE)
-
-    def g(i: int) -> Column:
-        return F.regexp_extract(src, _QBIT_RE, i)
-
-    if "severity" not in df.columns:
-        df = df.withColumn("severity", F.lit(5).cast("int"))
-    if "facility" not in df.columns:
-        df = df.withColumn("facility", F.lit(1).cast("int"))
-    lvl = F.when(m, g(1))
-    new_sev = (
-        F.when(lvl == "C", F.lit(2))
-        .when(lvl == "W", F.lit(4))
-        .when(lvl == "I", F.lit(6))
-        .when(lvl == "N", F.lit(5))
-        .otherwise(F.col("severity"))
-        .cast("int")
-    )
-    return df.withColumns(
-        {
-            "qbittorrent_ok": m,
-            "msg_ts": F.when(m, parse_date(g(2), ("yyyy-MM-dd'T'HH:mm:ss",))),
-            "program": F.lit("qBittorrent"),
-            "severity": new_sev,
-            "pri": (F.col("facility") * 8 + new_sev).cast("int"),
-            "message": F.when(m, g(3)).otherwise(src),
-        }
+    levels = F.create_map(*[F.lit(x) for kv in _QBIT_LEVELS.items() for x in kv])
+    return _regexp_app_parser(
+        df, src_col, "qbittorrent_ok", _QBIT_RE, "qBittorrent",
+        ts=(2, ("yyyy-MM-dd'T'HH:mm:ss",)), message=3,
+        severity=lambda g: F.try_element_at(levels, g(1)),
     )
 
 
@@ -1511,15 +1437,13 @@ def mariadb_audit_parser(
             "mariadb_ok", F.col(f"`{prefix}{_MARIADB_COLUMNS[-1]}`").isNotNull()
         )
     )
-    raw = F.col(f"`{prefix}serverhost`")
-    return (
-        df.withColumn(
-            f"{prefix}syslog_info", F.regexp_extract(raw, _MARIADB_INFO_RE, 1)
-        )
-        .withColumn(
-            f"{prefix}serverhost", F.regexp_extract(raw, _MARIADB_INFO_RE, 2)
-        )
-    )
+    df = with_matches(df, {
+        "__mariadb_info": match_groups(F.col(f"`{prefix}serverhost`"), _MARIADB_INFO_RE),
+    })
+    m = F.col("__mariadb_info")
+    return df.withColumns(
+        {f"{prefix}syslog_info": extract(m, 1), f"{prefix}serverhost": extract(m, 2)}
+    ).drop("__mariadb_info")
 
 
 # scl/pgsql/pgsql.conf postgresql-csvlog-parser() column list
@@ -1563,7 +1487,6 @@ def postgresql_csvlog_parser(
         so PANIC lands on crit(2), ERROR on warning(4), WARNING on
         notice(5), matching the conf's comment block."""
     from axosyslog_spark.operators.csvparse import CsvColumn, CsvSpec, csv_parse
-    from axosyslog_spark.operators.rewrite import severity_by_name
 
     spec = CsvSpec(
         columns=tuple(CsvColumn(n, cast) for n, cast in _PGSQL_COLUMNS),

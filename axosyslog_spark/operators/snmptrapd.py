@@ -40,18 +40,22 @@ Faithful behaviors (each exercised by a ported test):
     oid, type, subtype, uptime], then varbinds; duplicate keys keep
     first position / last value (NVTable overwrite).
 
-Spark-first: two anchored header regexes + one varbind span regex
+Spark-first: one framed match of the version's anchored header regex
+(matchgroups.match_groups) + one varbind span regex
 (regexp_extract_all), per-span decode expressions — no Python per
 row, no shuffle; a pure projection at any scale.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
+from axosyslog_spark.operators.matchgroups import group, match_groups, matched, with_matches
 
 # varbind key characters (varbindlist-scanner.c _is_valid_key_character)
 _KEYC = r"[A-Za-z0-9_.:-]"
@@ -128,17 +132,14 @@ def snmptrapd_parser(
     src = F.col(src_col)
     nl = F.instr(src, "\n")
     is_v1 = (nl > 0) & (F.substring(src, nl + 1, 1) == "\t")
-    ok = F.when(is_v1, src.rlike(_V1_RE)).otherwise(src.rlike(_V2_RE))
-
-    # regexp_extract needs a literal pattern: extract per tier, pick
-    # by the detected version (groups 1-3 share numbering)
-    def g(i: int) -> Column:
-        return F.when(
-            ok,
-            F.when(is_v1, F.regexp_extract(src, _V1_RE, i)).otherwise(
-                F.regexp_extract(src, _V2_RE, min(i, 3))
-            ),
-        )
+    # one framed match of the detected version's header (groups 1-3
+    # share numbering; 4-7 exist in the v1 header only)
+    hdr = "__snmp_hdr"
+    df = with_matches(df, {
+        hdr: F.when(is_v1, match_groups(src, _V1_RE)).otherwise(match_groups(src, _V2_RE)),
+    })
+    ok = matched(F.col(hdr))
+    g = partial(group, F.col(hdr))
 
     ent = F.nullif(g(4), F.lit(""))  # enterprise oid is optional
     lines = F.split(src, "\n")
@@ -199,4 +200,4 @@ def snmptrapd_parser(
                 ),
             ),
         )
-    return out
+    return out.drop(hdr)

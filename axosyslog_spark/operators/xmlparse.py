@@ -48,18 +48,21 @@ def _flatten_xml(
         s = s or ""
         return s.strip() if strip_whitespaces else s
 
-    def walk(el, path: str) -> None:
-        key = f"{path}.{el.tag}"
+    # depth-first walk on an explicit stack (a recursive one overflows
+    # Python's stack on deep input): attributes on entry, the value
+    # (text plus the children's tails) once the children are done
+    stack = [(root, f"{prefix}.{root.tag}", False)]
+    while stack:
+        el, key, done = stack.pop()
+        if done:
+            txt = seg(el.text) + "".join(seg(c.tail) for c in el)
+            if txt:
+                vals.setdefault(key, []).append(txt)
+            continue
         for aname, aval in el.attrib.items():
             attrs[f"{key}._{aname}"] = aval
-        txt = seg(el.text)
-        for child in el:
-            walk(child, key)
-            txt += seg(child.tail)
-        if txt:
-            vals.setdefault(key, []).append(txt)
-
-    walk(root, prefix)
+        stack.append((el, key, True))
+        stack.extend((c, f"{key}.{c.tag}", False) for c in reversed(el))
     out: dict[str, str] = {}
     for key, vlist in vals.items():
         if create_lists:
@@ -117,7 +120,11 @@ def _flatten_winlog(text: str, prefix: str = "winlog") -> dict[str, str]:
     def tag(el) -> str:
         return el.tag.rsplit("}", 1)[-1]
 
-    def walk(el, path: str) -> None:
+    # pre-order walk on an explicit stack (a recursive one overflows
+    # Python's stack on deeply nested input)
+    stack = [(root, prefix)]
+    while stack:
+        el, path = stack.pop()
         key = f"{path}.{tag(el)}"
         named_data = (
             path == data_path and tag(el) == "Data" and "Name" in el.attrib
@@ -131,10 +138,7 @@ def _flatten_winlog(text: str, prefix: str = "winlog") -> dict[str, str]:
             out[f"{key}.{el.attrib['Name']}"] = txt
         elif txt:
             out[key] = out[key] + "," + txt if key in out else txt
-        for child in el:
-            walk(child, key)
-
-    walk(root, prefix)
+        stack.extend((child, key) for child in reversed(el))
     return out
 
 

@@ -36,6 +36,7 @@ instead of ~1,900.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -49,8 +50,11 @@ from axosyslog_spark.plans.spec import flagship_spec
 class PipelineResult:
     parsed: DataFrame
     routed: DataFrame          # exploded (sink, …) frame
-    counts: DataFrame          # per-sink counts
-    histogram: DataFrame       # (sink, severity, tool_category, n)
+    # the aggregates are built on first read (route_fanout reads only
+    # the histogram): per-sink counts, and (sink, severity,
+    # tool_category, n)
+    counts = cached_property(lambda self: sink_counts(self.routed))
+    histogram = cached_property(lambda self: sink_histogram(self.routed))
 
 
 def run_pipeline(
@@ -60,12 +64,7 @@ def run_pipeline(
 ) -> PipelineResult:
     """Compose the full flagship pipeline lazily (no action triggered)."""
     c = flagship_spec(spec).compile(spark, transcripts)
-    return PipelineResult(
-        parsed=c.parsed,
-        routed=c.routed,
-        counts=sink_counts(c.routed),
-        histogram=sink_histogram(c.routed),
-    )
+    return PipelineResult(parsed=c.parsed, routed=c.routed)
 
 
 def run_pipeline_observed(

@@ -161,6 +161,14 @@ def test_match_store_groups(spark):
     assert by_text["err code=42"]["__matched"] is True
     assert by_text["err code=42"]["__m1"] == "42"
     assert by_text["nothing"]["__matched"] is False
+    assert by_text["nothing"]["__m1"] == ""
+    # an empty match is a match, as the reference's match() says
+    # (a group that took no part in it reads "")
+    out = flt.match_store_groups(df, r"x*|(q)", n_groups=1).collect()
+    assert all(r["__matched"] is True for r in out)
+    assert all(r["__m0"] == "" and r["__m1"] == "" for r in out)
+    out = flt.match_store_groups(df, r"^", n_groups=0).collect()
+    assert all(r["__matched"] is True for r in out)
 
 
 def test_netmask6(spark):

@@ -194,6 +194,10 @@ def test_pcre_with_capturing_group_param(spark):
     rules = [PdbRule("p", "@PCRE:regexp:(foo|bar)@ @STRING:w@")]
     rows = _apply(spark, rules, ["foo next"])
     assert rows[0]["regexp"] == "foo" and rows[0]["w"] == "next"
+    # a '(' inside a character class is a literal, not a group
+    rules = [PdbRule("p", "@PCRE:paren:[(]+x@ @STRING:w@")]
+    rows = _apply(spark, rules, ["((x next", "?:x next"])
+    assert rows[0]["paren"] == "((x" and rows[1]["rule_id"] is None
 
 
 def test_complete_match_beats_partial(spark):

@@ -73,6 +73,24 @@ def test_windows_eventlog_xml_parser(spark):
     assert got["winlog.Event.System.EventID"] == "999"
 
 
+def test_xml_walkers_survive_deep_nesting(spark, tmp_path):
+    """XML nested 1,000 deep (past Python's default recursion limit)
+    flattens in both walkers instead of failing the job; read from
+    parquet so the UDF runs in the executor."""
+    from axosyslog_spark.operators.xmlparse import windows_eventlog_xml_parser
+
+    deep = "<a>" * 1000 + "x" + "</a>" * 1000
+    path = str(tmp_path / "deep.parquet")
+    spark.createDataFrame([(deep,), ("<a>y</a>",)], "text string").write.parquet(path)
+    df = spark.read.parquet(path)
+    key = ".".join(["a"] * 1000)
+    rows = {r.text: r.xml for r in xml_parser(df).collect()}
+    assert rows[deep] == {f"xml.{key}": "x"}
+    assert rows["<a>y</a>"] == {"xml.a": "y"}
+    rows = {r.text: r.winlog for r in windows_eventlog_xml_parser(df).collect()}
+    assert rows[deep] == {f"winlog.{key}": "x"}
+
+
 def test_indented_multiline(spark):
     rows = [
         ("c1", 0, "Traceback (most recent call last):"),
