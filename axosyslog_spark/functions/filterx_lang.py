@@ -1054,14 +1054,16 @@ class _Compiler:
 
     def _arg_shape(self, toks: list[Tok], st: _State) -> str | None:
         """The FilterX type of one call argument when plan time knows
-        it: a literal's type, a whole [...] / {...} literal ('list' /
-        'dict'), or a $field this block has not written, typed from
-        ``string_fields`` like ``+=`` ('string' or 'non-string').
+        it: a literal's type, a whole [...] / {...} literal or a call of
+        a builtin in _CALL_SHAPES ('list' / 'dict'), or a $field this
+        block has not written, typed from ``string_fields`` like ``+=``
+        ('string' or 'non-string').
         None when undecidable."""
         t = toks[0]
-        if t.text in ("[", "{"):
+        call = int(t.kind == "name" and len(toks) > 1 and toks[1].text == "(")
+        if call or t.text in ("[", "{"):
             depth = 0
-            for k, u in enumerate(toks):
+            for k, u in enumerate(toks[call:], call):
                 if u.kind == "op" and u.text in ("(", "[", "{"):
                     depth += 1
                 elif u.kind == "op" and u.text in (")", "]", "}"):
@@ -1069,6 +1071,8 @@ class _Compiler:
                 if depth == 0:
                     if k != len(toks) - 1:
                         return None
+                    if call:
+                        return _CALL_SHAPES.get(t.text)
                     return "list" if t.text == "[" else "dict"
         if len(toks) != 1:
             return None
@@ -1194,6 +1198,16 @@ def _need_raw(fn: str, raws: list[str | None], i: int) -> str:
     return raws[i]
 
 
+# plan-time result shape of the builtins that always build a dict
+# (map<string,string>) or a list (array)
+_CALL_SHAPES = {
+    **dict.fromkeys((
+        "parse_kv", "parse_json", "parse_xml", "parse_windows_eventlog_xml",
+        "parse_cef", "parse_leef", "json", "object", "flatten",
+        "unset_empties", "vars",
+    ), "dict"),
+    **dict.fromkeys(("keys", "json_array", "dict_to_pairs"), "list"),
+}
 _FX_TYPES = ("string", "integer", "double", "boolean", "null", "list", "dict")
 
 
@@ -1333,6 +1347,9 @@ def _FUNCS_DISPATCH(
     if fn in ("str_strip", "strip"):
         return F.trim(one)
     if fn == "len":
+        # func-len.c: a list or dict counts its elements
+        if shapes and shapes[0] in ("list", "dict"):
+            return F.size(one)
         return F.length(one.cast("string"))
     def _any_of(pred):
         # func-str.c: a list second argument means any-of (the
@@ -1489,15 +1506,13 @@ def _FUNCS_DISPATCH(
 
         return getattr(cef, f"{fn}_fx")(one)
     # modules/xml: parse_xml / parse_windows_eventlog_xml / format_xml
-    if fn == "parse_xml":
+    if fn in ("parse_xml", "parse_windows_eventlog_xml"):
         from axosyslog_spark.operators.xmlparse import xml_flatten_col
 
-        return xml_flatten_col(one, raws[1] if len(raws) > 1 and raws[1] else "xml")
-    if fn == "parse_windows_eventlog_xml":
-        from axosyslog_spark.operators.xmlparse import winlog_flatten_col
-
-        return winlog_flatten_col(
-            one, raws[1] if len(raws) > 1 and raws[1] else "winlog"
+        win = fn == "parse_windows_eventlog_xml"
+        return xml_flatten_col(
+            one, raws[1] if len(raws) > 1 and raws[1] else ("winlog" if win else "xml"),
+            strip_whitespaces=win, named_data=win,
         )
     if fn == "format_xml":
         from axosyslog_spark.operators.xmlparse import format_xml_fx

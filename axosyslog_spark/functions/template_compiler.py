@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from axosyslog_spark.functions import templates as tf
 from axosyslog_spark.operators.dateparse import strftime_to_spark
 from axosyslog_spark.operators.filters import typed_cmp
-from axosyslog_spark.operators.kvscan import QUOTED
+from axosyslog_spark.operators.kvscan import QUOTED, SQUOTED
 from axosyslog_spark.operators.rewrite import value_pairs
 
 
@@ -59,27 +59,13 @@ def _value_pairs(raw_args, ctx) -> dict[str, Column]:
 # element is only representable as '""').
 # ---------------------------------------------------------------------------
 
-_LIST_ELEM_RE = QUOTED + "|'[^']*'|[^,]+"
+_LIST_ELEM_RE = f"{QUOTED}|{SQUOTED}|[^,]+"
 
 
 def _list_parse(c: Column) -> Column:
     """string -> array<string> of DECODED elements."""
     parts = F.regexp_extract_all(c.cast("string"), F.lit(_LIST_ELEM_RE), 0)
-
-    def dec(e: Column) -> Column:
-        inner = F.substring(e, 2, F.length(e) - 2)
-        return (
-            F.when(e.rlike('^".*"$'), F.regexp_replace(
-                F.regexp_replace(
-                    F.regexp_replace(inner, r"\\t", "\t"), r"\\n", "\n"
-                ),
-                r"\\(.)", "$1",
-            ))
-            .when(e.rlike("^'.*'$"), inner)
-            .otherwise(e)
-        )
-
-    return F.transform(parts, dec)
+    return F.transform(parts, tf.str_repr_decode)
 
 
 def _list_of_args(args) -> Column:
@@ -92,10 +78,6 @@ def _list_of_args(args) -> Column:
     for a in arrs[1:]:
         out = F.concat(out, a)
     return out
-
-
-def _list_render(arr: Column) -> Column:
-    return tf.list_repr(arr)
 
 
 def _py_slice_bounds(spec: str):
@@ -610,24 +592,6 @@ _IPV4_RE = r"^(\d{1,3}\.){3}\d{1,3}$"
 _IPV6_RE = r"^[0-9A-Fa-f:]*:[0-9A-Fa-f:.]*$"
 
 
-def _str_repr_py(s: str) -> str:
-    """Plan-time mirror of templates.str_repr_encode (str-repr/
-    encode.c) for compile-time-known strings like $(names) output."""
-    if s == "":
-        return '""'
-    esc = s.replace("\\", "\\\\")
-    for ch, rep in (("\b", "\\b"), ("\f", "\\f"), ("\n", "\\n"),
-                    ("\r", "\\r"), ("\t", "\\t")):
-        esc = esc.replace(ch, rep)
-    if "'" in s:
-        return '"' + esc.replace('"', '\\"') + '"'
-    if '"' in s:
-        return "'" + esc + "'"
-    if any(c in s for c in "\b\f\n\r\t\\ ,"):
-        return '"' + esc.replace('"', '\\"') + '"'
-    return s
-
-
 def _apply_template_func(raw_args: list[str], ctx: TemplateContext) -> Column:
     """$(template name [fallback]) — basicfuncs/tf-template.c: static
     binding when the name resolves in the config's template registry
@@ -682,7 +646,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         pairs = _value_pairs(raw_args, ctx)
         if name == "names":
             # names are compile-time strings — encode plan-side
-            return F.lit(",".join(_str_repr_py(n) for n in pairs))
+            return F.lit(",".join(tf.str_repr_py(n) for n in pairs))
         if not pairs:
             return F.lit("")
         return tf.list_repr(F.array(*[c.cast("string") for c in pairs.values()]))
@@ -865,14 +829,14 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
             )
 
         if name == "map":
-            return _list_render(
+            return tf.list_repr(
                 F.transform(arr, lambda e: compile_template(inner, _with_elem(e)))
             )
-        return _list_render(
+        return tf.list_repr(
             F.filter(arr, lambda e: parse_condition(inner, _with_elem(e)))
         )
     if name == "list-concat":
-        return _list_render(_list_of_args(args))
+        return tf.list_repr(_list_of_args(args))
     if name == "list-head":
         return F.coalesce(
             F.try_element_at(_list_of_args(args), F.lit(1)), F.lit("")
@@ -889,14 +853,14 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         )
     if name == "list-tail":
         arr = _list_of_args(args)
-        return _list_render(F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))))
+        return tf.list_repr(F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))))
     if name == "list-count":
         return F.size(_list_of_args(args)).cast("string")
     if name == "list-append":
         base = _list_parse(args[0].col) if args else F.array().cast("array<string>")
         for a in args[1:]:
             base = F.array_append(base, a.col)
-        return _list_render(base)
+        return tf.list_repr(base)
     if name == "list-slice":
         if len(args) < 2:
             raise TemplateError("$(list-slice a:b list...)")
@@ -912,7 +876,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
 
         s = bound(start, F.lit(0))
         e = bound(end, n)
-        return _list_render(
+        return tf.list_repr(
             F.slice(arr, s + 1, F.greatest(e - s, F.lit(0)))
         )
     if name == "list-search":
@@ -973,7 +937,7 @@ def _apply_func(call: FuncCall, ctx: TemplateContext) -> Column:
         out = arrs[0]
         for a in arrs[1:]:
             out = F.concat(out, a)
-        return _list_render(F.filter(out, lambda x: x != ""))
+        return tf.list_repr(F.filter(out, lambda x: x != ""))
     if name == "basename":
         return tf.tf_basename(one())
     if name == "dirname":

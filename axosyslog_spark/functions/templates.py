@@ -18,6 +18,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from axosyslog_spark.operators.kvscan import QUOTED, SQUOTED
+
 # ---------------------------------------------------------------------------
 # string funcs (modules/basicfuncs/str-funcs.c)
 # ---------------------------------------------------------------------------
@@ -77,6 +79,21 @@ def tf_padding(c: Column, width: int, pad: str = " ") -> Column:
 # ---------------------------------------------------------------------------
 
 
+_C_ESCAPES = (("\b", "\\b"), ("\f", "\\f"), ("\n", "\\n"),
+              ("\r", "\\r"), ("\t", "\\t"))
+
+
+def _c_escape(c: Column, quote: bool = False) -> Column:
+    """lib/utf8utils.c _append_escaped_utf8_character_ascii: backslash
+    doubles, the named control chars get their C escapes; inside a
+    double-quoted value '\"' is additionally escaped
+    (AUTF8_UNSAFE_QUOTE). str-repr and $(format-welf) share it."""
+    e = F.replace(c, F.lit("\\"), F.lit("\\\\"))
+    for ch, rep in _C_ESCAPES:
+        e = F.replace(e, F.lit(ch), F.lit(rep))
+    return F.replace(e, F.lit('"'), F.lit('\\"')) if quote else e
+
+
 def str_repr_encode(c: Column, forbidden: str = ",") -> Column:
     """lib/str-repr/encode.c str_repr_encode_append: the syslog-ng
     list-element encoding. Empty -> '""'; an element containing an
@@ -85,13 +102,8 @@ def str_repr_encode(c: Column, forbidden: str = ",") -> Column:
     whitespace/control/backslash or a forbidden char (the list
     delimiter) are double-quoted; plain text passes through."""
     c = c.cast("string")
-    esc = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    for ch, rep in (("\b", "\\b"), ("\f", "\\f"), ("\n", "\\n"),
-                    ("\r", "\\r"), ("\t", "\\t")):
-        esc = F.replace(esc, F.lit(ch), F.lit(rep))
-    dq = F.concat(F.lit('"'), F.replace(esc, F.lit('"'), F.lit('\\"')),
-                  F.lit('"'))
-    sq = F.concat(F.lit("'"), esc, F.lit("'"))
+    dq = F.concat(F.lit('"'), _c_escape(c, True), F.lit('"'))
+    sq = F.concat(F.lit("'"), _c_escape(c), F.lit("'"))
     needs = c.rlike("[\\x08\\x0c\\n\\r\\t\\\\ " + re.escape(forbidden) + "]")
     return (
         F.when(c.isNull() | (c == ""), F.lit('""'))
@@ -100,6 +112,42 @@ def str_repr_encode(c: Column, forbidden: str = ",") -> Column:
         .when(needs, dq)
         .otherwise(c)
     )
+
+
+def str_repr_py(s: str) -> str:
+    """Plan-time mirror of str_repr_encode for strings the plan already
+    knows ($(names), the XML walker's list values)."""
+    if s == "":
+        return '""'
+    esc = s.replace("\\", "\\\\")
+    for ch, rep in _C_ESCAPES:
+        esc = esc.replace(ch, rep)
+    if "'" in s:
+        return '"' + esc.replace('"', '\\"') + '"'
+    if '"' in s:
+        return "'" + esc + "'"
+    if any(c in s for c in "\b\f\n\r\t\\ ,"):
+        return '"' + esc.replace('"', '\\"') + '"'
+    return s
+
+
+def str_repr_decode(c: Column) -> Column:
+    """The inverse of str_repr_encode for one element (lib/str-repr/
+    decode.c): a token wholly in double or single quotes loses them,
+    and its escapes decode: \\b \\f \\n \\r \\t to their control
+    characters, and \\X to X for any other X (\\\\, \\", \\'). Any other
+    token passes through. No marker byte: the body splits on its
+    escaped backslashes, each piece decodes alone, and the pieces join
+    with one backslash."""
+    body = F.substring(c, 2, F.length(c) - 2)
+
+    def piece(p: Column) -> Column:
+        for ch, rep in _C_ESCAPES:
+            p = F.replace(p, F.lit(rep), F.lit(ch))
+        return F.regexp_replace(p, r"\\(.)", "$1")
+
+    decoded = F.array_join(F.transform(F.split(body, r"\\\\"), piece), "\\")
+    return F.when(c.rlike(f"^(?:{QUOTED}|{SQUOTED})$"), decoded).otherwise(c)
 
 
 def list_repr(values: Column) -> Column:
@@ -224,13 +272,24 @@ def format_json(pairs, flat: bool = False) -> Column:
     objects unless ``flat`` ($(format-flat-json), format-json.c:465-480
     tf_flat_json_append), or a runtime map<string,string> Column, whose
     keys stay flat because the plan cannot see them. A value that is
-    itself a runtime map goes through ``json_order`` first."""
+    itself a runtime map goes through ``json_order`` first. A nested
+    name that is another's dotted prefix (``a`` and ``a.b``) is a
+    TemplateError naming both, whatever their order."""
     if not isinstance(pairs, dict):
         return F.to_json(json_order(pairs))
+    names = sorted(k for k, col in pairs.items() if col is not None)
+    clash = None if flat else next((
+        (k, m) for k in names for m in names if m.startswith(k + ".")
+    ), None)
+    if clash:
+        from axosyslog_spark.functions.template_compiler import TemplateError
+
+        raise TemplateError(
+            "format-json: %r is both a value and the object of %r" % clash
+        )
     tree: dict = {}
-    for k, col in pairs.items():
-        if col is None:
-            continue
+    for k in names:
+        col = pairs[k]
         *path, leaf = [k] if flat else k.split(".")
         d = tree
         for p in path:
@@ -246,21 +305,6 @@ def format_json(pairs, flat: bool = False) -> Column:
     return F.to_json(emit(tree), {"ignoreNullFields": "true"})
 
 
-def _welf_escape(c: Column, quote: bool) -> Column:
-    """lib/utf8utils.c _append_escaped_utf8_character_ascii: backslash
-    doubles, the named control chars get their C escapes; inside a
-    quoted value '\"' is additionally escaped (AUTF8_UNSAFE_QUOTE)."""
-    e = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    for ch, rep in (
-        ("\b", "\\b"), ("\f", "\\f"), ("\n", "\\n"),
-        ("\r", "\\r"), ("\t", "\\t"),
-    ):
-        e = F.replace(e, F.lit(ch), F.lit(rep))
-    if quote:
-        e = F.replace(e, F.lit('"'), F.lit('\\"'))
-    return e
-
-
 def format_welf(named_cols: dict[str, Column]) -> Column:
     """$(format-welf) — k=v space-joined; keys sorted with 'id' first
     (tf_format_welf_strcmp); a value containing a space is wrapped in
@@ -271,8 +315,8 @@ def format_welf(named_cols: dict[str, Column]) -> Column:
         v = named_cols[k].cast("string")
         rendered = F.when(
             v.contains(" "),
-            F.concat(F.lit('"'), _welf_escape(v, True), F.lit('"')),
-        ).otherwise(_welf_escape(v, False))
+            F.concat(F.lit('"'), _c_escape(v, True), F.lit('"')),
+        ).otherwise(_c_escape(v))
         parts.append(F.concat(F.lit(f"{k}="), rendered))
     return F.concat_ws(" ", *parts)
 

@@ -6,8 +6,9 @@ semantics ported from lib/scanner/kv-scanner/tests/test_kv_scanner.c:
 
   - keys are runs of [A-Za-z0-9._-]; spaces allowed before the value
     separator ("key = v"); keyless words never start a pair
-  - a value is either a single/double-quoted C string (quotes
-    stripped, escapes decoded, `was_quoted` set) or an unquoted run
+  - a value is either a single/double-quoted str-repr string (quotes
+    stripped, escapes decoded by templates.str_repr_decode,
+    `was_quoted` set) or an unquoted run
     that ABSORBS spaces and words until a space followed by another
     `key=`, the pair separator, or end of input ("foo=bar lorem
     ipsum key=value" -> foo = "bar lorem ipsum")
@@ -17,8 +18,8 @@ semantics ported from lib/scanner/kv-scanner/tests/test_kv_scanner.c:
     collected comma-joined like str_repr via kv_stray_words)
 
 Spark-first: ONE regexp_extract_all pass finds the pair spans; key /
-value / unquote / escape-decode are per-element expressions over the
-short extracted strings. No Python per row; Java regex supports the
+value / str-repr decode are per-element expressions over the short
+extracted strings. No Python per row; Java regex supports the
 lookahead the value-absorption rule needs (keep kv oracle fixtures
 lookahead-free, DuckDB's RE2 cannot mirror it).
 """
@@ -31,22 +32,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _KEY = r"[A-Za-z0-9._-]+"
-# Placeholder for escaped backslash during staged unescape.
-# IN-BAND contract (like matchgroups.py's framing bytes), ENFORCED
-# below: _unescape and kv_stray_words strip a literal \x02 from their
-# input before using it as a marker, so hostile/binary input loses the
-# STX byte instead of garbling the value. Syslog payloads never
-# legitimately carry STX, so behavior matches the reference's
-# control-stripping line sources.
+# kv_stray_words' pair-span marker. IN-BAND contract (like
+# matchgroups.py's framing bytes), ENFORCED below: kv_stray_words
+# strips a literal \x02 from its input before using it as a marker, so
+# hostile/binary input loses the STX byte instead of garbling the
+# words. Pair values never see the marker: str_repr_decode uses none.
 _BS = "\x02"
-# A double- (QUOTED) or single-quoted (_QS) value with backslash
+# A double- (QUOTED) or single-quoted (SQUOTED) value with backslash
 # escapes, written as possessive runs between escapes: an alternation
 # under '*' costs Java's regex engine one stack frame per character and
 # overflows the task's stack (a fatal error) at a few thousand.
 # QUOTED_BODY is the text between the double quotes.
 QUOTED_BODY = r'[^"\\]*+(?:\\.[^"\\]*+)*+'
 QUOTED = f'"{QUOTED_BODY}"'
-_QS = r"'[^'\\]*+(?:\\.[^'\\]*+)*+'"
+SQUOTED = r"'[^'\\]*+(?:\\.[^'\\]*+)*+'"
 
 
 def _skip_regex(vs: str, ps: str) -> str:
@@ -63,20 +62,7 @@ def _pair_regex(value_separator: str = "=", pair_separator: str = ", ") -> str:
     # unquoted: non-greedy absorption until pair-sep / space+next-key /
     # space+pair-sep / trailing spaces / end (kv-scanner.c _match_delimiter)
     unq = rf".*?(?={ps}|[ ]+(?:$|{_KEY}[ ]*{vs}|{ps})|$)"
-    return rf"{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(?:{QUOTED}|{_QS}|{unq})"
-
-
-def _unescape(v: Column) -> Column:
-    """C-string unquote (str-repr): \\n/\\t/\\r named escapes, \\X -> X,
-    staged so escaped backslashes don't feed later rules. A literal
-    \\x02 in the input is stripped first — it's the stage marker."""
-    v = F.replace(v, F.lit(_BS), F.lit(""))
-    v = F.regexp_replace(v, r"\\\\", _BS)
-    v = F.regexp_replace(v, r"\\n", "\n")
-    v = F.regexp_replace(v, r"\\t", "\t")
-    v = F.regexp_replace(v, r"\\r", "\r")
-    v = F.regexp_replace(v, r"\\(.)", "$1")
-    return F.replace(v, F.lit(_BS), F.lit("\\"))
+    return rf"{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(?:{QUOTED}|{SQUOTED}|{unq})"
 
 
 def kv_scan(
@@ -84,7 +70,10 @@ def kv_scan(
     value_separator: str = "=",
     pair_separator: str = ", ",
 ) -> Column:
-    """text -> array<struct<key, value, was_quoted>> in input order."""
+    """text -> array<struct<key, value, was_quoted>> in input order;
+    a quoted value decodes through templates.str_repr_decode."""
+    from axosyslog_spark.functions.templates import str_repr_decode
+
     vs = re.escape(value_separator)
     ps = re.escape(pair_separator)
     spans = F.regexp_extract_all(text, F.lit(_pair_regex(value_separator, pair_separator)), 0)
@@ -92,12 +81,11 @@ def kv_scan(
     def decode(p: Column) -> Column:
         key = F.regexp_extract(p, f"^({_KEY})", 1)
         raw = F.regexp_extract(p, f"(?s)^{_KEY}[ ]*{vs}{_skip_regex(vs, ps)}(.*)$", 1)
-        qd = raw.rlike(f"^{QUOTED}$")
-        qs = raw.rlike(f"^{_QS}$")
-        body = F.substring(raw, 2, F.length(raw) - 2)
-        value = F.when(qd | qs, _unescape(body)).otherwise(raw)
+        quoted = raw.rlike(f"^(?:{QUOTED}|{SQUOTED})$")
         return F.struct(
-            key.alias("key"), value.alias("value"), (qd | qs).alias("was_quoted")
+            key.alias("key"),
+            str_repr_decode(raw).alias("value"),
+            quoted.alias("was_quoted"),
         )
 
     return F.transform(spans, decode)

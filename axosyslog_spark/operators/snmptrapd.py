@@ -31,9 +31,11 @@ Faithful behaviors (each exercised by a ported test):
     before any space/tab is the (discarded) SNMP type — "INTEGER:",
     "Timeticks:", "Hex-STRING:" — the value is what follows.
   - unquoted values absorb spaces and words until the tab pair
-    separator or a "next-key =" boundary; quoted values are
-    unquoted and unescaped; varbinds stop at the line's newline
-    ("garbage = stop here" on the next line is dropped).
+    separator or a "next-key =" boundary; a value wholly in double
+    or single quotes decodes like every kv-scanner value
+    (templates.str_repr_decode: "a\\nb\\\\c" -> a<LF>b\\c); varbinds
+    stop at the line's newline ("garbage = stop here" on the next line
+    is dropped).
   - keys are prefixed (default ".snmp.") and runs of ':' normalize
     to one '_' (":NET-SNMP::MIB:" -> "_NET-SNMP_MIB_").
   - NV insertion order is hostname, transport_info, [v1: enterprise
@@ -53,6 +55,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from axosyslog_spark.functions.templates import str_repr_decode
 from axosyslog_spark.operators.dateparse import parse_date
 from axosyslog_spark.operators.kvscan import QUOTED, entries_to_map
 from axosyslog_spark.operators.matchgroups import group, match_groups, matched, with_matches
@@ -87,13 +90,6 @@ _VB_RE = (
 )
 
 
-def _unquote(v: Column) -> Column:
-    """kv-scanner C-string unquote for double-quoted varbind values."""
-    body = F.substring(v, 2, F.length(v) - 2)
-    body = F.regexp_replace(body, r"\\(.)", "$1")
-    return body
-
-
 def _varbind_entries(section: Column) -> Column:
     """Varbind line -> array<struct<key,value>> in scan order."""
     spans = F.regexp_extract_all(section, F.lit(_VB_RE), 0)
@@ -108,9 +104,7 @@ def _varbind_entries(section: Column) -> Column:
             rest.rlike(r"^[^: \t]*:"),
             F.regexp_replace(rest, r"^[^: \t]*:[ ]*", ""),
         ).otherwise(rest)
-        quoted = val.rlike(f"^{QUOTED}$")
-        val = F.when(quoted, _unquote(val)).otherwise(val)
-        return F.struct(key.alias("key"), val.alias("value"))
+        return F.struct(key.alias("key"), str_repr_decode(val).alias("value"))
 
     return F.transform(spans, decode)
 

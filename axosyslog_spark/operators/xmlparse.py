@@ -18,24 +18,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
+from axosyslog_spark.functions.templates import str_repr_py
+
 
 def _flatten_xml(
     text: str,
     prefix: str = "xml",
     create_lists: bool = True,
     strip_whitespaces: bool = False,
+    named_data: bool = False,
 ) -> dict[str, str]:
-    """modules/xml/xml.c semantics (test_xml_parser.c ported):
-    an element's value is the concatenation of its text segments
-    INCLUDING the tails between/after children (mixed content
-    'part1<x/>part2' -> 'part1part2'); repeated sibling elements
-    become an LM_VT_LIST — comma-joined with str-repr quoting — under
-    create-lists(yes) (the default) and concatenate verbatim under
-    create-lists(no); whitespace survives unless
-    strip-whitespaces(yes)."""
-    import xml.etree.ElementTree as ET
+    """The one XML walker, modules/xml/xml.c semantics
+    (test_xml_parser.c ported): an element's value is the
+    concatenation of its text segments INCLUDING the tails
+    between/after children (mixed content 'part1<x/>part2' ->
+    'part1part2'); repeated sibling elements become an LM_VT_LIST —
+    comma-joined with str-repr quoting — under create-lists(yes) (the
+    default) and concatenate verbatim under create-lists(no);
+    whitespace survives unless strip-whitespaces(yes). Namespace URIs
+    are dropped from element names (``Event``, not ``{uri}Event``).
 
-    from axosyslog_spark.functions.template_compiler import _str_repr_py
+    ``named_data`` adds the windows-eventlog-xml-parser rule
+    (modules/xml/windows-eventlog-xml-parser.c): ``<Data Name='k'>``
+    directly under ``{prefix}.Event.EventData`` keys its value as
+    ``...EventData.Data.k`` and drops its ``_Name`` attribute key."""
+    import xml.etree.ElementTree as ET
 
     try:
         root = ET.fromstring(text)
@@ -43,45 +50,57 @@ def _flatten_xml(
         return {}
     vals: dict[str, list[str]] = {}
     attrs: dict[str, str] = {}
+    named_key = f"{prefix}.Event.EventData.Data"
 
     def seg(s: str | None) -> str:
         s = s or ""
         return s.strip() if strip_whitespaces else s
 
+    def enter(el, path: str):
+        key = f"{path}.{el.tag.rsplit('}', 1)[-1]}"
+        named = named_data and key == named_key and "Name" in el.attrib
+        return el, f"{key}.{el.attrib['Name']}" if named else key, named, False
+
     # depth-first walk on an explicit stack (a recursive one overflows
     # Python's stack on deep input): attributes on entry, the value
     # (text plus the children's tails) once the children are done
-    stack = [(root, f"{prefix}.{root.tag}", False)]
+    stack = [enter(root, prefix)]
     while stack:
-        el, key, done = stack.pop()
+        el, key, named, done = stack.pop()
         if done:
             txt = seg(el.text) + "".join(seg(c.tail) for c in el)
             if txt:
                 vals.setdefault(key, []).append(txt)
             continue
         for aname, aval in el.attrib.items():
-            attrs[f"{key}._{aname}"] = aval
-        stack.append((el, key, True))
-        stack.extend((c, f"{key}.{c.tag}", False) for c in reversed(el))
+            if not (named and aname == "Name"):
+                attrs[f"{key}._{aname}"] = aval
+        stack.append((el, key, named, True))
+        stack.extend(enter(c, key) for c in reversed(el))
     out: dict[str, str] = {}
     for key, vlist in vals.items():
         if create_lists:
-            out[key] = ",".join(_str_repr_py(v) for v in vlist)
+            out[key] = ",".join(str_repr_py(v) for v in vlist)
         else:
             out[key] = "".join(vlist)
     out.update(attrs)
     return out
 
 
-def xml_flatten_col(src, prefix: str = "xml"):
-    """Column form of the XML dotted-key flatten (the filterx
-    parse_xml() builtin, modules/xml/filterx-func-parse-xml via
-    xml-scanner): map<string,string>, empty map on parse failure."""
+def xml_flatten_col(
+    src, prefix: str = "xml", strip_whitespaces: bool = False,
+    named_data: bool = False,
+):
+    """Column form of ``_flatten_xml`` (also the filterx parse_xml()
+    and parse_windows_eventlog_xml() builtins): map<string,string>,
+    empty map on parse failure."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(MapType(StringType(), StringType()))
     def parse_batch(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _flatten_xml(t or "", prefix))
+        return texts.map(lambda t: _flatten_xml(
+            t or "", prefix, strip_whitespaces=strip_whitespaces, named_data=named_data
+        ))
 
     return parse_batch(src)
 
@@ -94,73 +113,17 @@ def xml_parser(
     return df.withColumn(out_col, xml_flatten_col(df[src_col], prefix))
 
 
-def _flatten_winlog(text: str, prefix: str = "winlog") -> dict[str, str]:
-    """windows-eventlog-xml-parser flatten
-    (modules/xml/windows-eventlog-xml-parser.c, expectations from
-    tests/test_windows_eventlog_xml_parser.c):
-
-    - identical to the generic XML flatten, except ``<Data
-      Name='k'>v</Data>`` under ``Event.EventData`` becomes
-      ``{prefix}.Event.EventData.Data.k = v`` and neither the plain
-      ``...Data`` key nor the ``...Data._Name`` attribute key is kept;
-    - ``<Data>`` elements WITHOUT a Name attribute list-append onto
-      ``{prefix}.Event.EventData.Data`` ("foo,bar");
-    - XML namespaces are stripped (the scanner emits plain tag names:
-      ``.winlog.Event.System.EventID``, not the xmlns-expanded form).
-    """
-    import xml.etree.ElementTree as ET
-
-    try:
-        root = ET.fromstring(text)
-    except ET.ParseError:
-        return {}
-    out: dict[str, str] = {}
-    data_path = f"{prefix}.Event.EventData"
-
-    def tag(el) -> str:
-        return el.tag.rsplit("}", 1)[-1]
-
-    # pre-order walk on an explicit stack (a recursive one overflows
-    # Python's stack on deeply nested input)
-    stack = [(root, prefix)]
-    while stack:
-        el, path = stack.pop()
-        key = f"{path}.{tag(el)}"
-        named_data = (
-            path == data_path and tag(el) == "Data" and "Name" in el.attrib
-        )
-        for aname, aval in el.attrib.items():
-            if named_data and aname == "Name":
-                continue
-            out[f"{key}._{aname}"] = aval
-        txt = (el.text or "").strip()
-        if named_data:
-            out[f"{key}.{el.attrib['Name']}"] = txt
-        elif txt:
-            out[key] = out[key] + "," + txt if key in out else txt
-        stack.extend((child, key) for child in reversed(el))
-    return out
-
-
-def winlog_flatten_col(src, prefix: str = "winlog"):
-    """Column form of the windows-eventlog flatten (the filterx
-    parse_windows_eventlog_xml() builtin)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(MapType(StringType(), StringType()))
-    def parse_batch(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _flatten_winlog(t or "", prefix))
-
-    return parse_batch(src)
-
-
 def windows_eventlog_xml_parser(
     df: DataFrame, src_col: str = "text", out_col: str = "winlog",
     prefix: str = "winlog",
 ) -> DataFrame:
-    """windows-eventlog-xml-parser(): EventData Data-name promotion on
-    top of the generic dotted flatten; map<string,string> out column."""
-    return df.withColumn(out_col, winlog_flatten_col(df[src_col], prefix))
+    """windows-eventlog-xml-parser(): the generic dotted flatten with
+    strip-whitespaces(yes) and the EventData ``Data Name=`` rule
+    (tests/test_windows_eventlog_xml_parser.c); map<string,string> out
+    column."""
+    return df.withColumn(out_col, xml_flatten_col(
+        df[src_col], prefix, strip_whitespaces=True, named_data=True
+    ))
 
 
 def _xml_element(head, name, value, empty_end="/>"):

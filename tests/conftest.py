@@ -49,6 +49,29 @@ def spark():
     yield s
 
 
+# str-repr and parser edge values: NULL, empty, the list delimiter,
+# both quote kinds with a backslash, every C escape the str-repr
+# encoder writes (and a backslash before a letter that looks like
+# one), the in-band framing/marker bytes and one 20,000-character value
+HOSTILE_STRINGS = [
+    None, "", "a,b", "a'b\"c\\d", '"only double" \\', "it's \\ x",
+    "\b", "\f", "\n", "\r", "\t", "\\", '"', "'", "b\bf\fn\nr\rt\t",
+    "lit\\n", "\\\n", "a\\'b", "\x01\x02\x03\x04", "x \x02 y",
+    "a\\\"b,\n c'\t" * 2000,
+]
+
+
+@pytest.fixture(scope="session")
+def hostile_strings(spark, tmp_path_factory):
+    """HOSTILE_STRINGS as an ``(id int, s string)`` frame read back from
+    parquet, so no expression over it is constant-folded."""
+    path = str(tmp_path_factory.mktemp("hostile") / "strings.parquet")
+    spark.createDataFrame(
+        list(enumerate(HOSTILE_STRINGS)), "id int, s string"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
 @pytest.fixture(autouse=True)
 def _spark_jvm_alive(request):
     """Around every test that uses the session: if the gateway JVM is

@@ -648,3 +648,20 @@ def test_istype_undecidable_raises(spark, block):
     df = spark.createDataFrame([(1, "x")], "n int, s string")
     with pytest.raises(FilterXSyntaxError, match="istype"):
         filterx(df, block)
+
+
+def test_len_counts_list_and_dict_elements(spark, tmp_path):
+    """len() of a list or dict counts its elements (func-len.c), not
+    the characters of Spark's rendering of it."""
+    path = str(tmp_path / "kv.parquet")
+    spark.createDataFrame([(0, "a=1 b=2")], "id int, text string").write.parquet(path)
+    out = filterx(
+        spark.read.parquet(path),
+        """
+        $n_kv = len(parse_kv($text));
+        $n_list = len(["a", "b", "c"]);
+        $n_keys = len(keys(parse_kv($text)));
+        $n_str = len($text);
+        """,
+    ).first()
+    assert (out["n_kv"], out["n_list"], out["n_keys"], out["n_str"]) == (2, 3, 2, 7)

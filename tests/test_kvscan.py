@@ -178,9 +178,9 @@ def test_linux_audit_parse(spark):
 
 
 def test_stx_byte_stripped_not_garbled(spark):
-    """The \\x02 stage-marker contract is enforced: a literal STX in a
-    quoted value (or among stray words) is stripped rather than
-    colliding with the internal marker and garbling the decode."""
+    """A literal STX never garbles a value: the quoted-value decode uses
+    no marker byte, so it keeps the STX, and kv_stray_words, whose
+    span marker it is, strips it."""
     from axosyslog_spark.operators.kvscan import kv_parse
 
     df = spark.createDataFrame(
@@ -191,8 +191,8 @@ def test_stx_byte_stripped_not_garbled(spark):
         r["id"]: r.asDict()
         for r in kv_parse(df, stray_words_to="stray").collect()
     }
-    # STX dropped; the staged backslash unescape still decodes \\ -> \
-    assert out[0]["kv"]["a"] == "xy \\ z"
+    # STX kept; the backslash decode still turns \\ into \
+    assert out[0]["kv"]["a"] == "x\x02y \\ z"
     assert out[0]["kv"]["b"] == "2"
     assert out[1]["stray"] == "stray,w"
     assert out[1]["kv"]["k"] == "v"

@@ -320,8 +320,7 @@ def test_patterndb_never_garbled_by_control_bytes(spark, texts):
     )
 )
 def test_str_repr_py_matches_column(spark, texts):
-    from axosyslog_spark.functions.template_compiler import _str_repr_py
-    from axosyslog_spark.functions.templates import str_repr_encode
+    from axosyslog_spark.functions.templates import str_repr_encode, str_repr_py
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id int, s string"
@@ -329,7 +328,7 @@ def test_str_repr_py_matches_column(spark, texts):
     rows = df.select("id", str_repr_encode(F.col("s")).alias("enc")).collect()
     got = {r["id"]: r["enc"] for r in rows}
     for i, t in enumerate(texts):
-        assert got[i] == _str_repr_py(t), repr(t)
+        assert got[i] == str_repr_py(t), repr(t)
 
 
 # ---------------------------------------------------------------------------

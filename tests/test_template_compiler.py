@@ -593,6 +593,17 @@ def test_operator_shaped_funcs_point_to_operators(frame):
         _render(frame, "$(geoip2 ${HOST})")
 
 
+def test_format_json_name_that_prefixes_another_is_an_error():
+    """``a`` and ``a.b`` cannot both nest: either order is the same
+    plan-time TemplateError naming both keys."""
+    for tpl in ("$(format-json a=${HOST} a.b=${HOST})",
+                "$(format-json a.b=${HOST} a=${HOST})"):
+        with pytest.raises(TemplateError, match=r"'a' is both a value and the object of 'a\.b'"):
+            compile_template(tpl, _ctx())
+    # format-flat-json never nests, so the pair is fine there
+    compile_template("$(format-flat-json a=${HOST} a.b=${HOST})", _ctx())
+
+
 def test_format_welf_key_exclude_table(frame):
     """The key_and_exclude table from test_format_welf.c plus the
     quoted-space case — welf gains the full value-pairs selection."""

@@ -73,6 +73,33 @@ def test_windows_eventlog_xml_parser(spark):
     assert got["winlog.Event.System.EventID"] == "999"
 
 
+def test_one_xml_walker_for_both_parsers(spark, tmp_path):
+    """xml-parser and windows-eventlog-xml-parser run one walker: a
+    namespaced Event keys by plain element names in both, and under
+    the same strip-whitespaces() (yes for windows-eventlog) repeated
+    siblings form the same str-repr list and mixed content keeps its
+    tails."""
+    from axosyslog_spark.operators.xmlparse import (
+        _flatten_xml,
+        windows_eventlog_xml_parser,
+    )
+
+    event = _WINLOG_COMMON.format(
+        eventdata="<EventData><A> x </A><A>y,z</A><M>t<c/>u</M></EventData>"
+    )
+    path = str(tmp_path / "event.parquet")
+    spark.createDataFrame([(event,)], "text string").write.parquet(path)
+    df = spark.read.parquet(path)
+    [x] = xml_parser(df).collect()
+    assert x.xml["xml.Event.System.EventID"] == "999"
+    assert x.xml["xml.Event.EventData.A"] == '" x ","y,z"'
+    assert x.xml["xml.Event.EventData.M"] == "tu"
+    [w] = windows_eventlog_xml_parser(df).collect()
+    assert w.winlog["winlog.Event.EventData.A"] == 'x,"y,z"'
+    assert w.winlog["winlog.Event.EventData.M"] == "tu"
+    assert w.winlog == _flatten_xml(event, prefix="winlog", strip_whitespaces=True)
+
+
 def test_xml_walkers_survive_deep_nesting(spark, tmp_path):
     """XML nested 1,000 deep (past Python's default recursion limit)
     flattens in both walkers instead of failing the job; read from
