@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from axosyslog_spark.operators.metrics import sink_counters
 from axosyslog_spark.operators.route import RouteSpec
 from axosyslog_spark.plans.spec import PipelineSpec, flagship_spec
+from axosyslog_spark.sources.parquet import read_parquet
 
 
 class InjectedFailure(RuntimeError):
@@ -146,6 +147,9 @@ def run_checkpointed(
     os.makedirs(out_dir, exist_ok=True)
     staged = stage_input(transcripts, out_dir, n_buckets)
 
+    # one read of the staged table for every bucket: its schema is
+    # inferred once, and each bucket's filter prunes to bucket=b files
+    staged_df = read_parquet(spark, staged)
     done = committed_buckets(out_dir)
     processed: list[int] = []
     skipped = sorted(done)
@@ -155,8 +159,7 @@ def run_checkpointed(
         if b in done:
             continue
         t0 = time.perf_counter()
-        # partition-pruned read: only bucket=b files are touched
-        part = spark.read.parquet(staged).filter(F.col("bucket") == b).drop("bucket")
+        part = staged_df.filter(F.col("bucket") == b).drop("bucket")
         routed = spec.compile(spark, part).routed
         obs = Observation()
         # order-insensitive content hash of the routed rows: the
@@ -193,7 +196,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     paths = [os.path.join(out_dir, f"bucket={b}") for b in done]
     if not paths:
         raise ValueError(f"no committed buckets under {out_dir}")
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)
 
 
 def lineage_df(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -143,11 +143,14 @@ class _State:
     # update_metric() increments recorded in statement order, each
     # already masked by the liveness at its statement site
     metrics: list = field(default_factory=list)
+    # plan-time FilterX type of each local (_Compiler._arg_shape);
+    # None when undecidable
+    shapes: dict[str, str | None] = field(default_factory=dict)
 
     def fork(self) -> "_State":
         return _State(
             dict(self.env), dict(self.updates), self.keep, self.active,
-            list(self.metrics),
+            list(self.metrics), dict(self.shapes),
         )
 
 
@@ -171,10 +174,14 @@ def _merge(cond: Column, then: _State, other: _State, base: _State, ref) -> _Sta
         t, e = then.env.get(n), other.env.get(n)
         if t is not None and e is not None:
             out.env[n] = F.when(cond, t).otherwise(e)
+            ts, es = then.shapes.get(n), other.shapes.get(n)
+            out.shapes[n] = ts if ts == es else None
         elif t is not None:
             out.env[n] = t
+            out.shapes[n] = then.shapes.get(n)
         else:
             out.env[n] = e
+            out.shapes[n] = other.shapes.get(n)
     tk = then.keep if then.keep is not None else F.lit(True)
     ek = other.keep if other.keep is not None else F.lit(True)
     if then.keep is not None or other.keep is not None:
@@ -286,10 +293,13 @@ class _Compiler:
             if name.kind != "name":
                 raise FilterXSyntaxError(f"bad declare target {name.text!r}")
             self.eat("=")
+            start = self.i
             val = self.expr(st)
+            shape = self._arg_shape(self.toks[start:self.i], st)
             self.eat(";")
             st = st.fork()
             st.env[name.text] = val
+            st.shapes[name.text] = shape
             return st
         if t.text == "update_metric" and (
             self.peek(1) is not None and self.peek(1).text == "("
@@ -562,14 +572,18 @@ class _Compiler:
             self.next()
             op = self.next().text
             concat = op == "+=" and self._rhs_is_stringy()
+            start = self.i
             val = self.expr(st)
+            shape = self._arg_shape(self.toks[start:self.i], st)
             self.eat(";")
             if op == "+=":
                 if t.text not in st.env:
                     raise FilterXSyntaxError(f"unknown name {t.text!r} (declare it?)")
                 val = self._plus(st.env[t.text], val, concat)
+                shape = "string" if concat else None
             st = st.fork()
             st.env[t.text] = val
+            st.shapes[t.text] = shape
             return st
         # bare expression statement: falsy => FAILURE (drop)
         val = self.expr(st)
@@ -1055,7 +1069,8 @@ class _Compiler:
     def _arg_shape(self, toks: list[Tok], st: _State) -> str | None:
         """The FilterX type of one call argument when plan time knows
         it: a literal's type, a whole [...] / {...} literal or a call of
-        a builtin in _CALL_SHAPES ('list' / 'dict'), or a $field this
+        a builtin in _CALL_SHAPES ('list' / 'dict'), a local, typed by
+        the value last assigned to it (_State.shapes), or a $field this
         block has not written, typed from ``string_fields`` like ``+=``
         ('string' or 'non-string').
         None when undecidable."""
@@ -1084,6 +1099,8 @@ class _Compiler:
             return "boolean"
         if t.text == "null":
             return "null"
+        if t.kind == "name":
+            return st.shapes.get(t.text)
         if t.kind == "field" and self.string_fields is not None:
             name = self._field_name(t.text)
             if name not in st.updates and (self.known is None or name in self.known):
@@ -1126,10 +1143,12 @@ class _Compiler:
         raise FilterXSyntaxError(f"unknown name {t.text!r} (declare it?)")
 
     def _target_store(self, t: Tok, val: Column, st: _State) -> None:
+        """Store a rebuilt dict (member set/unset, unset_empties)."""
         if t.kind == "field":
             st.updates[self._field_name(t.text)] = val
         else:
             st.env[t.text] = val
+            st.shapes[t.text] = "dict"
 
     def _dict_literal_pairs(
         self, st: _State, prefix: str

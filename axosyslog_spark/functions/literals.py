@@ -20,6 +20,10 @@ for its whole expression graph each time (a route_fanout pass made
 build an expression graph once per JVM and hand the same Column
 proxies to every later plan; Columns by name (``F.col``) carry no
 plan id, so one proxy is valid in any DataFrame of that JVM.
+
+Each DataFrame operation costs more still: Spark analyzes the whole
+plan again for every one. ``with_columns`` makes a
+``withColumns(...).drop(...)`` pair one operation.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ import threading
 import weakref
 
 from pyspark import SparkContext
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,12 +79,13 @@ class JvmMemo:
 
     The gateway is part of the key: a relaunched JVM never receives
     proxies made for the one before it (the entries are dropped when
-    it changes). Past _MEMO_SIZE entries the oldest goes, so plans
+    it changes). Past ``size`` entries the oldest goes, so plans
     built from a fresh spec per batch do not grow it without bound.
     Thread-safe: a streaming foreachBatch builds its plans on another
     thread."""
 
-    def __init__(self):
+    def __init__(self, size: int = _MEMO_SIZE):
+        self._size = size
         self._lock = threading.RLock()
         self._gateway = None
         self._entries: dict = {}
@@ -97,7 +102,7 @@ class JvmMemo:
                 self._gateway, self._entries = gateway, {}
             hit = self._entries.get(k)
             if hit is None:
-                if len(self._entries) >= _MEMO_SIZE:
+                if len(self._entries) >= self._size:
                     del self._entries[next(iter(self._entries))]
                 hit = self._entries[k] = (key, build())
             return hit[1]
@@ -125,3 +130,55 @@ def per_jvm(build):
         return memo.get(args, lambda: build(*args))
 
     return cached
+
+
+def with_columns(
+    df: DataFrame, new: dict[str, Column], drop: tuple[str, ...] = ()
+) -> DataFrame:
+    """``df.withColumns(new).drop(*drop)`` as ONE DataFrame operation,
+    with the same columns in the same order (names match
+    case-insensitively, as Spark's default resolver does).
+
+    When every column ``new`` replaces sits at the end of what
+    remains, in ``new``'s order, the select is ``* EXCEPT (...)``
+    followed by ``new``: its py4j cost does not grow with the width of
+    the frame. Otherwise every column is listed by name. A frame with
+    two columns of one name keeps the two operations, since neither
+    select can name just one of them. The select list is built once
+    per JVM, input columns and ``new`` (pass a memoized dict)."""
+    cols = _projection(tuple(df.columns), new, tuple(drop))
+    return df.select(*cols) if cols else df.withColumns(new).drop(*drop)
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+@per_jvm
+def _projection(
+    columns: tuple[str, ...], new: dict[str, Column], drop: tuple[str, ...]
+) -> list[Column] | None:
+    """with_columns' select list; None for duplicate column names."""
+    folded = [c.lower() for c in columns]
+    if len(set(folded)) < len(folded):
+        return None
+    gone = {c.lower() for c in drop}
+    by_name = {n.lower(): n for n in new}
+    kept = [c for c in columns if c.lower() not in gone]
+    replaced = [c.lower() for c in kept if c.lower() in by_name]
+    if replaced == list(by_name)[: len(replaced)] and replaced == [
+        c.lower() for c in kept[len(kept) - len(replaced):]
+    ]:
+        out = [c for c in columns if c.lower() in gone or c.lower() in by_name]
+        star = (
+            F.expr(f"* EXCEPT ({', '.join(map(_quoted, out))})") if out else F.col("*")
+        )
+        return [star] + [c.alias(n) for n, c in new.items()]
+    listed = [
+        new[by_name[c.lower()]].alias(by_name[c.lower()])
+        if c.lower() in by_name
+        else F.col(_quoted(c))
+        for c in kept
+    ]
+    kept_names = {c.lower() for c in kept}
+    return listed + [c.alias(n) for n, c in new.items() if n.lower() not in kept_names]

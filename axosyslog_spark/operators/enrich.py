@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from axosyslog_spark.functions.literals import per_jvm
+from axosyslog_spark.functions.literals import per_jvm, with_columns
 
 
 @dataclass(frozen=True)
@@ -89,8 +89,7 @@ def tool_lookup_values_sql(alias: str = "tl") -> str:
 def enrich(df: DataFrame, db: DataFrame, spec: LookupSpec) -> DataFrame:
     """Generic add-contextual-data: broadcast left join + default fallback."""
     dim, cond, defaults = _enrich_plan(db, spec)
-    out = df.join(dim, cond, "left")
-    return out.drop(f"__db_{spec.db_key}").withColumns(defaults)
+    return with_columns(df.join(dim, cond, "left"), defaults, (f"__db_{spec.db_key}",))
 
 
 @per_jvm

@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from axosyslog_spark.functions.literals import per_jvm
+from axosyslog_spark.functions.literals import per_jvm, with_columns
 
 
 @dataclass(frozen=True)
@@ -121,14 +121,16 @@ def _route_columns(spec: RouteSpec) -> tuple[dict[str, Column], Column]:
 def route_explode(df: DataFrame, spec: RouteSpec) -> DataFrame:
     """Fan out: one row per (sink, message). Messages routed nowhere
     vanish (matched=FALSE drop semantics)."""
-    return route_flags(df, spec).withColumn("sink", _explode_routes()).drop(
-        "routes", *[f"__route_{b.sink}" for b in spec.branches]
+    return with_columns(
+        route_flags(df, spec),
+        _explode_routes(),
+        ("routes", *[f"__route_{b.sink}" for b in spec.branches]),
     )
 
 
 @per_jvm
-def _explode_routes() -> Column:
-    return F.explode("routes")
+def _explode_routes() -> dict[str, Column]:
+    return {"sink": F.explode("routes")}
 
 
 @per_jvm

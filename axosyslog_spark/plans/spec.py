@@ -16,7 +16,7 @@ Example ("switch from the reference" shape):
         lookups=[LookupSpec(key="tool", db_key="tool",
                             columns=("tool_category", "risk_level"),
                             default={"tool_category": "unknown"},
-                            db=lambda spark: spark.read.parquet(dim_path))],
+                            db=lambda spark: read_parquet(spark, dim_path))],
         routes=RouteSpec(branches=(
             RouteBranch("errors", F.col("severity") <= 3),
             RouteBranch("rest", None, fallback=True),

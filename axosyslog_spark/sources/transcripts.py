@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axosyslog_spark.functions.literals import per_jvm
+from axosyslog_spark.sources.parquet import read_parquet
 
 # ---------------------------------------------------------------------------
 # Shared derivation spec (keep the Spark exprs and the DuckDB CTE in sync!)
@@ -161,7 +162,7 @@ def _transcript_columns() -> tuple[list[Column], list[Column]]:
 
 def synthesize_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transcript table derived deterministically from events.parquet."""
-    return _build_from_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _build_from_events(read_parquet(spark, f"{sf_dir}/events.parquet"))
 
 
 def generate_transcripts(

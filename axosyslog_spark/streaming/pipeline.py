@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 
 from axosyslog_spark.operators.route import RouteSpec
 from axosyslog_spark.plans.spec import flagship_spec
+from axosyslog_spark.sources.parquet import parquet_schema
 
 
 def stream_transcripts(
@@ -39,10 +40,9 @@ def stream_transcripts(
     """File-stream source over a transcript parquet directory — the
     tail-a-growing-table analog of the file() source with bookmarks
     (Structured Streaming checkpoints replace persist-state)."""
-    reader = spark.readStream
     if schema is None:
-        schema = spark.read.parquet(path).schema
-    return reader.schema(schema).parquet(path)
+        schema = parquet_schema(spark, path)
+    return spark.readStream.schema(schema).parquet(path)
 
 
 def stream_pipeline(

@@ -665,3 +665,56 @@ def test_len_counts_list_and_dict_elements(spark, tmp_path):
         """,
     ).first()
     assert (out["n_kv"], out["n_list"], out["n_keys"], out["n_str"]) == (2, 3, 2, 7)
+
+
+def test_locals_carry_their_shape(spark, tmp_path):
+    """A local has the shape of the value last assigned to it: len()
+    counts a dict local's elements, istype() folds on it, and a list
+    local is the any-of argument of startswith/endswith/includes."""
+    path = str(tmp_path / "kv.parquet")
+    spark.createDataFrame(
+        [(0, "a=1 b=2"), (1, "xyz=9")], "id int, text string"
+    ).write.parquet(path)
+    out = _rows(
+        filterx(
+            spark.read.parquet(path),
+            """
+            d = parse_kv($text);
+            declare prefixes = ["a=", "x"];
+            l = prefixes;
+            $n = len(d);
+            $is_dict = istype(d, "dict");
+            $starts = startswith($text, l);
+            $ends = endswith($text, ["2", "0"]);
+            $has = includes($text, l);
+            """,
+        )
+    )
+    assert [(r["n"], r["is_dict"], r["starts"], r["ends"], r["has"]) for _, r in sorted(out.items())] == [
+        (2, True, True, True, True),
+        (1, True, True, False, True),
+    ]
+
+
+def test_local_shape_after_branches(spark, tmp_path):
+    """A local assigned in both branches keeps the shape they agree on;
+    when they disagree, the shape is undecidable at plan time."""
+    path = str(tmp_path / "kv.parquet")
+    spark.createDataFrame([(0, "a=1 b=2")], "id int, text string").write.parquet(path)
+    df = spark.read.parquet(path)
+    agree = filterx(
+        df,
+        """
+        if ($id == 0) { d = parse_kv($text); } else { d = parse_json("{}"); }
+        $n = len(d);
+        """,
+    ).first()
+    assert agree["n"] == 2
+    with pytest.raises(FilterXSyntaxError, match="istype"):
+        filterx(
+            df,
+            """
+            if ($id == 0) { d = parse_kv($text); } else { d = "a"; }
+            $t = istype(d, "dict");
+            """,
+        )

@@ -196,14 +196,16 @@ def _ruleset(n_rules: int) -> PatternDB:
     return PatternDB(list(rs.rules) + _synthetic_rules(n_rules - len(rs.rules)))
 
 
-# Second-build py4j calls at the time of writing: 185 observed, 213
-# histogram, 129 parse_header + apply (each with synthesize_transcripts).
-# What remains is the DataFrame methods' own argument conversion, one
-# call per list element. The histogram build made 237 calls while
-# run_pipeline also built the unread per-sink counts frame; its bound
-# holds it below that. A cold build makes more than five times the
-# bound: 1,247 / 1,220 / 931 for 5 rules and 1,561 for 50.
-SECOND_BUILD_MAX = {"observed": 200, "histogram": 215, "apply": 140}
+# Second-build py4j calls at the time of writing: 167 observed, 195
+# histogram, 111 parse_header + apply (each with synthesize_transcripts
+# over a new frame, so none reuses a compiled flagship). What remains
+# is the DataFrame methods' own argument conversion, one call per list
+# element. They were 185 / 213 / 129 before the withColumns + drop
+# pairs became one select each (literals.with_columns), and 237 for the
+# histogram while run_pipeline also built the unread per-sink counts
+# frame. A cold build makes more than five times the bound: 1,324 /
+# 1,297 / 926 for 5 rules and 1,556 for 50.
+SECOND_BUILD_MAX = {"observed": 180, "histogram": 205, "apply": 120}
 
 
 def _pass_builds(spark, events_dir):
@@ -243,6 +245,26 @@ def test_second_build_costs_constant_py4j_calls(spark, events_dir):
         assert SECOND_BUILD_MAX[name] * 5 < min(firsts), (name, firsts)
 
 
+def test_histogram_reuses_the_observed_compile(spark, events_dir):
+    """run_pipeline and run_pipeline_observed over one transcripts frame
+    share one compiled flagship: the histogram is a groupBy on the
+    routed frame the observed write already analyzed."""
+    from axosyslog_spark.plans.pipeline import run_pipeline, run_pipeline_observed
+    from axosyslog_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, events_dir)
+    run_pipeline_observed(spark, t)
+    assert _py4j_calls(lambda: run_pipeline(spark, t).histogram) <= 50
+    assert run_pipeline(spark, t).routed is run_pipeline(spark, t).routed
+    other = synthesize_transcripts(spark, events_dir)
+    assert run_pipeline(spark, other).routed is not run_pipeline(spark, t).routed
+    # bounded: a frame compiled four frames ago is compiled again
+    first = run_pipeline(spark, t).routed
+    for _ in range(4):
+        run_pipeline(spark, synthesize_transcripts(spark, events_dir))
+    assert run_pipeline(spark, t).routed is not first
+
+
 def _text_frame(spark, tmp_path, name, lines):
     path = str(tmp_path / f"{name}.parquet")
     spark.createDataFrame(
@@ -270,3 +292,28 @@ def test_cached_apply_matches_a_fresh_ruleset_on_another_frame(spark, tmp_path):
     by_rev = rows(pdb, second, "rev")
     assert by_rev != cached
     assert all(r[3] is None for r in by_rev)
+
+
+@pytest.mark.parametrize(
+    "new, drop",
+    [
+        ({"n": "a + 1", "m": "'x'"}, ("b",)),      # appended: * EXCEPT
+        ({"c": "c * 2", "n": "1"}, ("zz",)),        # replaces the last column
+        ({"A": "a * 10"}, ("c",)),                  # replaces a middle column
+        ({"`d.e`": "'y'", "B": "b"}, ()),           # dotted name, case-folded
+    ],
+    ids=["append", "replace-tail", "replace-middle", "dotted"],
+)
+def test_with_columns_matches_with_columns_then_drop(spark, tmp_path, new, drop):
+    """literals.with_columns gives withColumns(new).drop(*drop)'s
+    columns, in order, and its rows, in one select."""
+    from axosyslog_spark.functions.literals import with_columns
+
+    path = str(tmp_path / "t.parquet")
+    spark.sql("SELECT id AS a, id % 3 AS b, 'v' AS `d.e`, id AS c FROM range(5)").write.parquet(path)
+    df = spark.read.parquet(path)
+    cols = {k.strip("`"): F.expr(v) for k, v in new.items()}
+    want = df.withColumns(cols).drop(*drop)
+    got = with_columns(df, cols, drop)
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
