@@ -147,9 +147,10 @@ def run_checkpointed(
     os.makedirs(out_dir, exist_ok=True)
     staged = stage_input(transcripts, out_dir, n_buckets)
 
-    # one read of the staged table for every bucket: its schema is
-    # inferred once, and each bucket's filter prunes to bucket=b files
-    staged_df = read_parquet(spark, staged)
+    # one read of the staged table for every bucket left to run: its
+    # schema is inferred once, and each bucket's filter prunes to
+    # bucket=b files
+    staged_df = None
     done = committed_buckets(out_dir)
     processed: list[int] = []
     skipped = sorted(done)
@@ -159,6 +160,8 @@ def run_checkpointed(
         if b in done:
             continue
         t0 = time.perf_counter()
+        if staged_df is None:
+            staged_df = read_parquet(spark, staged)
         part = staged_df.filter(F.col("bucket") == b).drop("bucket")
         routed = spec.compile(spark, part).routed
         obs = Observation()

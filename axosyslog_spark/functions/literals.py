@@ -79,13 +79,12 @@ class JvmMemo:
 
     The gateway is part of the key: a relaunched JVM never receives
     proxies made for the one before it (the entries are dropped when
-    it changes). Past ``size`` entries the oldest goes, so plans
+    it changes). Past _MEMO_SIZE entries the oldest goes, so plans
     built from a fresh spec per batch do not grow it without bound.
     Thread-safe: a streaming foreachBatch builds its plans on another
     thread."""
 
-    def __init__(self, size: int = _MEMO_SIZE):
-        self._size = size
+    def __init__(self):
         self._lock = threading.RLock()
         self._gateway = None
         self._entries: dict = {}
@@ -102,7 +101,7 @@ class JvmMemo:
                 self._gateway, self._entries = gateway, {}
             hit = self._entries.get(k)
             if hit is None:
-                if len(self._entries) >= self._size:
+                if len(self._entries) >= _MEMO_SIZE:
                     del self._entries[next(iter(self._entries))]
                 hit = self._entries[k] = (key, build())
             return hit[1]

@@ -64,9 +64,10 @@ class PipelineResult:
     histogram = cached_property(lambda self: sink_histogram(self.routed))
 
 
-# a few frames at most: a streaming foreachBatch compiles a new frame
-# per micro-batch, and an entry keeps its frames' plans alive
-_COMPILED = JvmMemo(size=4)
+# one pass reads one frame twice (the observed write, then the
+# histogram); an entry keeps its frame's plans alive, and the memo's
+# bound drops the oldest
+_COMPILED = JvmMemo()
 
 
 def _compiled(

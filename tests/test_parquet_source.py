@@ -94,12 +94,14 @@ def test_checkpointed_run_infers_the_staged_schema_once(spark, tmp_path, monkeyp
     one per bucket."""
     t = synthesize_transcripts(spark, _events_dir(spark, tmp_path, "ev", "TIMESTAMP_NTZ"))
     staged_jobs: list[int] = []
+    staged_reads: list[tuple] = []
     parquet = DataFrameReader.parquet
 
     def counting(self, *paths, **options):
         out, jobs = _jobs_started_by(spark, lambda: parquet(self, *paths, **options))
         if any(p.endswith("_staged") for p in paths):
             staged_jobs.extend(jobs)
+            staged_reads.append(paths)
         return out
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
@@ -107,3 +109,8 @@ def test_checkpointed_run_infers_the_staged_schema_once(spark, tmp_path, monkeyp
     assert rep.processed_buckets == [0, 1, 2, 3]
     assert len(staged_jobs) == 1
     assert rep.total_rows == ck.read_output(spark, str(tmp_path / "out")).count()
+    # a resume with every bucket committed does not read the staged table
+    staged_reads.clear()
+    again = ck.run_checkpointed(spark, t, str(tmp_path / "out"), n_buckets=4)
+    assert again.processed_buckets == [] and again.skipped_buckets == [0, 1, 2, 3]
+    assert staged_reads == []
