@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from axosyslog_spark.operators.metrics import sink_counters
 from axosyslog_spark.operators.route import RouteSpec
 from axosyslog_spark.plans.spec import PipelineSpec, flagship_spec
-from axosyslog_spark.sources.parquet import read_parquet
 
 
 class InjectedFailure(RuntimeError):
@@ -161,7 +160,7 @@ def run_checkpointed(
             continue
         t0 = time.perf_counter()
         if staged_df is None:
-            staged_df = read_parquet(spark, staged)
+            staged_df = spark.read.parquet(staged)
         part = staged_df.filter(F.col("bucket") == b).drop("bucket")
         routed = spec.compile(spark, part).routed
         obs = Observation()
@@ -199,7 +198,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     paths = [os.path.join(out_dir, f"bucket={b}") for b in done]
     if not paths:
         raise ValueError(f"no committed buckets under {out_dir}")
-    return read_parquet(spark, *paths)
+    return spark.read.parquet(*paths)
 
 
 def lineage_df(spark: SparkSession, out_dir: str) -> DataFrame:

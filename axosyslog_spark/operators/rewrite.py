@@ -220,6 +220,7 @@ VALUE_PAIRS_SCOPES: dict[str, list[str]] = {
     "core": ["conv_id", "turn_idx", "role", "tool", "ts", "text"],
     "selected-macros": ["severity", "facility", "tags"],
     "everything": ["*"],
+    "none": [],
 }
 
 

@@ -2,8 +2,9 @@
 
 This is the end-to-end job the north_star describes, described once
 as data (plans/spec.flagship_spec) and compiled by
-PipelineSpec.compile; this module adds its aggregates, the observed
-variant and the sink writers. Physical shape
+PipelineSpec.compile (its CompiledPipeline also carries the per-sink
+counts and the histogram); this module adds the memoized compile, the
+observed variant and the sink writers. Physical shape
 (one Spark job, SURVEY.md §4):
 
     scan transcripts (parquet/Iceberg; partition prune on ts/conv)
@@ -41,27 +42,13 @@ their actions.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import cached_property
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from axosyslog_spark.functions.literals import JvmMemo
-from axosyslog_spark.operators.metrics import sink_counters, sink_counts, sink_histogram
+from axosyslog_spark.operators.metrics import sink_counters
 from axosyslog_spark.operators.route import RouteSpec, flagship_route_spec
 from axosyslog_spark.plans.spec import CompiledPipeline, flagship_spec
-
-
-@dataclass
-class PipelineResult:
-    parsed: DataFrame
-    routed: DataFrame          # exploded (sink, …) frame
-    # the aggregates are built on first read (route_fanout reads only
-    # the histogram): per-sink counts, and (sink, severity,
-    # tool_category, n)
-    counts = cached_property(lambda self: sink_counts(self.routed))
-    histogram = cached_property(lambda self: sink_histogram(self.routed))
 
 
 # one pass reads one frame twice (the observed write, then the
@@ -87,10 +74,9 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     spec: RouteSpec | None = None,
-) -> PipelineResult:
+) -> CompiledPipeline:
     """Compose the full flagship pipeline lazily (no action triggered)."""
-    c = _compiled(spark, transcripts, spec)
-    return PipelineResult(parsed=c.parsed, routed=c.routed)
+    return _compiled(spark, transcripts, spec)
 
 
 def run_pipeline_observed(

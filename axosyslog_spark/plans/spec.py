@@ -16,7 +16,7 @@ Example ("switch from the reference" shape):
         lookups=[LookupSpec(key="tool", db_key="tool",
                             columns=("tool_category", "risk_level"),
                             default={"tool_category": "unknown"},
-                            db=lambda spark: read_parquet(spark, dim_path))],
+                            db=lambda spark: spark.read.parquet(dim_path))],
         routes=RouteSpec(branches=(
             RouteBranch("errors", F.col("severity") <= 3),
             RouteBranch("rest", None, fallback=True),
@@ -34,7 +34,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 
 from axosyslog_spark.operators.enrich import TOOL_LOOKUP, LookupSpec, enrich
-from axosyslog_spark.operators.metrics import metrics_probe
+from axosyslog_spark.operators.metrics import metrics_probe, sink_counts, sink_histogram
 from axosyslog_spark.operators.parse import parse_stage
 from axosyslog_spark.operators.patterndb import PatternDB, PdbRule
 from axosyslog_spark.operators.route import (
@@ -122,8 +122,12 @@ def flagship_spec(routes: RouteSpec | None = None) -> PipelineSpec:
 @dataclass
 class CompiledPipeline:
     parsed: DataFrame
-    routed: DataFrame
+    routed: DataFrame          # exploded (sink, …) frame
     aggregates: dict[str, DataFrame]
+    # built on first read (route_fanout reads only the histogram):
+    # per-sink counts, and (sink, severity, tool_category, n)
+    counts = cached_property(lambda self: sink_counts(self.routed))
+    histogram = cached_property(lambda self: sink_histogram(self.routed))
 
 
 def junction(*frames: DataFrame) -> DataFrame:

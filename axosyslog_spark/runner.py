@@ -64,13 +64,12 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session(args.local_cores)
     from axosyslog_spark import checkpoint as ck
     from axosyslog_spark.plans.config import build_spec
-    from axosyslog_spark.sources.parquet import read_parquet
     from axosyslog_spark.sources.transcripts import synthesize_transcripts
 
     if args.sf_dir:
         transcripts = synthesize_transcripts(spark, args.sf_dir)
     else:
-        transcripts = read_parquet(spark, args.input)
+        transcripts = spark.read.parquet(args.input)
 
     rep = ck.run_checkpointed(
         spark, transcripts, args.output,

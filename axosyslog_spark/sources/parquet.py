@@ -2,12 +2,18 @@
 
 ``spark.read.parquet(path)`` infers the schema on every call: it lists
 the files and runs a one-task Spark job that reads a footer, before
-the caller has asked for any data. A pipeline that reads the same
-table on every pass or for every bucket pays that job each time. Here
-the schema is inferred once per JVM and file set, and later reads
-declare it (``spark.read.schema(...)``), which starts no job.
+the caller has asked for any data. Here the schema is inferred once
+per JVM and file set, and later reads declare it
+(``spark.read.schema(...)``), which starts no job.
 
-The file set is the paths plus every file under them, each with its
+The one caller is ``sources/transcripts.synthesize_transcripts``: it
+reads the same events table on every pass, the only parquet read that
+repeats within one process. The one-shot readers (the checkpointed
+runner's staged table and output, the streaming source, the runner's
+``--input``) call ``spark.read.parquet``: they would never hit the
+memo and would pay its Python file listing for nothing.
+
+The file set is the path plus every file under it, each with its
 name, length and modification time, listed from Python. A rewritten
 table is therefore inferred again, even when its file names are the
 same. Column types are whatever the files declare: ``ts`` may be
@@ -24,7 +30,6 @@ import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from axosyslog_spark.functions.literals import JvmMemo
 
@@ -40,48 +45,32 @@ def _local_dir(path: str) -> str | None:
     return url.path if url.scheme else path
 
 
-def _file_set(paths: tuple[str, ...]) -> tuple | None:
-    """(path, ((relative name, length, mtime ns), ...)) per path; None
-    when a path cannot be listed here or holds no file."""
-    out = []
-    for path in paths:
-        local = _local_dir(path)
-        if local is None:
-            return None
-        if os.path.isfile(local):
-            st = os.stat(local)
-            files = [(os.path.basename(local), st.st_size, st.st_mtime_ns)]
-        else:
-            files = []
-            for root, _dirs, names in os.walk(local):
-                for name in names:
-                    st = os.stat(os.path.join(root, name))
-                    rel = os.path.relpath(os.path.join(root, name), local)
-                    files.append((rel, st.st_size, st.st_mtime_ns))
-        if not files:
-            return None
-        out.append((path, tuple(sorted(files))))
-    return tuple(out)
+def _file_set(path: str) -> tuple | None:
+    """((relative name, length, mtime ns), ...) of the files at
+    ``path``; None when it cannot be listed here or holds no file."""
+    local = _local_dir(path)
+    if local is None:
+        return None
+    if os.path.isfile(local):
+        st = os.stat(local)
+        return ((os.path.basename(local), st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _dirs, names in os.walk(local):
+        for name in names:
+            st = os.stat(os.path.join(root, name))
+            rel = os.path.relpath(os.path.join(root, name), local)
+            files.append((rel, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files)) or None
 
 
-def parquet_schema(spark: SparkSession, *paths: str) -> StructType:
-    """The schema Spark infers for ``paths``, inferred once per JVM and
-    unchanged file set."""
-    return _schema(spark, paths, _file_set(paths))
-
-
-def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """``spark.read.parquet(*paths)`` with a schema inferred once per JVM
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with a schema inferred once per JVM
     and unchanged file set (see the module docstring)."""
-    key = _file_set(paths)
-    if key is None:
-        return spark.read.parquet(*paths)
-    return spark.read.schema(_schema(spark, paths, key)).parquet(*paths)
-
-
-def _schema(spark: SparkSession, paths: tuple[str, ...], key: tuple | None) -> StructType:
-    def infer() -> StructType:
-        return spark.read.parquet(*paths).schema
-
+    files = _file_set(path)
+    if files is None:
+        return spark.read.parquet(path)
     # inference reads the session's parquet settings: one entry per session
-    return infer() if key is None else _SCHEMAS.get((spark, key), infer)
+    schema = _SCHEMAS.get(
+        (spark, path, files), lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)

@@ -31,7 +31,6 @@ from pyspark.sql.types import (
 
 from axosyslog_spark.operators.route import RouteSpec
 from axosyslog_spark.plans.spec import flagship_spec
-from axosyslog_spark.sources.parquet import parquet_schema
 
 
 def stream_transcripts(
@@ -41,7 +40,7 @@ def stream_transcripts(
     tail-a-growing-table analog of the file() source with bookmarks
     (Structured Streaming checkpoints replace persist-state)."""
     if schema is None:
-        schema = parquet_schema(spark, path)
+        schema = spark.read.parquet(path).schema
     return spark.readStream.schema(schema).parquet(path)
 
 

@@ -490,6 +490,12 @@ def test_value_pairs_unknown_scope_or_missing_value_raises(frame):
         _render(frame, "$(names --key)")
 
 
+def test_format_json_scope_none_renders_only_explicit_pairs(frame):
+    # scope none selects no column; the reference's splunk HEC body
+    # (ported as scl.splunk_hec_event) is written with it
+    assert _render(frame, "$(format-json --scope none a=b)") == ['{"a":"b"}'] * 2
+
+
 def test_numeric_results_beyond_bigint_render_as_doubles(frame):
     # only whole values inside the bigint range take the integer form;
     # ceil/floor no longer saturate at ±2^63
