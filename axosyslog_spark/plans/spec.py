@@ -124,10 +124,12 @@ class CompiledPipeline:
     parsed: DataFrame
     routed: DataFrame          # exploded (sink, …) frame
     aggregates: dict[str, DataFrame]
-    # built on first read (route_fanout reads only the histogram):
+    # a new aggregate per read (route_fanout reads only the histogram):
+    # the compile is memoized per frame, and a shared Dataset would
+    # reuse its executed shuffle on a second collect()
     # per-sink counts, and (sink, severity, tool_category, n)
-    counts = cached_property(lambda self: sink_counts(self.routed))
-    histogram = cached_property(lambda self: sink_histogram(self.routed))
+    counts = property(lambda self: sink_counts(self.routed))
+    histogram = property(lambda self: sink_histogram(self.routed))
 
 
 def junction(*frames: DataFrame) -> DataFrame:

@@ -138,3 +138,14 @@ def test_write_sinks_layout(spark, tmp_path):
         for r in back.select("sink", "conv_id", "turn_idx", "text").collect()
     )
     assert a == b
+
+
+def test_each_aggregate_read_is_a_new_plan(spark):
+    """run_pipeline memoizes the compile per frame, but every .counts /
+    .histogram read builds a new groupBy: a collect() on a shared
+    Dataset would reuse its executed shuffle and skip the map stage."""
+    t = synthesize_transcripts(spark, SF)
+    a, b = run_pipeline(spark, t), run_pipeline(spark, t)
+    assert a.routed is b.routed
+    assert a.histogram is not b.histogram
+    assert a.counts is not a.counts
